@@ -93,12 +93,16 @@ def ingest_batches(seed: int, first: int, size: int, n_batches: int):
     return batches, copies
 
 
-def graph_split(seed: int, n_queries: int):
-    """``(base, queries)``: ``n_queries`` seeded held-out rows of the
-    fixture embeddings, and the rest as the corpus to index."""
+def graph_split(seed: int, n_base: int):
+    """``(base, queries)``: ``n_base`` rows of the fixture embeddings as
+    the corpus to index, the same rows for every seed so that every run
+    searches the same graph, and the other rows, in a seeded order, as
+    the held-out queries."""
     emb = embeddings()
-    held = rng_for(seed, "graph").choice(len(emb), n_queries, replace=False)
-    mask = np.zeros(len(emb), dtype=bool)
-    mask[held] = True
-    return emb[~mask].reset_index(drop=True), emb.iloc[held].reset_index(
-        drop=True)
+    in_base = np.zeros(len(emb), dtype=bool)
+    in_base[np.random.default_rng(0).choice(len(emb), n_base,
+                                            replace=False)] = True
+    queries = emb[~in_base].reset_index(drop=True)
+    order = rng_for(seed, "graph").permutation(len(queries))
+    return (emb[in_base].reset_index(drop=True),
+            queries.iloc[order].reset_index(drop=True))

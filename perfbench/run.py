@@ -9,8 +9,9 @@ The last line of standard output is one JSON object: ``correct``,
 metrics are the end-to-end ones; with ``--trace 1`` the per-layer ones
 from a traced pass (spans and Spark's event log; see ``spans.py``), and
 the spans go to ``perfbench/out/``.  The line before it is a summary
-with the tail latency, error rate and warm-up count.  The exit code is
-0 only when every check passed.  See README.md.
+with the wall-clock latencies and rate, the tail latency, the error rate
+and the warm-up count.  The exit code is 0 only when every check
+passed.  See README.md.
 """
 
 from __future__ import annotations
@@ -134,6 +135,34 @@ def environment(work: str, trace: bool) -> None:
         f"--conf {k}={v}" for k, v in conf.items()) + " pyspark-shell"
 
 
+def cpu_s() -> float:
+    """CPU seconds (user + system) used so far by this process and every
+    process under it (the JVM, Spark's Python workers), reaped children
+    included.  The kernel keeps time stolen by the hypervisor out of
+    these counters, so they swing far less than wall time with the load
+    of other guests on the host."""
+    hz = os.sysconf("SC_CLK_TCK")
+    kids: dict[int, list[int]] = {}
+    ticks: dict[int, int] = {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as fh:
+                fields = fh.read().rsplit(")", 1)[1].split()
+        except OSError:  # the process ended while we looked
+            continue
+        kids.setdefault(int(fields[1]), []).append(int(name))
+        # utime, stime, cutime, cstime
+        ticks[int(name)] = sum(int(f) for f in fields[11:15])
+    total, todo = 0, [os.getpid()]
+    while todo:
+        pid = todo.pop()
+        total += ticks.get(pid, 0)
+        todo.extend(kids.get(pid, ()))
+    return total / hz
+
+
 def peak_rss_mb(spark) -> float:
     """Driver Python ``ru_maxrss`` plus the JVM's ``VmHWM``."""
     py_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
@@ -172,6 +201,7 @@ class Run:
         self.attempted = self.failed = 0
         self.lat: list[float] = []          # untraced timed ops, seconds
         self.lat_traced: list[float] = []
+        self.cpu: list[float] = []          # untraced timed ops, CPU s
         self.items = 0
         self.udf_rows: list[int] = []
 
@@ -184,16 +214,18 @@ class Run:
         with self.tracer.installed(), self.tracer.op(op_id):
             yield
 
-    def one(self, x, op_id=None) -> float | None:
-        """Run and check one op; its latency, or None if it failed.  A
-        traced op's check and (ingest) embedding projection are traced
-        as ops of their own."""
+    def one(self, x, op_id=None):
+        """Run and check one op; its ``(latency, CPU time)``, or None if
+        it failed.  A traced op's check and (ingest) embedding projection
+        are traced as ops of their own."""
         self.attempted += 1
         try:
             with self._traced(op_id):
+                c = cpu_s()
                 t = time.perf_counter()
                 n = self.w.op(x)
                 dt = time.perf_counter() - t
+                dc = cpu_s() - c
             with self._traced(None if op_id is None else f"check-{op_id}"):
                 self.w.check()
             if op_id is not None and hasattr(self.w, "udf_projection"):
@@ -205,37 +237,59 @@ class Run:
             traceback.print_exc()
             return None
         self.items += n
-        return dt
+        return dt, dc
 
     def loop(self, xs, seconds: float) -> None:
-        """Warm up, then run ops until ``seconds`` have passed.  A traced
-        run traces every other op, so the untraced ops in between give
-        the tracing overhead, and runs at least two ops."""
+        """Warm up, then run ops until ``seconds`` have passed and the
+        workload's ``timed`` ops are done.  A traced run traces every
+        other op, so the untraced ops in between give the tracing
+        overhead, and runs at least two ops."""
         for _ in range(self.w.warmup):
             self.one(next(xs))
         self.items = 0
         end = time.perf_counter() + seconds
         i = 0
-        while (time.perf_counter() < end or i == 0
+        while (time.perf_counter() < end or i < self.w.timed
                or (self.tracer and i < 2)):
             x = next(xs, None)
             if x is None:
                 raise RuntimeError("workload ran out of inputs")
             traced = self.tracer is not None and i % 2 == 1
-            dt = self.one(x, op_id=i if traced else None)
-            if dt is not None:
-                (self.lat_traced if traced else self.lat).append(dt)
+            res = self.one(x, op_id=i if traced else None)
+            if res is not None:
+                (self.lat_traced if traced else self.lat).append(res[0])
+                if not traced:
+                    self.cpu.append(res[1])
             i += 1
 
 
 def end_to_end(run: Run, setup_s: float, rss: float) -> dict:
-    ops = run.lat + run.lat_traced
     return {
         "setup_s": (setup_s, "s"),
-        "p50_ms": (statistics.median(run.lat) * 1000, "ms"),
-        "rate_per_s": (run.items / sum(ops), "1/s"),
+        # the first ``timed`` ops: the same stretch of the JVM's warm-up
+        # in every run
+        "op_cpu_ms": (statistics.median(run.cpu[:run.w.timed]) * 1000,
+                      "ms"),
         "recall_at_10": (statistics.median(run.w.recall), "fraction"),
         "peak_rss_mb": (rss, "MB"),
+    }
+
+
+def wall_figures(run: Run) -> dict:
+    """Wall-clock latency and rate of the timed ops.  Printed in the
+    summary, not bounded: on a shared host they follow the time other
+    guests steal (see README.md)."""
+    ops = run.lat + run.lat_traced
+    t = tail(run.lat)
+    return {
+        "p50_ms": statistics.median(run.lat) * 1000,
+        "rate_per_s": run.items / sum(ops),
+        "op_ms": [round(x * 1000, 1) for x in run.lat],
+        "op_cpu_ms": [round(x * 1000, 1) for x in run.cpu],
+        "traced_op_ms": [round(x * 1000, 1) for x in run.lat_traced],
+        "tail": None if t is None else {
+            "percentile": t[0], "ms": t[1] * 1000, "samples_beyond": t[2],
+            "samples": len(run.lat)},
     }
 
 
@@ -307,13 +361,7 @@ def main(argv=None) -> int:
                    "warmup_ops": w.warmup, "timed_ops": len(run.lat)
                    + len(run.lat_traced),
                    "error_rate": run.failed / run.attempted,
-                   "op_ms": [round(x * 1000, 1) for x in run.lat],
-                   "traced_op_ms": [round(x * 1000, 1)
-                                    for x in run.lat_traced]}
-        t = tail(run.lat)
-        summary["tail"] = None if t is None else {
-            "percentile": t[0], "ms": t[1] * 1000, "samples_beyond": t[2],
-            "samples": len(run.lat)}
+                   **wall_figures(run)}
         if hasattr(w, "digests"):
             summary["admitted_digests"] = w.digests()
         if tracer:

@@ -40,9 +40,12 @@ def main() -> int:
             print(f"seed {seed}: exit {proc.returncode}\n{proc.stderr[-2000:]}")
             return 1
         res = json.loads(lines[-1])
+        summary = json.loads(lines[-2])
         print(f"seed {seed}: {wall:.1f} s wall, "
               + ", ".join(f"{k}={m['value']:.4g}"
-                          for k, m in res["metrics"].items()), flush=True)
+                          for k, m in res["metrics"].items())
+              + f"; ops {summary['op_ms']} ms, cpu {summary['op_cpu_ms']} ms",
+              flush=True)
         for k, m in res["metrics"].items():
             values.setdefault(k, []).append(m["value"])
     for k, vs in values.items():

@@ -35,9 +35,9 @@ K = 10
 
 SIZES = {
     "full": {"ingest_first": 200, "ingest_batch": 100, "ingest_batches": 10,
-             "graph_held_out": 1000},
+             "graph_base": 300},
     "tiny": {"ingest_first": 60, "ingest_batch": 20, "ingest_batches": 6,
-             "graph_held_out": 1700},
+             "graph_base": 300},
 }
 
 VEC_SCHEMA = StructType([StructField("vec_id", LongType()),
@@ -121,9 +121,12 @@ def _check_search(question: str, rows, want) -> None:
 class Ingest:
     """Batches of documents through dedup, line dedup, repetition
     signals and chunk/embed/append; after each batch, a read-after-write
-    check through ``plans.pipeline.search``."""
+    check through ``plans.pipeline.search``.  The first later batch is an
+    untimed warm-up: it runs 1.3-1.6x slower than the ones after it.
+    ``op_cpu_ms`` is the CPU time of the next batch."""
 
-    warmup = 0
+    warmup = 1
+    timed = 1
 
     def __init__(self, spark, seed: int, sizes: dict, root: str):
         self.spark, self.seed = spark, seed
@@ -245,14 +248,18 @@ class Ingest:
 
 class SearchGraph:
     """``operators.nsw.nsw_stored_knn`` for held-out vectors against a
-    store built in setup.  The first query is an untimed warm-up."""
+    store built in setup from the same 300 vectors for every seed.  The
+    first ``warmup`` queries are untimed: the first few queries of a
+    process run 1.5-2.5x slower.  ``op_cpu_ms`` is the median CPU time of
+    the next ``timed`` ones."""
 
-    warmup = 1
+    warmup = 2
+    timed = 3
 
     def __init__(self, spark, seed: int, sizes: dict, root: str):
         self.spark, self.seed = spark, seed
         self.base_pdf, self.queries = inputs.graph_split(
-            seed, sizes["graph_held_out"])
+            seed, sizes["graph_base"])
         self.base_path = os.path.join(root, "base")
         self.store = os.path.join(root, "nsw")
         self.recall: list[float] = []
