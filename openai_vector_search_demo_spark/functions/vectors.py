@@ -49,6 +49,23 @@ def vector_lit(vec: Sequence[float]) -> Column:
     return F.array(*[F.lit(float(x)) for x in vec])
 
 
+def id_in(col: str, ids: Sequence[int]) -> Column:
+    """``col IN (ids)`` over integer ids as ONE parsed SQL expression —
+    the point-read predicate of the graph tier's beam rounds.
+
+    ``Column.isin`` pays one ``F.lit`` plus one list-converter ``add``
+    per id in driver↔JVM round trips (thousands per beam round at the
+    serving width); the SQL text is one ``expr`` call at any list length
+    and parses to the same ``In`` of integer literals (int for ids that fit
+    32 bits, bigint above), which the optimizer turns into ``InSet``
+    and pushes into parquet scans and partition pruning exactly like
+    ``isin``.  An empty list is ``false`` — it matches no row, as
+    ``isin([])`` does."""
+    if len(ids) == 0:
+        return F.lit(False)
+    return F.expr(f"`{col}` IN ({', '.join(str(int(i)) for i in ids)})")
+
+
 def dot_product(a: Column | str, b: Column | str) -> Column:
     """Sequential left-to-right float64 accumulation — same association order
     as numpy's pairwise only at tiny dims, but identical to DuckDB's

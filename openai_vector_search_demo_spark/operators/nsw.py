@@ -81,9 +81,11 @@ from collections.abc import Sequence
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from openai_vector_search_demo_spark.functions.vectors import (
     cosine_similarity,
+    id_in,
     vector_lit,
 )
 
@@ -436,6 +438,14 @@ def write_nsw_index(df: DataFrame, path: str, m: int = NSW_M,
     _write_hier_meta(df.sparkSession, path, strides, counts, m, n=n)
 
 
+_STORE_SCHEMA = "src long, dst long, sim double, fwd boolean, bucket int"
+"""What ``_write_graph_dual`` and the upsert append write for the base
+graph and every ``_L*`` level (``bucket`` is the partition directory).
+Serving reads the store with it instead of inferring it: inference is
+one parquet-footer job per read."""
+_TOMBSTONE_SCHEMA = "vec_id long"
+
+
 def _write_graph_dual(edges: DataFrame, path: str,
                       n_buckets: int) -> None:
     """Persist a directed top-M adjacency in the store's DUAL format:
@@ -550,10 +560,13 @@ class AdjRelation:
     """Pruned adjacency RELATION for the fused one-action-per-round
     serving engine (r16, guide §1.2/§2.6 — VERDICT r15 #1): ``rel(ids)``
     returns the lookup's stored rows for ``src IN ids`` as an
-    UNEXECUTED DataFrame — (src, dst) for trusted relations, (src, dst,
-    sim, fwd) for delta stores — so the engine can UNION it with the
-    round's scoring scan and pay ONE scheduler round-trip for the
-    scores AND the next round's adjacency (prefetch).  ``trusted``
+    UNEXECUTED DataFrame carrying at least (src, dst) — plus (sim, fwd)
+    for delta stores; the engine projects the columns it reads — so the
+    engine can UNION it with the round's scoring scan and pay ONE
+    scheduler round-trip for the scores AND the next round's adjacency
+    (prefetch).  The stored lookups (``_stored_adj``) filter with two
+    ``id_in`` lists, so building a round's read is a constant number of
+    driver↔JVM calls whatever the frontier width.  ``trusted``
     marks a never-upserted relation: every stored row is a live
     undirected edge — no merge-on-read window, no mirror validation.
     Untrusted relations are resolved DRIVER-side from the prefetched
@@ -597,6 +610,23 @@ def _topm_from(rows, mm: int) -> list:
             sorted(pairs, key=lambda p: (_dsc(p[0]), p[1]))[:mm]]
 
 
+def _local_frame(spark, rows, schema: StructType) -> DataFrame:
+    """``rows`` (tuples in ``schema`` order) as a driver-LOCAL relation:
+    an Arrow table becomes a ``LocalRelation``, so collecting the answer
+    — or any projection over it — runs no Spark job, where
+    ``createDataFrame(list)`` parallelizes the rows into an RDD and
+    costs a job per serve."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    asch = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, asch)],
+        schema=asch)
+    return spark.createDataFrame(table, schema)
+
+
 def beam_search_knn(edges, source: DataFrame,
                     qvec: Sequence[float], k: int = 10,
                     ef: int = NSW_EF, rounds: int = NSW_ROUNDS,
@@ -626,6 +656,14 @@ def beam_search_knn(edges, source: DataFrame,
     same total order Spark's orderBy gives — so the trajectory is
     oracle-replayable bit-for-bit and identical to the r15 shapes.
 
+    Planning a round is O(1) driver↔JVM calls: the score expression
+    (query literal + cosine) is built ONCE per serve and reused by
+    every round, the union projections are ``selectExpr`` strings, the
+    point reads are ``id_in`` lists (one parsed IN at any width), and
+    collected rows are read by position.  The answer is a driver-local
+    relation (``_local_frame``, an Arrow ``LocalRelation``): collecting
+    it runs no Spark job, so a serve's only jobs are its beam rounds.
+
     Entry points (v4, HIERARCHICAL): with ``hier_levels``/``flat_mod``
     set — or the legacy depth-1 shape ``stride``+``l1_edges``+``n1``
     (upgraded internally) — entry DESCENDS the level stack: the flat
@@ -646,12 +684,22 @@ def beam_search_knn(edges, source: DataFrame,
     bucket-pruned form), DataFrames of (src, dst), or legacy
     ``ids -> DataFrame`` callables; ``hier_levels`` is ordered L1 → Ld
     (the descent runs it reversed)."""
-    from pyspark.sql import Row
-
-    q = vector_lit(qvec)
-    sess = source.sparkSession
-    lbl_type = source.schema["label"].dataType
-    RowF = Row(id_col, "label", "_s")
+    # Per-serve constant plan parts, built ONCE: a Column is a JVM
+    # object whose construction costs driver↔JVM round trips (the score
+    # expression alone ~1k), so the rounds reuse these; the union
+    # projections are selectExpr strings (parsed JVM-side, no Column
+    # objects at all).  Round rows are (id, label, score) tuples, and
+    # union rows are read by POSITION — (_t, _a, _lbl, _s, _b, _f) =
+    # 0..5 — since Row["name"] is a field-list search per access.
+    score_cols = [F.col(id_col), F.col("label"),
+                  F.round(cosine_similarity(F.col(vec_col),
+                                            vector_lit(qvec)), 6)
+                  .alias("_s")]
+    sb_sql = ["0 AS _t", f"CAST(`{id_col}` AS BIGINT) AS _a",
+              "`label` AS _lbl", "CAST(_s AS DOUBLE) AS _s",
+              "CAST(NULL AS BIGINT) AS _b", "true AS _f"]
+    lbl_null = (f"CAST(NULL AS "
+                f"{source.schema['label'].dataType.simpleString()}) AS _lbl")
 
     def _as_adj(e):
         if isinstance(e, AdjRelation):
@@ -659,57 +707,43 @@ def beam_search_knn(edges, source: DataFrame,
         if callable(e):
             return AdjRelation(e)
         return AdjRelation(
-            lambda ids, _e=e: _e.filter(F.col("src").isin(ids)),
+            lambda ids, _e=e: _e.filter(id_in("src", ids)),
             pred_rel=lambda pred, _e=e: _e.filter(pred))
 
     def skey(r):
-        s = r["_s"]
+        s = r[2]
         # Spark orderBy(desc): NaN above every number, NULLs last
         if s is None:
-            return (2, 0.0, r[id_col])
+            return (2, 0.0, r[0])
         if s != s:
-            return (0, 0.0, r[id_col])
-        return (1, -s, r[id_col])
+            return (0, 0.0, r[0])
+        return (1, -s, r[0])
 
     def score_pred(pred) -> DataFrame:
         return (source.filter(F.col(vec_col).isNotNull() & pred)
-                .withColumn("_s", F.round(
-                    cosine_similarity(F.col(vec_col), q), 6))
-                .select(id_col, "label", "_s"))
+                .select(*score_cols))
 
     def score_ids(ids) -> DataFrame:
         # round scoring carries no isNotNull filter — exactly the r15
         # shapes (a null vector scores NULL and sorts last)
-        return (source.filter(F.col(id_col).isin(ids))
-                .withColumn("_s", F.round(
-                    cosine_similarity(F.col(vec_col), q), 6))
-                .select(id_col, "label", "_s"))
+        return source.filter(id_in(id_col, ids)).select(*score_cols)
 
     def _sb(df: DataFrame) -> DataFrame:
         """Scoring branch normalized for the round union."""
-        return df.select(
-            F.lit(0).alias("_t"),
-            F.col(id_col).cast("long").alias("_a"),
-            F.col("label").alias("_lbl"),
-            F.col("_s").cast("double").alias("_s"),
-            F.lit(None).cast("long").alias("_b"),
-            F.lit(True).alias("_f"))
+        return df.selectExpr(*sb_sql)
 
-    def _ab(df: DataFrame, tag: int = 1) -> DataFrame:
+    def _ab(df: DataFrame, trusted: bool, tag: int = 1) -> DataFrame:
         """Adjacency branch normalized for the round union; ``tag``
         separates the primary prefetch from a NEXT-lookup prefetch
-        riding the same action."""
-        cols = set(df.columns)
-        sim = (F.col("sim").cast("double") if "sim" in cols
-               else F.lit(None).cast("double"))
-        fwd = F.col("fwd") if "fwd" in cols else F.lit(True)
-        return df.select(
-            F.lit(tag).alias("_t"),
-            F.col("src").cast("long").alias("_a"),
-            F.lit(None).cast(lbl_type).alias("_lbl"),
-            sim.alias("_s"),
-            F.col("dst").cast("long").alias("_b"),
-            fwd.alias("_f"))
+        riding the same action.  A trusted relation is read as (src,
+        dst) whatever else it carries — only its dsts are used; a
+        delta relation brings (src, dst, sim, fwd)."""
+        return df.selectExpr(
+            f"{tag} AS _t", "CAST(src AS BIGINT) AS _a", lbl_null,
+            "CAST(NULL AS DOUBLE) AS _s" if trusted
+            else "CAST(sim AS DOUBLE) AS _s",
+            "CAST(dst AS BIGINT) AS _b",
+            "true AS _f" if trusted else "fwd AS _f")
 
     def _collect(branches):
         df = branches[0]
@@ -717,18 +751,17 @@ def beam_search_knn(edges, source: DataFrame,
             df = df.unionByName(b)
         scored, adj = [], {}
         for r in df.collect():
-            if r["_t"] == 0:
+            if r[0] == 0:
                 scored.append(r)
             else:
-                adj.setdefault(r["_t"], []).append(r)
+                adj.setdefault(r[0], []).append(r)
         return scored, adj
 
     def _ingest(cache, ids, adjrows):
         for i in ids:
             cache.setdefault(int(i), [])
         for r in adjrows:
-            cache.setdefault(r["_a"], []).append(
-                (r["_b"], r["_s"], r["_f"]))
+            cache.setdefault(r[1], []).append((r[4], r[3], r[5]))
 
     caches: dict[int, dict] = {}
 
@@ -748,7 +781,7 @@ def beam_search_knn(edges, source: DataFrame,
         cache = _cache(adj)
         missing = sorted({int(i) for i in frontier} - cache.keys())
         if missing:
-            _, adjrows = _collect([_ab(adj.rel(missing))])
+            _, adjrows = _collect([_ab(adj.rel(missing), adj.trusted)])
             _ingest(cache, missing, adjrows.get(1, []))
         certain, mirrors = set(), set()
         for i in frontier:
@@ -771,14 +804,15 @@ def beam_search_knn(edges, source: DataFrame,
                 if not adj.trusted else []
         branches = [_sb(score_ids(todo))]
         if need:
-            branches.append(_ab(adj.rel(need)))
+            branches.append(_ab(adj.rel(need), adj.trusted))
         also_ids = []
         if also is not None and len(todo) <= NSW_PREFETCH_CAP:
             next_adj, seed_ids = also
             also_ids = sorted(({int(i) for i in seed_ids}
                                | set(todo)) - _cache(next_adj).keys())
             if also_ids:
-                branches.append(_ab(next_adj.rel(also_ids), tag=2))
+                branches.append(_ab(next_adj.rel(also_ids),
+                                    next_adj.trusted, tag=2))
         scored, adjrows = _collect(branches)
         _ingest(cache, need, adjrows.get(1, []))
         if also_ids:
@@ -791,12 +825,12 @@ def beam_search_knn(edges, source: DataFrame,
                 if w in _topm_from(cache.get(x, ()), adj.m):
                     valid.add(x)
             keep = certain | valid
-            scored = [r for r in scored if r["_a"] in keep]
+            scored = [r for r in scored if r[1] in keep]
         new = {}
         for r in scored:
-            i = r["_a"]
+            i = r[1]
             if i not in seen and i not in new:
-                new[i] = RowF(i, r["_lbl"], r["_s"])
+                new[i] = (i, r[2], r[3])
         return new
 
     if (hier_levels is None and stride is not None
@@ -817,17 +851,17 @@ def beam_search_knn(edges, source: DataFrame,
             # the flat top is a subset of the deepest graph level, so
             # its first-descent adjacency rides the entry scan's action
             branches.append(_ab(deep.pred_rel(
-                F.pmod(F.col("src"), F.lit(int(flat_mod))) == 0)))
+                F.pmod(F.col("src"), F.lit(int(flat_mod))) == 0),
+                deep.trusted))
         scored, adjrows = _collect(branches)
-        _ingest(_cache(deep), [r["_a"] for r in scored],
+        _ingest(_cache(deep), [r[1] for r in scored],
                 adjrows.get(1, []))
-        visited = {r["_a"]: RowF(r["_a"], r["_lbl"], r["_s"])
-                   for r in scored}
+        visited = {r[1]: (r[1], r[2], r[3]) for r in scored}
         seen = set(visited)
         stack = list(reversed(adjs))
         for li, adj in enumerate(stack):
             nxt = stack[li + 1] if li + 1 < len(stack) else base_adj
-            hf = [r[id_col] for r in
+            hf = [r[0] for r in
                   sorted(visited.values(), key=skey)[:NSW_HIER_W]]
             for _ in range(NSW_L1_ROUNDS):
                 if not hf:
@@ -835,7 +869,7 @@ def beam_search_knn(edges, source: DataFrame,
                 # the next phase's frontier ⊆ current top pool ∪ this
                 # round's newcomers: prefetch its adjacency NOW so the
                 # level transition pays no catch-up action
-                seed_ids = [r[id_col] for r in
+                seed_ids = [r[0] for r in
                             sorted(visited.values(), key=skey)
                             [:max(NSW_HIER_W, n_entry)]]
                 new = fused_round(adj, hf, seen, also=(nxt, seed_ids))
@@ -843,17 +877,17 @@ def beam_search_knn(edges, source: DataFrame,
                     break
                 seen.update(new)
                 visited.update(new)
-                hf = [r[id_col] for r in
+                hf = [r[0] for r in
                       sorted(new.values(), key=skey)[:NSW_HIER_W]]
-        frontier = [r[id_col] for r in
+        frontier = [r[0] for r in
                     sorted(visited.values(), key=skey)[:n_entry]]
     elif stride is not None:
         scored0 = score_pred(
             F.pmod(F.col(id_col), F.lit(int(stride))) == 0)
         schema = scored0.schema
         rows = scored0.collect()
-        visited = {r[id_col]: r for r in rows}
-        frontier = [r[id_col] for r in sorted(rows, key=skey)[:n_entry]]
+        visited = {r[0]: r for r in rows}
+        frontier = [r[0] for r in sorted(rows, key=skey)[:n_entry]]
         seen = set(visited)
     else:
         # seeds are known ids: the seed scoring (an IN point read —
@@ -862,11 +896,11 @@ def beam_search_knn(edges, source: DataFrame,
         seed_ids = [int(x) for x in seeds]
         scored0 = score_ids(seed_ids)
         schema = scored0.schema
-        branches = [_sb(scored0), _ab(base_adj.rel(sorted(seed_ids)))]
+        branches = [_sb(scored0), _ab(base_adj.rel(sorted(seed_ids)),
+                                      base_adj.trusted)]
         scored, adjrows = _collect(branches)
         _ingest(_cache(base_adj), sorted(seed_ids), adjrows.get(1, []))
-        visited = {r["_a"]: RowF(r["_a"], r["_lbl"], r["_s"])
-                   for r in scored}
+        visited = {r[1]: (r[1], r[2], r[3]) for r in scored}
         frontier = seed_ids
         seen = set(visited) | set(frontier)
     for _ in range(rounds):
@@ -881,15 +915,15 @@ def beam_search_knn(edges, source: DataFrame,
             # convergence (NSW_STOP_K): the round's best newcomer
             # scores below the stop_k-th best visited value — further
             # expansion cannot reach the answer's neighborhood
-            vals = sorted((r["_s"] for r in visited.values()
-                           if r["_s"] is not None), reverse=True)
+            vals = sorted((r[2] for r in visited.values()
+                           if r[2] is not None), reverse=True)
             if len(vals) > stop_k:
-                best_new = max((r["_s"] for r in new.values()
-                                if r["_s"] is not None),
+                best_new = max((r[2] for r in new.values()
+                                if r[2] is not None),
                                default=float("-inf"))
                 if best_new < vals[stop_k - 1]:
                     break
-        frontier = [r[id_col] for r in
+        frontier = [r[0] for r in
                     sorted(new.values(), key=skey)[:ef]]
     out_rows = sorted(visited.values(), key=skey)
     if exclude_ids:
@@ -898,9 +932,10 @@ def beam_search_knn(edges, source: DataFrame,
         # may carry the beam — but can never be returned.  Hard removal
         # is the documented recompaction case (rebuild without them).
         dead = set(exclude_ids)
-        out_rows = [r for r in out_rows if r[id_col] not in dead]
-    top = sess.createDataFrame(out_rows[:k], schema)
-    return top.withColumnRenamed("_s", sim_col)
+        out_rows = [r for r in out_rows if r[0] not in dead]
+    return _local_frame(source.sparkSession, out_rows[:k], StructType(
+        schema.fields[:2] + [StructField(sim_col, schema["_s"].dataType,
+                                         schema["_s"].nullable)]))
 
 
 def beam_search_knn_batch(edges: DataFrame, source: DataFrame,
@@ -1311,7 +1346,7 @@ def _append_graph_delta(spark, path: str, brows, existing: DataFrame,
 
     # new nodes' top-m over C∪B: the kind=1 stream (batch src) unioned
     # over blocks, reduced by the global per-src window
-    new_side = cross.filter(F.col("src").isin([int(x) for x in bids]))
+    new_side = cross.filter(id_in("src", bids))
     w = Window.partitionBy("src").orderBy(F.col("sim").desc(),
                                           F.col("dst").asc())
     new_edges = (new_side.dropDuplicates(["src", "dst"])
@@ -1329,7 +1364,7 @@ def _append_graph_delta(spark, path: str, brows, existing: DataFrame,
              .filter(F.col("_rn") == m)
              .select("src", F.col("sim").alias("wsim"),
                      F.col("dst").alias("wdst")))
-    improvements = (cross.filter(~F.col("src").isin([int(x) for x in bids]))
+    improvements = (cross.filter(~id_in("src", bids))
                     .join(worst, "src", "left")
                     .filter(F.col("wsim").isNull()
                             | (F.col("sim") > F.col("wsim"))
@@ -1360,17 +1395,22 @@ def delete_from_nsw_index(spark, path: str, ids: Sequence[int]) -> None:
     the store's pending-delete backlog, bounded by recompaction cadence
     (rebuild without the tombstoned rows folds it back to zero, the
     IVFADC ``compact`` pattern)."""
-    (spark.createDataFrame([(int(x),) for x in ids], "vec_id long")
+    (spark.createDataFrame([(int(x),) for x in ids], _TOMBSTONE_SCHEMA)
      .coalesce(1).write.mode("append").parquet(f"{path}/_tombstones"))
 
 
 def read_nsw_tombstones(spark, path: str) -> list[int]:
-    import os
-    tpath = f"{path}/_tombstones"
-    if not os.path.isdir(tpath):
+    """The store's soft-deleted ids, sorted.  Existence goes through
+    the Hadoop FileSystem (a posix stat is always False for a
+    ``file://``, ``s3a://`` or ``hdfs://`` store, which would silently
+    serve deleted ids) and the table is read with its fixed schema, so
+    no schema-inference job runs."""
+    from openai_vector_search_demo_spark.stores import fs_exists
+    tpath = f"{path.rstrip('/')}/_tombstones"
+    if not fs_exists(spark, tpath):
         return []
-    return sorted(r.vec_id for r in spark.read.parquet(tpath)
-                  .distinct().collect())
+    return sorted(r[0] for r in spark.read.schema(_TOMBSTONE_SCHEMA)
+                  .parquet(tpath).distinct().collect())
 
 
 def compact_nsw_index(spark, path: str, source: DataFrame, dest: str,
@@ -1390,7 +1430,7 @@ def compact_nsw_index(spark, path: str, source: DataFrame, dest: str,
     dead = read_nsw_tombstones(spark, path)
     live = source
     if dead:
-        live = source.filter(~F.col(id_col).isin([int(x) for x in dead]))
+        live = source.filter(~id_in(id_col, dead))
     write_nsw_index(live, dest, m=m, vec_col=vec_col, id_col=id_col,
                     n_buckets=n_buckets)
     return len(dead)
@@ -1469,6 +1509,22 @@ def resolve_stored_levels(spark, path: str, m: int = NSW_M):
     return levels, meta
 
 
+def _stored_adj(spark, path: str, n_buckets: int, delta: bool,
+                m: int) -> AdjRelation:
+    """Bucket-pruned lookup over ONE stored graph directory — the base
+    store or an ``_L*`` level — read with the fixed ``_STORE_SCHEMA``
+    (no schema-inference job).  ``rel(ids)`` is two parsed IN lists:
+    the ids' src buckets (partition pruning at discovery time, the
+    stored-LSH pattern) and the ids themselves (parquet pushdown)."""
+    g = spark.read.schema(_STORE_SCHEMA).parquet(path)
+
+    def rel(ids):
+        buckets = sorted({int(i) % n_buckets for i in ids})
+        return g.filter(id_in("bucket", buckets) & id_in("src", ids))
+
+    return AdjRelation(rel, trusted=not delta, m=m, pred_rel=g.filter)
+
+
 def nsw_stored_knn(spark, path: str, source: DataFrame,
                    qvec: Sequence[float], k: int = 10,
                    ef: int = NSW_EF, rounds: int = NSW_ROUNDS,
@@ -1481,10 +1537,15 @@ def nsw_stored_knn(spark, path: str, source: DataFrame,
                    stop_k: int | None = NSW_STOP_K) -> DataFrame:
     """Serving read of a ``write_nsw_index`` store: each round touches
     only the frontier's src BUCKET DIRECTORIES (the lookup filters the
-    partition column derived from the frontier ids — partition pruning
-    at discovery time, the stored-LSH pattern) and the scored ids'
-    vectors (broadcast point-reads).  ``n_buckets`` must match the
-    write.
+    partition column derived from the frontier ids with one ``id_in``
+    list — partition pruning at discovery time, the stored-LSH pattern
+    — and the src ids with a second, pushed into the parquet scan) and
+    the scored ids' vectors (``id_in`` point reads).  ``n_buckets``
+    must match the write.  The base store, its ``_L*`` levels and the
+    tombstones are read with their fixed schemas (``_STORE_SCHEMA``,
+    ``_TOMBSTONE_SCHEMA``), so no schema-inference job runs; the only
+    jobs of a serve are its beam rounds, and the returned top-k is a
+    local relation whose ``collect()`` runs none.
 
     MERGE-ON-READ: the per-src top-``m`` window resolves the current
     OUT-list from (original ∪ ``upsert_nsw_index``-appended) fwd rows —
@@ -1499,24 +1560,14 @@ def nsw_stored_knn(spark, path: str, source: DataFrame,
     displacement can never steer the beam off the oracle's graph."""
     from openai_vector_search_demo_spark.stores import fs_exists
 
-    edges = spark.read.parquet(path)
     # Hadoop-FS stat, not os.path: the marker must be visible on ANY
     # store URI (s3a://, hdfs://) or an upserted remote store would
     # silently take the fresh-store fast path and serve a stale graph.
     has_deltas = fs_exists(spark, path.rstrip("/") + "/_DELTAS")
-
-    def _rel(ids):
-        buckets = sorted({int(i) % n_buckets for i in ids})
-        sel = edges.filter(F.col("bucket").isin(buckets)
-                           & F.col("src").isin(ids))
-        if not has_deltas:
-            # never-upserted store (the common serving case): every
-            # src has exactly m fwd rows and every mirror is valid —
-            # the rows ARE the undirected adjacency
-            return sel.select("src", "dst")
-        return sel.select("src", "dst", "sim", "fwd")
-
-    lookup = AdjRelation(_rel, trusted=not has_deltas, m=m)
+    # a never-upserted store (the common serving case) is TRUSTED:
+    # every src has exactly m fwd rows and every mirror is valid — the
+    # rows ARE the undirected adjacency
+    lookup = _stored_adj(spark, path, n_buckets, has_deltas, m)
 
     # v4 hierarchical entry off the store's own level stack: each
     # level's lookup prunes its _L{l} bucket directories by the
@@ -1542,30 +1593,6 @@ def nsw_stored_knn(spark, path: str, source: DataFrame,
             counts = meta.get("counts", [meta["n1"], 0])
             mm = int(meta.get("m", m))
 
-            def level_adj(lvl: int) -> AdjRelation:
-                le = spark.read.parquet(f"{path.rstrip('/')}/_L{lvl}")
-                # pre-v4 layers were written whole (symmetric, no
-                # fwd/mirror split): their rows ARE the traversal
-                # relation, delta markers or not
-                delta_layer = has_deltas and "fwd" in le.columns
-
-                def rel(ids, _le=le, _d=delta_layer):
-                    buckets = sorted({int(i) % n_buckets for i in ids})
-                    sel = _le.filter(F.col("bucket").isin(buckets)
-                                     & F.col("src").isin(ids))
-                    if not _d:
-                        return sel.select("src", "dst")
-                    return sel.select("src", "dst", "sim", "fwd")
-
-                def pred_rel(pred, _le=le, _d=delta_layer):
-                    sel = _le.filter(pred)
-                    if not _d:
-                        return sel.select("src", "dst")
-                    return sel.select("src", "dst", "sim", "fwd")
-
-                return AdjRelation(rel, trusted=not delta_layer, m=mm,
-                                   pred_rel=pred_rel)
-
             levels = []
             prod = 1
             for lvl, (s, cnt) in enumerate(zip(strides, counts),
@@ -1573,7 +1600,9 @@ def nsw_stored_knn(spark, path: str, source: DataFrame,
                 prod *= s
                 if cnt < NSW_HIER_FLOOR:
                     break
-                levels.append(level_adj(lvl))
+                levels.append(_stored_adj(
+                    spark, f"{path.rstrip('/')}/_L{lvl}", n_buckets,
+                    has_deltas, mm))
             flat_mod = prod
             if not levels:
                 levels, flat_mod = None, None

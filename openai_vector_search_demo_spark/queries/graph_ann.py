@@ -2208,6 +2208,7 @@ def ann_nsw_compacted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     never per batch."""
     import os
 
+    from openai_vector_search_demo_spark.functions.vectors import id_in
     from openai_vector_search_demo_spark.operators.nsw import (
         compact_nsw_index,
         nsw_serving_params,
@@ -2229,7 +2230,7 @@ def ann_nsw_compacted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write(str(n_folded))
     # the live corpus: compaction's vector table drops deleted rows too
     dead = read_nsw_tombstones(spark, store)
-    live = base.filter(~F.col("vec_id").isin([int(x) for x in dead]))
+    live = base.filter(~id_in("vec_id", dead))
     # the compacted store was rebuilt from exactly this live corpus,
     # so its frozen stride IS ceil(sqrt(n_live)) — no count job
     stride, ef, rounds = _nsw_stored_params(spark, dest)

@@ -15,6 +15,7 @@ from openai_vector_search_demo_spark.functions.text import (
 )
 from openai_vector_search_demo_spark.functions.vectors import (
     cosine_similarity,
+    id_in,
     vector_lit,
 )
 
@@ -83,6 +84,63 @@ def test_cosine_self_is_one(spark):
 def test_cosine_orthogonal_is_zero(spark):
     got = one(spark, cosine_similarity(vector_lit([1.0, 0.0]), vector_lit([0.0, 2.0])))
     assert abs(got) < 1e-12
+
+
+# ---------------------------------------------------------------------------
+# id_in — the graph tier's point-read predicate
+# ---------------------------------------------------------------------------
+
+_WIDE = [-7, -1, 0, 5, 2**31 - 1, 2**31, 2**31 + 5, 2**40, -(2**35)]
+
+
+def _wide_ids(spark):
+    return spark.createDataFrame([(i,) for i in _WIDE], "id long")
+
+
+def test_id_in_empty_list_selects_nothing(spark):
+    df = _wide_ids(spark)
+    assert df.filter(id_in("id", [])).count() == 0
+    assert df.filter(~id_in("id", [])).count() == len(_WIDE)
+
+
+def test_id_in_wide_and_negative_ids(spark):
+    df = _wide_ids(spark)
+    want = [-(2**35), -7, 2**31, 2**40]
+    got = sorted(r.id for r in df.filter(id_in("id", want + [3])).collect())
+    assert got == want
+
+
+def test_id_in_same_rows_as_isin(spark):
+    df = spark.range(-40, 40).selectExpr("id", "CAST(id % 7 AS INT) AS b")
+    for ids in ([3], [1, 2, 9], list(range(-30, 30, 3)), [2**33, -5]):
+        for col in ("id", "b"):
+            got = sorted(r.id for r in df.filter(id_in(col, ids)).collect())
+            ref = sorted(r.id for r in
+                         df.filter(F.col(col).isin(ids)).collect())
+            assert got == ref, (col, ids)
+
+
+def test_id_in_keeps_in_pushdown_and_bucket_pruning(spark, tmp_path):
+    """Optimized plan keeps the IN (InSet above the conversion threshold)
+    and the parquet scan still prunes the bucket partition column."""
+    import re
+
+    path = str(tmp_path / "store")
+    (spark.range(200).selectExpr("id AS src",
+                                 "CAST(id % 8 AS INT) AS bucket")
+     .write.partitionBy("bucket").parquet(path))
+    store = spark.read.schema("src long, bucket int").parquet(path)
+    few, many = [3, 12], list(range(1, 60, 4))
+    for ids in (few, many):
+        df = store.filter(id_in("bucket", sorted({i % 8 for i in ids}))
+                          & id_in("src", ids))
+        qe = df._jdf.queryExecution()
+        opt = qe.optimizedPlan().toString()
+        assert re.search(r"src#\d+L (IN \(|INSET )", opt), opt
+        scan = qe.executedPlan().toString()
+        assert re.search(r"PartitionFilters: \[[^\]]*bucket#\d+ "
+                         r"(IN \(|INSET )", scan), scan
+        assert sorted(r.src for r in df.collect()) == ids
 
 
 # ---------------------------------------------------------------------------

@@ -12,6 +12,7 @@ from openai_vector_search_demo_spark.operators.nsw import (
     beam_search_knn,
     build_knn_graph,
     nsw_knn,
+    nsw_serving_params,
     nsw_stored_knn,
     write_nsw_index,
 )
@@ -263,6 +264,31 @@ def test_soft_delete_ghosts_keep_carrying_the_beam(spark, tmp_path):
                           m=2).collect()]
     assert 3 not in got          # never returned
     assert got[0] == 1           # but the beam crossed it
+
+
+def test_tombstones_honored_on_file_uri_store(spark, emb, tmp_path):
+    """A store addressed by a ``file://`` URI must serve its soft
+    deletes: the tombstone check goes through the Hadoop FileSystem, so
+    the query's own nearest id, once deleted, is never returned."""
+    from openai_vector_search_demo_spark.operators.nsw import (
+        delete_from_nsw_index,
+        read_nsw_tombstones,
+    )
+    store = "file://" + str(tmp_path / "nsw")
+    write_nsw_index(emb, store, m=3, n_buckets=4)
+    qvec = emb.filter(F.col("vec_id") == 7).first().embedding
+
+    def serve():
+        return [r.vec_id for r in
+                nsw_stored_knn(spark, store, emb, qvec, k=10, ef=N,
+                               rounds=3, seeds=[2, 10], n_buckets=4,
+                               m=3).collect()]
+    best = serve()[0]
+    assert best == 7
+    delete_from_nsw_index(spark, store, [best])
+    assert read_nsw_tombstones(spark, store) == [best]
+    got = serve()
+    assert best not in got and len(got) == 10
 
 
 def test_duplicate_multiplicity_disconnects_graph(spark):
@@ -565,6 +591,44 @@ def test_hierarchical_entry_stored_equals_inline(spark, tmp_path):
               nsw_knn(big, qvec, k=10, m=3, ef=ef, rounds=rounds,
                       stride=stride).collect()]
     assert stored == inline and len(stored) == 10
+
+
+def test_stored_serve_job_budget(spark, tmp_path):
+    """On the hierarchical fixture one stored serve runs only its beam
+    rounds — no parquet schema-inference job (the store schema is
+    fixed) — and its answer is a local relation, so collecting it runs
+    no job at all.  Counted from the status tracker per job group."""
+    rng = np.random.RandomState(7)
+    big = spark.createDataFrame(
+        [(i, i % 4, [round(float(x), 6) for x in rng.randn(DIM)])
+         for i in range(1, 401)],
+        "vec_id long, label int, embedding array<double>")
+    store = str(tmp_path / "nswh")
+    write_nsw_index(big, store, m=3, n_buckets=4)
+    stride, ef, rounds = nsw_serving_params(400)
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, st.getJobIdsForGroup(group)
+
+    top, serve_jobs = jobs_of("nsw-budget-serve", lambda: nsw_stored_knn(
+        spark, store, big, [0.2] * DIM, k=10, ef=ef, rounds=rounds,
+        n_buckets=4, m=3, stride=stride))
+    stages = [st.getStageInfo(s).name for j in serve_jobs
+              for s in st.getJobInfo(j).stageIds]
+    assert serve_jobs, "the beam rounds run as jobs of the group"
+    assert not [n for n in stages if n.startswith("parquet at")], stages
+    rows, collect_jobs = jobs_of("nsw-budget-collect", top.collect)
+    assert len(rows) == 10
+    assert list(collect_jobs) == []
 
 
 @pytest.mark.slow

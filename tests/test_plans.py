@@ -552,6 +552,11 @@ def test_nsw_stored_lookup_prunes_buckets_and_search_is_python_free(
     scan or shuffle."""
     from pyspark.sql import functions as F
 
+    from openai_vector_search_demo_spark.functions.vectors import (
+        cosine_similarity,
+        id_in,
+        vector_lit,
+    )
     from openai_vector_search_demo_spark.operators.nsw import (
         nsw_stored_knn,
         write_nsw_index,
@@ -564,8 +569,7 @@ def test_nsw_stored_lookup_prunes_buckets_and_search_is_python_free(
     write_nsw_index(base, store, m=4, n_buckets=8)
 
     edges = spark.read.parquet(store)
-    lookup = edges.filter(F.col("bucket").isin([1, 5])
-                          & F.col("src").isin([1, 101]))
+    lookup = edges.filter(id_in("bucket", [1, 5]) & id_in("src", [1, 101]))
     p = _physical(lookup)
     assert "PartitionFilters" in p and "bucket" in p
 
@@ -574,19 +578,15 @@ def test_nsw_stored_lookup_prunes_buckets_and_search_is_python_free(
     p = _physical(top)
     # the single-query beam accumulates scored rows driver-side, so the
     # RESULT plan is just the bounded k-row relation — that boundedness
-    # is the assertion
-    assert "ExistingRDD" in p
+    # is the assertion (a driver-local relation: collecting it runs no job)
+    assert "LocalTableScan" in p
     assert "BatchEvalPython" not in p and "MapInPandas" not in p
     # the per-round plan (what each fused action actually runs, r16):
     # ONE union of the IN-pushdown scoring point-read and the pruned
     # adjacency prefetch — no join, no exchange, no Python; both
     # branches push their IN lists to the parquet scan
-    from openai_vector_search_demo_spark.functions.vectors import (
-        cosine_similarity,
-        vector_lit,
-    )
     todo = [1, 2, 101, 102]
-    score = (base.filter(F.col("vec_id").isin(todo))
+    score = (base.filter(id_in("vec_id", todo))
              .withColumn("_s", F.round(
                  cosine_similarity(F.col("embedding"),
                                    vector_lit(qvec)), 6))
