@@ -195,6 +195,16 @@ def embed_udf(embedder: Embedder | None = None):
     (modules/utilities.py:207-208).  The default-embedder UDF is built
     once per process (memoized) — re-wrapping it on every pipeline
     construction is pure driver overhead.
+
+    The UDF is declared NONDETERMINISTIC, which is the truth for a remote
+    API (a call can fail transiently and succeed on the next try).  A
+    deterministic UDF lets Catalyst push that null filter below the
+    projection and inline the UDF into it: the plan then holds two
+    ``ArrowEvalPython`` nodes and embeds every row twice — twice the
+    Python tasks, twice the API calls, and a row whose FIRST call
+    succeeded but whose second failed slips past the filter with a null
+    vector (null cosine; NaN sorts first).  Nondeterministic, it runs
+    exactly once per row and the filter sees the value that is stored.
     """
     if embedder is None:
         return _default_embed_udf()
@@ -207,7 +217,7 @@ def _make_embed_udf(emb: Embedder):
         for texts in it:
             yield emb.embed_batch(texts)
 
-    return _embed
+    return _embed.asNondeterministic()
 
 
 @functools.lru_cache(maxsize=1)

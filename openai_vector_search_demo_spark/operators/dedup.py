@@ -486,11 +486,23 @@ def minhash_lsh_cross_stored(spark, new: DataFrame, store: str,
     values; the band partitioning co-locates the join's biggest key."""
     shn = _shingle_side(new, id_col, text_col, k, num_hashes, "n", cache)
     rows = num_hashes // bands
-    entries_e = spark.read.parquet(store)
-    hs_e = spark.read.parquet(store + "_sigs")
+    entries_e, hs_e = _read_band_store(spark, store, shn)
     return _cross_verify(
         _band_entries(shn, "n", rows, bands), entries_e,
         shn.select("id_n", "hs_n"), hs_e, threshold)
+
+
+def _read_band_store(spark, store: str, shn: DataFrame):
+    """A ``write_band_index`` store's ``(band entries, shingle sets)``,
+    read with their fixed schemas instead of inferring them (inference
+    is one parquet-footer job per read).  The id type is the new side's
+    (``shn``'s ``id_n``): the store holds ids of the same column the
+    writer was given."""
+    id_type = shn.schema["id_n"].dataType.simpleString()
+    return (spark.read.schema(f"id_e {id_type}, bucket bigint, band int")
+            .parquet(store),
+            spark.read.schema(f"id_e {id_type}, hs_e array<bigint>")
+            .parquet(store + "_sigs"))
 
 
 def ingest_batch_against_index(spark, batch: DataFrame, store: str,
@@ -508,32 +520,45 @@ def ingest_batch_against_index(spark, batch: DataFrame, store: str,
     composition shingles the batch twice).  Returns the verified
     ``(new_id, existing_id, jaccard)`` matches; the admitted set is
     ``batch − distinct(new_id)``.  The accumulated corpus is never
-    re-shingled; the caller wraps a loop of these per batch."""
+    re-shingled; the caller wraps a loop of these per batch.
+
+    The shingled batch and the admitted frame are cached for the round
+    only and released once the appends are done, with or without a
+    ``cache_scope()`` around the call (a plain loop, or the streaming
+    gate, would otherwise hold two caches per batch for the session's
+    lifetime); the returned matches are an eager checkpoint."""
     sh = _shingle_side(batch, id_col, text_col, k, num_hashes, "n",
-                       cache=True)
-    rows = num_hashes // bands
-    # localCheckpoint, not persist: the append below grows the very
-    # parquet files this plan reads, and a lazily-persisted frame whose
-    # cache fills during the append job re-lists the store and reports
-    # every admitted doc as a jaccard-1.0 SELF-match.  The eager
-    # checkpoint pins the pre-append result (bounded: verified pairs of
-    # ONE batch).
-    matches = _cross_verify(
-        _band_entries(sh, "n", rows, bands),
-        spark.read.parquet(store),
-        sh.select("id_n", "hs_n"), spark.read.parquet(store + "_sigs"),
-        threshold).localCheckpoint(eager=True)
-    rejected = matches.select(F.col("new_id").alias("_rej_id")).distinct()
-    adm = (sh.join(rejected, sh["id_n"] == F.col("_rej_id"),
-                   "left_anti")
-           .select(F.col("id_n").alias("id_e"),
-                   F.col("hs_n").alias("hs_e"), "signature"))
-    adm = scoped_persist(adm)
-    (_band_entries(adm, "e", rows, bands)
-     .repartition(F.col("band"))
-     .write.mode("append").partitionBy("band").parquet(store))
-    adm.select("id_e", "hs_e").write.mode("append").parquet(
-        store + "_sigs")
+                       cache=False).persist()
+    adm = None
+    try:
+        rows = num_hashes // bands
+        entries_e, hs_e = _read_band_store(spark, store, sh)
+        # localCheckpoint, not persist: the append below grows the very
+        # parquet files this plan reads, and a lazily-persisted frame
+        # whose cache fills during the append job re-lists the store and
+        # reports every admitted doc as a jaccard-1.0 SELF-match.  The
+        # eager checkpoint pins the pre-append result (bounded: verified
+        # pairs of ONE batch).
+        matches = _cross_verify(
+            _band_entries(sh, "n", rows, bands), entries_e,
+            sh.select("id_n", "hs_n"), hs_e,
+            threshold).localCheckpoint(eager=True)
+        rejected = matches.select(
+            F.col("new_id").alias("_rej_id")).distinct()
+        adm = (sh.join(rejected, sh["id_n"] == F.col("_rej_id"),
+                       "left_anti")
+               .select(F.col("id_n").alias("id_e"),
+                       F.col("hs_n").alias("hs_e"), "signature")
+               .persist())
+        (_band_entries(adm, "e", rows, bands)
+         .repartition(F.col("band"))
+         .write.mode("append").partitionBy("band").parquet(store))
+        adm.select("id_e", "hs_e").write.mode("append").parquet(
+            store + "_sigs")
+    finally:
+        sh.unpersist()
+        if adm is not None:
+            adm.unpersist()
     return matches
 
 

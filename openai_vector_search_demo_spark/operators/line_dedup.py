@@ -167,10 +167,13 @@ def _line_bucket(lh):
                   F.lit(LINE_INDEX_BUCKETS)).cast("int")
 
 
-def _append_owners(occ: DataFrame, path: str,
+def _append_owners(kept: DataFrame, path: str,
                    mode: str = "append") -> None:
-    """Write distinct ``(lh, doc_id)`` owner rows, bucket-partitioned."""
-    (occ.select("lh", "doc_id").distinct()
+    """Write the ``(lh, doc_id)`` owner rows of ``_keep_first_within``
+    output, bucket-partitioned.  That output has one row per ``lh``
+    (a batch repeating a doc id can repeat an owner row, which the
+    read side's min() resolution collapses), so no distinct shuffle."""
+    (kept.select("lh", "doc_id")
      .withColumn("bucket", _line_bucket(F.col("lh")))
      .repartition(F.col("bucket"))
      .write.mode(mode).partitionBy("bucket").parquet(path))
@@ -198,11 +201,14 @@ def write_line_index(df: DataFrame, path: str,
     _append_owners(_keep_first_within(occ), path, mode=mode)
 
 
-def _store_owners(spark, store: str) -> DataFrame:
+def _store_owners(spark, store: str, id_type: str) -> DataFrame:
     """Resolved ``(lh, owner)`` view of a line index: duplicate owner
     rows (at-least-once appends) collapse to min — one partial-agg min
-    per hash, skew-safe."""
-    return (spark.read.parquet(store)
+    per hash, skew-safe.  Read with the index's fixed schema (``id_type``
+    is the batch's doc id type, the type the writer stores) instead of
+    inferring it: inference is one parquet-footer job per read."""
+    return (spark.read.schema(f"lh string, doc_id {id_type}, bucket int")
+            .parquet(store)
             .groupBy("lh").agg(F.min("doc_id").alias("owner")))
 
 
@@ -212,7 +218,8 @@ def _admitted_occurrences(spark, batch: DataFrame, store: str,
     surviving line occurrences after the store-owner rule + within-
     batch keep_first."""
     base, occ = _line_occurrences(batch, text_col, id_col, line_sep)
-    owners = _store_owners(spark, store)
+    owners = _store_owners(spark, store,
+                           occ.schema["doc_id"].dataType.simpleString())
     eligible = (occ.join(owners, "lh", "left")
                 .filter(F.col("owner").isNull()
                         | (F.col("owner") == F.col("doc_id")))

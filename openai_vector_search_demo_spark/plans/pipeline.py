@@ -4,6 +4,11 @@
     raw docs → chunk (C3) → cleanse (P1) → non-empty filter (P2) → embed (E1)
     → key (S9) → chunks table.
 One job; the embed stage is the only Python boundary and is Arrow-batched.
+It runs ONCE per chunk: ``embed_udf`` is nondeterministic, so the E2 null
+filter stays above the projection instead of being pushed below it with
+the UDF inlined (two ``ArrowEvalPython`` nodes — every chunk embedded
+twice, and a transient failure on the second call storing a null vector).
+The plan pin is ``tests/test_plans.py::test_ingest_plans_hold_one_embed_node``.
 
 §3.2 search  (search_click → getResult, app/app.py:249-334,64-113):
     embed prompt (Q1) → exact cosine KNN top-k (Q2–Q5) → similarity (P7/Q6)

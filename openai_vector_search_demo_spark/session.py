@@ -9,6 +9,16 @@ One place that encodes the scale posture (SURVEY.md §4.4):
 - **Arrow on** — every Python boundary (pandas UDF, toPandas) is Arrow-batched.
 - **shuffle partitions** default to cores on local mode; on a real cluster this
   is overridden to ~2-3× total executor cores (AQE coalesces down).
+- **codegen cache of 1000 classes** (``spark.sql.codegen.cache.maxEntries``,
+  default 100) — one continuous-ingestion batch cycle (MinHash admission,
+  line-dedup admission, repetition signals, chunk+embed append and a
+  read-after-write ``search``) generates 133 distinct classes, so the
+  default LRU evicts each class before the next batch asks for it again:
+  every steady-state batch recompiled 114 classes with Janino (measured
+  on 4 cores), each then compiled again by the JIT.  With room for them,
+  a steady-state batch compiles about 3 (1 in the admission and append
+  steps, 2 in the read-after-write ``search``; AQE can add a few whole-
+  stage classes whose stage number depends on stage completion order).
 """
 
 from __future__ import annotations
@@ -37,6 +47,11 @@ def get_spark(app_name: str = "openai-vector-search-demo-spark",
     guarantees never depend on it: e.g. the E3 once-per-candidate pin
     rests on an explicit ``localCheckpoint`` boundary
     (``plans/pipeline.py``), not on AQE's exchange materialization.
+
+    The codegen cache size is a static conf, so it only takes effect on
+    the session this call creates; the pin that a repeated ingest batch
+    reuses its compiled classes is
+    ``tests/test_plans.py::test_ingest_batch_cycle_reuses_compiled_code``.
     """
     cores = default_parallelism()
     builder = (
@@ -54,6 +69,8 @@ def get_spark(app_name: str = "openai-vector-search-demo-spark",
         # driver-side literals (query vectors, tiny lookup frames) don't need
         # one partition per core
         .config("spark.sql.leafNodeDefaultParallelism", "4")
+        # static; sized for an ingest batch cycle (module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if master is not None:
         builder = builder.master(master)

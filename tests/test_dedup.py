@@ -711,3 +711,31 @@ def test_ingest_batch_shingles_once_and_appends_only_admitted(spark,
     m2 = ingest_batch_against_index(spark, batch, store)
     assert {r.new_id for r in m2.select("new_id").distinct().collect()} \
         == batch_ids
+
+
+def _round_caches(spark) -> int:
+    """Persisted RDDs other than local checkpoints (an admission round
+    returns its matches as one; the caller owns it)."""
+    return sum(1 for r in spark.sparkContext._jsc.getPersistentRDDs()
+               .values() if not r.rdd().isLocallyCheckpointed())
+
+
+def test_admission_rounds_release_their_caches(spark, tmp_path):
+    """Outside any cache_scope() (a plain ingest loop, the streaming
+    near-dup gate), each ingest_batch_against_index round releases the
+    shingled batch and the admitted frame it cached once its appends are
+    done: four rounds leave the persisted-RDD count where it was."""
+    from openai_vector_search_demo_spark.operators.dedup import (
+        ingest_batch_against_index, write_band_index)
+    docs = spark.read.parquet(
+        "/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
+    store = str(tmp_path / "rounds_store")
+    write_band_index(docs.filter(F.col("doc_id") < 200), store)
+    before = _round_caches(spark)
+    for r in range(4):
+        # re-arrivals of stored docs (matches) plus unseen ones (admitted)
+        fresh = F.col("doc_id").between(200 + 50 * r, 249 + 50 * r)
+        batch = (docs.filter((F.col("doc_id") % 4 == r) | fresh)
+                 .withColumn("doc_id", F.col("doc_id") + 1000000 * (r + 1)))
+        assert ingest_batch_against_index(spark, batch, store).count() > 0
+        assert _round_caches(spark) == before, f"round {r} leaked caches"

@@ -203,6 +203,153 @@ def test_search_scorer_executes_once_per_candidate(spark, tmp_path):
     assert scored_rows == 5
 
 
+def _tally_transport(tally_dir: str, fail_every_other: bool = False):
+    """A ``LocalModelTransport`` (dim 16) that writes each call's text
+    count to its own file under ``tally_dir`` (UDF workers are separate
+    processes sharing the filesystem).  With ``fail_every_other`` every
+    second call of a task's copy raises before reaching the model."""
+    import os
+    import uuid
+
+    from openai_vector_search_demo_spark.embedding.embedder import (
+        LocalModelTransport,
+    )
+    model = LocalModelTransport(16)
+    calls = [0]
+
+    def transport(texts):
+        calls[0] += 1
+        if fail_every_other and calls[0] % 2 == 0:
+            raise ConnectionError("transient")
+        with open(os.path.join(tally_dir, uuid.uuid4().hex), "w") as f:
+            f.write(str(len(texts)))
+        return model(texts)
+
+    return transport
+
+
+def _ingest_plan(spark, kind: str, embedder):
+    """``ingest_documents`` or ``ingest_pages`` over 24 documents of 450
+    words (two chunks each, or one page each) in ONE partition, so every
+    task-local transport copy sees more than one call at any core count."""
+    from openai_vector_search_demo_spark.plans.pipeline import (
+        ingest_documents,
+        ingest_pages,
+    )
+    rows = [(f"doc{i}", " ".join(f"w{i}_{j % 37}" for j in range(450)))
+            for i in range(24)]
+    if kind == "documents":
+        return ingest_documents(
+            spark.createDataFrame(rows, "source string, text string")
+            .coalesce(1), embedder=embedder)
+    return ingest_pages(
+        spark.createDataFrame([(p, 0, t) for p, t in rows],
+                              "doc_path string, page_no int, text string")
+        .coalesce(1), embedder=embedder)
+
+
+@pytest.mark.parametrize("kind", ["documents", "pages"])
+def test_ingest_embeds_each_chunk_once(spark, tmp_path, kind):
+    """E1 runs once per output chunk: a production embedder makes one API
+    request per text, not one for the E2 null filter and another for the
+    stored column."""
+    import glob
+    import os
+
+    from openai_vector_search_demo_spark.embedding.embedder import (
+        RemoteEmbedder,
+    )
+    tally_dir = str(tmp_path / "embedded")
+    os.makedirs(tally_dir)
+    emb = RemoteEmbedder(_tally_transport(tally_dir), dim=16, batch_size=4)
+    out = _ingest_plan(spark, kind, emb).collect()
+    assert len(out) == (48 if kind == "documents" else 24)
+    embedded = sum(int(open(p).read())
+                   for p in glob.glob(os.path.join(tally_dir, "*")))
+    assert embedded == len(out)
+
+
+@pytest.mark.parametrize("kind", ["documents", "pages"])
+def test_ingest_flaky_transport_leaves_no_null_embedding(spark, tmp_path,
+                                                         kind):
+    """A transport failing every other call (no retry) drops the failed
+    chunks at E2; none is stored with a null vector.  Evaluated twice,
+    a chunk whose first call succeeded and second failed would pass the
+    filter and be stored null."""
+    import os
+
+    from openai_vector_search_demo_spark.embedding.embedder import (
+        RemoteEmbedder,
+    )
+    tally_dir = str(tmp_path / "embedded")
+    os.makedirs(tally_dir)
+    emb = RemoteEmbedder(_tally_transport(tally_dir, fail_every_other=True),
+                         dim=16, batch_size=1, max_retries=1)
+    out = _ingest_plan(spark, kind, emb).collect()
+    assert 0 < len(out) < (48 if kind == "documents" else 24)
+    assert all(r.embedding is not None for r in out)
+
+
+def test_ingest_plans_hold_one_embed_node(spark):
+    """One ``ArrowEvalPython`` per ingest plan: the E2 null filter is not
+    pushed below the embed projection with the UDF inlined into it."""
+    from openai_vector_search_demo_spark.plans.pipeline import (
+        ingest_documents,
+    )
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plans = {
+        # flagship_search's §3.1 stage
+        "ingest_documents": ingest_documents(docs, path_col="source"),
+        **{name: entrymod.queries()[name](spark, SF)
+           for name in ("flagship_search_oracled",
+                        "flagship_search_remote_slot")},
+    }
+    for name, df in plans.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, name
+
+
+def test_ingest_batch_cycle_reuses_compiled_code(spark, tmp_path):
+    """Same-shaped ingest batches reuse their generated code: after two
+    batches through MinHash admission -> line-dedup admission -> chunk
+    and embed append, the third compiles at most 2 classes with Janino.
+    A cycle generates over a hundred classes, which Spark's default
+    codegen cache (100 entries) cannot hold from one batch to the next."""
+    import pyarrow.parquet as pq
+
+    from openai_vector_search_demo_spark.operators import dedup, line_dedup
+    from openai_vector_search_demo_spark.plans.pipeline import (
+        ingest_documents,
+    )
+    jvm = spark.sparkContext._jvm
+    codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    pdf = pq.read_table(f"{SF}/documents.parquet",
+                        columns=["doc_id", "source", "text"]).to_pandas()
+    batches = [spark.createDataFrame(pdf.iloc[i:i + 100])
+               for i in range(0, 400, 100)]
+    band, lines, chunks = (str(tmp_path / n)
+                           for n in ("band", "lines", "chunks"))
+    dedup.write_band_index(batches[0], band)
+    line_dedup.write_line_index(batches[0], lines)
+    # AQE numbers whole-stage classes in the order its stages complete,
+    # so the same code can come back under a new stage id; with AQE off
+    # the ids are fixed and the count measures cache reuse alone
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for batch in batches[1:]:
+            before = codegen.METRIC_SOURCE_CODE_SIZE().getCount()
+            dedup.ingest_batch_against_index(spark, batch, band).collect()
+            line_dedup.ingest_lines_against_index(spark, batch,
+                                                  lines).collect()
+            (ingest_documents(batch, path_col="source")
+             .write.mode("append").parquet(chunks))
+            compiled = codegen.METRIC_SOURCE_CODE_SIZE().getCount() - before
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert compiled <= 2
+
+
 def test_tenant_partition_pruning_reaches_scan(spark, tmp_path):
     """filter(tenant = x) over a tenant-partitioned table must prune at the
     file listing (PartitionFilters), not post-scan — the §4.1 per-alias
