@@ -95,7 +95,6 @@ NSW_EF_SERVE = 160  # CONSTANT serving beam width — independent of n (v4)
 NSW_ROUNDS = 8     # frontier expansions (pinned; the oracle unrolls them)
 NSW_ENTRY_COUNT = 16  # base-beam entry points taken from the level stack
 NSW_HIER_W = 16    # per-level beam width AND seed count (constant in n)
-NSW_SEED_COUNT = NSW_HIER_W  # back-compat alias (pre-v4 name)
 NSW_L1_ROUNDS = 2     # beam rounds per graph-indexed hierarchy level
 NSW_HIER_FLOOR = 16   # level size below this -> score the level flat
 NSW_STOP_K = 32
@@ -415,8 +414,8 @@ def write_nsw_index(df: DataFrame, path: str, m: int = NSW_M,
     top-M graph under ``_L1``, ``_L2``, … (each in the SAME dual
     fwd/mirror bucketed format as the base layer, so the incremental
     upsert machinery applies to levels too — VERDICT r14 #2), and the
-    write-time geometry lands in ``_L1_META`` (strides + counts +
-    legacy v3 keys).  Level ℓ is n^(1/2^ℓ)-sized: its build is at most
+    write-time geometry lands in ``_L1_META`` (stride, strides, counts,
+    m, n).  Level ℓ is n^(1/2^ℓ)-sized: its build is at most
     n work (amortized next to the base n²-bounded build), depth is
     Θ(log log n), and serving entry costs depth·{NSW_L1_ROUNDS}·
     {NSW_HIER_W}·2M evaluations — flat in n."""
@@ -466,19 +465,15 @@ def _write_graph_dual(edges: DataFrame, path: str,
 def _write_hier_meta(spark, path: str, strides: list[int],
                      counts: list[int], m: int,
                      n: int | None = None) -> None:
-    """``_L1_META``: the frozen write-time geometry (v4 adds the full
-    ``strides``/``counts`` stack; the v3 scalar keys stay for
-    compatibility with pre-v4 readers and tests; r16 adds the corpus
-    size ``n`` so serving slots can derive their stride from the store
-    artifact instead of a per-run count job)."""
+    """``_L1_META``: the frozen write-time geometry — the full
+    ``strides``/``counts`` level stack, ``stride`` (= ``strides[0]``,
+    what serving slots compare their stride against), ``m``, and the
+    corpus size ``n`` (r16) so serving slots can derive their stride
+    from the store artifact instead of a per-run count job."""
     import json
 
     from openai_vector_search_demo_spark.stores import fs_write_text
-    legacy_stride2 = strides[1] if len(strides) > 1 else \
-        nsw_l1_params(counts[0])[0]
     meta = {"stride": int(strides[0]),
-            "n1": int(counts[0]),
-            "stride2": int(legacy_stride2),
             "m": int(m),
             "strides": [int(s) for s in strides],
             "counts": [int(c) for c in counts]}
@@ -681,9 +676,8 @@ def beam_search_knn(edges, source: DataFrame,
     seed scoring and seed adjacency ride one action too.
 
     ``edges`` / level entries are ``AdjRelation``s (the stored path's
-    bucket-pruned form), DataFrames of (src, dst), or legacy
-    ``ids -> DataFrame`` callables; ``hier_levels`` is ordered L1 → Ld
-    (the descent runs it reversed)."""
+    bucket-pruned form) or DataFrames of (src, dst); ``hier_levels`` is
+    ordered L1 → Ld (the descent runs it reversed)."""
     # Per-serve constant plan parts, built ONCE: a Column is a JVM
     # object whose construction costs driver↔JVM round trips (the score
     # expression alone ~1k), so the rounds reuse these; the union
@@ -704,8 +698,6 @@ def beam_search_knn(edges, source: DataFrame,
     def _as_adj(e):
         if isinstance(e, AdjRelation):
             return e
-        if callable(e):
-            return AdjRelation(e)
         return AdjRelation(
             lambda ids, _e=e: _e.filter(id_in("src", ids)),
             pred_rel=lambda pred, _e=e: _e.filter(pred))
@@ -1456,23 +1448,14 @@ def resolve_stored_edges(spark, path: str, m: int = NSW_M) -> DataFrame:
 
 
 def read_l1_meta(spark, path: str) -> dict | None:
-    """The store's L1-layer metadata (write-time stride/stride2/n1) or
-    None for a pre-v3 store — read through the Hadoop FS API so it is
-    visible on any store URI."""
+    """The store's ``_L1_META`` (write-time stride, strides, counts, m,
+    n — see ``_write_hier_meta``) or None when the path has none — read
+    through the Hadoop FS API so it is visible on any store URI."""
     import json
 
     from openai_vector_search_demo_spark.stores import fs_read_text
     txt = fs_read_text(spark, path.rstrip("/") + "/_L1_META")
     return json.loads(txt) if txt else None
-
-
-def resolve_stored_l1(spark, path: str):
-    """(l1_edges, meta) — the legacy depth-1 view of
-    ``resolve_stored_levels`` (kept for pre-v4 call sites/tests)."""
-    levels, meta = resolve_stored_levels(spark, path)
-    if meta is None:
-        return None, None
-    return (levels[0] if levels else None), meta
 
 
 def resolve_stored_levels(spark, path: str, m: int = NSW_M):
@@ -1481,27 +1464,19 @@ def resolve_stored_levels(spark, path: str, m: int = NSW_M):
     resolved with the merge-on-read top-``m`` window over its fwd rows
     (exact after ``upsert_nsw_index`` level appends) and symmetrized —
     one read per level, n^(1/2^ℓ)-sized, amortized over every query in
-    the batch.  ([], meta-or-None) when the store has no graph levels
-    (flat-entry corpora / pre-v3 stores)."""
+    the batch.  ([], meta) when the store has no graph levels
+    (flat-entry corpora); ([], None) for a path without ``_L1_META``."""
     meta = read_l1_meta(spark, path)
     if meta is None:
         return [], None
-    counts = meta.get("counts", [meta["n1"]])
     levels = []
     wm = Window.partitionBy("src").orderBy(F.col("sim").desc(),
                                            F.col("dst").asc())
     mm = int(meta.get("m", m))
-    for lvl, cnt in enumerate(counts, start=1):
+    for lvl, cnt in enumerate(meta["counts"], start=1):
         if cnt < NSW_HIER_FLOOR:
             break
         raw = spark.read.parquet(f"{path.rstrip('/')}/_L{lvl}")
-        if "fwd" not in raw.columns:
-            # pre-v4 store: _L1 was written as an already-symmetrized
-            # (src, dst, sim, bucket) relation with no fwd/mirror split
-            # — its rows ARE the traversal relation (no merge-on-read
-            # window applies: v3 rebuilt the layer whole on upsert)
-            levels.append(raw.select("src", "dst").distinct())
-            continue
         fwd = (raw.filter(F.col("fwd"))
                .withColumn("_rn", F.dense_rank().over(wm))
                .filter(F.col("_rn") <= mm).select("src", "dst"))
@@ -1585,18 +1560,11 @@ def nsw_stored_knn(spark, path: str, source: DataFrame,
     if stride is not None:
         meta = read_l1_meta(spark, path)
         if meta is not None and int(meta["stride"]) == int(stride):
-            strides = meta.get("strides", [meta["stride"],
-                                           meta["stride2"]])
-            # legacy v3 metas carry only n1: pad with a below-floor
-            # count so the loop terminates at flat_mod = stride·stride2
-            # (exactly the v3 flat-top geometry)
-            counts = meta.get("counts", [meta["n1"], 0])
             mm = int(meta.get("m", m))
-
             levels = []
             prod = 1
-            for lvl, (s, cnt) in enumerate(zip(strides, counts),
-                                           start=1):
+            for lvl, (s, cnt) in enumerate(zip(meta["strides"],
+                                               meta["counts"]), start=1):
                 prod *= s
                 if cnt < NSW_HIER_FLOOR:
                     break

@@ -25,7 +25,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openai_vector_search_demo_spark.caching import scoped_persist
-from openai_vector_search_demo_spark.stores import read_probed_partitions
+from openai_vector_search_demo_spark.stores import (
+    open_or_build,
+    read_probed_partitions,
+)
 from openai_vector_search_demo_spark.config import (
     HIGHLIGHT_PREFIX,
     HIGHLIGHT_SUFFIX,
@@ -177,9 +180,11 @@ def run_concurrent(thunks):
     cluster; results are deterministic because each thunk is).  The
     curve slots use this: N independent serving points cost max(point)
     wall-clock instead of sum(point) — exactly how a real serving tier
-    overlaps scheduler round-trips at any scale.  Exceptions propagate
-    to the caller; results return in thunk order."""
-    import threading
+    overlaps scheduler round-trips at any scale.  The threads are
+    ``InheritableThread``s, so their jobs carry the caller's job group,
+    description and other local properties.  Exceptions propagate to
+    the caller; results return in thunk order."""
+    from pyspark import InheritableThread
 
     results: list = [None] * len(thunks)
     errors: list = [None] * len(thunks)
@@ -190,7 +195,7 @@ def run_concurrent(thunks):
         except BaseException as exc:  # noqa: BLE001 — re-raised below
             errors[i] = exc
 
-    threads = [threading.Thread(target=runner, args=(i, fn))
+    threads = [InheritableThread(runner, args=(i, fn))
                for i, fn in enumerate(thunks)]
     for th in threads:
         th.start()
@@ -322,6 +327,7 @@ __all__ = [
     "SparkSession",
     "F",
     "scoped_persist",
+    "open_or_build",
     "read_probed_partitions",
     "HIGHLIGHT_PREFIX",
     "HIGHLIGHT_SUFFIX",

@@ -76,27 +76,6 @@ def ann_lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top.select("vec_id", "label", F.round("sim", 6).alias("similarity"))
 
 
-def _parquet_fingerprint(path: str) -> str:
-    """Content fingerprint of a parquet file-or-directory: total bytes +
-    newest mtime (ns) of the data files.  Cheap (a handful of stats), and it
-    changes whenever the data is regenerated in place — which a path-only
-    cache key cannot see (the r4 stale-index defect: regenerate the fixtures
-    at the same sf_dir and a path-keyed index silently serves stale
-    buckets)."""
-    import os
-    if os.path.isdir(path):
-        parts = sorted(
-            os.path.join(path, f) for f in os.listdir(path)
-            if f.endswith(".parquet") or f == "_SUCCESS")
-    else:
-        parts = [path]
-    sig = []
-    for p in parts:
-        st = os.stat(p)
-        sig.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
-    return ";".join(sig)
-
-
 def _neardup_pairs_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus's 3-gram Jaccard ≥ 0.4 near-dup PAIR RELATION
     (id_a, id_b), persisted once per corpus CONTENT fingerprint and
@@ -109,23 +88,20 @@ def _neardup_pairs_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup graph job reads — recomputed only on ingest (the
     ``write_band_index`` append loop maintains its candidate superset
     incrementally)."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.dedup import (
         ngram_jaccard_pairs,
     )
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|ngpairs_k3_t0.4|{_parquet_fingerprint(docs_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_ngpairs_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
+
+    def build(path):
         docs = t(spark, sf_dir, "documents").select("doc_id", "text")
         (ngram_jaccard_pairs(docs, k=3, threshold=0.4,
                              max_shingle_df=None)
          .select("id_a", "id_b")
-         .coalesce(4).write.mode("overwrite").parquet(store))
+         .coalesce(4).write.parquet(path))
+
+    store = open_or_build(spark, "ngpairs", 1,
+                          [f"{sf_dir}/documents.parquet"], build,
+                          k=3, threshold=0.4)
     return spark.read.parquet(store)
 
 
@@ -153,14 +129,13 @@ def ann_lsh_stored_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``isin`` filter keeps the PartitionFilters pin (`tests/test_ann.py`)
     and guards against stray files under ``basePath``.
 
-    The index build is cached per corpus CONTENT (path + data-file
-    size/mtime fingerprint — a regenerated corpus at the same path gets a
-    fresh index, the r4 ADVICE #5 stale-cache fix); a deployment builds it
-    once at write time, so the measured cost after the first run is the
-    pruned read."""
-    import hashlib
-    import os
-
+    The index build is cached by ``stores.open_or_build`` per corpus
+    CONTENT (path + data-file size/mtime fingerprint — a regenerated
+    corpus at the same path gets a fresh index, the r4 ADVICE #5
+    stale-cache fix) and per hyperplane ``nbits``/``seed``, so other
+    planes never serve this store; a deployment builds it once at write
+    time, so the measured cost after the first run is the pruned
+    read."""
     from openai_vector_search_demo_spark.operators.ann import (
         hyperplanes,
         lsh_assign,
@@ -171,15 +146,13 @@ def ann_lsh_stored_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     planes = hyperplanes(_ANN_DIM, nbits=8, seed=42)
-
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|{_parquet_fingerprint(emb_path)}".encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_lsh_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        (lsh_assign(emb.filter(F.col("vec_id") != 0), planes=planes)
-         .repartition(F.col("bucket"))
-         .write.mode("overwrite").partitionBy("bucket").parquet(store))
+    store = open_or_build(
+        spark, "lsh", 1, [f"{sf_dir}/embeddings.parquet"],
+        lambda path: (lsh_assign(emb.filter(F.col("vec_id") != 0),
+                                 planes=planes)
+                      .repartition(F.col("bucket"))
+                      .write.partitionBy("bucket").parquet(path)),
+        nbits=8, seed=42)
 
     probes = query_buckets(qvec, planes, probe_hamming=1)
     stored = read_probed_partitions(spark, store, "bucket", probes)
@@ -254,9 +227,6 @@ def ann_ivf_stored_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows per-directory open overhead eats the 4× scan cut; the stored
     path's advantage is structural (scan volume ∝ nprobe/nlist) and grows
     with corpus size, which is why both stay benched side by side."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.ann import (
         ivf_assign,
         ivf_probe_cells,
@@ -269,15 +239,13 @@ def ann_ivf_stored_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
                             & (F.col("vec_id") <= _IVF_NLIST))
                  .select("vec_id", "embedding").orderBy("vec_id").collect())
     centroids = [[float(x) for x in r.embedding] for r in cent_rows]
-
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|{_parquet_fingerprint(emb_path)}".encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_ivf_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        (ivf_assign(emb.filter(F.col("vec_id") != 0), centroids=centroids)
-         .repartition(F.col("cell"))
-         .write.mode("overwrite").partitionBy("cell").parquet(store))
+    store = open_or_build(
+        spark, "ivf", 1, [f"{sf_dir}/embeddings.parquet"],
+        lambda path: (ivf_assign(emb.filter(F.col("vec_id") != 0),
+                                 centroids=centroids)
+                      .repartition(F.col("cell"))
+                      .write.partitionBy("cell").parquet(path)),
+        centroids=centroids)
 
     probes = ivf_probe_cells(qvec, centroids, _IVF_NPROBE)
     stored = read_probed_partitions(spark, store, "cell", probes)
@@ -413,11 +381,8 @@ def ann_ivf_trained_stored_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     metastore partition pruning) and does NO assignment arithmetic at
     read time — scan volume ∝ nprobe/nlist = 3/8 of the corpus.
     Identical centroids/probes/scoring to ``ann_ivf_trained_knn``, hence
-    the identical oracle.  Index build cached per corpus content like the
-    other stores."""
-    import hashlib
-    import os
-
+    the identical oracle.  Index build cached per corpus content and
+    centroid set like the other stores."""
     from openai_vector_search_demo_spark.ann_pretrained import (
         IVF_TRAINED_CENTROIDS,
     )
@@ -430,23 +395,18 @@ def ann_ivf_trained_stored_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
 
-    from openai_vector_search_demo_spark import ann_pretrained as P
-
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    # the cache key must cover the INDEX CONFIG, not just the corpus: the
-    # centroids live in a generated artifact that can be retrained without
-    # the fixture changing, and a stale store would serve cell assignments
-    # from the OLD centroids while probes use the new ones (r8 review #2)
-    cent_sig = hashlib.md5(repr(IVF_TRAINED_CENTROIDS).encode()).hexdigest()[:8]
-    key = hashlib.md5(
-        f"{sf_dir}|{_parquet_fingerprint(emb_path)}|{P.IVF_TRAINED_CORPUS_MD5}"
-        f"|{cent_sig}|{_IVF_TRAINED_NPROBE}".encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_ivft_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        (ivf_assign(emb.filter(F.col("vec_id") != 0),
-                    centroids=IVF_TRAINED_CENTROIDS, metric="dot")
-         .repartition(F.col("cell"))
-         .write.mode("overwrite").partitionBy("cell").parquet(store))
+    # the centroids are a build parameter, not just the corpus: they live
+    # in a generated artifact that can be retrained without the fixture
+    # changing, and a stale store would serve cell assignments from the
+    # OLD centroids while probes use the new ones (r8 review #2)
+    store = open_or_build(
+        spark, "ivft", 1, [f"{sf_dir}/embeddings.parquet"],
+        lambda path: (ivf_assign(emb.filter(F.col("vec_id") != 0),
+                                 centroids=IVF_TRAINED_CENTROIDS,
+                                 metric="dot")
+                      .repartition(F.col("cell"))
+                      .write.partitionBy("cell").parquet(path)),
+        centroids=IVF_TRAINED_CENTROIDS, metric="dot")
 
     probes = ivf_probe_cells_dot(qvec, IVF_TRAINED_CENTROIDS,
                                  _IVF_TRAINED_NPROBE)
@@ -995,25 +955,19 @@ def ann_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ensure_pq_store(emb, sf_dir: str) -> str:
-    """Build (once per corpus content) the raw-PQ codes store the two
-    stored read paths query — keyed by the source parquet fingerprint,
-    the same content-addressed caching the LSH/IVF stores use."""
-    import hashlib
-    import os
-
+    """Build (once per corpus content and codebook set) the raw-PQ codes
+    store the two stored read paths query — the same content-addressed
+    caching the LSH/IVF stores use."""
     from openai_vector_search_demo_spark.operators.pq import (
         write_pq_codes,
     )
     from openai_vector_search_demo_spark.pq_pretrained import PQ_CODEBOOKS
 
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|pq|{_parquet_fingerprint(emb_path)}".encode())         .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_pq_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_pq_codes(emb.filter(F.col("vec_id") != 0), store,
-                       PQ_CODEBOOKS)
-    return store
+    return open_or_build(
+        emb.sparkSession, "pq", 1, [f"{sf_dir}/embeddings.parquet"],
+        lambda path: write_pq_codes(emb.filter(F.col("vec_id") != 0),
+                                    path, PQ_CODEBOOKS),
+        codebooks=PQ_CODEBOOKS)
 
 
 @query("ann_pq_stored_knn", oracle=_pq_knn_oracle())
@@ -1761,9 +1715,6 @@ def ann_pq_refine_stored_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ensure_ivfpq_store(emb, sf_dir: str) -> str:
     """Build (once per corpus content) the cell-partitioned residual-
     codes store — the full IVFADC serving artifact."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.ann_pretrained import (
         IVF_TRAINED_CENTROIDS,
     )
@@ -1774,14 +1725,12 @@ def _ensure_ivfpq_store(emb, sf_dir: str) -> str:
         PQR_CODEBOOKS,
     )
 
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|ivfpq|{_parquet_fingerprint(emb_path)}".encode())         .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_ivfpq_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_ivfpq_index(emb.filter(F.col("vec_id") != 0), store,
-                          IVF_TRAINED_CENTROIDS, PQR_CODEBOOKS)
-    return store
+    return open_or_build(
+        emb.sparkSession, "ivfpq", 1, [f"{sf_dir}/embeddings.parquet"],
+        lambda path: write_ivfpq_index(emb.filter(F.col("vec_id") != 0),
+                                       path, IVF_TRAINED_CENTROIDS,
+                                       PQR_CODEBOOKS),
+        centroids=IVF_TRAINED_CENTROIDS, codebooks=PQR_CODEBOOKS)
 
 
 @query("ann_ivfpq_stored_knn", oracle=_ivfpq_residual_knn_oracle())
@@ -1858,10 +1807,9 @@ def _ensure_ivfpq_upsert_store(spark, emb, sf_dir: str) -> str:
     way: half the corpus at write time, the other half merged in by
     ``upsert_ivfpq_index``, plus a re-upsert of 50 already-present ids
     (same-cell replacement) — the serving state must equal a full
-    rebuild's, which is what the slot's oracle asserts."""
-    import hashlib
-    import os
-
+    rebuild's, which is what the slot's oracle asserts.  The write and
+    both upserts run inside the one build, so a store is never published
+    half-upserted."""
     from openai_vector_search_demo_spark.ann_pretrained import (
         IVF_TRAINED_CENTROIDS,
     )
@@ -1873,24 +1821,20 @@ def _ensure_ivfpq_upsert_store(spark, emb, sf_dir: str) -> str:
         PQR_CODEBOOKS,
     )
 
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|ivfpq_upsert|{_parquet_fingerprint(emb_path)}".encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_ivfpq_upsert_" + key)
-    done = os.path.join(store, "_UPSERT_DONE")
-    if not os.path.exists(done):
+    def build(path):
         base = emb.filter(F.col("vec_id") != 0)
-        write_ivfpq_index(base.filter(F.col("vec_id") % 2 == 1), store,
+        write_ivfpq_index(base.filter(F.col("vec_id") % 2 == 1), path,
                           IVF_TRAINED_CENTROIDS, PQR_CODEBOOKS)
         upsert_ivfpq_index(spark, base.filter(F.col("vec_id") % 2 == 0),
-                           store, IVF_TRAINED_CENTROIDS, PQR_CODEBOOKS)
+                           path, IVF_TRAINED_CENTROIDS, PQR_CODEBOOKS)
         upsert_ivfpq_index(
             spark, base.filter((F.col("vec_id") % 2 == 1)
                                & (F.col("vec_id") <= 100)),
-            store, IVF_TRAINED_CENTROIDS, PQR_CODEBOOKS)
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return store
+            path, IVF_TRAINED_CENTROIDS, PQR_CODEBOOKS)
+
+    return open_or_build(
+        spark, "ivfpq_upsert", 1, [f"{sf_dir}/embeddings.parquet"], build,
+        centroids=IVF_TRAINED_CENTROIDS, codebooks=PQR_CODEBOOKS)
 
 
 @query("ann_ivfpq_upsert_knn", oracle=_ivfpq_residual_knn_oracle())
@@ -1940,8 +1884,6 @@ def ann_ivfpq_compacted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance job that keeps merge-on-read upserts from accreting
     versions forever, the Delta/Iceberg OPTIMIZE step for the ANN
     serving artifact."""
-    import os
-
     from openai_vector_search_demo_spark.ann_pretrained import (
         IVF_TRAINED_CENTROIDS,
     )
@@ -1956,12 +1898,11 @@ def ann_ivfpq_compacted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     store = _ensure_ivfpq_upsert_store(spark, emb, sf_dir)
-    dest = store + "_compacted"
-    done = os.path.join(dest, "_COMPACT_DONE")
-    if not os.path.exists(done):
-        compact_ivfpq_index(spark, store, dest)
-        with open(done, "w") as fh:
-            fh.write("ok")
+    # the upserted store's path carries its own key, so it is this
+    # build's input
+    dest = open_or_build(spark, "ivfpq_compacted", 1, [store],
+                         lambda path: compact_ivfpq_index(spark, store,
+                                                          path))
     top = ivfpq_stored_knn(spark, dest, qvec, IVF_TRAINED_CENTROIDS,
                            PQR_CODEBOOKS, nprobe=_IVF_TRAINED_NPROBE,
                            k=10)
@@ -2257,10 +2198,9 @@ def _ensure_logreg_weights(spark: SparkSession, sf_dir: str) -> list[float]:
     are deterministic (fixed iters, in-engine 6-dp rounding), so cached
     == freshly trained, and every consumer's oracle retrains
     independently anyway — a stale cache is a value mismatch, not a
-    silent pass."""
-    import hashlib
+    silent pass.  The JSON is published by ``stores.open_or_build``, so
+    a killed write never leaves a truncated file behind."""
     import json
-    import os
 
     from openai_vector_search_demo_spark.caching import scoped_persist
     from openai_vector_search_demo_spark.operators.classifier import (
@@ -2270,26 +2210,23 @@ def _ensure_logreg_weights(spark: SparkSession, sf_dir: str) -> list[float]:
         with_split,
     )
 
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|logreg|{_parquet_fingerprint(docs_path)}".encode()) \
-        .hexdigest()[:10]
-    path = os.path.join("/tmp", f"spark_graft_logreg_{key}.json")
-    if os.path.exists(path):
-        with open(path) as fh:
-            return json.load(fh)
-    feat = scoped_persist(
-        logreg_features(
-            with_split(t(spark, sf_dir, "documents"))
-            .filter(F.col("split") == "train"))
-        .select("y", *[f"f{j}" for j in range(len(FEATURE_NAMES))]))
-    try:
-        w = logreg_train_gd(feat)
-    finally:
-        feat.unpersist()
-    with open(path, "w") as fh:
-        json.dump(w, fh)
-    return w
+    def build(path):
+        feat = scoped_persist(
+            logreg_features(
+                with_split(t(spark, sf_dir, "documents"))
+                .filter(F.col("split") == "train"))
+            .select("y", *[f"f{j}" for j in range(len(FEATURE_NAMES))]))
+        try:
+            w = logreg_train_gd(feat)
+        finally:
+            feat.unpersist()
+        with open(path, "w") as fh:
+            json.dump(w, fh)
+
+    path = open_or_build(spark, "logreg", 1,
+                         [f"{sf_dir}/documents.parquet"], build)
+    with open(path) as fh:
+        return json.load(fh)
 
 
 def _logreg_calibration_oracle() -> str:

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 from openai_vector_search_demo_spark.queries._shared import *  # noqa: F401,F403
 from openai_vector_search_demo_spark.queries.ann_quant import _neardup_pairs_store  # noqa: F401
-from openai_vector_search_demo_spark.queries.ann_quant import _parquet_fingerprint  # noqa: F401
 from openai_vector_search_demo_spark.queries.pipeline import _KNN_ORACLE  # noqa: F401
 from openai_vector_search_demo_spark.queries.ann_quant import _SQL_COS_TO_Q  # noqa: F401
 from openai_vector_search_demo_spark.queries.ann_quant import _ANN_DIM  # noqa: F401
@@ -1100,25 +1099,18 @@ def dedup_cross_corpus_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ensure_band_store(docs: DataFrame, sf_dir: str) -> str:
-    """Build-once /tmp cache of the corpus band index (+ sigs), keyed by
-    corpus content like the ANN stores; shared by the stored batch slot
-    and the streaming gate."""
-    import hashlib
-    import os
-
+    """Build-once cache of the corpus band index (+ its ``_sigs``
+    sibling, published with it), keyed by corpus content like the ANN
+    stores; shared by the stored batch slot and the streaming gate."""
     from openai_vector_search_demo_spark.operators.dedup import (
         write_band_index,
     )
 
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|band|{_parquet_fingerprint(docs_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_band_store_" + key)
-    if not (os.path.exists(os.path.join(store, "_SUCCESS"))
-            and os.path.exists(os.path.join(store + "_sigs", "_SUCCESS"))):
-        write_band_index(docs, store, k=3, num_hashes=16, bands=4)
-    return store
+    return open_or_build(
+        docs.sparkSession, "band", 1, [f"{sf_dir}/documents.parquet"],
+        lambda path: write_band_index(docs, path, k=3, num_hashes=16,
+                                      bands=4),
+        k=3, num_hashes=16, bands=4)
 
 
 @query("streaming_neardup_gate",
@@ -1658,9 +1650,6 @@ def ann_sq8_stored_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     8 B (cheaper, lower unrefined recall) and IVFADC's ~12 B + trained
     artifacts (cheaper scan, needs k-means) — SQ8 is the zero-training,
     mid-recall tier of the ladder."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.sq import (
         sq8_stored_knn,
         sq8_train,
@@ -1671,14 +1660,10 @@ def ann_sq8_stored_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     base = emb.filter(F.col("vec_id") != 0)
     mins, maxs = sq8_train(base, dim=_ANN_DIM)
-
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|sq8|{_parquet_fingerprint(emb_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_sq8_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_sq8_index(base, store, mins, maxs)
+    store = open_or_build(
+        spark, "sq8", 1, [f"{sf_dir}/embeddings.parquet"],
+        lambda path: write_sq8_index(base, path, mins, maxs),
+        mins=mins, maxs=maxs)
 
     top = sq8_stored_knn(spark, store, base, qvec, mins, maxs, k=10,
                          shortlist=_SQ8_SHORTLIST, sim_col="sim")

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 from openai_vector_search_demo_spark.queries._shared import *  # noqa: F401,F403
-from openai_vector_search_demo_spark.queries.ann_quant import _parquet_fingerprint  # noqa: F401
 from openai_vector_search_demo_spark.queries.text_analysis import _SQL_TOKS  # noqa: F401
 from openai_vector_search_demo_spark.queries.text_analysis import _SQL_H60  # noqa: F401
 from openai_vector_search_demo_spark.queries.text_analysis import _SQL_SHINGLE_CTE  # noqa: F401
@@ -435,25 +434,18 @@ def late_interaction_stored_topk_query(spark: SparkSession,
     index.  Same oracle as the inline slot: dots can only arise on
     shared buckets, so pruning is invisible to values.  Store cached
     per corpus CONTENT like the ANN stores (path + data-file
-    fingerprint)."""
-    import hashlib
-    import os
-
+    fingerprint; the ``_meta`` side table is published with it)."""
     from openai_vector_search_demo_spark.operators.late_interaction import (
         late_interaction_stored_topk,
         write_token_window_index,
     )
 
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|li2|{_parquet_fingerprint(docs_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_li_store_" + key)
-    if not (os.path.exists(os.path.join(store, "_SUCCESS"))
-            and os.path.exists(os.path.join(store + "_meta", "_SUCCESS"))):
-        write_token_window_index(
+    store = open_or_build(
+        spark, "li", 2, [f"{sf_dir}/documents.parquet"],
+        lambda path: write_token_window_index(
             t(spark, sf_dir, "documents"),
-            store, max_tokens=_LATE_MT, window=_LATE_W, dim=_LATE_DIM)
+            path, max_tokens=_LATE_MT, window=_LATE_W, dim=_LATE_DIM),
+        max_tokens=_LATE_MT, window=_LATE_W, dim=_LATE_DIM)
     return late_interaction_stored_topk(
         spark, store, _LATE_Q, k=_LATE_K,
         max_tokens=_LATE_MT, window=_LATE_W, dim=_LATE_DIM)
@@ -670,25 +662,20 @@ def ccnet_line_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the equivalent ONE-SHOT rule (keep_first ordered by batch,
     doc_id, pos restricted to B), so a stored-index miss, stale entry,
     or within-batch ordering slip is a value mismatch.  Store cached
-    under /tmp by corpus fingerprint, rebuild gated on the write's
-    _SUCCESS marker (wiped-/tmp safe); same derived 3-token line
-    structure as the sibling slots."""
-    import hashlib
-    import os
-
+    by corpus fingerprint through ``stores.open_or_build`` (published
+    only once complete, rebuilt if the cache is wiped); same derived
+    3-token line structure as the sibling slots."""
     from openai_vector_search_demo_spark.operators.line_dedup import (
         dedup_lines_against_index,
         write_line_index,
     )
     docs = split_doc_scan(spark, t(spark, sf_dir, "documents"))
     derived = derived_token_lines(docs, _LDW)
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|lineidx{_LDW}|{_parquet_fingerprint(docs_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_lineidx_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_line_index(derived.filter(F.col("doc_id") % 2 == 0), store)
+    store = open_or_build(
+        spark, "lineidx", 1, [f"{sf_dir}/documents.parquet"],
+        lambda path: write_line_index(
+            derived.filter(F.col("doc_id") % 2 == 0), path),
+        line_words=_LDW)
     out = dedup_lines_against_index(
         spark, derived.filter(F.col("doc_id") % 2 == 1), store)
     return (out.filter(F.col("doc_id") < 40)
@@ -753,6 +740,7 @@ def streaming_line_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from openai_vector_search_demo_spark.streaming.jobs import (
         stream_line_dedup_ingest,
     )
+    from openai_vector_search_demo_spark.stores import _parquet_fingerprint
     docs = split_doc_scan(spark, t(spark, sf_dir, "documents"))
     derived = derived_token_lines(docs, _LDW)
     docs_path = os.path.join(sf_dir, "documents.parquet")

@@ -8,7 +8,6 @@ from openai_vector_search_demo_spark.queries.hamming_tier import _HAMMING_SHORTL
 from openai_vector_search_demo_spark.queries.events_windows import _STREAM_SEQ  # noqa: F401
 from openai_vector_search_demo_spark.queries.monitoring import _bm25_scores  # noqa: F401
 from openai_vector_search_demo_spark.queries.ann_quant import _neardup_pairs_store  # noqa: F401
-from openai_vector_search_demo_spark.queries.ann_quant import _parquet_fingerprint  # noqa: F401
 from openai_vector_search_demo_spark.queries.batteries import _CURATION_BATTERY  # noqa: F401
 from openai_vector_search_demo_spark.queries.batteries import _ANALYTICS_BATTERY  # noqa: F401
 from openai_vector_search_demo_spark.queries.batteries import _EVENTS_WINDOWS_BATTERY  # noqa: F401
@@ -35,6 +34,7 @@ from openai_vector_search_demo_spark.queries.ann_quant import _IVF_TRAINED_NQ  #
 from openai_vector_search_demo_spark.queries.pipeline import _KNN_ORACLE  # noqa: F401
 from openai_vector_search_demo_spark.queries.ann_quant import _SQL_COS_TO_Q  # noqa: F401
 from openai_vector_search_demo_spark.queries.ann_quant import _ANN_DIM  # noqa: F401
+from openai_vector_search_demo_spark.stores import store_path
 
 # Graph ANN (NSW) — the reference's index is HNSW; this is the Spark-native
 # single-layer analogue: stored kNN-neighbor graph + multi-seed beam search
@@ -46,7 +46,6 @@ _NSW_M, _NSW_EF, _NSW_ROUNDS = 16, 12, 8
 _NSW_EF_SERVE = 160   # CONSTANT serving beam width — independent of n (v4)
 _NSW_ENTRY = 16       # base-beam entry points (top of the level-visited set)
 _NSW_W = 16           # per-level beam width AND seed count (constant in n)
-_NSW_SEED_COUNT = _NSW_W  # pre-v4 alias
 _NSW_L1_ROUNDS = 2    # beam rounds per graph-indexed hierarchy level
 _NSW_STOP_K = 32      # early-termination window (operators.nsw.NSW_STOP_K)
 _NSW_HIER_FLOOR = 16  # level size below this -> score the level flat
@@ -92,6 +91,21 @@ def _nsw_stored_params(spark: SparkSession, store: str) -> tuple:
     )
     meta = read_l1_meta(spark, store)
     return int(meta["stride"]), _NSW_EF_SERVE, _NSW_ROUNDS
+
+
+def _nsw_store(spark: SparkSession, sf_dir: str, corpus: DataFrame,
+               kind: str = "nsw") -> str:
+    """The cached v4 graph store over ``corpus`` (``write_nsw_index``,
+    M = {_NSW_M}), built once per corpus content through
+    ``stores.open_or_build``.  ``kind`` names the corpus: "nsw" is every
+    vector but the query (vec_id != 0), shared by every slot serving
+    that corpus; a slot over another corpus passes its own kind."""
+    from openai_vector_search_demo_spark.operators.nsw import (
+        write_nsw_index,
+    )
+    return open_or_build(
+        spark, kind, 4, [f"{sf_dir}/embeddings.parquet"],
+        lambda path: write_nsw_index(corpus, path, m=_NSW_M), m=_NSW_M)
 
 
 def _sql_nsw_edges(corpus_where: str = "vec_id <> 0") -> str:
@@ -191,7 +205,7 @@ def _sql_nsw_beam(prefix: str = "", ef: int | None = None,
               OR e.vec_id % ((SELECT stride FROM nswp)
                              * (SELECT stride2 FROM nswp1)) = 0)),
 {p}hf0 AS (SELECT vec_id FROM {p}hv0
-         ORDER BY s DESC, vec_id ASC LIMIT {_NSW_SEED_COUNT})"""]
+         ORDER BY s DESC, vec_id ASC LIMIT {_NSW_W})"""]
     for r in range(1, _NSW_L1_ROUNDS + 1):
         parts.append(f"""{p}hc{r} AS (SELECT DISTINCT g.dst AS vec_id
         FROM nswhsym g JOIN {p}hf{r - 1} f ON g.src = f.vec_id
@@ -247,7 +261,7 @@ def ann_nsw_beam_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor graph (salt-split blocked BLAS build, per-task memory
     bounded) searched SYMMETRICALLY by the {_NSW_ROUNDS}-round beam
     from a COARSE ENTRY LAYER (the r13 serving semantic: stride = ef =
-    ⌈√n⌉ autoscale, top-{_NSW_SEED_COUNT} coarse nodes as entry —
+    ⌈√n⌉ autoscale, top-{_NSW_W} coarse nodes as entry —
     HNSW's upper layer as one bounded scan).  Candidates come from
     graph locality: per-query cost is Θ(√n·M) score evaluations, not a
     corpus scan.  Scores are exact cosines throughout (the refine is
@@ -286,29 +300,14 @@ def ann_nsw_stored_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     CONTENT fingerprint (the r4 stale-cache fix); query-time work is
     independent of corpus size — the property that makes graph indexes
     the serving tier of choice at 100 TB."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.nsw import (
         nsw_stored_knn,
-        write_nsw_index,
-    )
-
-    from openai_vector_search_demo_spark.operators.nsw import (
-        nsw_serving_params,
     )
 
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     base = emb.filter(F.col("vec_id") != 0)
-
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswv4{_NSW_M}|{_parquet_fingerprint(emb_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nsw_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_nsw_index(base, store, m=_NSW_M)
+    store = _nsw_store(spark, sf_dir, base)
     stride, ef, rounds = _nsw_stored_params(spark, store)
 
     top = nsw_stored_knn(spark, store, base, qvec, k=10, ef=ef,
@@ -410,12 +409,8 @@ def ann_nsw_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     visited-count growth stays √n-bounded, never a corpus scan."""
     from openai_vector_search_demo_spark.operators.knn import knn
     from openai_vector_search_demo_spark.operators.nsw import (
-        nsw_serving_params,
         nsw_stored_knn,
-        write_nsw_index,
     )
-    import hashlib
-    import os
 
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
@@ -423,13 +418,7 @@ def ann_nsw_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = {r.vec_id for r in
              knn(base, qvec, k=10, sim_col="sim",
                  tie_break="vec_id").collect()}
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswv4{_NSW_M}|{_parquet_fingerprint(emb_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nsw_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_nsw_index(base, store, m=_NSW_M)
+    store = _nsw_store(spark, sf_dir, base)
     stride, _, rounds = _nsw_stored_params(spark, store)
     def point(ef):
         # k beyond any visit count: the returned relation IS the whole
@@ -482,7 +471,7 @@ bhv0 AS (SELECT qid, vec_id, s FROM bsims
 bhf0 AS (SELECT qid, vec_id FROM (
           SELECT qid, vec_id, ROW_NUMBER() OVER (
             PARTITION BY qid ORDER BY s DESC, vec_id ASC) AS rn
-          FROM bhv0) WHERE rn <= {_NSW_SEED_COUNT})"""]
+          FROM bhv0) WHERE rn <= {_NSW_W})"""]
     for r in range(1, _NSW_L1_ROUNDS + 1):
         parts.append(f"""bhc{r} AS (
   SELECT DISTINCT f.qid, g.dst AS vec_id
@@ -571,16 +560,11 @@ def ann_nsw_mean_recall_at_10(spark: SparkSession,
     collects (the throughput serving form; the single-query beam's
     bounded collects disappear into the qid key).  Graph over the
     held-out corpus (ids ≥ 20), store cached per corpus fingerprint."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.nsw import (
         NSW_HIER_FLOOR,
         beam_search_knn_batch,
-        nsw_serving_params,
         resolve_stored_edges,
         resolve_stored_levels,
-        write_nsw_index,
     )
     from pyspark.sql import Window
 
@@ -590,14 +574,8 @@ def ann_nsw_mean_recall_at_10(spark: SparkSession,
                   .select(F.col("vec_id").alias("qid"),
                           F.col("embedding").alias("qv")))
 
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswnqv4{_NSW_M}|{_parquet_fingerprint(emb_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nswnq_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_nsw_index(corpus.select("vec_id", "embedding"), store,
-                        m=_NSW_M)
+    store = _nsw_store(spark, sf_dir, corpus.select("vec_id", "embedding"),
+                       kind="nswnq")
     stride, ef, rounds = _nsw_stored_params(spark, store)
     # batch serving: resolve the store's undirected traversal relation
     # ONCE per job (merge-on-read window + symmetrize), amortized over
@@ -605,17 +583,6 @@ def ann_nsw_mean_recall_at_10(spark: SparkSession,
     # (√n-sized, one read)
     edges = resolve_stored_edges(spark, store, m=_NSW_M)
     levels, l1_meta = resolve_stored_levels(spark, store, m=_NSW_M)
-    if l1_meta is None:
-        # _L1_META missing despite _SUCCESS (a crashed cache write
-        # between the base-graph and level writes): rewrite the store
-        # once rather than serving flat-entry forever off a half-built
-        # cache (ADVICE r14 — nsw_stored_knn guards this; the batch
-        # slot must too, or the slot fails with TypeError until /tmp
-        # is cleaned).
-        write_nsw_index(corpus.select("vec_id", "embedding"), store,
-                        m=_NSW_M)
-        edges = resolve_stored_edges(spark, store, m=_NSW_M)
-        levels, l1_meta = resolve_stored_levels(spark, store, m=_NSW_M)
     # flat-top predicate from the store's frozen geometry: the product
     # of every stride down to (and including) the first below-floor
     # level — v4's generalized stride·stride2
@@ -711,14 +678,9 @@ def ann_nsw_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployed index — the production shape; inline-rebuild twin
     ``ann_nsw_beam_knn`` carries the build-cost number in
     retrieval_battery)."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.knn import knn
     from openai_vector_search_demo_spark.operators.nsw import (
-        nsw_serving_params,
         nsw_stored_knn,
-        write_nsw_index,
     )
     from openai_vector_search_demo_spark.operators.ranking_metrics import (
         ranking_metrics,
@@ -728,13 +690,7 @@ def ann_nsw_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.filter(F.col("vec_id") != 0)
     exact = (knn(base, qvec, k=10, sim_col="sim", tie_break="vec_id")
              .select("vec_id", F.round("sim", 6).alias("similarity")))
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswv4{_NSW_M}|{_parquet_fingerprint(emb_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nsw_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_nsw_index(base, store, m=_NSW_M)
+    store = _nsw_store(spark, sf_dir, base)
     stride, ef, rounds = _nsw_stored_params(spark, store)
     approx = nsw_stored_knn(spark, store, base, qvec, k=10, ef=ef,
                             rounds=rounds, stride=stride,
@@ -836,22 +792,15 @@ def scd2_incremental_splice(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta versions) passes through the interval-link window.  Work is
     |delta| + |open versions|, never the fact history — the 100 TB
     point of SCD2 splicing (Kimball's incremental dimension load)."""
-    import hashlib
-    import os
-
     from pyspark.sql import Window
 
     o = t(spark, sf_dir, "orders")
     cutoff = F.lit(_SCD2_CUTOFF).cast("date")
-    orders_path = os.path.join(sf_dir, "orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|scd2v1|{_parquet_fingerprint(orders_path)}"
-        .encode()).hexdigest()[:10]
-    store_path = os.path.join("/tmp", "spark_graft_scd2_" + key)
-    if not os.path.exists(os.path.join(store_path, "_SUCCESS")):
-        (_scd2_build(o.filter(F.col("o_orderdate") < cutoff))
-         .write.mode("overwrite").parquet(store_path))
-    store = spark.read.parquet(store_path)
+    store = spark.read.parquet(open_or_build(
+        spark, "scd2", 1, [f"{sf_dir}/orders.parquet"],
+        lambda path: (_scd2_build(o.filter(F.col("o_orderdate") < cutoff))
+                      .write.parquet(path)),
+        cutoff=_SCD2_CUTOFF))
     delta = o.filter(F.col("o_orderdate") >= cutoff)
 
     cur = (store.filter(F.col("is_current") == 1)
@@ -1105,7 +1054,7 @@ def _dedup_capstone_phase_sql(p: str, nodes: str) -> str:
               OR vec_id % ((SELECT stride FROM {p}p)
                            * (SELECT stride2 FROM {p}p1)) = 0)),
 {p}hf0 AS MATERIALIZED (SELECT vec_id FROM {p}hv0
-       ORDER BY s DESC, vec_id ASC LIMIT {_NSW_SEED_COUNT})"""]
+       ORDER BY s DESC, vec_id ASC LIMIT {_NSW_W})"""]
     for r in range(1, _NSW_L1_ROUNDS + 1):
         parts.append(f"""{p}hc{r} AS MATERIALIZED (
          SELECT DISTINCT g.dst AS vec_id
@@ -1441,20 +1390,15 @@ def jsonl_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet bytes and zero column pruning — which is why it is the
     EXCHANGE format here, never the query store (the engine's stores
     are all parquet)."""
-    import hashlib
-    import os
+    import tempfile
 
     from openai_vector_search_demo_spark.functions.text_analysis import (
         _hash60,
     )
 
     docs = t(spark, sf_dir, "documents")
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|jsonl|{_parquet_fingerprint(docs_path)}".encode()) \
-        .hexdigest()[:10]
-    path = os.path.join("/tmp", "spark_graft_jsonl_" + key)
-    docs.write.mode("overwrite").json(path)
+    path = tempfile.mkdtemp(prefix="jsonl_export_") + "/docs"
+    docs.write.json(path)
     back = spark.read.schema(docs.schema).json(path)
     return (back
             .withColumn("th", _hash60(F.col("text")) % F.lit(1000003))
@@ -1485,17 +1429,12 @@ def csv_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the non-lossy configuration, which is the operational point).
     The write runs EVERY invocation — the declared half of the
     round-trip (r15 verdict: the fingerprint skip was gaming)."""
-    import hashlib
-    import os
+    import tempfile
 
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     o = t(spark, sf_dir, "orders")
-    orders_path = os.path.join(sf_dir, "orders.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|csv|{_parquet_fingerprint(orders_path)}".encode()) \
-        .hexdigest()[:10]
-    path = os.path.join("/tmp", "spark_graft_csv_" + key)
-    (o.write.mode("overwrite").option("header", True)
+    path = tempfile.mkdtemp(prefix="csv_export_") + "/orders"
+    (o.write.option("header", True)
      .option("timestampNTZFormat", fmt).csv(path))
     back = (spark.read.schema(o.schema).option("header", True)
             .option("timestampNTZFormat", fmt).csv(path))
@@ -2011,18 +1950,10 @@ def ann_nsw_upsert_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact graph.  The property the quantizer tiers cannot offer (their
     upserts change cell geometry); deletes remain the documented
     recompaction case."""
-    import hashlib
-    import os
-    import shutil
-
     from openai_vector_search_demo_spark.operators.nsw import (
         nsw_stored_knn,
         upsert_nsw_index,
         write_nsw_index,
-    )
-
-    from openai_vector_search_demo_spark.operators.nsw import (
-        nsw_serving_params,
     )
 
     emb = t(spark, sf_dir, "embeddings")
@@ -2031,20 +1962,14 @@ def ann_nsw_upsert_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = base.filter(F.col("vec_id") % 5 != 3)
     batch = base.filter(F.col("vec_id") % 5 == 3)
 
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswupv4{_NSW_M}|{_parquet_fingerprint(emb_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nswup_store_" + key)
-    marker = os.path.join(store, "_UPSERTED")
-    if not os.path.exists(marker):
-        if os.path.exists(store):
-            shutil.rmtree(store)
-        write_nsw_index(corpus.select("vec_id", "embedding"), store,
+    def build(path):
+        # write + upsert in one build: never published half-upserted
+        write_nsw_index(corpus.select("vec_id", "embedding"), path,
                         m=_NSW_M)
-        upsert_nsw_index(spark, store, batch, corpus, m=_NSW_M)
-        with open(marker, "w") as fh:
-            fh.write("1")
+        upsert_nsw_index(spark, path, batch, corpus, m=_NSW_M)
+
+    store = open_or_build(spark, "nswup", 4,
+                          [f"{sf_dir}/embeddings.parquet"], build, m=_NSW_M)
     # post-upsert meta is rewritten from corpus∪batch == base, so the
     # frozen stride IS ceil(sqrt(n_base)) — the triple the count gave
     stride, ef, rounds = _nsw_stored_params(spark, store)
@@ -2068,22 +1993,14 @@ def bm25_stored_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the postings write is the one-time cost; per query the
     scan is |terms|/n_buckets of the postings and the only shuffle is
     the per-doc sum over query-term hits."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.bm25_index import (
         bm25_stored_topk as serve,
         write_bm25_index,
     )
 
     docs = t(spark, sf_dir, "documents")
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|bm25|{_parquet_fingerprint(docs_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_bm25_" + key)
-    if not os.path.exists(os.path.join(store, "stats")):
-        write_bm25_index(docs, store)
+    store = open_or_build(spark, "bm25", 1, [f"{sf_dir}/documents.parquet"],
+                          lambda path: write_bm25_index(docs, path))
     return serve(spark, store, _BM25_TERMS, k=20, score_col="bm25")
 
 
@@ -2111,19 +2028,8 @@ def ann_nsw_delete_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     beam and excludes the same data-derived top-3; adversarial by
     construction: the deleted nodes are exactly the ones the beam finds
     first."""
-    import hashlib
-    import os
-    import shutil
-
-    from openai_vector_search_demo_spark.operators.knn import knn
     from openai_vector_search_demo_spark.operators.nsw import (
-        delete_from_nsw_index,
         nsw_stored_knn,
-        write_nsw_index,
-    )
-
-    from openai_vector_search_demo_spark.operators.nsw import (
-        nsw_serving_params,
     )
 
     emb = t(spark, sf_dir, "embeddings")
@@ -2143,35 +2049,24 @@ def _ensure_nswdel_store(spark, sf_dir: str, base: DataFrame,
     """The cached tombstoned store the delete AND compaction slots
     share: full-corpus v4 store with the query's TRUE top-3 soft
     deleted (adversarial by construction — the tombstones are exactly
-    the nodes the beam finds first)."""
-    import hashlib
-    import os
-    import shutil
-
+    the nodes the beam finds first).  Write and delete run in one
+    build, so the store is never published untombstoned."""
     from openai_vector_search_demo_spark.operators.knn import knn
     from openai_vector_search_demo_spark.operators.nsw import (
         delete_from_nsw_index,
         write_nsw_index,
     )
 
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswdelv4{_NSW_M}|{_parquet_fingerprint(emb_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nswdel_store_" + key)
-    marker = os.path.join(store, "_TOMBSTONED")
-    if not os.path.exists(marker):
-        if os.path.exists(store):
-            shutil.rmtree(store)
-        write_nsw_index(base.select("vec_id", "embedding"), store,
+    def build(path):
+        write_nsw_index(base.select("vec_id", "embedding"), path,
                         m=_NSW_M)
         top3 = [r.vec_id for r in
                 knn(base, qvec, k=3, sim_col="sim",
                     tie_break="vec_id").collect()]
-        delete_from_nsw_index(spark, store, top3)
-        with open(marker, "w") as fh:
-            fh.write(",".join(map(str, top3)))
-    return store
+        delete_from_nsw_index(spark, path, top3)
+
+    return open_or_build(spark, "nswdel", 4,
+                         [f"{sf_dir}/embeddings.parquet"], build, m=_NSW_M)
 
 
 _NSW_COMPACT_WHERE = ("vec_id <> 0 AND vec_id NOT IN "
@@ -2206,12 +2101,9 @@ def ann_nsw_compacted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     descent on it.  This is the Delta/Iceberg OPTIMIZE step for the
     graph serving artifact; at 100 TB it runs at maintenance cadence,
     never per batch."""
-    import os
-
     from openai_vector_search_demo_spark.functions.vectors import id_in
     from openai_vector_search_demo_spark.operators.nsw import (
         compact_nsw_index,
-        nsw_serving_params,
         nsw_stored_knn,
         read_nsw_tombstones,
     )
@@ -2220,14 +2112,14 @@ def ann_nsw_compacted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     base = emb.filter(F.col("vec_id") != 0)
     store = _ensure_nswdel_store(spark, sf_dir, base, qvec)
-    dest = store + "_compacted"
-    done = os.path.join(dest, "_COMPACT_DONE")
-    if not os.path.exists(done):
-        n_folded = compact_nsw_index(
+    # the tombstoned store's path carries its own key, so it is this
+    # build's input
+    dest = open_or_build(
+        spark, "nswcompact", 4, [store],
+        lambda path: compact_nsw_index(
             spark, store, base.select("vec_id", "label", "embedding"),
-            dest, m=_NSW_M)
-        with open(done, "w") as fh:
-            fh.write(str(n_folded))
+            path, m=_NSW_M),
+        m=_NSW_M)
     # the live corpus: compaction's vector table drops deleted rows too
     dead = read_nsw_tombstones(spark, store)
     live = base.filter(~id_in("vec_id", dead))
@@ -2475,25 +2367,14 @@ def ann_nsw_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot be returned.  Zero new index state: one graph serves every
     predicate.  Recall vs the exact filtered top-10 is priced by
     ``ann_nsw_filtered_recall_at_10``."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.nsw import (
-        nsw_serving_params,
         nsw_stored_knn,
-        write_nsw_index,
     )
 
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     base = emb.filter(F.col("vec_id") != 0)
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswv4{_NSW_M}|{_parquet_fingerprint(emb_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nsw_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_nsw_index(base, store, m=_NSW_M)
+    store = _nsw_store(spark, sf_dir, base)
     stride, ef, rounds = _nsw_stored_params(spark, store)
     # k beyond any visit count -> the whole visited set; the predicate
     # then applies to RESULTS only (ghost traversal)
@@ -2625,15 +2506,11 @@ def ann_nsw_filtered_recall_curve(spark: SparkSession,
     visited, matches visited, overlap vs the exact filtered top-10.
     One graph serves every predicate — zero per-predicate index
     state."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.knn import knn
     from openai_vector_search_demo_spark.operators.nsw import (
         nsw_filtered_ef,
         nsw_serving_params,
         nsw_stored_knn,
-        write_nsw_index,
     )
 
     emb = t(spark, sf_dir, "embeddings")
@@ -2641,13 +2518,7 @@ def ann_nsw_filtered_recall_curve(spark: SparkSession,
     base = emb.filter(F.col("vec_id") != 0)
     n_total = _nsw_corpus_n(spark, sf_dir, base, 1)
     stride, ef, rounds = nsw_serving_params(n_total)
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswv4{_NSW_M}|{_parquet_fingerprint(emb_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nsw_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_nsw_index(base, store, m=_NSW_M)
+    store = _nsw_store(spark, sf_dir, base)
 
     preds = {
         "sel01": (F.col("label") == _NSW_FILTER_LABEL)
@@ -2711,9 +2582,6 @@ def ann_nsw_tenant_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the full v3 beam over the tenant-0 corpus alone.
     ``tests/test_nsw.py`` pins that the serve's input files all live
     under ``tenant=0/``."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.nsw import (
         nsw_serving_params,
         nsw_stored_knn,
@@ -2726,15 +2594,11 @@ def ann_nsw_tenant_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdf = (emb.filter(F.col("vec_id") != 0)
            .withColumn("tenant",
                        F.pmod(F.col("label"), F.lit(2)).cast("string")))
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswtenv2{_NSW_M}|{_parquet_fingerprint(emb_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nswten_store_" + key)
-    if not os.path.exists(
-            os.path.join(nsw_tenant_path(store, "0"), "_SUCCESS")):
-        write_nsw_index_tenants(tdf, store, tenant_col="tenant",
-                                m=_NSW_M)
+    store = open_or_build(
+        spark, "nswten", 2, [f"{sf_dir}/embeddings.parquet"],
+        lambda path: write_nsw_index_tenants(tdf, path, tenant_col="tenant",
+                                             m=_NSW_M),
+        m=_NSW_M)
     base0 = tdf.filter(F.col("tenant") == "0").drop("tenant")
     n0 = base0.filter(F.col("embedding").isNotNull()).count()
     stride, ef, rounds = nsw_serving_params(n0)
@@ -2756,9 +2620,6 @@ def ann_hamming_tenant_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     tenants' rows.  Same planes/shortlist/rerank as
     ``ann_hamming_stored_knn``; the oracle is that slot's SQL over the
     tenant-0 corpus alone."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.hamming import (
         hamming_stored_knn,
         write_hamming_index,
@@ -2769,18 +2630,11 @@ def ann_hamming_tenant_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdf = (emb.filter(F.col("vec_id") != 0)
            .withColumn("tenant",
                        F.pmod(F.col("label"), F.lit(2)).cast("string")))
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|hamtenv1|{_parquet_fingerprint(emb_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_hamten_" + key)
-    # gate on _SUCCESS, not the bare directory: an interrupted write
-    # leaves a partial store that a directory-existence check would
-    # never rebuild (ADVICE r14 — the NSW slots' pattern; the
-    # single partitionBy write drops ONE marker at the store root)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_hamming_index(tdf, store, nbits=_HAMMING_NBITS, seed=42,
-                            tenant_col="tenant")
+    store = open_or_build(
+        spark, "hamten", 1, [f"{sf_dir}/embeddings.parquet"],
+        lambda path: write_hamming_index(tdf, path, nbits=_HAMMING_NBITS,
+                                         seed=42, tenant_col="tenant"),
+        nbits=_HAMMING_NBITS, seed=42)
     base0 = tdf.filter(F.col("tenant") == "0").drop("tenant")
     top = hamming_stored_knn(
         spark, store, base0, qvec, nbits=_HAMMING_NBITS, seed=42,
@@ -2803,27 +2657,17 @@ def bm25_tenant_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     give tenant-local idf), and the serve opens only its tenant's
     directories.  Tenants are doc-id-parity halves; the oracle is the
     shared BM25 SQL over the tenant-0 corpus alone."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.bm25_index import (
         bm25_stored_topk as serve,
-        bm25_tenant_path,
         write_bm25_index,
     )
 
     docs = (t(spark, sf_dir, "documents")
             .withColumn("tenant",
                         F.pmod(F.col("doc_id"), F.lit(2)).cast("string")))
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|bm25ten1|{_parquet_fingerprint(docs_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_bm25ten_" + key)
-    # stats is the subtree's LAST write — its marker gates the cache
-    if not os.path.exists(os.path.join(
-            bm25_tenant_path(store, "0"), "stats", "_SUCCESS")):
-        write_bm25_index(docs, store, tenant_col="tenant")
+    store = open_or_build(
+        spark, "bm25ten", 1, [f"{sf_dir}/documents.parquet"],
+        lambda path: write_bm25_index(docs, path, tenant_col="tenant"))
     return serve(spark, store, _BM25_TERMS, k=20, score_col="bm25",
                  tenant="0")
 
@@ -2840,30 +2684,20 @@ def late_interaction_tenant_topk(spark: SparkSession,
     only its tenant's buckets.  Tenants are doc-id-parity halves; the
     oracle is the shared late-interaction SQL over the tenant-0 corpus
     alone."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.late_interaction import (
         late_interaction_stored_topk,
-        li_tenant_path,
         write_token_window_index,
     )
 
     docs = (t(spark, sf_dir, "documents")
             .withColumn("tenant",
                         F.pmod(F.col("doc_id"), F.lit(2)).cast("string")))
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|liten1|{_parquet_fingerprint(docs_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_liten_" + key)
-    # the meta side table is the subtree's LAST write — its marker
-    # gates the cache
-    if not os.path.exists(os.path.join(
-            li_tenant_path(store, "0") + "_meta", "_SUCCESS")):
-        write_token_window_index(docs, store, max_tokens=_LATE_MT,
-                                 window=_LATE_W, dim=_LATE_DIM,
-                                 tenant_col="tenant")
+    store = open_or_build(
+        spark, "liten", 1, [f"{sf_dir}/documents.parquet"],
+        lambda path: write_token_window_index(
+            docs, path, max_tokens=_LATE_MT, window=_LATE_W, dim=_LATE_DIM,
+            tenant_col="tenant"),
+        max_tokens=_LATE_MT, window=_LATE_W, dim=_LATE_DIM)
     return late_interaction_stored_topk(
         spark, store, _LATE_Q, k=_LATE_K, max_tokens=_LATE_MT,
         window=_LATE_W, dim=_LATE_DIM, tenant="0")
@@ -2954,7 +2788,7 @@ cbhv0 AS (SELECT qid, vec_id, s FROM cbqs
 cbhf0 AS (SELECT qid, vec_id FROM (
             SELECT qid, vec_id, ROW_NUMBER() OVER (
               PARTITION BY qid ORDER BY s DESC, vec_id ASC) AS rn
-            FROM cbhv0) WHERE rn <= {_NSW_SEED_COUNT})"""]
+            FROM cbhv0) WHERE rn <= {_NSW_W})"""]
     # the hierarchical ENTRY is mode-independent (L1 is the exact graph
     # over the coarse subset, not the sharded build under test), so one
     # shared qid-keyed L1 beam seeds both modes' base beams
@@ -3134,7 +2968,11 @@ def ann_nsw_cellbuild_mean_recall_at_10(spark: SparkSession,
 _SCALE_NQ, _SCALE_FACTOR, _SCALE_SEED = 20, 50, 1404
 _SCALE_FIX_DIR = "/tmp/spark_graft_ann100k_fixture"
 _SCALE_FIX = _SCALE_FIX_DIR + "/embeddings.parquet"
-_SCALE_STORE = f"/tmp/spark_graft_ann100k_store_v4m{_NSW_M}e{_NSW_EF_SERVE}"
+_SCALE_PARAMS = dict(m=_NSW_M, nq=_SCALE_NQ, factor=_SCALE_FACTOR,
+                     seed=_SCALE_SEED)
+# the oracle reads the store's files, so it names the path up front; the
+# fixture is deterministic, so the key holds its recipe, not its bytes
+_SCALE_STORE = store_path("ann100k", 4, [], **_SCALE_PARAMS)
 
 
 def _ensure_ann_scale_fixture() -> None:
@@ -3356,8 +3194,6 @@ def ann_nsw_fixed_ef_scaling(spark: SparkSession,
     NSW slots).  Cost honesty: first run in a fresh container pays
     the one-time 100k exact build (~2 min blocked BLAS); the store is
     content-independent (fixture is deterministic) and cached."""
-    import os
-
     from openai_vector_search_demo_spark.caching import cache_scope
     from openai_vector_search_demo_spark.functions.vectors import (
         cosine_similarity,
@@ -3378,12 +3214,13 @@ def ann_nsw_fixed_ef_scaling(spark: SparkSession,
     queries_df = (fx.filter(F.col("vec_id") < _SCALE_NQ)
                   .select(F.col("vec_id").alias("qid"),
                           F.col("embedding").alias("qv")))
-    if not os.path.exists(os.path.join(_SCALE_STORE, "_SUCCESS")) or \
-            not os.path.exists(os.path.join(_SCALE_STORE, "_L1_META")):
-        write_nsw_index(corpus.select("vec_id", "embedding"),
-                        _SCALE_STORE, m=_NSW_M)
-    edges = resolve_stored_edges(spark, _SCALE_STORE, m=_NSW_M)
-    levels, meta = resolve_stored_levels(spark, _SCALE_STORE, m=_NSW_M)
+    store = open_or_build(
+        spark, "ann100k", 4, [],
+        lambda path: write_nsw_index(corpus.select("vec_id", "embedding"),
+                                     path, m=_NSW_M),
+        **_SCALE_PARAMS)
+    edges = resolve_stored_edges(spark, store, m=_NSW_M)
+    levels, meta = resolve_stored_levels(spark, store, m=_NSW_M)
     # the oracle unrolls exactly two graph levels — fail loudly if the
     # fixture's geometry ever drifts from that depth
     assert len(levels) == 2, f"expected depth-2 hierarchy, got {meta}"
@@ -3456,7 +3293,6 @@ def streaming_nsw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from openai_vector_search_demo_spark.operators.nsw import (
         NSW_ENTRY_COUNT as _NSC,
-        nsw_serving_params,
         nsw_stored_knn,
         write_nsw_index,
     )
@@ -3464,6 +3300,7 @@ def streaming_nsw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_embedding_stream,
         stream_upsert_nsw_index,
     )
+    from openai_vector_search_demo_spark.stores import _parquet_fingerprint
 
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
@@ -3705,16 +3542,12 @@ def ann_auto_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the beam oracle is unchanged).  The oracle computes the same CASE
     from COUNT(*) and replays whichever branch it selects — rule and
     results both value-checked."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.knn import (
         auto_knn,
         auto_knn_exact_max,
     )
     from openai_vector_search_demo_spark.operators.nsw import (
         nsw_serving_params,
-        write_nsw_index,
     )
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
@@ -3724,13 +3557,7 @@ def ann_auto_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     kw = dict(m=_NSW_M, ef=ef, rounds=rounds, stride=stride,
               n_entry=_NSW_ENTRY)
     # the same store (same cache key) ann_nsw_stored_knn serves from
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|nswv4{_NSW_M}|{_parquet_fingerprint(emb_path)}".encode()) \
-        .hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nsw_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_nsw_index(base, store, m=_NSW_M)
+    store = _nsw_store(spark, sf_dir, base)
     parts = []
     for mode, thr in (("auto", auto_knn_exact_max()), ("forced_graph", 0)):
         tier, top = auto_knn(base, qvec, k=10, n=n, exact_max=thr,

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 from openai_vector_search_demo_spark.queries._shared import *  # noqa: F401,F403
-from openai_vector_search_demo_spark.queries.ann_quant import _parquet_fingerprint  # noqa: F401
 from openai_vector_search_demo_spark.queries.ann_quant import _MEAN_RECALL_COS  # noqa: F401
 from openai_vector_search_demo_spark.queries.ann_quant import _IVF_TRAINED_NQ  # noqa: F401
 from openai_vector_search_demo_spark.queries.ann_quant import _IVF_TRAINED_NPROBE  # noqa: F401
@@ -120,9 +119,6 @@ def ann_hamming_stored_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     store's ~12 B + pinned codebooks + centroid LUT broadcasts — binary
     is the zero-maintenance tier, IVFADC the higher-recall-per-byte
     tier; both refine through the same 100-point-read stage."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.operators.ann import hyperplanes
     from openai_vector_search_demo_spark.operators.hamming import (
         hamming_stored_knn,
@@ -132,14 +128,11 @@ def ann_hamming_stored_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     planes = hyperplanes(_ANN_DIM, nbits=_HAMMING_NBITS, seed=42)
-
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|{_parquet_fingerprint(emb_path)}".encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_hamming_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_hamming_index(emb.filter(F.col("vec_id") != 0), store,
-                            planes=planes)
+    store = open_or_build(
+        spark, "hamming", 1, [f"{sf_dir}/embeddings.parquet"],
+        lambda path: write_hamming_index(emb.filter(F.col("vec_id") != 0),
+                                         path, planes=planes),
+        nbits=_HAMMING_NBITS, seed=42)
 
     top = hamming_stored_knn(spark, store,
                              emb.filter(F.col("vec_id") != 0), qvec,
@@ -239,9 +232,6 @@ def ann_ivfhamming_stored_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebooks to version.  Identical planes/centroids/tie rules as the
     inline ``ann_ivfhamming_refine_knn``, hence the identical oracle;
     store cached per corpus CONTENT fingerprint."""
-    import hashlib
-    import os
-
     from openai_vector_search_demo_spark.ann_pretrained import (
         IVF_TRAINED_CENTROIDS,
     )
@@ -254,14 +244,12 @@ def ann_ivfhamming_stored_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     planes = hyperplanes(_ANN_DIM, nbits=_HAMMING_NBITS, seed=42)
-
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{sf_dir}|{_parquet_fingerprint(emb_path)}".encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_ivfham_store_" + key)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        write_ivf_hamming_index(emb.filter(F.col("vec_id") != 0), store,
-                                IVF_TRAINED_CENTROIDS, planes=planes)
+    store = open_or_build(
+        spark, "ivfham", 1, [f"{sf_dir}/embeddings.parquet"],
+        lambda path: write_ivf_hamming_index(
+            emb.filter(F.col("vec_id") != 0), path, IVF_TRAINED_CENTROIDS,
+            planes=planes),
+        centroids=IVF_TRAINED_CENTROIDS, nbits=_HAMMING_NBITS, seed=42)
 
     top = ivf_hamming_stored_knn(spark, store,
                                  emb.filter(F.col("vec_id") != 0), qvec,

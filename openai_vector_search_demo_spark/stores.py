@@ -26,18 +26,31 @@ stray files under ``basePath``.  Reference behavior note: the reference
 serves its index from Redis (modules/utilities.py — RediSearch
 KNN); partition-pruned parquet + catalog metadata is the Spark-first
 equivalent of that server-side index lookup.
+
+Every cached store is opened through ``open_or_build``: the one place
+that knows a store's cache key, where it lives and when it counts as
+complete (a ``_MANIFEST`` written last, then an atomic directory
+rename).  The reference builds its index once per alias and then only
+serves from it (modules/utilities.py); this is that lifecycle for the
+engine's on-disk stores.
 """
 
 from __future__ import annotations
 
+import errno
+import hashlib
+import json
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = ["read_probed_partitions", "register_partitioned_store",
            "fs_exists", "fs_touch", "fs_write_text", "fs_read_text",
-           "escape_partition_value", "tenant_values"]
+           "escape_partition_value", "tenant_values", "open_or_build",
+           "store_path"]
 
 # the characters Spark/Hive escape in partition directory names
 # (ExternalCatalogUtils.escapePathName / Hive FileUtils.escapePathName —
@@ -173,3 +186,118 @@ def register_partitioned_store(spark: SparkSession, table: str,
     spark.sql(f"CREATE TABLE {table} USING parquet LOCATION '{store}'")
     # populate the catalog's partition list from the directories (MSCK)
     spark.catalog.recoverPartitions(table)
+
+
+def _parquet_fingerprint(path: str) -> str:
+    """Content fingerprint of a parquet file-or-directory: total bytes +
+    newest mtime (ns) of the data files.  Cheap (a handful of stats), and it
+    changes whenever the data is regenerated in place — which a path-only
+    cache key cannot see (the r4 stale-index defect: regenerate the fixtures
+    at the same sf_dir and a path-keyed index silently serves stale
+    buckets)."""
+    if os.path.isdir(path):
+        parts = sorted(
+            os.path.join(path, f) for f in os.listdir(path)
+            if f.endswith(".parquet") or f == "_SUCCESS")
+    else:
+        parts = [path]
+    sig = []
+    for p in parts:
+        st = os.stat(p)
+        sig.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
+    return ";".join(sig)
+
+
+def _param_value(v):
+    """A manifest-sized form of one build parameter: scalars as they are,
+    anything larger (centroids, codebooks, trained ranges) as the md5 of
+    its JSON form."""
+    if v is None or isinstance(v, (bool, int, float, str)):
+        return v
+    blob = json.dumps(v, sort_keys=True).encode()
+    return "md5:" + hashlib.md5(blob).hexdigest()
+
+
+def _manifest(kind: str, version: int, inputs, params: dict) -> dict:
+    return {"kind": kind, "version": version,
+            "params": {k: _param_value(v) for k, v in sorted(params.items())},
+            "fingerprint": {p: _parquet_fingerprint(p) for p in inputs}}
+
+
+_ROOT = "/tmp/spark_graft_"
+"""Prefix of every cached store's root directory."""
+
+
+def _root(manifest: dict) -> str:
+    key = hashlib.md5(
+        json.dumps(manifest, sort_keys=True).encode()).hexdigest()[:16]
+    return f"{_ROOT}{manifest['kind']}_{key}"
+
+
+def store_path(kind: str, version: int, inputs, **params) -> str:
+    """Where ``open_or_build`` with the same arguments publishes its
+    store — for a reader that must name the path before any build (an
+    oracle reading the store's files directly)."""
+    return _root(_manifest(kind, version, inputs, params)) + "/store"
+
+
+def _check_manifest(root: str, want: dict) -> None:
+    try:
+        with open(os.path.join(root, "_MANIFEST")) as fh:
+            got = json.load(fh)
+    except (OSError, ValueError):
+        got = None
+    if got != json.loads(json.dumps(want)):
+        raise ValueError(
+            f"store {root} does not hold the requested build: its "
+            f"manifest is {got}, the request is {want} (remove the "
+            "directory to rebuild it)")
+
+
+def open_or_build(spark: SparkSession, kind: str, version: int, inputs,
+                  build, **params) -> str:
+    """The path of the ``kind`` store built from ``inputs`` (parquet
+    paths) with ``params``, building it first if it is not published.
+
+    The store's root is ``/tmp/spark_graft_<kind>_<key>``, the key an
+    md5 over kind, ``version``, the sorted params and each input path
+    with its content fingerprint — so new data, a new format version or
+    any changed build argument gets a new store, never a stale one.
+
+    A build runs as ``build(<tmp>/store)`` inside a unique sibling
+    directory ``<root>.tmp-<uuid>`` (sibling outputs such as
+    ``store_sigs`` land there too); ``_MANIFEST`` (kind, version,
+    params, fingerprint) is written after it, and ``os.rename`` then
+    publishes the whole directory at once.  POSIX rename refuses a
+    non-empty target, so of two concurrent builders exactly one
+    publishes and the other discards its copy and serves the winner's
+    (Hadoop's ``FileSystem.rename`` would instead move the loser
+    INSIDE the published root).  A failed or killed build publishes
+    nothing: the next call builds again.  A root whose manifest is
+    missing or differs from the request raises ``ValueError`` rather
+    than being rebuilt in place.  Returns ``<root>/store``."""
+    want = _manifest(kind, version, inputs, params)
+    root = _root(want)
+    if not os.path.exists(root):
+        tmp = f"{root}.tmp-{uuid.uuid4().hex}"
+        os.makedirs(tmp)
+        sc = spark.sparkContext
+        desc = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"build {kind} store")
+        try:
+            build(os.path.join(tmp, "store"))
+            with open(os.path.join(tmp, "_MANIFEST"), "w") as fh:
+                json.dump(want, fh, sort_keys=True)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        finally:
+            sc.setLocalProperty("spark.job.description", desc)
+        try:
+            os.rename(tmp, root)
+        except OSError as exc:
+            shutil.rmtree(tmp, ignore_errors=True)
+            if exc.errno not in (errno.EEXIST, errno.ENOTEMPTY):
+                raise
+    _check_manifest(root, want)
+    return os.path.join(root, "store")

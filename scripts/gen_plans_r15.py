@@ -94,16 +94,11 @@ def fragment(spark, sf_dir, which, F):
                     " runs driver-side over its collected output):\n")
         return head + explain_str(df)
 
-    # NSW round fragments serve the real store
-    import hashlib
-    from openai_vector_search_demo_spark.queries.ann_quant import (
-        _parquet_fingerprint)
+    # NSW round fragments serve the real store (the slots' cached one)
+    from openai_vector_search_demo_spark.stores import store_path
     emb_path = os.path.join(sf_dir, "embeddings.parquet")
     if which == "nsw_round_fresh":
-        key = hashlib.md5(
-            f"{sf_dir}|nswv4{16}|{_parquet_fingerprint(emb_path)}"
-            .encode()).hexdigest()[:10]
-        store = os.path.join("/tmp", "spark_graft_nsw_store_" + key)
+        store = store_path("nsw", 4, [emb_path], m=16)
         edges = spark.read.parquet(store)
         buckets = sorted({i % 16 for i in ids})
         cand = (edges.filter(F.col("bucket").isin(buckets)
@@ -117,10 +112,7 @@ def fragment(spark, sf_dir, which, F):
                 " trees):\n" + explain_str(df))
 
     # delta-store lookup fragment: shape differs across trees
-    key = hashlib.md5(
-        f"{sf_dir}|nswupv4{16}|{_parquet_fingerprint(emb_path)}"
-        .encode()).hexdigest()[:10]
-    store = os.path.join("/tmp", "spark_graft_nswup_store_" + key)
+    store = store_path("nswup", 4, [emb_path], m=16)
     edges = spark.read.parquet(store)
     buckets = sorted({i % 16 for i in ids})
     from openai_vector_search_demo_spark.operators import nsw as nsw_mod

@@ -51,6 +51,17 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def store_root(tmp_path, monkeypatch):
+    """Publish this test's cached stores (``stores.open_or_build``) under
+    its own tmp_path instead of the shared cache root."""
+    from openai_vector_search_demo_spark import stores
+    root = tmp_path / "stores"
+    root.mkdir()
+    monkeypatch.setattr(stores, "_ROOT", f"{root}/spark_graft_")
+    return root
+
+
 def pytest_collection_modifyitems(config, items):
     """Auto-tier: equivalence/parity/A-B-class tests (X equals Y, X
     matches Y, two paths agree, convergence-to-reference) are the SLOW

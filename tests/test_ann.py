@@ -291,7 +291,7 @@ def test_stored_index_cache_key_tracks_content(tmp_path):
     silently serves a stale index after a fixture rebuild."""
     import os
 
-    from openai_vector_search_demo_spark.queries import _parquet_fingerprint
+    from openai_vector_search_demo_spark.stores import _parquet_fingerprint
 
     f = tmp_path / "embeddings.parquet"
     f.write_bytes(b"\x00" * 64)

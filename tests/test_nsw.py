@@ -581,7 +581,7 @@ def test_hierarchical_entry_stored_equals_inline(spark, tmp_path):
     write_nsw_index(big, store, m=3, n_buckets=4)
     meta = read_l1_meta(spark, store)
     assert meta is not None and meta["stride"] == stride
-    assert meta["n1"] >= 16, "fixture must engage the hierarchical path"
+    assert meta["counts"][0] >= 16, "fixture must engage the hierarchical path"
     qvec = [0.2] * DIM
     stored = [(r.vec_id, r.similarity) for r in
               nsw_stored_knn(spark, store, big, qvec, k=10, ef=ef,
@@ -780,3 +780,38 @@ def test_topm_from_replays_dense_rank_order():
     ]
     assert _topm_from(rows, 3) == [4, 3, 6]
     assert _topm_from(rows, 5) == [4, 3, 6, 7, 5]
+
+
+def test_failed_nsw_build_is_rebuilt_on_next_call(spark, tmp_path,
+                                                  store_root, monkeypatch):
+    """A slot's store build killed after the base-graph write (before
+    the level metadata) publishes nothing: the next call builds again
+    and serves what a fresh build serves, instead of a half-written
+    store that passes for complete."""
+    import shutil
+
+    from openai_vector_search_demo_spark import stores
+    from openai_vector_search_demo_spark.operators import nsw
+    from openai_vector_search_demo_spark.queries import ann_nsw_stored_knn
+
+    from conftest import SF0001
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(f"{SF0001}/embeddings.parquet", sf)
+
+    def killed(*args, **kwargs):
+        raise RuntimeError("build killed after the base-graph write")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(nsw, "_write_hier_meta", killed)
+        with pytest.raises(RuntimeError, match="base-graph write"):
+            ann_nsw_stored_knn(spark, str(sf))
+    assert list(store_root.iterdir()) == []
+    rebuilt = [tuple(r) for r in ann_nsw_stored_knn(spark, str(sf)).collect()]
+
+    fresh_root = tmp_path / "fresh"
+    fresh_root.mkdir()
+    monkeypatch.setattr(stores, "_ROOT", f"{fresh_root}/spark_graft_")
+    fresh = [tuple(r) for r in ann_nsw_stored_knn(spark, str(sf)).collect()]
+    assert len(rebuilt) == 10 and rebuilt == fresh

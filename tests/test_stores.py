@@ -1,11 +1,16 @@
 """stores.read_probed_partitions — the shared partition-pruned read path
 of every stored index, in both metadata modes (catalog table vs local-FS
-basePath enumeration)."""
+basePath enumeration) — and stores.open_or_build, the one build-if-absent
+path of every cached store."""
 
 from __future__ import annotations
 
 import contextlib
 import io
+import json
+import os
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -214,3 +219,208 @@ def test_fs_read_text_roundtrip(spark, tmp_path):
     fs_write_text(spark, p, payload)
     assert fs_read_text(spark, p) == payload
     assert fs_read_text(spark, str(tmp_path / "absent.txt")) is None
+
+
+# --- open_or_build: the one build-if-absent path of every cached store ---
+
+def _open(spark, tmp_path, build, version=1, **params):
+    from openai_vector_search_demo_spark.stores import open_or_build
+    inp = tmp_path / "input.parquet"
+    if not inp.exists():
+        inp.write_bytes(b"\x00" * 32)
+    return open_or_build(spark, "unit", version, [str(inp)], build,
+                         **params)
+
+
+def _writer(calls, token="v1"):
+    def build(path):
+        calls.append(path)
+        os.makedirs(path)
+        with open(os.path.join(path, "data"), "w") as fh:
+            fh.write(token)
+    return build
+
+
+def test_open_or_build_serves_published_store_without_building(
+        spark, tmp_path, store_root):
+    calls: list = []
+    first = _open(spark, tmp_path, _writer(calls), m=16)
+    again = _open(spark, tmp_path, _writer(calls), m=16)
+    assert first == again and len(calls) == 1
+    with open(os.path.join(first, "data")) as fh:
+        assert fh.read() == "v1"
+    root = os.path.dirname(first)
+    # the build ran in a sibling temp directory that the rename consumed
+    assert calls[0] != first and calls[0].startswith(root + ".tmp-")
+    assert os.listdir(store_root) == [os.path.basename(root)]
+    with open(os.path.join(root, "_MANIFEST")) as fh:
+        manifest = json.load(fh)
+    assert manifest["kind"] == "unit" and manifest["version"] == 1
+    assert manifest["params"] == {"m": 16}
+    assert list(manifest["fingerprint"]) == [str(tmp_path / "input.parquet")]
+
+
+def test_open_or_build_failed_build_publishes_nothing(spark, tmp_path,
+                                                      store_root):
+    def killed(path):
+        os.makedirs(path)
+        with open(os.path.join(path, "part-0"), "w") as fh:
+            fh.write("half")
+        raise RuntimeError("build killed after its first write")
+
+    with pytest.raises(RuntimeError, match="first write"):
+        _open(spark, tmp_path, killed)
+    assert os.listdir(store_root) == []
+    calls: list = []
+    path = _open(spark, tmp_path, _writer(calls))
+    assert len(calls) == 1 and os.listdir(path) == ["data"]
+
+
+def test_open_or_build_mismatched_manifest_raises(spark, tmp_path,
+                                                  store_root):
+    calls: list = []
+    path = _open(spark, tmp_path, _writer(calls))
+    manifest = os.path.join(os.path.dirname(path), "_MANIFEST")
+    with open(manifest) as fh:
+        rec = json.load(fh)
+    rec["version"] = 2
+    with open(manifest, "w") as fh:
+        json.dump(rec, fh)
+    with pytest.raises(ValueError, match="'version': 2.*'version': 1"):
+        _open(spark, tmp_path, _writer(calls))
+    os.remove(manifest)
+    with pytest.raises(ValueError, match="manifest is None"):
+        _open(spark, tmp_path, _writer(calls))
+    assert len(calls) == 1
+
+
+def test_open_or_build_params_are_in_the_key(spark, tmp_path, store_root):
+    calls: list = []
+    a = _open(spark, tmp_path, _writer(calls), nbits=62, seed=42)
+    b = _open(spark, tmp_path, _writer(calls), nbits=32, seed=42)
+    c = _open(spark, tmp_path, _writer(calls), nbits=62, seed=42,
+              centroids=[[0.5, 0.25]])
+    assert len({a, b, c}) == 3 and len(calls) == 3
+    v2 = _open(spark, tmp_path, _writer(calls), version=2, nbits=62,
+               seed=42)
+    assert v2 not in (a, b, c) and len(calls) == 4
+
+
+def test_hamming_store_rebuilds_for_other_planes(spark, tmp_path,
+                                                 store_root, monkeypatch):
+    """The Hamming slot's planes (nbits/seed) are part of its store key:
+    changing the plane count builds a second store instead of serving
+    signatures made with other planes."""
+    import shutil
+
+    from openai_vector_search_demo_spark.operators import hamming
+    from openai_vector_search_demo_spark.queries import hamming_tier
+
+    from conftest import SF0001
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(f"{SF0001}/embeddings.parquet", sf)
+    built: list = []
+    real = hamming.write_hamming_index
+
+    def spy(df, path, **kw):
+        built.append(kw.get("planes"))
+        return real(df, path, **kw)
+
+    monkeypatch.setattr(hamming, "write_hamming_index", spy)
+    assert hamming_tier.ann_hamming_stored_knn(spark, str(sf)).count() == 10
+    monkeypatch.setattr(hamming_tier, "_HAMMING_NBITS", 32)
+    assert hamming_tier.ann_hamming_stored_knn(spark, str(sf)).count() == 10
+    assert [len(p) for p in built] == [62, 32]
+
+
+def test_open_or_build_concurrent_builders_publish_once(spark, tmp_path,
+                                                        store_root,
+                                                        monkeypatch):
+    """Two same-key builders that both run their build: one rename
+    publishes, the loser drops its copy and serves the winner's."""
+    import threading
+
+    from openai_vector_search_demo_spark.queries import run_concurrent
+    from openai_vector_search_demo_spark import stores
+
+    both_building = threading.Barrier(2, timeout=60)
+    published: list = []
+    real_rename = stores.os.rename
+
+    def counting_rename(src, dst):
+        real_rename(src, dst)
+        published.append(dst)
+
+    monkeypatch.setattr(stores.os, "rename", counting_rename)
+
+    def build(path):
+        both_building.wait()
+        _writer([], token=threading.current_thread().name)(path)
+
+    paths = run_concurrent([lambda: _open(spark, tmp_path, build)] * 2)
+    assert paths[0] == paths[1] and len(published) == 1
+    assert os.listdir(store_root) == [os.path.basename(published[0])]
+
+
+def test_run_concurrent_threads_keep_callers_job_group(spark):
+    """Jobs a run_concurrent thunk runs carry the caller's job group
+    (pyspark InheritableThread), so traces and cancellation reach them."""
+    from openai_vector_search_demo_spark.queries import run_concurrent
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    sc.setJobGroup("run-concurrent-group", "run_concurrent job context")
+    try:
+        counts = run_concurrent([lambda: spark.range(10).count(),
+                                 lambda: spark.range(7).count()])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert counts == [10, 7]
+    assert len(st.getJobIdsForGroup("run-concurrent-group")) >= 2
+
+
+_STORE_LITERALS = ("_SUCCESS", "_UPSERTED", "_TOMBSTONED", "_UPSERT_DONE",
+                   "_COMPACT_DONE", "hashlib.md5(", 'os.path.join("/tmp"',
+                   '"/tmp/')
+_STREAMED = ("keeps its own _STREAMED root: the stream checkpoint inside "
+             "records absolute source paths, which publishing by rename "
+             "would break")
+_OWN_STORE_CODE = {
+    ("dedup.py", "streaming_line_dedup_ingest"): _STREAMED,
+    ("graph_ann.py", "streaming_nsw_ingest"): _STREAMED,
+    ("graph_ann.py", "_SCALE_FIX_DIR"):
+        "the 100k scale fixture is generated input data, published "
+        "whole by os.replace, not a cached store",
+}
+
+
+def test_queries_open_stores_only_through_open_or_build():
+    """No query module builds a store key, a /tmp store path or a
+    completion marker itself: every cached store goes through
+    stores.open_or_build.  Each exception is named above with its
+    reason, and must still be needed."""
+    import ast
+    import pathlib
+
+    import openai_vector_search_demo_spark.queries as q
+
+    hits = set()
+    for path in sorted(pathlib.Path(q.__file__).parent.glob("*.py")):
+        src = path.read_text()
+        lines = src.splitlines()
+        for node in ast.parse(src).body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                name = node.name
+            elif isinstance(node, ast.Assign):
+                name = getattr(node.targets[0], "id", "?")
+            else:
+                name = type(node).__name__
+            body = "\n".join(lines[node.lineno - 1:node.end_lineno])
+            if any(lit in body for lit in _STORE_LITERALS):
+                hits.add((path.name, name))
+    assert hits - set(_OWN_STORE_CODE) == set()
+    assert set(_OWN_STORE_CODE) - hits == set()
