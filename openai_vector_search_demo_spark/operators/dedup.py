@@ -518,48 +518,71 @@ def ingest_batch_against_index(spark, batch: DataFrame, store: str,
     frame for both the verify join and the append, so each batch pays
     exactly one Arrow pass (the naive check-then-``write_band_index``
     composition shingles the batch twice).  Returns the verified
-    ``(new_id, existing_id, jaccard)`` matches; the admitted set is
-    ``batch − distinct(new_id)``.  The accumulated corpus is never
-    re-shingled; the caller wraps a loop of these per batch.
+    ``(new_id, existing_id, jaccard)`` matches, one row per distinct
+    match; the admitted set is ``batch − distinct(new_id)``.  The
+    accumulated corpus is never re-shingled; the caller wraps a loop of
+    these per batch.
 
-    The shingled batch and the admitted frame are cached for the round
-    only and released once the appends are done, with or without a
-    ``cache_scope()`` around the call (a plain loop, or the streaming
-    gate, would otherwise hold two caches per batch for the session's
-    lifetime); the returned matches are an eager checkpoint."""
+    Plan: the batch's band entries are the broadcast build side of the
+    band-candidate join, probed by the store's band entries; the
+    candidate pairs join the store's shingle sets with no hint, so the
+    planner broadcasts ``_sigs`` only while it is under the broadcast
+    threshold and shuffles otherwise.  Nothing whose size depends on
+    how contaminated the batch is gets broadcast.  The candidates and
+    the batch's own rows then meet in ONE exchange by new id, where
+    windows (spillable, no per-document array) bring each document's
+    shingle set to its candidates, verify them, drop the pairs found in
+    more than one band, and mark the documents that matched — the
+    append reads the unmarked rows, with no anti-join.  A batch that
+    repeats a doc id is verified with one of that id's shingle sets.
+
+    Cache lifecycle: the shingled batch and that per-document verdict
+    are eager local checkpoints, no ``persist``, so nothing outlives
+    the round in the cache with or without a ``cache_scope()`` around
+    the call; the verdict's blocks back the returned matches (the
+    caller owns them), and Spark drops each checkpoint's blocks once
+    its frame is garbage-collected."""
+    rows = num_hashes // bands
     sh = _shingle_side(batch, id_col, text_col, k, num_hashes, "n",
-                       cache=False).persist()
-    adm = None
-    try:
-        rows = num_hashes // bands
-        entries_e, hs_e = _read_band_store(spark, store, sh)
-        # localCheckpoint, not persist: the append below grows the very
-        # parquet files this plan reads, and a lazily-persisted frame
-        # whose cache fills during the append job re-lists the store and
-        # reports every admitted doc as a jaccard-1.0 SELF-match.  The
-        # eager checkpoint pins the pre-append result (bounded: verified
-        # pairs of ONE batch).
-        matches = _cross_verify(
-            _band_entries(sh, "n", rows, bands), entries_e,
-            sh.select("id_n", "hs_n"), hs_e,
-            threshold).localCheckpoint(eager=True)
-        rejected = matches.select(
-            F.col("new_id").alias("_rej_id")).distinct()
-        adm = (sh.join(rejected, sh["id_n"] == F.col("_rej_id"),
-                       "left_anti")
-               .select(F.col("id_n").alias("id_e"),
-                       F.col("hs_n").alias("hs_e"), "signature")
-               .persist())
-        (_band_entries(adm, "e", rows, bands)
-         .repartition(F.col("band"))
-         .write.mode("append").partitionBy("band").parquet(store))
-        adm.select("id_e", "hs_e").write.mode("append").parquet(
-            store + "_sigs")
-    finally:
-        sh.unpersist()
-        if adm is not None:
-            adm.unpersist()
-    return matches
+                       cache=False).localCheckpoint(eager=True)
+    entries_e, hs_e = _read_band_store(spark, store, sh)
+    cand = (entries_e.join(F.broadcast(_band_entries(sh, "n", rows, bands)),
+                           ["band", "bucket"])
+            .join(hs_e, "id_e")
+            .select("id_n", "id_e", "hs_e"))
+    doc = Window.partitionBy("id_n")
+    pair = F.col("id_e").isNotNull()
+    common = F.size(F.array_intersect("_hs", "hs_e"))
+    jaccard = common / (F.size("_hs") + F.size("hs_e") - common)
+    # a pair colliding in several bands arrives once per band
+    again = F.lag("id_e").over(doc.orderBy("id_e")) == F.col("id_e")
+    # localCheckpoint, not persist: the append below grows the very
+    # parquet files this plan reads, and a lazily-persisted frame
+    # whose cache fills during the append job re-lists the store and
+    # reports every admitted doc as a jaccard-1.0 SELF-match.  The
+    # eager checkpoint pins the pre-append verdict: the batch's rows
+    # plus its verified matches.
+    verdict = (sh.unionByName(cand, allowMissingColumns=True)
+               .withColumn("_hs", F.max("hs_n").over(doc))
+               .withColumn("jaccard", F.when(pair, jaccard))
+               .withColumn("hit", F.col("jaccard") >= threshold)
+               .withColumn("matched", F.max("hit").over(doc))
+               .withColumn("again", F.coalesce(again, F.lit(False)))
+               .filter(F.when(pair, F.col("hit") & ~F.col("again"))
+                       .otherwise(~F.coalesce("matched", F.lit(False))))
+               .select("id_n", "id_e", F.round("jaccard", 6).alias("jaccard"),
+                       "hs_n", "signature")
+               .localCheckpoint(eager=True))
+    adm = (verdict.filter(F.col("id_e").isNull())
+           .select(F.col("id_n").alias("id_e"),
+                   F.col("hs_n").alias("hs_e"), "signature"))
+    (_band_entries(adm, "e", rows, bands)
+     .write.mode("append").partitionBy("band").parquet(store))
+    adm.select("id_e", "hs_e").write.mode("append").parquet(
+        store + "_sigs")
+    return (verdict.filter(F.col("id_e").isNotNull())
+            .select(F.col("id_n").alias("new_id"),
+                    F.col("id_e").alias("existing_id"), "jaccard"))
 
 
 def minhash_lsh_pairs_with_side(df: DataFrame, keep_cols,

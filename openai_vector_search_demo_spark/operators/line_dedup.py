@@ -29,15 +29,14 @@ partials collapse the hot key BEFORE the wire:
 - the distinct-doc count is two phases — ``groupBy(hash, doc)``
   (keys unique ⇒ uniform) then ``groupBy(hash).count()`` (partial
   counts: each reducer receives ≤ #map-partitions rows per key);
-- ``keep_first`` is one ``min(struct(doc_id, pos))`` per hash —
-  partial-agg min, same property;
-- the verdict joins back to occurrences on the hash — a hot key is
-  one build-side row, and AQE's skew-join split handles the probe
-  side (`spark.sql.adaptive.enabled`).
+- ``keep_first`` is one ``min(struct(doc_id, pos, line))`` per hash —
+  partial-agg min, same property — and that row IS the kept
+  occurrence: no join back to the occurrences.
 
-Reconstruction is ``groupBy(doc)`` over KEPT lines only (bounded by
-document size, the same key class every per-doc agg in the repo
-uses).  No UDF anywhere; ANSI-SQL-replayable.
+Reconstruction is ONE ``groupBy(doc)`` over the document rows and the
+KEPT lines together (bounded by document size, the same key class
+every per-doc agg in the repo uses).  No UDF anywhere;
+ANSI-SQL-replayable.
 
 The INCREMENTAL tier (``write_line_index`` /
 ``dedup_lines_against_index`` / ``ingest_lines_against_index``) is
@@ -46,8 +45,15 @@ against the hash set of everything already ingested — as a stored,
 bucket-partitioned index of distinct line hashes: the history is
 never re-read, re-split, or re-hashed per batch, and concatenating
 the per-batch outputs equals the one-shot ``keep_first`` rule ordered
-by (batch, doc_id, pos).  The ``write_band_index`` pattern
-(``operators/dedup.py:449``) applied to the line unit.
+by (batch, doc_id, pos).  The band-index pattern of
+``operators.dedup.write_band_index`` applied to the line unit.  Per
+batch the index is only PROBED: the batch's line occurrences are
+broadcast into the index scan, so what leaves the scan is the owner
+rows of the batch's own lines — nothing store-sized is aggregated or
+shuffled, and a ten-times-larger index costs a larger scan, not a
+larger shuffle.  The batch is the build side, so its line hashes must
+fit one broadcast; the owner rule and keep_first then share one
+batch-sized exchange by line hash (``_admitted_docs``).
 
 The BOUNDED-STATE tier (``bloom_line_bitmap`` / ``bloom_admit_lines``)
 is the Dolma design: membership state is a FIXED ~33 KB bitmap
@@ -90,39 +96,55 @@ def _line_occurrences(df: DataFrame, text_col: str, id_col: str,
     return base, occ
 
 
+def _assemble(rows: DataFrame) -> DataFrame:
+    """ONE ``groupBy(doc_id)`` over rows ``(doc_id, n_lines, pos,
+    line)``: a document row carries ``n_lines`` (null ``line``), a kept
+    line carries ``(pos, line)`` (null ``n_lines``).  Returns
+    ``(doc_id, n_lines, _ls)`` with ``_ls`` the kept ``(pos, line)``
+    structs in original order; ``_finish`` turns it into the output
+    contract.  A repeated doc id is one output row: its rows' line
+    counts add up."""
+    return (rows.groupBy("doc_id")
+            .agg(F.sum("n_lines").cast("int").alias("n_lines"),
+                 F.array_sort(F.collect_list(
+                     F.when(F.col("line").isNotNull(),
+                            F.struct("pos", "line")))).alias("_ls")))
+
+
+def _finish(assembled: DataFrame, line_sep: str) -> DataFrame:
+    """``_assemble`` output → ``(doc_id, text, n_lines, n_kept,
+    n_removed)``; docs that lost everything get empty text."""
+    n_kept = F.size("_ls").cast("long")
+    return assembled.select(
+        "doc_id",
+        F.array_join(F.transform("_ls", lambda s: s["line"]),
+                     line_sep).alias("text"),
+        "n_lines", n_kept.alias("n_kept"),
+        (F.col("n_lines") - n_kept).alias("n_removed"))
+
+
 def _rebuild(base: DataFrame, kept: DataFrame,
              line_sep: str) -> DataFrame:
     """Reassemble kept lines into documents (original order), with
-    keep/remove counts; docs that lost everything get empty text."""
-    rebuilt = (kept.groupBy("doc_id")
-               .agg(F.array_join(
-                        F.transform(
-                            F.array_sort(F.collect_list(
-                                F.struct("pos", "line"))),
-                            lambda s: s["line"]),
-                        line_sep).alias("text"),
-                    F.count(F.lit(1)).alias("n_kept")))
-    n_all = base.select("doc_id", F.size("lines").alias("n_lines"))
-    return (n_all.join(rebuilt, "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce(F.col("text"), F.lit("")).alias("text"),
-                    "n_lines",
-                    F.coalesce(F.col("n_kept"), F.lit(0).cast("long"))
-                    .alias("n_kept"),
-                    (F.col("n_lines")
-                     - F.coalesce(F.col("n_kept"), F.lit(0).cast("long")))
-                    .alias("n_removed")))
+    keep/remove counts; docs that lost everything get empty text.  The
+    document rows and the kept lines meet in one ``groupBy(doc_id)``
+    (no join back to the documents)."""
+    docs = base.select("doc_id", F.size("lines").alias("n_lines"),
+                       F.lit(None).cast("int").alias("pos"),
+                       F.lit(None).cast("string").alias("line"))
+    lines = kept.select("doc_id", F.lit(None).cast("int").alias("n_lines"),
+                        "pos", "line")
+    return _finish(_assemble(docs.unionByName(lines)), line_sep)
 
 
 def _keep_first_within(occ: DataFrame) -> DataFrame:
     """Keep only the smallest (doc_id, pos) occurrence per line hash —
-    one partial-agg min per hash (skew-safe)."""
-    first = occ.groupBy("lh").agg(F.min(F.struct("doc_id", "pos"))
-                                  .alias("m"))
-    return (occ.join(first, "lh")
-            .filter((F.col("doc_id") == F.col("m.doc_id"))
-                    & (F.col("pos") == F.col("m.pos")))
-            .drop("m"))
+    one partial-agg ``min(struct(doc_id, pos, line))`` per hash
+    (skew-safe), with no join back: exactly one ``(lh, doc_id, pos,
+    line)`` row per hash, also when a batch repeats a doc id."""
+    return (occ.groupBy("lh")
+            .agg(F.min(F.struct("doc_id", "pos", "line")).alias("m"))
+            .select("lh", "m.doc_id", "m.pos", "m.line"))
 
 
 def dedup_lines_across_docs(df: DataFrame,
@@ -169,13 +191,12 @@ def _line_bucket(lh):
 
 def _append_owners(kept: DataFrame, path: str,
                    mode: str = "append") -> None:
-    """Write the ``(lh, doc_id)`` owner rows of ``_keep_first_within``
-    output, bucket-partitioned.  That output has one row per ``lh``
-    (a batch repeating a doc id can repeat an owner row, which the
-    read side's min() resolution collapses), so no distinct shuffle."""
+    """Write the ``(lh, doc_id)`` owner rows of kept line occurrences,
+    bucket-partitioned.  The keep-first rule keeps one occurrence per
+    ``lh`` (a batch repeating a doc id included), so no distinct
+    shuffle; each writing task emits one file per bucket it holds."""
     (kept.select("lh", "doc_id")
      .withColumn("bucket", _line_bucket(F.col("lh")))
-     .repartition(F.col("bucket"))
      .write.mode(mode).partitionBy("bucket").parquet(path))
 
 
@@ -198,33 +219,63 @@ def write_line_index(df: DataFrame, path: str,
     ``bucket=B/part-*.parquet`` so the membership join co-locates by a
     fixed-width key and a bucket's files stay bounded."""
     _, occ = _line_occurrences(df, text_col, id_col, line_sep)
-    _append_owners(_keep_first_within(occ), path, mode=mode)
+    kept = _keep_first_within(occ)
+    _append_owners(kept.repartition(_line_bucket(F.col("lh"))), path,
+                   mode=mode)
 
 
-def _store_owners(spark, store: str, id_type: str) -> DataFrame:
-    """Resolved ``(lh, owner)`` view of a line index: duplicate owner
-    rows (at-least-once appends) collapse to min — one partial-agg min
-    per hash, skew-safe.  Read with the index's fixed schema (``id_type``
-    is the batch's doc id type, the type the writer stores) instead of
-    inferring it: inference is one parquet-footer job per read."""
-    return (spark.read.schema(f"lh string, doc_id {id_type}, bucket int")
-            .parquet(store)
-            .groupBy("lh").agg(F.min("doc_id").alias("owner")))
+def _admitted_docs(spark, batch: DataFrame, store: str, text_col: str,
+                   id_col: str, line_sep: str,
+                   one_task: bool = False) -> DataFrame:
+    """Shared admission core: the batch's documents with their
+    surviving lines (``_assemble`` output) after the store-owner rule
+    and within-batch keep_first.
 
-
-def _admitted_occurrences(spark, batch: DataFrame, store: str,
-                          text_col: str, id_col: str, line_sep: str):
-    """Shared admission core: ``(base, kept)`` where kept = the batch's
-    surviving line occurrences after the store-owner rule + within-
-    batch keep_first."""
+    Plan: the batch's line occurrences ``(lh, doc_id, pos)`` are
+    broadcast and probe the stored index, so only the owner rows of
+    THIS batch's lines leave the scan, each paired with the batch
+    occurrence it matched (no store-wide aggregate or shuffle).  Those
+    pairs, the occurrences and one row per document (under a
+    ``#``-prefixed key no md5 hash can equal, so documents that lose
+    every line still come out) meet in ONE batch-sized exchange by
+    ``lh``, where a single aggregate resolves the minimum owner and
+    keep_first together; one ``groupBy(doc_id)`` then rebuilds the
+    documents.  ``one_task`` runs that reduce side — the per-``lh``
+    aggregate and the rebuild — in a single task, which saves the
+    rebuild's exchange (a Spark job) for a batch small enough that
+    one task rebuilds it faster than a stage is scheduled; the scan,
+    split, hashing and probe stay parallel either way."""
     base, occ = _line_occurrences(batch, text_col, id_col, line_sep)
-    owners = _store_owners(spark, store,
-                           occ.schema["doc_id"].dataType.simpleString())
-    eligible = (occ.join(owners, "lh", "left")
-                .filter(F.col("owner").isNull()
-                        | (F.col("owner") == F.col("doc_id")))
-                .drop("owner"))
-    return base, _keep_first_within(eligible)
+    id_type = occ.schema["doc_id"].dataType.simpleString()
+    owned = (spark.read.schema(f"lh string, doc_id {id_type}, bucket int")
+             .parquet(store)
+             .select("lh", F.col("doc_id").alias("owner"))
+             .join(F.broadcast(occ.select("lh", "doc_id", "pos")), "lh"))
+    docs = base.select(F.concat(F.lit("#"), F.col("doc_id").cast("string"))
+                       .alias("lh"), "doc_id",
+                       F.size("lines").alias("n_lines"))
+    per_lh = (occ.unionByName(docs, allowMissingColumns=True)
+              .unionByName(owned, allowMissingColumns=True)
+              .groupBy("lh")
+              .agg(F.min("owner").alias("o"),
+                   F.min(F.when(F.col("owner").isNull(),
+                                F.struct("doc_id", "pos", "line")))
+                   .alias("a"),
+                   F.min(F.when(F.col("doc_id") == F.col("owner"),
+                                F.struct("doc_id", "pos"))).alias("b"),
+                   F.sum("n_lines").alias("n_lines")))
+    # an unowned line keeps its first batch occurrence; an owned one
+    # only its minimum owner's first occurrence (the replay case), whose
+    # text is a's: every occurrence of one lh has the same text
+    kept = (F.when(F.col("o").isNull(), F.col("a"))
+            .when(F.col("b.doc_id") == F.col("o"),
+                  F.struct(F.col("b.doc_id").alias("doc_id"),
+                           F.col("b.pos").alias("pos"),
+                           F.col("a.line").alias("line"))))
+    rows = (per_lh.select(kept.alias("k"), "n_lines")
+            .filter(F.col("k").isNotNull())
+            .select("k.doc_id", "n_lines", "k.pos", "k.line"))
+    return _assemble(rows.coalesce(1) if one_task else rows)
 
 
 def dedup_lines_against_index(spark, batch: DataFrame, store: str,
@@ -233,19 +284,17 @@ def dedup_lines_against_index(spark, batch: DataFrame, store: str,
                               line_sep: str = "\n") -> DataFrame:
     """Deduplicate an arriving batch's lines against a
     ``write_line_index`` store AND within the batch itself (CCNet shard
-    semantics): a line drops if its content hash is owned by an EARLIER
+    semantics): a line drops if its content hash is owned by another
     document in the index, or if an earlier (doc_id, pos) occurrence
     exists in this batch.  A batch doc that OWNS a stored line keeps
     its first occurrence of it — that is the replay case (the doc's
     own earlier delivery appended the owner row), and it reproduces
     the original output exactly.  Returns the rebuilt documents — the
     ``dedup_lines_across_docs`` output contract.  The history side
-    contributes one fixed-width row per distinct line ever seen; the
+    contributes only the owner rows of the batch's own lines; the
     batch never re-reads, re-splits, or re-hashes earlier shards."""
-    base, kept = _admitted_occurrences(batch=batch, spark=spark,
-                                       store=store, text_col=text_col,
-                                       id_col=id_col, line_sep=line_sep)
-    return _rebuild(base, kept, line_sep)
+    return _finish(_admitted_docs(spark, batch, store, text_col, id_col,
+                                  line_sep), line_sep)
 
 
 def ingest_lines_against_index(spark, batch: DataFrame, store: str,
@@ -255,22 +304,24 @@ def ingest_lines_against_index(spark, batch: DataFrame, store: str,
     """One admission round of the continuous line-dedup loop: dedup the
     batch against the store (and within itself), append the SURVIVING
     lines' ``(lh, owner)`` rows to the store, and return the rebuilt
-    batch documents.  The kept OCCURRENCES are pinned with
-    ``localCheckpoint`` before the append (the band-index lesson: a
-    lazy plan re-reading the very files the append grows would
-    double-count) and feed both the owner append and the rebuild — the
-    admitted lines are never re-split or re-hashed.  IDEMPOTENT under
-    at-least-once replay: a re-delivered batch's docs own their kept
-    lines in the store, so the dedup reproduces the original output
-    and the append re-writes byte-identical owner rows (min-resolved
-    at read).  Concatenating each batch's output equals the one-shot
-    ``keep_first`` rule ordered by (batch, doc_id, pos)."""
-    base, kept = _admitted_occurrences(batch=batch, spark=spark,
-                                       store=store, text_col=text_col,
-                                       id_col=id_col, line_sep=line_sep)
-    kept = kept.localCheckpoint()
-    _append_owners(kept, store)
-    return _rebuild(base, kept, line_sep)
+    batch documents.  The rebuilt documents, with their kept lines,
+    are pinned with ``localCheckpoint`` before the append (the
+    band-index lesson: a lazy plan re-reading the very files the
+    append grows would double-count) and feed both the owner append
+    and the returned frame — the admitted lines are never re-split.
+    IDEMPOTENT under at-least-once replay: a re-delivered batch's docs
+    own their kept lines in the store, so the dedup reproduces the
+    original output and the append re-writes byte-identical owner rows
+    (min-resolved at read).  Concatenating each batch's output equals
+    the one-shot ``keep_first`` rule ordered by (batch, doc_id, pos).
+    The reduce side of the round (the per-line-hash verdict and the
+    rebuild) runs as one task: see ``_admitted_docs``."""
+    docs = (_admitted_docs(spark, batch, store, text_col, id_col,
+                           line_sep, one_task=True)
+            .localCheckpoint(eager=True))
+    _append_owners(docs.select("doc_id", F.explode("_ls").alias("k"))
+                   .select(F.md5("k.line").alias("lh"), "doc_id"), store)
+    return _finish(docs, line_sep)
 
 
 # ---------------------------------------------------------------------------

@@ -130,6 +130,76 @@ def test_within_batch_keep_first_against_index(spark, tmp_path):
     assert out[1].text == "fresh"          # 'new line' kept at (0, 0)
 
 
+def _owner_rows(spark, store):
+    return sorted((r.lh, r.doc_id) for r in
+                  spark.read.schema("lh string, doc_id long, bucket int")
+                  .parquet(store).collect())
+
+
+def test_ingest_batch_repeating_a_doc_id(spark, tmp_path):
+    """A batch that repeats a doc id (an at-least-once duplicate inside
+    one batch) yields ONE row for that id: keep_first keeps one
+    occurrence per line, the id's rows' line counts add up, and one
+    owner row per kept line joins the store.  A replay of the batch
+    reproduces the output and appends only byte-identical owners."""
+    from hashlib import md5
+
+    from openai_vector_search_demo_spark.operators.line_dedup import (
+        ingest_lines_against_index,
+        write_line_index,
+    )
+
+    store = str(tmp_path / "lidx_rep")
+    write_line_index(spark.createDataFrame([(100, "old")],
+                                           "doc_id long, text string"),
+                     store)
+    batch = spark.createDataFrame(
+        [(5, "a\nb"), (5, "a\nb"), (6, "b\nc\nold")],
+        "doc_id long, text string")
+    want = {5: ("a\nb", 4, 2, 2), 6: ("c", 3, 1, 2)}
+
+    def admit():
+        rows = ingest_lines_against_index(spark, batch, store).collect()
+        assert len(rows) == len({r.doc_id for r in rows})
+        return {r.doc_id: (r.text, r.n_lines, r.n_kept, r.n_removed)
+                for r in rows}
+
+    assert admit() == want
+    owners = [(md5(x.encode()).hexdigest(), d)
+              for x, d in (("a", 5), ("b", 5), ("c", 6), ("old", 100))]
+    assert _owner_rows(spark, store) == sorted(owners)
+    assert admit() == want
+    assert _owner_rows(spark, store) == sorted(
+        owners + [o for o in owners if o[1] != 100])
+
+
+def test_ingest_replay_with_owned_lines(spark, tmp_path):
+    """A replayed batch whose docs own stored lines reproduces its
+    output, also when a NEW doc with a smaller id shares an owned line:
+    the owner keeps its first occurrence and the new doc drops it (the
+    owner rule goes by the stored owner, not by batch order)."""
+    from openai_vector_search_demo_spark.operators.line_dedup import (
+        dedup_lines_against_index,
+        ingest_lines_against_index,
+        write_line_index,
+    )
+
+    store = str(tmp_path / "lidx_own")
+    write_line_index(spark.createDataFrame([(1, "hist")],
+                                           "doc_id long, text string"),
+                     store)
+    first = spark.createDataFrame([(10, "x\nw\nx\nhist")],
+                                  "doc_id long, text string")
+    texts = {r.doc_id: r.text for r in
+             ingest_lines_against_index(spark, first, store).collect()}
+    assert texts == {10: "x\nw"}
+    mixed = spark.createDataFrame([(3, "x\ny"), (10, "x\nw\nx\nhist")],
+                                  "doc_id long, text string")
+    got = {r.doc_id: (r.text, r.n_kept) for r in
+           dedup_lines_against_index(spark, mixed, store).collect()}
+    assert got == {3: ("y", 1), 10: ("x\nw", 2)}
+
+
 def test_bloom_membership_and_python_twin(spark):
     """The bitmap build and the map-only admission agree with a plain
     Python Bloom twin (same md5-derived positions), and a line absent
