@@ -396,91 +396,103 @@ def write_nsw_index(df: DataFrame, path: str, m: int = NSW_M,
     """Persist the serving artifact: the adjacency table, BUCKETED BY
     SRC (one directory per ``pmod(src, n_buckets)``) so each beam
     round's frontier lookup is a partition-pruned point read of ≤ ef
-    buckets — the vectors themselves are NOT stored here (the refine
-    point-reads them from the source table).
+    buckets; the vectors stay in the source table.
 
-    v2 (r13): each directed top-M edge is written in BOTH directions —
-    the out-edge with ``fwd = true`` (the canonical list the
-    merge-on-read top-M window resolves) and its mirror under the
-    OTHER endpoint's bucket with ``fwd = false`` — so symmetric
-    traversal stays a single src-pruned point read per round instead
-    of an unprunable dst-side scan.  Mirror rows are traversal HINTS:
-    the stored lookup validates each against the mirror source's
-    current resolved top-M (one extra pruned point read), which makes
-    them exact under upserts too.
+    Each directed top-M edge is written in BOTH directions: the
+    out-edge with ``fwd = true`` (the canonical list the merge-on-read
+    top-M window resolves) and a ``fwd = false`` mirror under the other
+    endpoint's bucket, so symmetric traversal stays one src-pruned read
+    per round.  Mirrors are traversal HINTS the stored lookup validates
+    against the live top-M, which keeps them exact under upserts.
 
-    v4 (r15): the store carries the WHOLE hierarchy — every level of
-    ``nsw_hier_plan`` with ≥ {NSW_HIER_FLOOR} nodes gets its own exact
-    top-M graph under ``_L1``, ``_L2``, … (each in the SAME dual
-    fwd/mirror bucketed format as the base layer, so the incremental
-    upsert machinery applies to levels too — VERDICT r14 #2), and the
-    write-time geometry lands in ``_L1_META`` (stride, strides, counts,
-    m, n).  Level ℓ is n^(1/2^ℓ)-sized: its build is at most
-    n work (amortized next to the base n²-bounded build), depth is
-    Θ(log log n), and serving entry costs depth·{NSW_L1_ROUNDS}·
-    {NSW_HIER_W}·2M evaluations — flat in n."""
+    Every ``nsw_hier_plan`` level with ≥ {NSW_HIER_FLOOR} nodes gets its
+    own exact top-M graph under ``_L1``, ``_L2``, … in the same dual
+    format, and the geometry lands in the manifest ``_L1_META``.  Level
+    ℓ is n^(1/2^ℓ)-sized: depth is Θ(log log n) and serving entry costs
+    depth·{NSW_L1_ROUNDS}·{NSW_HIER_W}·2M evaluations — flat in n."""
     base = df.filter(F.col(vec_col).isNotNull())
     n = base.count()
     strides, counts = nsw_hier_plan(base, n, id_col=id_col)
-    edges = build_knn_graph(df, m=m, vec_col=vec_col, id_col=id_col)
-    _write_graph_dual(edges, path, n_buckets)
-    prod = 1
-    for lvl, (s, cnt) in enumerate(zip(strides, counts), start=1):
-        prod *= s
-        if cnt < NSW_HIER_FLOOR:
-            break       # this subset is the flat-scanned entry top
+    _write_graph_dual(build_knn_graph(df, m=m, vec_col=vec_col,
+                                      id_col=id_col), path, n_buckets)
+    for lvl, prod in _level_plan(strides, counts)[0]:
         sub = base.filter(F.pmod(F.col(id_col), F.lit(int(prod))) == 0)
-        ledges = build_knn_graph(sub, m=m, vec_col=vec_col,
-                                 id_col=id_col)
-        _write_graph_dual(ledges, f"{path.rstrip('/')}/_L{lvl}",
-                          n_buckets)
+        _write_graph_dual(build_knn_graph(sub, m=m, vec_col=vec_col,
+                                          id_col=id_col),
+                          f"{path.rstrip('/')}/_L{lvl}", n_buckets)
     _write_hier_meta(df.sparkSession, path, strides, counts, m, n=n)
 
 
+def _level_plan(strides, counts) -> tuple[list, int]:
+    """([(level, stride product)] of the graph levels, flat-entry
+    modulus): levels stop at the first one under NSW_HIER_FLOOR, whose
+    subset is the flat-scanned entry top."""
+    levels, prod = [], 1
+    for lvl, (s, cnt) in enumerate(zip(strides, counts), start=1):
+        prod *= s
+        if cnt < NSW_HIER_FLOOR:
+            break
+        levels.append((lvl, prod))
+    return levels, prod
+
+
 _STORE_SCHEMA = "src long, dst long, sim double, fwd boolean, bucket int"
-"""What ``_write_graph_dual`` and the upsert append write for the base
-graph and every ``_L*`` level (``bucket`` is the partition directory).
+"""What ``_write_graph_dual`` and upsert segments hold for the base
+graph and every ``_L*`` level (``bucket`` is the base's partition
+directory and a column of a segment's file).
 Serving reads the store with it instead of inferring it: inference is
 one parquet-footer job per read."""
 _TOMBSTONE_SCHEMA = "vec_id long"
 
 
-def _write_graph_dual(edges: DataFrame, path: str,
-                      n_buckets: int) -> None:
-    """Persist a directed top-M adjacency in the store's DUAL format:
-    every edge under its src bucket with ``fwd = true`` (the canonical
-    list merge-on-read resolves) plus a ``fwd = false`` mirror under
-    the dst's bucket (symmetric traversal stays a src-pruned point
-    read) — see the v2 notes above."""
+def _dual_rows(edges: DataFrame, n_buckets: int) -> DataFrame:
+    """A directed top-M adjacency in the store's DUAL format: every edge
+    under its src bucket with ``fwd = true`` (the canonical list
+    merge-on-read resolves) plus a ``fwd = false`` mirror under the
+    dst's bucket (symmetric traversal stays a src-pruned point read) —
+    see ``write_nsw_index``."""
     both = (edges.withColumn("fwd", F.lit(True))
             .unionByName(edges.select(F.col("dst").alias("src"),
                                       F.col("src").alias("dst"), "sim")
                          .withColumn("fwd", F.lit(False))))
-    (both.withColumn("bucket", F.pmod(F.col("src"), F.lit(n_buckets))
-                     .cast("int"))
-     .repartition(F.col("bucket"))
+    return both.withColumn(
+        "bucket", F.pmod(F.col("src"), F.lit(n_buckets)).cast("int"))
+
+
+def _write_graph_dual(edges: DataFrame, path: str,
+                      n_buckets: int) -> None:
+    """Persist a directed top-M adjacency at ``path`` (``_dual_rows``)."""
+    (_dual_rows(edges, n_buckets).repartition(F.col("bucket"))
      .write.mode("overwrite").partitionBy("bucket").parquet(path))
 
 
-def _write_hier_meta(spark, path: str, strides: list[int],
-                     counts: list[int], m: int,
-                     n: int | None = None) -> None:
-    """``_L1_META``: the frozen write-time geometry — the full
+_META = "_L1_META"
+"""The NSW store's manifest (``stores`` module docstring): the frozen
+write-time geometry plus the segments upserts and deletes added."""
+
+
+def _hier_meta(strides: list[int], counts: list[int], m: int,
+               n: int) -> dict:
+    """The frozen write-time geometry ``_L1_META`` records: the full
     ``strides``/``counts`` level stack, ``stride`` (= ``strides[0]``,
     what serving slots compare their stride against), ``m``, and the
     corpus size ``n`` (r16) so serving slots can derive their stride
     from the store artifact instead of a per-run count job."""
+    return {"stride": int(strides[0]),
+            "m": int(m),
+            "strides": [int(s) for s in strides],
+            "counts": [int(c) for c in counts],
+            "n": int(n)}
+
+
+def _write_hier_meta(spark, path: str, strides: list[int],
+                     counts: list[int], m: int, n: int) -> None:
+    """Write a fresh store's ``_L1_META`` (no segments yet)."""
     import json
 
     from openai_vector_search_demo_spark.stores import fs_write_text
-    meta = {"stride": int(strides[0]),
-            "m": int(m),
-            "strides": [int(s) for s in strides],
-            "counts": [int(c) for c in counts]}
-    if n is not None:
-        meta["n"] = int(n)
-    fs_write_text(spark, path.rstrip("/") + "/_L1_META",
-                  json.dumps(meta))
+    fs_write_text(spark, f"{path.rstrip('/')}/{_META}",
+                  json.dumps(_hier_meta(strides, counts, m, n)))
 
 
 def build_l1_graph(df: DataFrame, stride: int, m: int = NSW_M,
@@ -1147,36 +1159,28 @@ def upsert_nsw_index(spark, path: str, batch: DataFrame,
                      vec_col: str = "embedding", id_col: str = "vec_id",
                      n_buckets: int = 16) -> None:
     """INSERT a vector batch into a stored neighbor graph WITHOUT a
-    rebuild — and, for pure inserts, EXACTLY (the property quantizer
-    tiers cannot offer): node j's true top-m over C∪B is a subset of
-    (its stored top-m over C) ∪ B, so appending
+    rebuild — and, for pure inserts, EXACTLY: node j's true top-m over
+    C∪B is a subset of (its stored top-m over C) ∪ B, so adding
 
     - each new node's top-m edge list over C∪B (one blocked
       batch×corpus BLAS pass — |B|·|C| work, never |C|²), and
-    - each EXISTING node's candidate edges to batch nodes that beat
-      its current m-th edge under the (sim desc, dst asc) order
-      (filtered against the per-src worst row, so the append is
-      |improvements|, not |C|·|B|),
+    - each EXISTING node's edges to batch nodes that beat its current
+      m-th edge under the (sim desc, dst asc) order,
 
-    and resolving per-src top-m AT READ TIME (the merge-on-read window
-    ``beam_search_knn``'s stored lookup applies) serves the identical
-    graph a full rebuild would produce — the oracle for the upsert slot
-    IS the full-rebuild oracle.  Deletes are out of scope here (a
-    removed node invalidates neighbors' lists non-locally; the
-    documented production answer is periodic recompaction, the IVFADC
-    pattern).
+    and resolving per-src top-m AT READ TIME (the merge-on-read window)
+    serves the graph a full rebuild would produce — the upsert slot's
+    oracle IS the full-rebuild oracle.  Deletes are soft
+    (``delete_from_nsw_index``) until recompaction.
 
-    v4 (r15, VERDICT r14 #2): the HIERARCHY is maintained incrementally
-    too — each stored level is just another NSW graph in the same dual
-    format, so the level's batch members (|B|/s1·…·sℓ of the batch) get
-    the SAME exact append (new-node lists + beats-the-m-th-edge
-    improvements, merge-on-read resolved).  A level is rebuilt whole
-    ONLY when its geometry moves: the post-upsert ``nsw_hier_plan`` is
-    compared stride-product by stride-product against the stored meta,
-    and ⌈√n⌉ changes once per ~2√n inserts, so the rebuild (≤ n work,
-    on an n^(1/2^ℓ)-sized layer) amortizes to O(√n) per insert — the
-    upsert path's steady-state work term is |batch|-proportional, not
-    the Θ(n) whole-L1 rebuild v3 paid per batch."""
+    Each hierarchy level gets the same exact insert for its batch
+    members.  A level is rebuilt whole only when its stride product
+    moves (⌈√n⌉ changes once per ~2√n inserts, so the rebuild amortizes
+    to O(√n) per insert).  Every layer's new rows, and any rebuilt
+    level, land in ONE segment; the ``_L1_META`` swap that names it
+    carries the new geometry too (``stores.write_segment``).  Until the
+    swap, readers serve the previous version."""
+    from openai_vector_search_demo_spark.stores import write_segment
+
     ex = (existing.filter(F.col(vec_col).isNotNull())
           .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
     brows = (batch.filter(F.col(vec_col).isNotNull())
@@ -1184,20 +1188,13 @@ def upsert_nsw_index(spark, path: str, batch: DataFrame,
              .collect())
     if not brows:
         return
-    sess = existing.sparkSession
-    bdf = sess.createDataFrame(
+    bdf = existing.sparkSession.createDataFrame(
         [(int(r.id), list(r.v)) for r in brows],
         "id long, v array<double>")
-    _append_graph_delta(spark, path, brows, ex, m, n_buckets,
-                        batch_df=bdf)
-    # store-format contract: the marker tells readers that merge-on-read
-    # resolution AND mirror validation are now REQUIRED (a fresh store
-    # needs neither — every src has exactly m fwd rows and every mirror
-    # is valid); recompaction (rebuild) clears it with the store.
-    # Written via the Hadoop FileSystem API so the marker exists — and is
-    # visible to readers — on ANY store URI, not just the local posix FS.
-    from openai_vector_search_demo_spark.stores import fs_touch
-    fs_touch(spark, path.rstrip("/") + "/_DELTAS")
+    meta = read_l1_meta(spark, path) or {}
+    layers = {"": _graph_delta(_layer_rows(spark, path, meta), brows, ex,
+                               m, n_buckets, batch_df=bdf)}
+    rebuilt = []
 
     # hierarchy maintenance: recompute the plan from the post-upsert
     # corpus (deterministic — an at-least-once replay sees the same
@@ -1206,51 +1203,55 @@ def upsert_nsw_index(spark, path: str, batch: DataFrame,
     # stride product moved (or it newly crossed the floor)
     allnodes = ex.unionByName(bdf)
     n = allnodes.count()
-    meta = read_l1_meta(spark, path) or {}
-    old_strides = meta.get("strides", [])
-    old_counts = meta.get("counts", [])
     strides, counts = nsw_hier_plan(allnodes, n, id_col="id")
-    prod, old_prod = 1, 1
+    old_levels = dict(_level_plan(meta.get("strides", []),
+                                  meta.get("counts", []))[0])
     geom_ok = True
-    for lvl, (s, cnt) in enumerate(zip(strides, counts), start=1):
-        prod *= s
-        if lvl <= len(old_strides):
-            old_prod *= old_strides[lvl - 1]
-        geom_ok = (geom_ok and lvl <= len(old_strides)
-                   and old_prod == prod
-                   and lvl <= len(old_counts)
-                   and old_counts[lvl - 1] >= NSW_HIER_FLOOR)
-        if cnt < NSW_HIER_FLOOR:
-            break       # flat top — no graph at this level
-        lpath = f"{path.rstrip('/')}/_L{lvl}"
+    for lvl, prod in _level_plan(strides, counts)[0]:
+        geom_ok = geom_ok and old_levels.get(lvl) == prod
+        level = f"_L{lvl}"
         if geom_ok:
             bsub = [r for r in brows if int(r.id) % prod == 0]
             if bsub:
-                _append_graph_delta(
-                    spark, lpath, bsub,
+                layers[level] = _graph_delta(
+                    _layer_rows(spark, path, meta, level), bsub,
                     ex.filter(F.pmod(F.col("id"), F.lit(int(prod)))
                               == 0),
                     m, n_buckets)
         else:
             sub = allnodes.filter(
                 F.pmod(F.col("id"), F.lit(int(prod))) == 0)
-            _write_graph_dual(
+            layers[level] = _dual_rows(
                 build_knn_graph(sub, m=m, vec_col="v", id_col="id"),
-                lpath, n_buckets)
-    _write_hier_meta(spark, path, strides, counts, m, n=n)
+                n_buckets)
+            rebuilt.append(level)
+    write_segment(spark, path, _META,
+                  {**meta, **_hier_meta(strides, counts, m, n)},
+                  layers, rebuilt=rebuilt)
 
 
-def _append_graph_delta(spark, path: str, brows, existing: DataFrame,
-                        m: int, n_buckets: int,
-                        batch_df: DataFrame | None = None) -> None:
-    """The exact-insert append for ONE stored graph (base layer or a
-    hierarchy level): ``brows`` are collected (id, v) batch rows (KB —
-    they ride the closure as a broadcast-by-value), ``existing`` the
-    (id, v) relation of the layer's current members.  Appends the new
-    nodes' top-m lists over existing∪batch plus every existing node's
-    candidates that beat its current m-th stored edge, in the dual
-    fwd/mirror format; merge-on-read resolution makes the result equal
-    a full rebuild of the layer (the ``upsert_nsw_index`` proof)."""
+def _layer_rows(spark, path: str, meta: dict, layer: str = ""
+                ) -> DataFrame:
+    """Every stored row of one graph layer (``""`` the base, ``_L1`` …):
+    its base directory plus the segments ``meta`` names for it, read
+    with the fixed ``_STORE_SCHEMA``."""
+    from openai_vector_search_demo_spark.stores import (
+        layer_paths,
+        read_layer,
+    )
+    return read_layer(spark, layer_paths(path, meta, layer), _STORE_SCHEMA)
+
+
+def _graph_delta(stored: DataFrame, brows, existing: DataFrame,
+                 m: int, n_buckets: int,
+                 batch_df: DataFrame | None = None) -> DataFrame:
+    """The exact-insert rows for ONE stored graph layer: ``stored`` is
+    its current rows, ``brows`` the collected (id, v) batch rows (they
+    ride the closure), ``existing`` the (id, v) relation of its
+    members.  Returns, in the dual format, the new nodes' top-m lists
+    over existing∪batch plus every existing node's edges that beat its
+    current m-th; merge-on-read over the layer plus these rows equals
+    a full rebuild of it (the ``upsert_nsw_index`` proof)."""
     import pandas as pd
 
     bids = np.array([r.id for r in brows], dtype=np.int64)
@@ -1259,28 +1260,17 @@ def _append_graph_delta(spark, path: str, brows, existing: DataFrame,
     bn[bn == 0] = 1.0
     bunit = bmat / bn[:, None]
     sess = existing.sparkSession
-
     slack = m + 8
 
     def cross_sims(pdf_iter):
         """TWO pruned candidate streams per Arrow block, both exact by
-        the blocked-top-M threshold argument (ties at the boundary
-        included):
-
-        - kind=0, (existing src → batch dst): each NON-batch row's
-          top-(m+8) batch candidates — a superset of every batch edge
-          that can enter the row's resolved top-m (anything below its
-          own top-m among batch can never displace a stored edge into
-          the final list).
-        - kind=1, (batch src → block dst): each batch node's
-          top-(m+8) candidates among THIS block's rows; the union over
-          blocks contains the node's true global top-m over C∪B, and
-          the per-src window below reduces it exactly.
-
-        Emission is |block|·(m+8) + |B|·(m+8) rows instead of the
-        |block|·|B| full cross relation — the r15 fix that cut the
-        500-into-100k upsert's base append from ~7 min of per-tuple
-        Python to one vectorized pass."""
+        the blocked-top-M threshold argument (boundary ties included):
+        kind=0, each NON-batch row's top-(m+8) batch candidates (a
+        superset of every batch edge that can enter its resolved
+        top-m); kind=1, each batch node's top-(m+8) among THIS block's
+        rows (their union over blocks holds its global top-m over C∪B,
+        which the per-src window below reduces exactly).  Emission is
+        |block|·(m+8) + |B|·(m+8) rows, not the |block|·|B| cross."""
         for pdf in pdf_iter:
             if len(pdf) == 0:
                 continue
@@ -1350,7 +1340,7 @@ def _append_graph_delta(spark, path: str, brows, existing: DataFrame,
     # (src, dst) dedup first: a replayed micro-batch's byte-identical
     # appended rows must not shift the m-th-edge threshold (offline
     # path — the dedup shuffle is fine here, unlike the serving lookup)
-    stored = (spark.read.parquet(path).filter(F.col("fwd"))
+    stored = (stored.filter(F.col("fwd"))
               .select("src", "dst", "sim").dropDuplicates(["src", "dst"]))
     worst = (stored.withColumn("_rn", F.row_number().over(w))
              .filter(F.col("_rn") == m)
@@ -1364,45 +1354,41 @@ def _append_graph_delta(spark, path: str, brows, existing: DataFrame,
                                & (F.col("dst") < F.col("wdst"))))
                     .select("src", "dst", "sim"))
 
-    out = new_edges.unionByName(improvements)
-    # v2: every appended out-edge also lands as a fwd=false mirror under
+    # v2: every added out-edge also lands as a fwd=false mirror under
     # the other endpoint's bucket (see write_nsw_index) — mirrors whose
     # canonical edge is later displaced become stale HINTS, which the
     # stored lookup's validation pass filters against the live top-m.
-    both = (out.withColumn("fwd", F.lit(True))
-            .unionByName(out.select(F.col("dst").alias("src"),
-                                    F.col("src").alias("dst"), "sim")
-                         .withColumn("fwd", F.lit(False))))
-    (both.withColumn("bucket", F.pmod(F.col("src"), F.lit(n_buckets))
-                     .cast("int"))
-     .repartition(F.col("bucket"))
-     .write.mode("append").partitionBy("bucket").parquet(path))
+    return _dual_rows(new_edges.unionByName(improvements), n_buckets)
 
 
 def delete_from_nsw_index(spark, path: str, ids: Sequence[int]) -> None:
-    """SOFT-DELETE ids from a stored graph: append them to the store's
-    tombstone table.  Ghost semantics (see ``beam_search_knn``): the
-    nodes stay traversable so connectivity survives, they just cannot
-    be returned.  The tombstone set is read whole at query time — it is
-    the store's pending-delete backlog, bounded by recompaction cadence
-    (rebuild without the tombstoned rows folds it back to zero, the
-    IVFADC ``compact`` pattern)."""
-    (spark.createDataFrame([(int(x),) for x in ids], _TOMBSTONE_SCHEMA)
-     .coalesce(1).write.mode("append").parquet(f"{path}/_tombstones"))
+    """SOFT-DELETE ids from a stored graph: one tombstone segment named
+    in ``_L1_META`` (``stores.write_segment``).  Ghosts stay traversable
+    so connectivity survives; they are never returned.  The set is read
+    whole at query time, a backlog ``compact_nsw_index`` folds away."""
+    from openai_vector_search_demo_spark.stores import write_segment
+    write_segment(
+        spark, path, _META, read_l1_meta(spark, path),
+        {"": spark.createDataFrame([(int(x),) for x in ids],
+                                   _TOMBSTONE_SCHEMA)},
+        tombstones=True)
 
 
-def read_nsw_tombstones(spark, path: str) -> list[int]:
-    """The store's soft-deleted ids, sorted.  Existence goes through
-    the Hadoop FileSystem (a posix stat is always False for a
-    ``file://``, ``s3a://`` or ``hdfs://`` store, which would silently
-    serve deleted ids) and the table is read with its fixed schema, so
-    no schema-inference job runs."""
-    from openai_vector_search_demo_spark.stores import fs_exists
-    tpath = f"{path.rstrip('/')}/_tombstones"
-    if not fs_exists(spark, tpath):
+def read_nsw_deletes(spark, path: str) -> list[int]:
+    """The store's soft-deleted ids, sorted."""
+    return _tombstone_ids(spark, path, read_l1_meta(spark, path) or {})
+
+
+def _tombstone_ids(spark, path: str, meta: dict) -> list[int]:
+    """The ids of the tombstone segments ``meta`` names: no read when
+    there are none, else one fixed-schema read."""
+    from openai_vector_search_demo_spark.stores import read_layer
+    paths = [f"{path.rstrip('/')}/{seg['name']}"
+             for seg in meta.get("segments", []) if seg.get("tombstones")]
+    if not paths:
         return []
-    return sorted(r[0] for r in spark.read.schema(_TOMBSTONE_SCHEMA)
-                  .parquet(tpath).distinct().collect())
+    return sorted(r[0] for r in read_layer(spark, paths, _TOMBSTONE_SCHEMA)
+                  .distinct().collect())
 
 
 def compact_nsw_index(spark, path: str, source: DataFrame, dest: str,
@@ -1410,88 +1396,69 @@ def compact_nsw_index(spark, path: str, source: DataFrame, dest: str,
                       id_col: str = "vec_id",
                       n_buckets: int = 16) -> int:
     """Periodic maintenance fold — the graph tier's
-    ``compact_ivfpq_index``: REBUILD graph + L1 from ``source`` minus
-    the store's tombstones, written marker-free to ``dest`` (a NEW
-    location; the caller swaps paths).  Serving returns to the
-    fresh-store fast path (no ``_DELTAS`` → one pruned read per round,
-    no merge-on-read window, no mirror validation) and soft-deleted
-    GHOSTS are hard-removed (their edges cannot be dropped in place —
-    a removed node invalidates its neighbors' top-m lists non-locally,
-    which is exactly why deletes are soft until compaction).  Returns
-    the number of tombstoned ids folded away."""
-    dead = read_nsw_tombstones(spark, path)
-    live = source
-    if dead:
-        live = source.filter(~id_in(id_col, dead))
+    ``compact_ivfpq_index``: REBUILD the graph and its levels from
+    ``source`` minus the store's tombstones as a new segment-free base
+    at ``dest`` (the caller swaps paths).  Serving returns to the
+    fresh-store fast path and soft-deleted ghosts are hard-removed (a
+    removed node invalidates its neighbors' top-m lists non-locally,
+    which is why deletes are soft until compaction).  Returns the
+    number of tombstoned ids folded away."""
+    dead = read_nsw_deletes(spark, path)
+    live = source.filter(~id_in(id_col, dead)) if dead else source
     write_nsw_index(live, dest, m=m, vec_col=vec_col, id_col=id_col,
                     n_buckets=n_buckets)
     return len(dead)
 
 
-def resolve_stored_edges(spark, path: str, m: int = NSW_M) -> DataFrame:
-    """The store's CURRENT undirected traversal relation, resolved
-    globally: merge-on-read top-``m`` window over the fwd rows (exact
-    adjacency after any ``upsert_nsw_index`` appends), then
-    symmetrized.  The BATCH serving form uses this — one resolve
-    amortized over thousands of queries per job; the single-query path
-    (``nsw_stored_knn``) instead resolves frontier-locally per round
-    and never touches the whole store."""
+def _resolved_layer(spark, path: str, meta: dict, m: int,
+                    layer: str = "") -> DataFrame:
+    """A layer's CURRENT undirected traversal relation, resolved
+    globally: the merge-on-read top-``m`` window over its fwd rows
+    (dense_rank: replay duplicates share one slot, as in the stored
+    lookup's ``_topm_from``), then symmetrized."""
     wm = Window.partitionBy("src").orderBy(F.col("sim").desc(),
                                            F.col("dst").asc())
-    # dense_rank for the same replay-duplicate collapse as the stored
-    # lookup's resolved_fwd; symmetrize_edges' distinct removes the
-    # repeated (src, dst) rows duplicates leave behind
-    fwd = (spark.read.parquet(path).filter(F.col("fwd"))
-           .withColumn("_rn", F.dense_rank().over(wm))
-           .filter(F.col("_rn") <= m).select("src", "dst"))
-    return symmetrize_edges(fwd)
+    return symmetrize_edges(
+        _layer_rows(spark, path, meta, layer).filter(F.col("fwd"))
+        .withColumn("_rn", F.dense_rank().over(wm))
+        .filter(F.col("_rn") <= m).select("src", "dst"))
+
+
+def resolve_stored_edges(spark, path: str, m: int = NSW_M) -> DataFrame:
+    """The store's base graph, resolved (``_resolved_layer``) — for the
+    BATCH serving form, one resolve amortized over many queries; the
+    single-query path resolves frontier-locally per round instead."""
+    return _resolved_layer(spark, path, read_l1_meta(spark, path) or {}, m)
 
 
 def read_l1_meta(spark, path: str) -> dict | None:
-    """The store's ``_L1_META`` (write-time stride, strides, counts, m,
-    n — see ``_write_hier_meta``) or None when the path has none — read
-    through the Hadoop FS API so it is visible on any store URI."""
-    import json
-
-    from openai_vector_search_demo_spark.stores import fs_read_text
-    txt = fs_read_text(spark, path.rstrip("/") + "/_L1_META")
-    return json.loads(txt) if txt else None
+    """The store's manifest ``_L1_META`` (``_hier_meta`` geometry plus
+    its segments), or None when the path has none — read through the
+    Hadoop FS API so it is visible on any store URI."""
+    from openai_vector_search_demo_spark.stores import read_manifest
+    return read_manifest(spark, path, _META)
 
 
 def resolve_stored_levels(spark, path: str, m: int = NSW_M):
-    """(levels, meta) for the BATCH serving form: every stored
-    hierarchy level's undirected traversal relation L1 → Ld, each
-    resolved with the merge-on-read top-``m`` window over its fwd rows
-    (exact after ``upsert_nsw_index`` level appends) and symmetrized —
-    one read per level, n^(1/2^ℓ)-sized, amortized over every query in
-    the batch.  ([], meta) when the store has no graph levels
-    (flat-entry corpora); ([], None) for a path without ``_L1_META``."""
+    """(levels, meta) for the BATCH serving form: every stored level's
+    resolved relation L1 → Ld (``_resolved_layer``).  ([], meta) when
+    the store has no graph levels (flat-entry corpora); ([], None) for
+    a path without ``_L1_META``."""
     meta = read_l1_meta(spark, path)
     if meta is None:
         return [], None
-    levels = []
-    wm = Window.partitionBy("src").orderBy(F.col("sim").desc(),
-                                           F.col("dst").asc())
     mm = int(meta.get("m", m))
-    for lvl, cnt in enumerate(meta["counts"], start=1):
-        if cnt < NSW_HIER_FLOOR:
-            break
-        raw = spark.read.parquet(f"{path.rstrip('/')}/_L{lvl}")
-        fwd = (raw.filter(F.col("fwd"))
-               .withColumn("_rn", F.dense_rank().over(wm))
-               .filter(F.col("_rn") <= mm).select("src", "dst"))
-        levels.append(symmetrize_edges(fwd))
-    return levels, meta
+    plan = _level_plan(meta.get("strides", []), meta.get("counts", []))
+    return [_resolved_layer(spark, path, meta, mm, f"_L{lvl}")
+            for lvl, _ in plan[0]], meta
 
 
-def _stored_adj(spark, path: str, n_buckets: int, delta: bool,
-                m: int) -> AdjRelation:
-    """Bucket-pruned lookup over ONE stored graph directory — the base
-    store or an ``_L*`` level — read with the fixed ``_STORE_SCHEMA``
-    (no schema-inference job).  ``rel(ids)`` is two parsed IN lists:
-    the ids' src buckets (partition pruning at discovery time, the
-    stored-LSH pattern) and the ids themselves (parquet pushdown)."""
-    g = spark.read.schema(_STORE_SCHEMA).parquet(path)
+def _stored_adj(spark, path: str, meta: dict, layer: str,
+                n_buckets: int, delta: bool, m: int) -> AdjRelation:
+    """Bucket-pruned lookup over ONE stored graph layer (``_layer_rows``):
+    ``rel(ids)`` is two parsed IN lists, the ids' src buckets (partition
+    pruning) and the ids themselves (parquet pushdown)."""
+    g = _layer_rows(spark, path, meta, layer)
 
     def rel(ids):
         buckets = sorted({int(i) % n_buckets for i in ids})
@@ -1511,74 +1478,46 @@ def nsw_stored_knn(spark, path: str, source: DataFrame,
                    n_entry: int = NSW_ENTRY_COUNT,
                    stop_k: int | None = NSW_STOP_K) -> DataFrame:
     """Serving read of a ``write_nsw_index`` store: each round touches
-    only the frontier's src BUCKET DIRECTORIES (the lookup filters the
-    partition column derived from the frontier ids with one ``id_in``
-    list — partition pruning at discovery time, the stored-LSH pattern
-    — and the src ids with a second, pushed into the parquet scan) and
-    the scored ids' vectors (``id_in`` point reads).  ``n_buckets``
-    must match the write.  The base store, its ``_L*`` levels and the
-    tombstones are read with their fixed schemas (``_STORE_SCHEMA``,
-    ``_TOMBSTONE_SCHEMA``), so no schema-inference job runs; the only
-    jobs of a serve are its beam rounds, and the returned top-k is a
-    local relation whose ``collect()`` runs none.
+    only the frontier's src BUCKET DIRECTORIES (one ``id_in`` list on
+    the partition column, a second on the src ids, pushed into the
+    scan) and the scored ids' vectors.  ``n_buckets`` must match the
+    write.  One read of ``_L1_META`` names the segments; every layer
+    and the tombstones are read with fixed schemas, so the only jobs of
+    a serve are its beam rounds (plus one tombstone read when the
+    manifest names deletes), and the returned top-k is a local
+    relation whose ``collect()`` runs none.
 
     MERGE-ON-READ: the per-src top-``m`` window resolves the current
-    OUT-list from (original ∪ ``upsert_nsw_index``-appended) fwd rows —
-    a no-op on a never-upserted store and the exact full-rebuild list
-    after inserts; it is a driver-side selection over the round's
-    prefetched rows (``_topm_from``), never a job.  Traversal is
-    SYMMETRIC (v2): the frontier's fwd=false mirror rows contribute
-    reversed edges after VALIDATION — each mirror (w←x) is kept only
-    if (x→w) survives x's own resolved top-m — resolved from the SAME
-    prefetched rows (r16: r15 paid one extra concurrent read per
-    round for this), so stale mirrors left behind by upsert
-    displacement can never steer the beam off the oracle's graph."""
-    from openai_vector_search_demo_spark.stores import fs_exists
+    OUT-list from the base and segment fwd rows — the exact
+    full-rebuild list after inserts — as a driver-side selection over
+    the round's prefetched rows (``_topm_from``), never a job.
+    Traversal is SYMMETRIC: a mirror row (w←x) is kept only if (x→w)
+    survives x's own resolved top-m, from the SAME prefetched rows, so
+    stale mirrors left by upsert displacement never steer the beam."""
+    # a store whose manifest names no graph segment (the common serving
+    # case) is TRUSTED: every src has exactly m fwd rows and every
+    # mirror is valid — the rows ARE the undirected adjacency
+    meta = read_l1_meta(spark, path) or {}
+    has_deltas = any("layers" in seg for seg in meta.get("segments", []))
+    lookup = _stored_adj(spark, path, meta, "", n_buckets, has_deltas, m)
 
-    # Hadoop-FS stat, not os.path: the marker must be visible on ANY
-    # store URI (s3a://, hdfs://) or an upserted remote store would
-    # silently take the fresh-store fast path and serve a stale graph.
-    has_deltas = fs_exists(spark, path.rstrip("/") + "/_DELTAS")
-    # a never-upserted store (the common serving case) is TRUSTED:
-    # every src has exactly m fwd rows and every mirror is valid — the
-    # rows ARE the undirected adjacency
-    lookup = _stored_adj(spark, path, n_buckets, has_deltas, m)
-
-    # v4 hierarchical entry off the store's own level stack: each
-    # level's lookup prunes its _L{l} bucket directories by the
-    # frontier ids exactly like the base lookup, with the SAME
-    # merge-on-read resolution + mirror validation when the store
-    # carries upsert deltas (levels are stored in the base dual format
-    # since v4, so they are incrementally maintainable too).  The
-    # stored stack is used only when the caller's stride MATCHES the
-    # write-time geometry (they agree whenever both derive from the
-    # same corpus — the serving slots' case); an explicit non-matching
-    # stride keeps the flat coarse scan, since the stored levels index
-    # different layers than the one the caller asked to enter through.
-    levels = None
-    flat_mod = None
-    if stride is not None:
-        meta = read_l1_meta(spark, path)
-        if meta is not None and int(meta["stride"]) == int(stride):
-            mm = int(meta.get("m", m))
-            levels = []
-            prod = 1
-            for lvl, (s, cnt) in enumerate(zip(meta["strides"],
-                                               meta["counts"]), start=1):
-                prod *= s
-                if cnt < NSW_HIER_FLOOR:
-                    break
-                levels.append(_stored_adj(
-                    spark, f"{path.rstrip('/')}/_L{lvl}", n_buckets,
-                    has_deltas, mm))
-            flat_mod = prod
-            if not levels:
-                levels, flat_mod = None, None
+    # hierarchical entry off the store's own level stack, each level
+    # looked up (and resolved) like the base.  Used only when the
+    # caller's stride matches the write-time geometry (the serving
+    # slots' case); otherwise the flat coarse scan, since the stored
+    # levels index other layers than the one asked for.
+    levels = flat_mod = None
+    if stride is not None and meta.get("stride") == int(stride):
+        plan, flat_mod = _level_plan(meta["strides"], meta["counts"])
+        mm = int(meta.get("m", m))
+        levels = [_stored_adj(spark, path, meta, f"_L{lvl}", n_buckets,
+                              has_deltas, mm) for lvl, _ in plan] or None
+        flat_mod = flat_mod if levels else None
 
     return beam_search_knn(lookup, source, qvec, k=k, ef=ef,
                            rounds=rounds, seeds=seeds, vec_col=vec_col,
                            id_col=id_col, sim_col=sim_col,
-                           exclude_ids=read_nsw_tombstones(spark, path),
+                           exclude_ids=_tombstone_ids(spark, path, meta),
                            stride=stride, n_entry=n_entry,
                            hier_levels=levels, flat_mod=flat_mod,
                            stop_k=stop_k)

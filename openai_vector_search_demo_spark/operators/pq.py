@@ -440,7 +440,8 @@ def _residual_encoded(df: DataFrame,
     return df.mapInPandas(enc, out_schema)
 
 
-_UPSERT_MARKER = "_UPSERT"
+_SEGMENTS = "_SEGMENTS"
+"""The IVFPQ store's segment manifest (``stores`` module docstring)."""
 
 
 def write_ivfpq_index(df: DataFrame, path: str,
@@ -459,11 +460,9 @@ def write_ivfpq_index(df: DataFrame, path: str,
     bytes, with zero assignment or encoding arithmetic at read time.
     NULL and zero-norm vectors drop (the family contract).
 
-    Rows carry ``(batch=0, tombstone=false)`` maintenance columns so
-    ``upsert_ivfpq_index`` can later append without a rebuild; a
-    freshly-written store has no ``_UPSERT`` marker, and the read path
-    skips the latest-wins resolve entirely (zero serving cost until
-    the first upsert).
+    Rows carry ``(batch=0, tombstone=false)`` so ``upsert_ivfpq_index``
+    segments resolve against them; a store without segments skips the
+    latest-wins resolve entirely (zero serving cost until an upsert).
 
     With ``tenant_col`` the store is TENANT-FIRST partitioned
     (``tenant=T/cell=C`` — the reference's per-alias physical
@@ -490,46 +489,33 @@ def upsert_ivfpq_index(spark, df: DataFrame, path: str,
                        id_col: str = "vec_id",
                        delete: bool = False) -> int:
     """INCREMENTAL index maintenance — merge a batch of new/changed
-    vectors (or, with ``delete=True``, a batch of ids to remove) into
-    an existing ``write_ivfpq_index`` store WITHOUT rebuilding it: the
-    Delta/Iceberg merge-on-read pattern applied to the ANN serving
-    artifact.  Returns the batch number written.
+    vectors (or, with ``delete=True``, ids to remove) into a
+    ``write_ivfpq_index`` store WITHOUT rebuilding it, as one segment
+    (``stores.write_segment``).  Returns the batch number written: the
+    manifest's segment count + 1.
 
-    Correctness under partition pruning is the subtle part: an updated
-    embedding may land in a DIFFERENT coarse cell than its previous
-    version, and a pruned query that probes only the old cell would
-    serve the stale row.  The upsert therefore emits a **cell-local
-    tombstone into every cell currently holding the id** (one row per
-    historical (id, cell), batch-stamped), so whichever cell a query
-    probes, the stale version loses the per-(id, cell) latest-wins
-    resolve.  Within one batch a data row beats its own tombstone
-    (ties order ``tombstone ASC``), so same-cell replacement needs no
-    special case.
+    An updated embedding may land in a DIFFERENT coarse cell than its
+    previous version, and a pruned query probing only the old cell
+    would serve the stale row.  So the upsert writes a **cell-local
+    tombstone into every cell holding the id**, and whichever cell a
+    query probes, the stale version loses the per-(id, cell)
+    latest-wins resolve; a data row beats its own batch's tombstone.
 
-    Cost: one Arrow encode pass over the BATCH, one semi-join of the
-    store against the batch's ids (bounded by batch size × historical
-    cells), one appending write.  The fp32 corpus is never touched.
-    At 100 TB this is the difference between a nightly full rebuild
-    and a streaming-rate maintenance job; ``compact_ivfpq_index`` is
-    the periodic compaction that folds batches back to a marker-free
-    store."""
-    import os
+    Cost: one Arrow encode pass over the BATCH and one semi-join of the
+    store against its ids; the fp32 corpus is never touched.
+    ``compact_ivfpq_index`` folds the segments back into one base."""
+    from openai_vector_search_demo_spark.stores import write_segment
 
-    existing = spark.read.option("basePath", path).parquet(path)
-    # Columns come from the STORE's schema, not the batch's (ADVICE r11):
-    # a delete batch is invited to carry only ids, and tombstone files
-    # written with a narrower schema would let a non-mergeSchema read
-    # that samples such a file's footer silently drop the store's meta
-    # columns (e.g. label) for the whole store.  Tombstone rows copy
-    # their meta values from the existing store rows they shadow; fresh
-    # data rows must supply every store meta column (the select below
-    # fails loudly if the batch lacks one).
+    manifest, existing = _ivfpq_rows(spark, path)
+    # Columns come from the STORE's schema, not the batch's: a delete
+    # batch may carry only ids, and narrower tombstone files would let
+    # a read that samples their footer drop the store's meta columns.
+    # Tombstones copy meta values from the rows they shadow; fresh rows
+    # must supply every meta column (the select fails loudly if not).
     cols = keep_cols or [c for c in existing.columns
                          if c not in ("cell", "codes", "batch",
                                       "tombstone")]
-    prev_max = existing.agg(
-        F.max(F.coalesce(F.col("batch"), F.lit(0)))).first()[0]
-    batch = int(prev_max or 0) + 1
+    batch = len((manifest or {}).get("segments", [])) + 1
 
     ids = df.select(id_col).distinct()
     # one tombstone per (id, cell) pair currently in the store
@@ -545,11 +531,19 @@ def upsert_ivfpq_index(spark, df: DataFrame, path: str,
                  .withColumn("batch", F.lit(batch))
                  .withColumn("tombstone", F.lit(False)))
         out = tombs.unionByName(fresh)
-    (out.repartition(F.col("cell"))
-     .write.mode("append").partitionBy("cell").parquet(path))
-    with open(os.path.join(path, _UPSERT_MARKER), "w") as fh:
-        fh.write(str(batch))
+    write_segment(spark, path, _SEGMENTS, manifest, {"": out})
     return batch
+
+
+def _ivfpq_rows(spark, path: str) -> tuple[dict | None, DataFrame]:
+    """(manifest, every row): the base plus the segments it names."""
+    from openai_vector_search_demo_spark.stores import (
+        layer_paths,
+        read_layer,
+        read_manifest,
+    )
+    manifest = read_manifest(spark, path, _SEGMENTS)
+    return manifest, read_layer(spark, layer_paths(path, manifest))
 
 
 def resolve_ivfpq_versions(cand: DataFrame,
@@ -569,14 +563,11 @@ def resolve_ivfpq_versions(cand: DataFrame,
 
 def compact_ivfpq_index(spark, path: str, dest: str,
                         id_col: str = "vec_id") -> None:
-    """Fold an upserted store back to a single-version layout at
-    ``dest``: resolve latest-wins across ALL cells, reset ``batch`` to
-    0, drop tombstones — the periodic maintenance job that returns the
-    read path to its marker-free zero-cost form.  Writes to a NEW
-    location (compacting in place would read and overwrite the same
-    files); the caller swaps paths."""
-    allrows = spark.read.option("basePath", path).parquet(path)
-    resolved = (resolve_ivfpq_versions(allrows, id_col)
+    """Fold an upserted store into a new single-version base at
+    ``dest`` (the caller swaps paths): latest-wins over the base and
+    every segment in ALL cells, ``batch`` reset to 0, tombstones
+    dropped — the read path's segment-free zero-cost form again."""
+    resolved = (resolve_ivfpq_versions(_ivfpq_rows(spark, path)[1], id_col)
                 .withColumn("batch", F.lit(0))
                 .withColumn("tombstone", F.lit(False)))
     (resolved.repartition(F.col("cell"))
@@ -617,10 +608,10 @@ def ivfpq_stored_knn(spark, store: str, qvec: Sequence[float],
         ivf_probe_cells_dot,
     )
     from openai_vector_search_demo_spark.stores import (
+        layer_paths,
+        read_manifest,
         read_probed_partitions,
     )
-
-    import os
 
     probes = ivf_probe_cells_dot(qvec, centroids, nprobe)
     luts = residual_adc_luts(qvec, centroids, codebooks, probes)
@@ -638,11 +629,15 @@ def ivfpq_stored_knn(spark, store: str, qvec: Sequence[float],
         store = f"{store.rstrip('/')}/tenant={escape_partition_value(tenant)}"
     cand = read_probed_partitions(spark, store, "cell", probes,
                                   table=table)
-    # Upserted store (marker present): resolve per-(id, cell)
-    # latest-wins over the probed rows before scoring — stale versions
-    # and tombstoned ids drop here.  Marker-free stores skip this
-    # entirely (no window, no shuffle — the fresh-store fast path).
-    if os.path.exists(os.path.join(store, _UPSERT_MARKER)):
+    # the probed cells of every segment (one batch-sized file, read
+    # with the base's schema) join the candidates, and per-(id, cell)
+    # latest-wins drops stale versions and tombstoned ids; a store
+    # without segments skips it (no window, no shuffle)
+    segments = layer_paths(store, read_manifest(spark, store, _SEGMENTS))[1:]
+    for seg in segments:
+        cand = cand.unionByName(spark.read.schema(cand.schema).parquet(seg)
+                                .filter(F.col("cell").isin(probes)))
+    if segments:
         cand = resolve_ivfpq_versions(cand, id_col)
     elif "batch" in cand.columns:
         cand = cand.drop("batch", "tombstone")

@@ -1804,12 +1804,9 @@ def ann_ivfpq_stored_refine_knn(spark: SparkSession,
 
 def _ensure_ivfpq_upsert_store(spark, emb, sf_dir: str) -> str:
     """Build (once per corpus content) an IVFADC store the INCREMENTAL
-    way: half the corpus at write time, the other half merged in by
-    ``upsert_ivfpq_index``, plus a re-upsert of 50 already-present ids
-    (same-cell replacement) — the serving state must equal a full
-    rebuild's, which is what the slot's oracle asserts.  The write and
-    both upserts run inside the one build, so a store is never published
-    half-upserted."""
+    way: half the corpus written, the other half upserted, then 50
+    present ids re-upserted (same-cell replacement), all in one build
+    so the store is never published half-upserted."""
     from openai_vector_search_demo_spark.ann_pretrained import (
         IVF_TRAINED_CENTROIDS,
     )
@@ -1833,24 +1830,20 @@ def _ensure_ivfpq_upsert_store(spark, emb, sf_dir: str) -> str:
             path, IVF_TRAINED_CENTROIDS, PQR_CODEBOOKS)
 
     return open_or_build(
-        spark, "ivfpq_upsert", 1, [f"{sf_dir}/embeddings.parquet"], build,
+        spark, "ivfpq_upsert", 2, [f"{sf_dir}/embeddings.parquet"], build,
         centroids=IVF_TRAINED_CENTROIDS, codebooks=PQR_CODEBOOKS)
 
 
 @query("ann_ivfpq_upsert_knn", oracle=_ivfpq_residual_knn_oracle())
 def ann_ivfpq_upsert_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL INDEX MAINTENANCE, proven by values — the stored
-    IVFADC index assembled by merge-on-read upserts (half the corpus
-    written, half upserted batch-wise, 50 ids re-upserted in place)
-    must serve EXACTLY what a full rebuild serves: the oracle is the
-    same inline residual-ADC SQL as ``ann_ivfpq_stored_knn``'s, so a
-    stale version, a lost row, or a mis-resolved tombstone shows up as
-    a value mismatch, not a vibe.  Read path: partition pruning x one
-    per-(id, cell) latest-wins window over the PROBED rows only
-    (marker-gated — a never-upserted store skips it entirely) x
-    codegen ADC.  At 100 TB: index refresh at batch rate with no fp32
-    scan and no rebuild; ``compact_ivfpq_index`` folds batches back to
-    the zero-cost layout (``operators/pq.py``)."""
+    IVFADC index assembled by upsert segments (half the corpus written,
+    half upserted, 50 ids re-upserted in place) must serve EXACTLY what
+    a full rebuild serves: the oracle is ``ann_ivfpq_stored_knn``'s, so
+    a stale version, a lost row, or a mis-resolved tombstone is a value
+    mismatch.  Read path: partition pruning x one per-(id, cell)
+    latest-wins window over the PROBED rows of the base and segments x
+    codegen ADC."""
     from openai_vector_search_demo_spark.ann_pretrained import (
         IVF_TRAINED_CENTROIDS,
     )
@@ -1873,17 +1866,12 @@ def ann_ivfpq_upsert_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("ann_ivfpq_compacted_knn", oracle=_ivfpq_residual_knn_oracle())
 def ann_ivfpq_compacted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COMPACTION, proven by values (r12): fold the upserted store of
-    ``ann_ivfpq_upsert_knn`` back to the single-version marker-free
-    layout (``compact_ivfpq_index`` — latest-wins resolved across ALL
-    cells once, batch reset, tombstones dropped) and serve from the
-    compacted copy.  Same full-rebuild oracle as the upsert slot: a row
-    lost or resurrected by compaction is a value mismatch.  The read
-    path here pays ZERO maintenance cost — no marker, so the
-    per-(id, cell) window is skipped entirely; this is the periodic
-    maintenance job that keeps merge-on-read upserts from accreting
-    versions forever, the Delta/Iceberg OPTIMIZE step for the ANN
-    serving artifact."""
+    """COMPACTION, proven by values: fold the upserted store of
+    ``ann_ivfpq_upsert_knn`` into a new single-version base
+    (``compact_ivfpq_index``) and serve from it.  Same full-rebuild
+    oracle as the upsert slot: a row lost or resurrected by compaction
+    is a value mismatch.  With no segments the read skips the
+    per-(id, cell) window entirely."""
     from openai_vector_search_demo_spark.ann_pretrained import (
         IVF_TRAINED_CENTROIDS,
     )

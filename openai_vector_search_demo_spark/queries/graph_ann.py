@@ -1940,16 +1940,12 @@ def streaming_dedup_within_watermark(spark: SparkSession,
 def ann_nsw_upsert_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL GRAPH-INDEX MAINTENANCE — the NSW twin of
     ``ann_ivfpq_upsert_knn``: the store is built WITHOUT every 5th
-    vector, the held-out batch is then INSERTED via
-    ``operators.nsw.upsert_nsw_index`` (one |B|×|C| blocked pass + the
-    beats-the-m-th-edge improvement filter — never a rebuild), and the
-    beam search over the upserted store must serve the FULL-REBUILD
-    answer — the oracle is literally the full-rebuild oracle, which is
-    provable for pure inserts: node j's true top-m over C∪B ⊆ (stored
-    top-m over C) ∪ B, so the read-time merge window reconstructs the
-    exact graph.  The property the quantizer tiers cannot offer (their
-    upserts change cell geometry); deletes remain the documented
-    recompaction case."""
+    vector, the held-out batch is then INSERTED as one segment via
+    ``operators.nsw.upsert_nsw_index`` (never a rebuild), and the beam
+    over the upserted store must serve the FULL-REBUILD answer — the
+    oracle is the full-rebuild oracle, provable for pure inserts: node
+    j's true top-m over C∪B ⊆ (stored top-m over C) ∪ B, so the
+    read-time merge window reconstructs the exact graph."""
     from openai_vector_search_demo_spark.operators.nsw import (
         nsw_stored_knn,
         upsert_nsw_index,
@@ -1968,7 +1964,7 @@ def ann_nsw_upsert_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
                         m=_NSW_M)
         upsert_nsw_index(spark, path, batch, corpus, m=_NSW_M)
 
-    store = open_or_build(spark, "nswup", 4,
+    store = open_or_build(spark, "nswup", 5,
                           [f"{sf_dir}/embeddings.parquet"], build, m=_NSW_M)
     # post-upsert meta is rewritten from corpus∪batch == base, so the
     # frozen stride IS ceil(sqrt(n_base)) — the triple the count gave
@@ -2017,17 +2013,12 @@ WHERE vec_id NOT IN (SELECT vec_id FROM exact3)
 ORDER BY s DESC, vec_id ASC LIMIT 10
 """)
 def ann_nsw_delete_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GRAPH-INDEX SOFT DELETE — the third leg of the maintenance story
-    (insert-exact upsert, soft delete, documented recompaction): the
-    query's TRUE top-3 neighbors are tombstoned
-    (``operators.nsw.delete_from_nsw_index``) and the serving read must
-    return the best 10 of the REST while the deleted nodes keep
-    carrying the beam as traversable GHOSTS (the FAISS IDSelector
-    semantics — removing them from the graph would disconnect their
-    neighborhoods until recompaction).  The oracle replays the same
-    beam and excludes the same data-derived top-3; adversarial by
-    construction: the deleted nodes are exactly the ones the beam finds
-    first."""
+    """GRAPH-INDEX SOFT DELETE: the query's TRUE top-3 neighbors are
+    tombstoned (``operators.nsw.delete_from_nsw_index``) and the serve
+    must return the best 10 of the REST while the deleted nodes keep
+    carrying the beam as traversable GHOSTS (FAISS IDSelector
+    semantics).  The oracle replays the same beam and excludes the same
+    data-derived top-3 — exactly the nodes the beam finds first."""
     from openai_vector_search_demo_spark.operators.nsw import (
         nsw_stored_knn,
     )
@@ -2046,11 +2037,9 @@ def ann_nsw_delete_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ensure_nswdel_store(spark, sf_dir: str, base: DataFrame,
                          qvec) -> str:
-    """The cached tombstoned store the delete AND compaction slots
-    share: full-corpus v4 store with the query's TRUE top-3 soft
-    deleted (adversarial by construction — the tombstones are exactly
-    the nodes the beam finds first).  Write and delete run in one
-    build, so the store is never published untombstoned."""
+    """The cached store the delete AND compaction slots share: the
+    full-corpus store with the query's TRUE top-3 soft deleted, written
+    and deleted in one build (never published untombstoned)."""
     from openai_vector_search_demo_spark.operators.knn import knn
     from openai_vector_search_demo_spark.operators.nsw import (
         delete_from_nsw_index,
@@ -2065,7 +2054,7 @@ def _ensure_nswdel_store(spark, sf_dir: str, base: DataFrame,
                     tie_break="vec_id").collect()]
         delete_from_nsw_index(spark, path, top3)
 
-    return open_or_build(spark, "nswdel", 4,
+    return open_or_build(spark, "nswdel", 5,
                          [f"{sf_dir}/embeddings.parquet"], build, m=_NSW_M)
 
 
@@ -2086,26 +2075,19 @@ SELECT vec_id, label, s AS similarity FROM v{_NSW_ROUNDS}
 ORDER BY s DESC, vec_id ASC LIMIT 10
 """)
 def ann_nsw_compacted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GRAPH-INDEX COMPACTION, proven by values — the maintenance
-    triangle's third side receipted like ``ann_ivfpq_compacted_knn``
-    (VERDICT r14 #4): ``compact_nsw_index`` folds the tombstoned store
-    of ``ann_nsw_delete_knn`` into a FRESH marker-free store at a new
-    location — graph and hierarchy REBUILT from the live corpus only,
-    soft-deleted ghosts hard-removed, geometry recomputed.  The serve
-    then pays zero maintenance cost (no ``_DELTAS`` → one pruned read
-    per round, no merge-on-read window, no tombstone filter) and its
-    answer must equal the beam over the REBUILT graph — which differs
-    structurally from the delete slot's ghost traversal (the removed
-    nodes no longer carry the beam), so the oracle rebuilds the graph
-    over the corpus MINUS the data-derived top-3 and replays the v4
-    descent on it.  This is the Delta/Iceberg OPTIMIZE step for the
-    graph serving artifact; at 100 TB it runs at maintenance cadence,
-    never per batch."""
+    """GRAPH-INDEX COMPACTION, proven by values: ``compact_nsw_index``
+    folds the tombstoned store of ``ann_nsw_delete_knn`` into a FRESH
+    segment-free store at a new location — graph and hierarchy REBUILT
+    from the live corpus, ghosts hard-removed.  The serve pays zero
+    maintenance cost, and its answer must equal the beam over the
+    REBUILT graph (the removed nodes no longer carry the beam), so the
+    oracle rebuilds the graph over the corpus MINUS the data-derived
+    top-3 and replays the v4 descent on it."""
     from openai_vector_search_demo_spark.functions.vectors import id_in
     from openai_vector_search_demo_spark.operators.nsw import (
         compact_nsw_index,
         nsw_stored_knn,
-        read_nsw_tombstones,
+        read_nsw_deletes,
     )
 
     emb = t(spark, sf_dir, "embeddings")
@@ -2121,7 +2103,7 @@ def ann_nsw_compacted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             path, m=_NSW_M),
         m=_NSW_M)
     # the live corpus: compaction's vector table drops deleted rows too
-    dead = read_nsw_tombstones(spark, store)
+    dead = read_nsw_deletes(spark, store)
     live = base.filter(~id_in("vec_id", dead))
     # the compacted store was rebuilt from exactly this live corpus,
     # so its frozen stride IS ceil(sqrt(n_live)) — no count job
@@ -3309,7 +3291,7 @@ def streaming_nsw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb_path = os.path.join(sf_dir, "embeddings.parquet")
     key = hashlib.md5(
-        f"{sf_dir}|nswstreamv4{_NSW_M}|{_parquet_fingerprint(emb_path)}"
+        f"{sf_dir}|nswstreamv5{_NSW_M}|{_parquet_fingerprint(emb_path)}"
         .encode()).hexdigest()[:10]
     root = os.path.join("/tmp", "spark_graft_nswstream_" + key)
     store = os.path.join(root, "graph")

@@ -2,30 +2,24 @@
 multi-vector read path (LSH buckets, IVF cells, PQ-coded IVF, the
 late-interaction token index).
 
-All those indexes share one physical layout: a parquet table partitioned
-by the probe column (``bucket=…`` / ``cell=…`` directories, one file per
-partition from the write-time ``repartition``), and one query shape:
-read ONLY the probed partitions.  What differs between the sandbox and a
-production deployment is WHERE the partition metadata lives:
+All those indexes share one physical layout, a parquet table partitioned
+by the probe column (``bucket=…`` / ``cell=…``, one file per partition),
+and one query shape: read ONLY the probed partitions.  The partition
+metadata lives in one of two places:
 
-- **Metastore pattern** (production): the store is registered as an
-  external partitioned catalog table; the probe set becomes a partition
-  predicate and Catalyst consults the CATALOG's partition list
-  (``PartitionFilters``) — no filesystem listing beyond the matched
-  directories, and probes with no partition prune to nothing at plan
-  time.  ``register_partitioned_store`` + ``read_probed_partitions(...,
-  table=...)`` below.
-- **Local-FS fallback** (the sandbox default, and any
-  catalog-less deployment): the |probes| candidate directories are
-  enumerated with a driver-side stat and handed to the reader under
-  ``basePath``, so Spark never lists the non-probed directories.
+- **Metastore pattern** (production): the store is an external
+  partitioned catalog table, and the probe set becomes a partition
+  predicate pruned from the CATALOG's partition list at plan time
+  (``register_partitioned_store``, ``read_probed_partitions(table=)``).
+- **File-system fallback** (catalog-less): one Hadoop-FS glob of the
+  store root keeps the probed directories that exist, on any store URI
+  (bare path, ``file://``, ``s3a://``, ``hdfs://``), and they are read
+  under ``basePath``, so Spark never lists the others.
 
-Both forms keep the residual ``isin`` filter: it pins
-``PartitionFilters`` in the plan (tests assert it) and guards against
-stray files under ``basePath``.  Reference behavior note: the reference
-serves its index from Redis (modules/utilities.py — RediSearch
-KNN); partition-pruned parquet + catalog metadata is the Spark-first
-equivalent of that server-side index lookup.
+Both keep the residual ``isin`` filter: it pins ``PartitionFilters`` in
+the plan and guards against stray files.  The reference serves its
+index from Redis (modules/utilities.py — RediSearch KNN); pruned parquet
+plus catalog metadata is the Spark-first equivalent.
 
 Every cached store is opened through ``open_or_build``: the one place
 that knows a store's cache key, where it lives and when it counts as
@@ -33,11 +27,39 @@ complete (a ``_MANIFEST`` written last, then an atomic directory
 rename).  The reference builds its index once per alias and then only
 serves from it (modules/utilities.py); this is that lifecycle for the
 engine's on-disk stores.
+
+The mutable stores (NSW graph, IVFPQ cells) change after publication
+by one protocol — a base plus the segments a manifest names, REPOSE's
+partition-local indexes under one global metadata record:
+
+- An upsert or delete writes its rows as one new directory inside the
+  store, ``_seg-<batch>-<uuid>`` (``write_segment``), one file per
+  layer; the leading ``_`` keeps it out of every scan of the base.
+- It then replaces the store's one manifest (``_L1_META`` for NSW,
+  ``_SEGMENTS`` for IVFPQ) by a temp write and a Hadoop-FS rename
+  (``swap_manifest``).  A writer killed before the swap leaves an
+  unnamed segment that nothing reads.
+- Readers read the base plus exactly the segments the manifest names
+  (``layer_paths``).  Its ``segments`` list holds ``{"name", "batch",
+  "layers"}`` entries, names relative to the store root (a store
+  published by rename stays valid); ``layers`` maps each layer the
+  segment writes (``""`` is the base table) to ``"delta"`` (rows added)
+  or ``"base"`` (layer rebuilt).  A ``"tombstones"`` segment holds ids.
+  No manifest, or no segments, means the base alone.
+- A segment's batch is one more than the segments before it.  A
+  tombstone hides what the base and earlier segments hold for its key;
+  each tier keeps its own resolution (IVFPQ's latest-batch-wins window,
+  NSW's top-m plus mirror validation).  Compaction is caller-driven: a
+  new base, at a new location, from the base and its segments.
+
+One writer per store: two concurrent upserts would build on the same
+manifest, and the second swap would drop the first one's segment.
 """
 
 from __future__ import annotations
 
 import errno
+import functools
 import hashlib
 import json
 import os
@@ -48,7 +70,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = ["read_probed_partitions", "register_partitioned_store",
-           "fs_exists", "fs_touch", "fs_write_text", "fs_read_text",
+           "fs_write_text", "fs_read_text", "read_manifest",
+           "swap_manifest", "write_segment", "layer_paths", "read_layer",
            "escape_partition_value", "tenant_values", "open_or_build",
            "store_path"]
 
@@ -100,29 +123,14 @@ def escape_partition_value(value) -> str:
 
 
 def _hadoop_path_fs(spark: SparkSession, path: str):
-    """(Path, FileSystem) for ``path`` via Spark's own Hadoop conf — the
-    URI-scheme-aware way to stat/write store markers.  A driver-local
-    ``os.path`` check silently misses on any non-local store URI (s3a://,
-    hdfs://, abfss://) — the 100 TB posture the stored-index docstrings
-    claim — so every marker read/write below goes through this."""
+    """(Path, FileSystem) for ``path`` via Spark's own Hadoop conf: a
+    driver-local ``os.path`` check silently misses on any non-local
+    store URI (``file://``, ``s3a://``, ``hdfs://``), so every store
+    metadata read and write below goes through this."""
     jvm = spark.sparkContext._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     return jpath, fs
-
-
-def fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check through the Hadoop FileSystem API (scheme-aware:
-    file://, s3a://, hdfs://, ...)."""
-    jpath, fs = _hadoop_path_fs(spark, path)
-    return bool(fs.exists(jpath))
-
-
-def fs_touch(spark: SparkSession, path: str) -> None:
-    """Create (or overwrite) an empty marker file at ``path`` through the
-    Hadoop FileSystem API."""
-    jpath, fs = _hadoop_path_fs(spark, path)
-    fs.create(jpath, True).close()
 
 
 def fs_write_text(spark: SparkSession, path: str, text: str) -> None:
@@ -143,14 +151,93 @@ def fs_read_text(spark: SparkSession, path: str) -> str | None:
         return None
     inp = fs.open(jpath)
     try:
-        # one JVM call for the whole payload (commons-io rides Spark's
-        # classpath) — the per-byte inp.read() loop this replaces paid
-        # one py4j round-trip PER BYTE (ADVICE r14)
+        # one JVM call for the whole payload, not one per byte
         jvm = spark.sparkContext._jvm
         data = jvm.org.apache.commons.io.IOUtils.toByteArray(inp)
         return bytes(data).decode("utf-8")
     finally:
         inp.close()
+
+
+def read_manifest(spark: SparkSession, store: str, name: str) -> dict | None:
+    """The store's manifest ``<store>/<name>``; None when it has none."""
+    txt = fs_read_text(spark, f"{store.rstrip('/')}/{name}")
+    return json.loads(txt) if txt else None
+
+
+def swap_manifest(spark: SparkSession, store: str, name: str,
+                  manifest: dict) -> None:
+    """Replace ``<store>/<name>``: write a temp sibling, then rename it
+    over the old file with Hadoop ``FileContext`` ``OVERWRITE`` (atomic
+    on a local or HDFS file system)."""
+    root = store.rstrip("/")
+    tmp = f"{root}/{name}.tmp-{uuid.uuid4().hex}"
+    fs_write_text(spark, tmp, json.dumps(manifest, sort_keys=True))
+    sc = spark.sparkContext
+    src, _ = _hadoop_path_fs(spark, tmp)
+    fc = sc._jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        src.toUri(), sc._jsc.hadoopConfiguration())
+    rename = sc._jvm.org.apache.hadoop.fs.Options.Rename
+    opts = sc._gateway.new_array(rename, 1)
+    opts[0] = rename.OVERWRITE
+    fc.rename(src, sc._jvm.org.apache.hadoop.fs.Path(f"{root}/{name}"), opts)
+
+
+def write_segment(spark: SparkSession, store: str, name: str,
+                  manifest: dict | None, layers: dict, rebuilt=(),
+                  tombstones: bool = False) -> None:
+    """The only write into a published store: each ``layers`` DataFrame
+    (layer name → rows) lands as one unpartitioned file under
+    ``<store>/<segment>/<layer>`` — a segment is batch-sized, so a read
+    lists one directory, not one per partition — then manifest ``name``
+    becomes ``manifest`` plus the new segment.  Layers in ``rebuilt``
+    replace their layer; ``tombstones`` marks an id segment.  Rows
+    stamped with a batch use ``len(segments) + 1``."""
+    manifest = dict(manifest or {})
+    segments = manifest.get("segments", [])
+    entry = {"name": f"_seg-{len(segments) + 1:05d}-{uuid.uuid4().hex[:8]}",
+             "batch": len(segments) + 1}
+    for layer, df in layers.items():
+        df.repartition(1).write.parquet(
+            "/".join(filter(None, [store.rstrip("/"), entry["name"], layer])))
+    if tombstones:
+        entry["tombstones"] = True
+    else:
+        entry["layers"] = {layer: "base" if layer in rebuilt else "delta"
+                           for layer in layers}
+    manifest["segments"] = [*segments, entry]
+    swap_manifest(spark, store, name, manifest)
+
+
+def layer_paths(store: str, manifest: dict | None,
+                layer: str = "") -> list[str]:
+    """The directories of ``layer``'s rows: its base, then the segments
+    the manifest names for it; a rebuilt layer drops what came before."""
+    def under(*parts):
+        return "/".join(filter(None, [store.rstrip("/"), *parts, layer]))
+
+    paths = [under()]
+    for seg in (manifest or {}).get("segments", []):
+        how = seg.get("layers", {}).get(layer)
+        if how == "base":
+            paths = []
+        if how is not None:
+            paths.append(under(seg["name"]))
+    return paths
+
+
+def read_layer(spark: SparkSession, paths: list[str],
+               schema=None) -> DataFrame:
+    """One relation over ``layer_paths``: a union of one read per
+    directory (partition discovery refuses several roots), each with
+    ``schema`` or the first one's (a segment without rows has no file
+    to infer from).  A store without segments is one scan, as before."""
+    first = (spark.read if schema is None
+             else spark.read.schema(schema)).parquet(paths[0])
+    return functools.reduce(
+        DataFrame.unionByName,
+        [spark.read.schema(first.schema).parquet(p) for p in paths[1:]],
+        first)
 
 
 def read_probed_partitions(spark: SparkSession, store: str, part_col: str,
@@ -166,8 +253,18 @@ def read_probed_partitions(spark: SparkSession, store: str, part_col: str,
     if table is not None:
         # metastore pattern: the catalog prunes partitions at plan time
         return spark.table(table).filter(F.col(part_col).isin(probes))
-    paths = [p for p in (os.path.join(store, f"{part_col}={v}")
-                         for v in probes) if os.path.isdir(p)]
+    root, paths = store.rstrip("/"), []
+    if probes:
+        # one glob of the root through the Hadoop FS (a posix stat is
+        # always False for a file:// or s3a:// store), root escaped
+        pattern = "".join("\\" + c if c in "\\{}[]*?" else c for c in root)
+        _, fs = _hadoop_path_fs(spark, root)
+        found = fs.globStatus(spark.sparkContext._jvm.org.apache.hadoop.fs
+                              .Path(f"{pattern}/{part_col}={{"
+                                    f"{','.join(map(str, probes))}}}"))
+        names = {st.getPath().getName() for st in found or []}
+        paths = [f"{root}/{part_col}={v}" for v in probes
+                 if f"{part_col}={v}" in names]
     if not paths:
         return (spark.read.parquet(store)
                 .filter(F.col(part_col).isin(probes)).limit(0))

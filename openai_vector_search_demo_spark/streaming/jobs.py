@@ -96,21 +96,14 @@ def stream_upsert_ivfpq_index(stream: DataFrame, store: str,
                               vec_col: str = "embedding",
                               id_col: str = "vec_id"):
     """STREAMING ANN-INDEX MAINTENANCE — each micro-batch of arriving
-    vectors merges into the stored IVFADC index via
-    ``pq.upsert_ivfpq_index`` (batch-stamped append + cell-local
-    tombstones), so similarity queries serve fresh vectors at
+    vectors merges into the stored IVFADC index as one segment via
+    ``pq.upsert_ivfpq_index``, so queries serve fresh vectors at
     micro-batch latency with no rebuild job.  The streaming layer is
-    wiring only: the maintenance semantics (and the merge-on-read
-    correctness argument under partition pruning) live entirely in the
-    batch operator — the engine's streaming design rule.
-
-    Convergence under at-least-once delivery: a re-delivered batch
-    re-upserts identical rows, and per-(id, cell) latest-wins makes
-    that a no-op for serving — the same argument as
-    ``stream_ingest_documents``.  Periodic ``compact_ivfpq_index``
-    bounds accumulated versions.  The store must exist
-    (``write_ivfpq_index``, possibly over an empty frame) before the
-    stream starts."""
+    wiring only; the semantics live in the batch operator.  A
+    re-delivered batch re-upserts identical rows, which per-(id, cell)
+    latest-wins makes a no-op for serving.  Periodic
+    ``compact_ivfpq_index`` bounds the segments.  The store must exist
+    (``write_ivfpq_index``) before the stream starts."""
     from openai_vector_search_demo_spark.operators.pq import (
         upsert_ivfpq_index,
     )
@@ -135,29 +128,21 @@ def stream_upsert_nsw_index(stream: DataFrame, store: str,
                             id_col: str = "vec_id"):
     """STREAMING GRAPH-INDEX MAINTENANCE — the NSW twin of
     ``stream_upsert_ivfpq_index``: each micro-batch of arriving vectors
-    INSERTS into the stored neighbor graph via
-    ``nsw.upsert_nsw_index`` (exact for pure inserts: batch nodes' full
-    top-m lists + existing nodes' beats-the-m-th-edge improvements,
-    both directions, resolved merge-on-read at serving time), then
-    appends itself to the vectors table — so the NEXT batch's "existing
-    corpus" includes it and the iterated upserts compose to the exact
-    full-rebuild graph (each step's exactness argument applies to the
-    previous step's already-exact state).  The streaming layer is
-    wiring only — maintenance semantics live in the batch operator
-    (the engine's streaming design rule).  ``vectors_dir`` must hold
-    the current corpus and ``store`` its graph (``write_nsw_index``)
-    before the stream starts.
+    INSERTS into the stored graph as one segment via
+    ``nsw.upsert_nsw_index`` (exact for pure inserts), then appends
+    itself to the vectors table, so the NEXT batch's existing corpus
+    includes it and the iterated upserts compose to the exact
+    full-rebuild graph.  ``vectors_dir`` must hold the current corpus
+    and ``store`` its graph (``write_nsw_index``) before the stream
+    starts.
 
-    IDEMPOTENT under at-least-once replay, derived from the DATA (no
-    side-channel batch ledger): each batch is anti-joined against the
-    vectors table's current ids first, so a fully-applied batch replays
-    as a no-op (empty insert, no duplicate vector rows).  The one
-    partial-failure window — edges committed, vectors append lost —
-    replays the edge append with byte-identical rows, which the store's
-    merge-on-read resolution collapses (dense_rank over (sim desc, dst
-    asc): exact duplicates share one top-m slot — ``nsw.resolved_fwd``
-    /``resolve_stored_edges``), then completes the vectors append; the
-    resolved adjacency equals the full rebuild either way."""
+    IDEMPOTENT under at-least-once replay, derived from the DATA: each
+    batch is anti-joined against the vectors table's ids first, so a
+    fully-applied batch replays as a no-op.  The one partial-failure
+    window — graph segment committed, vectors append lost — replays
+    the upsert as a second segment of byte-identical rows, which the
+    dense_rank merge-on-read resolution collapses (exact duplicates
+    share one top-m slot), then completes the vectors append."""
     from openai_vector_search_demo_spark.operators.nsw import (
         upsert_nsw_index,
     )

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from openai_vector_search_demo_spark.operators.nsw import (
+    _STORE_SCHEMA,
     beam_search_knn,
     build_knn_graph,
     nsw_knn,
@@ -44,6 +45,34 @@ def _brute_graph(emb, m):
                        key=lambda c: (-sims[a, c], ids[c]))
         out[int(ids[a])] = [int(ids[c]) for c in order[:m]]
     return out
+
+
+def _stored_rows(spark, path):
+    """Every row of a store's base graph: the base plus the segments
+    its manifest names."""
+    from openai_vector_search_demo_spark.operators.nsw import read_l1_meta
+    from openai_vector_search_demo_spark.stores import (
+        layer_paths,
+        read_layer,
+    )
+    return read_layer(spark, layer_paths(path, read_l1_meta(spark, path)),
+                      _STORE_SCHEMA)
+
+
+def _spy_untrusted(monkeypatch):
+    """Record, per stored serve, whether its base lookup took the
+    untrusted merge-on-read path."""
+    from openai_vector_search_demo_spark.operators import nsw
+
+    seen, real = [], nsw._stored_adj
+
+    def spy(spark, path, meta, layer, n_buckets, delta, m):
+        if layer == "":
+            seen.append(delta)
+        return real(spark, path, meta, layer, n_buckets, delta, m)
+
+    monkeypatch.setattr(nsw, "_stored_adj", spy)
+    return seen
 
 
 def test_graph_build_matches_brute_force(emb):
@@ -158,7 +187,7 @@ def test_upsert_equals_full_rebuild(spark, emb, tmp_path):
                                            F.col("dst").asc())
 
     def resolved(path):
-        rows = (spark.read.parquet(path).filter(F.col("fwd"))
+        rows = (_stored_rows(spark, path).filter(F.col("fwd"))
                 .withColumn("_rn", F.row_number().over(wm))
                 .filter(F.col("_rn") <= 3).collect())
         out = {}
@@ -234,7 +263,7 @@ def test_soft_delete_ghosts_keep_carrying_the_beam(spark, tmp_path):
     from openai_vector_search_demo_spark.operators.nsw import (
         delete_from_nsw_index,
         nsw_stored_knn,
-        read_nsw_tombstones,
+        read_nsw_deletes,
     )
     import pandas as pd  # noqa: F401
 
@@ -254,7 +283,7 @@ def test_soft_delete_ghosts_keep_carrying_the_beam(spark, tmp_path):
     (edges.withColumn("bucket", (F.col("src") % 4).cast("int"))
      .write.mode("overwrite").partitionBy("bucket").parquet(store))
     delete_from_nsw_index(spark, store, [3])
-    assert read_nsw_tombstones(spark, store) == [3]
+    assert read_nsw_deletes(spark, store) == [3]
 
     # seed at node 5 (worst), q favors node 1; reaching 1 REQUIRES
     # passing ghost 3
@@ -272,7 +301,7 @@ def test_tombstones_honored_on_file_uri_store(spark, emb, tmp_path):
     the query's own nearest id, once deleted, is never returned."""
     from openai_vector_search_demo_spark.operators.nsw import (
         delete_from_nsw_index,
-        read_nsw_tombstones,
+        read_nsw_deletes,
     )
     store = "file://" + str(tmp_path / "nsw")
     write_nsw_index(emb, store, m=3, n_buckets=4)
@@ -286,7 +315,7 @@ def test_tombstones_honored_on_file_uri_store(spark, emb, tmp_path):
     best = serve()[0]
     assert best == 7
     delete_from_nsw_index(spark, store, [best])
-    assert read_nsw_tombstones(spark, store) == [best]
+    assert read_nsw_deletes(spark, store) == [best]
     got = serve()
     assert best not in got and len(got) == 10
 
@@ -449,7 +478,7 @@ def test_stale_mirrors_filtered_after_upsert(spark, emb, tmp_path):
     resolved_sym = {(r.src, r.dst) for r in
                     resolve_stored_edges(spark, inc, m=3).collect()}
     raw_rev = {(r.src, r.dst) for r in
-               spark.read.parquet(inc).filter(~F.col("fwd")).collect()}
+               _stored_rows(spark, inc).filter(~F.col("fwd")).collect()}
     assert raw_rev - resolved_sym, "no stale mirror — test is vacuous"
 
     qvec = [0.2] * DIM
@@ -635,14 +664,13 @@ def test_stored_serve_job_budget(spark, tmp_path):
 def test_compact_folds_deltas_and_tombstones(spark, emb, tmp_path):
     """Recompaction closes the maintenance triangle: after upsert +
     soft delete, the compacted store (a) equals a direct rebuild
-    without the tombstoned rows, (b) carries no _DELTAS/_tombstones —
+    without the tombstoned rows, (b) names no segment in its manifest —
     the serving read takes the fresh-store fast path and the deleted
     id is HARD-gone, not ghost-filtered."""
-    import os
-
     from openai_vector_search_demo_spark.operators.nsw import (
         compact_nsw_index,
         delete_from_nsw_index,
+        read_l1_meta,
         upsert_nsw_index,
     )
     base = emb.filter(F.col("embedding").isNotNull())
@@ -660,8 +688,8 @@ def test_compact_folds_deltas_and_tombstones(spark, emb, tmp_path):
     n_dead = compact_nsw_index(spark, store, base, dest, m=3,
                                n_buckets=4)
     assert n_dead == 1
-    assert not os.path.exists(os.path.join(dest, "_DELTAS"))
-    assert not os.path.isdir(os.path.join(dest, "_tombstones"))
+    assert len(read_l1_meta(spark, store)["segments"]) == 2
+    assert "segments" not in read_l1_meta(spark, dest)
 
     want = str(tmp_path / "rebuild")
     write_nsw_index(base.filter(F.col("vec_id") != best), want, m=3,
@@ -738,15 +766,17 @@ def test_tenant_writers_reject_null_tenant(spark, tmp_path):
 
 
 def test_trusted_and_delta_resolution_agree_on_valid_store(
-        spark, emb, tmp_path):
+        spark, emb, tmp_path, monkeypatch):
     """r16 fused engine: a never-upserted store served through the
     UNTRUSTED path (merge-on-read top-m + mirror validation replayed
     driver-side from the prefetched rows) must equal the trusted
     fast path — on a valid store every fwd list is exactly m rows and
     every mirror validates, so the two resolutions are provably the
     same adjacency."""
-    from openai_vector_search_demo_spark.stores import fs_touch
+    from openai_vector_search_demo_spark.operators.nsw import read_l1_meta
+    from openai_vector_search_demo_spark.stores import write_segment
 
+    untrusted = _spy_untrusted(monkeypatch)
     qvec = [0.15] * DIM
     store = str(tmp_path / "nsw")
     write_nsw_index(emb, store, m=3, n_buckets=4)
@@ -754,13 +784,91 @@ def test_trusted_and_delta_resolution_agree_on_valid_store(
                nsw_stored_knn(spark, store, emb, qvec, k=10, ef=5,
                               rounds=3, seeds=[1, 9], m=3,
                               n_buckets=4).collect()]
-    # the _DELTAS marker flips the SAME store onto the untrusted path
-    fs_touch(spark, store + "/_DELTAS")
+    assert untrusted == [False]
+    # a manifest naming a graph segment (here one with no rows) flips
+    # the SAME store onto the untrusted path
+    write_segment(spark, store, "_L1_META", read_l1_meta(spark, store),
+                  {"": spark.createDataFrame([], _STORE_SCHEMA)})
     delta = [(r.vec_id, r.similarity) for r in
              nsw_stored_knn(spark, store, emb, qvec, k=10, ef=5,
                             rounds=3, seeds=[1, 9], m=3,
                             n_buckets=4).collect()]
+    assert untrusted == [False, True]
     assert delta == trusted
+
+
+def _upsert_parts(emb):
+    base = emb.filter(F.col("embedding").isNotNull())
+    return (base, base.filter(F.col("vec_id") % 4 != 1),
+            base.filter(F.col("vec_id") % 4 == 1))
+
+
+def _serve(spark, store, base, qvec=(0.25,) * DIM):
+    return [(r.vec_id, r.similarity) for r in
+            nsw_stored_knn(spark, store, base, list(qvec), k=10, ef=5,
+                           rounds=2, seeds=[2, 10], n_buckets=4,
+                           m=3).collect()]
+
+
+def test_upsert_killed_before_manifest_swap_serves_previous_version(
+        spark, emb, tmp_path, monkeypatch):
+    """An upsert killed after its segment is written but before the
+    ``_L1_META`` swap leaves the store at its previous version: readers
+    serve the pre-upsert answer on the trusted path (no merge-on-read),
+    and a retry serves what an uninterrupted upsert serves."""
+    from openai_vector_search_demo_spark import stores
+    from openai_vector_search_demo_spark.operators.nsw import (
+        read_l1_meta,
+        upsert_nsw_index,
+    )
+
+    base, corpus, batch = _upsert_parts(emb)
+    store = str(tmp_path / "live")
+    write_nsw_index(corpus, store, m=3, n_buckets=4)
+    before, meta = _serve(spark, store, base), read_l1_meta(spark, store)
+
+    def killed(*args, **kwargs):
+        raise RuntimeError("killed before the manifest swap")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(stores, "swap_manifest", killed)
+        with pytest.raises(RuntimeError, match="manifest swap"):
+            upsert_nsw_index(spark, store, batch, corpus, m=3, n_buckets=4)
+    assert [p for p in (tmp_path / "live").iterdir()
+            if p.name.startswith("_seg-")], "no segment was written"
+    assert read_l1_meta(spark, store) == meta
+    untrusted = _spy_untrusted(monkeypatch)
+    assert _serve(spark, store, base) == before
+    assert untrusted == [False]
+
+    upsert_nsw_index(spark, store, batch, corpus, m=3, n_buckets=4)
+    clean = str(tmp_path / "clean")
+    write_nsw_index(corpus, clean, m=3, n_buckets=4)
+    upsert_nsw_index(spark, clean, batch, corpus, m=3, n_buckets=4)
+    assert _serve(spark, store, base) == _serve(spark, clean, base)
+    assert untrusted == [False, True, True]
+
+
+def test_upsert_and_delete_on_file_uri_store_serve_bare_path_answer(
+        spark, emb, tmp_path):
+    """Upsert, delete and serve on a ``file://`` store URI answer
+    exactly what the same calls answer on the bare path."""
+    from openai_vector_search_demo_spark.operators.nsw import (
+        delete_from_nsw_index,
+        upsert_nsw_index,
+    )
+
+    base, corpus, batch = _upsert_parts(emb)
+    answers = []
+    for store in (str(tmp_path / "bare"), "file://" + str(tmp_path / "uri")):
+        write_nsw_index(corpus, store, m=3, n_buckets=4)
+        upsert_nsw_index(spark, store, batch, corpus, m=3, n_buckets=4)
+        best = _serve(spark, store, base)[0][0]
+        delete_from_nsw_index(spark, store, [best])
+        answers.append((best, _serve(spark, store, base)))
+    assert answers[0] == answers[1]
+    best, got = answers[0]
+    assert best not in [v for v, _ in got] and len(got) == 10
 
 
 def test_topm_from_replays_dense_rank_order():

@@ -34,6 +34,18 @@ def _knn(spark, store, qvec, cent, cb, k=10):
                              nprobe=NPROBE, k=k).collect()]
 
 
+def _rows(spark, store):
+    """Every row of an IVFPQ store: base plus manifest-named segments."""
+    from openai_vector_search_demo_spark.operators.pq import _SEGMENTS
+    from openai_vector_search_demo_spark.stores import (
+        layer_paths,
+        read_layer,
+        read_manifest,
+    )
+    return read_layer(spark, layer_paths(
+        store, read_manifest(spark, store, _SEGMENTS)))
+
+
 def test_upsert_half_equals_full_rebuild(spark, tmp_path, parts):
     from openai_vector_search_demo_spark.operators.pq import (
         upsert_ivfpq_index, write_ivfpq_index)
@@ -116,7 +128,7 @@ def test_ids_only_delete_batch_keeps_store_meta_schema(spark, tmp_path,
     victim = _knn(spark, store, qvec, cent, cb)[0][0]
     ids_only = labeled.filter(F.col("vec_id") == victim).select("vec_id")
     upsert_ivfpq_index(spark, ids_only, store, cent, cb, delete=True)
-    rows = spark.read.option("basePath", store).parquet(store)
+    rows = _rows(spark, store)
     assert "label" in rows.columns
     # every file (including the tombstone batch) carries label populated
     assert rows.filter(F.col("label").isNull()).count() == 0
@@ -128,8 +140,9 @@ def test_ids_only_delete_batch_keeps_store_meta_schema(spark, tmp_path,
 
 def test_compaction_resolves_and_clears_marker(spark, tmp_path, parts):
     from openai_vector_search_demo_spark.operators.pq import (
-        _UPSERT_MARKER, compact_ivfpq_index, upsert_ivfpq_index,
+        _SEGMENTS, compact_ivfpq_index, upsert_ivfpq_index,
         write_ivfpq_index)
+    from openai_vector_search_demo_spark.stores import read_manifest
     base, qvec, cent, cb = parts
     store = str(tmp_path / "pre")
     write_ivfpq_index(base.filter(F.col("vec_id") % 2 == 1), store,
@@ -139,13 +152,68 @@ def test_compaction_resolves_and_clears_marker(spark, tmp_path, parts):
     served = _knn(spark, store, qvec, cent, cb)
     dest = str(tmp_path / "compacted")
     compact_ivfpq_index(spark, store, dest)
-    assert not os.path.exists(os.path.join(dest, _UPSERT_MARKER))
+    assert len(read_manifest(spark, store, _SEGMENTS)["segments"]) == 1
+    assert read_manifest(spark, dest, _SEGMENTS) is None
     # compacted store: same answers, one version per id, no tombstones
     assert _knn(spark, dest, qvec, cent, cb) == served
     rows = spark.read.option("basePath", dest).parquet(dest)
     assert rows.groupBy("vec_id").count().agg(
         F.max("count")).first()[0] == 1
     assert rows.filter(F.col("tombstone")).count() == 0
+
+
+def test_upsert_killed_before_manifest_swap_serves_previous_version(
+        spark, tmp_path, parts, monkeypatch):
+    """An upsert killed after its segment is written but before the
+    manifest swap leaves the store at its previous version, and a retry
+    serves what an uninterrupted upsert serves."""
+    from openai_vector_search_demo_spark import stores
+    from openai_vector_search_demo_spark.operators.pq import (
+        _SEGMENTS, upsert_ivfpq_index, write_ivfpq_index)
+    base, qvec, cent, cb = parts
+    odd = base.filter(F.col("vec_id") % 2 == 1)
+    even = base.filter(F.col("vec_id") % 2 == 0)
+    store = str(tmp_path / "live")
+    write_ivfpq_index(odd, store, cent, cb)
+    before = _knn(spark, store, qvec, cent, cb)
+    rows_before = sorted(map(tuple, _rows(spark, store).collect()))
+
+    def killed(*args, **kwargs):
+        raise RuntimeError("killed before the manifest swap")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(stores, "swap_manifest", killed)
+        with pytest.raises(RuntimeError, match="manifest swap"):
+            upsert_ivfpq_index(spark, even, store, cent, cb)
+    assert [p for p in (tmp_path / "live").iterdir()
+            if p.name.startswith("_seg-")], "no segment was written"
+    assert stores.read_manifest(spark, store, _SEGMENTS) is None
+    assert _knn(spark, store, qvec, cent, cb) == before
+    assert sorted(map(tuple, _rows(spark, store).collect())) == rows_before
+
+    assert upsert_ivfpq_index(spark, even, store, cent, cb) == 1
+    clean = str(tmp_path / "clean")
+    write_ivfpq_index(odd, clean, cent, cb)
+    upsert_ivfpq_index(spark, even, clean, cent, cb)
+    assert _knn(spark, store, qvec, cent, cb) == \
+        _knn(spark, clean, qvec, cent, cb)
+
+
+def test_upsert_on_file_uri_store_serves_bare_path_answer(spark, tmp_path,
+                                                          parts):
+    """Upsert and serve on a ``file://`` store URI answer exactly what
+    the same calls answer on the bare path."""
+    from openai_vector_search_demo_spark.operators.pq import (
+        upsert_ivfpq_index, write_ivfpq_index)
+    base, qvec, cent, cb = parts
+    answers = []
+    for store in (str(tmp_path / "bare"), "file://" + str(tmp_path / "uri")):
+        write_ivfpq_index(base.filter(F.col("vec_id") % 2 == 1), store,
+                          cent, cb)
+        upsert_ivfpq_index(spark, base.filter(F.col("vec_id") % 2 == 0),
+                           store, cent, cb)
+        answers.append(_knn(spark, store, qvec, cent, cb))
+    assert answers[0] == answers[1] and len(answers[0]) == 10
 
 
 @pytest.mark.slow
@@ -179,13 +247,15 @@ def test_stream_upsert_converges_to_full_rebuild(spark, tmp_path, parts):
         .start().awaitTermination(120)
     want = _knn(spark, full, qvec, cent, cb)
     assert _knn(spark, store, qvec, cent, cb) == want
-    # same checkpoint, no new files: no batch appended
-    from openai_vector_search_demo_spark.operators.pq import _UPSERT_MARKER
-    marker_before = open(os.path.join(store, _UPSERT_MARKER)).read()
+    # same checkpoint, no new files: no batch written
+    from openai_vector_search_demo_spark.operators.pq import _SEGMENTS
+    from openai_vector_search_demo_spark.stores import read_manifest
+    manifest_before = read_manifest(spark, store, _SEGMENTS)
+    assert manifest_before["segments"]
     stream_upsert_ivfpq_index(
         read_embedding_stream(spark, src), store, ck, cent, cb) \
         .start().awaitTermination(120)
-    assert open(os.path.join(store, _UPSERT_MARKER)).read() == marker_before
+    assert read_manifest(spark, store, _SEGMENTS) == manifest_before
     assert _knn(spark, store, qvec, cent, cb) == want
 
 

@@ -179,6 +179,53 @@ def test_ivfpq_stored_over_catalog_table(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS ivfpq_cat_test")
 
 
+def test_stored_reads_on_file_uri_serve_bare_path_answer(spark, tmp_path):
+    """The probed-partition read finds its directories through the
+    Hadoop FS, so a store addressed by a ``file://`` URI serves what the
+    bare path serves: the IVFPQ top-k and the LSH bucket read, both
+    non-empty."""
+    from openai_vector_search_demo_spark.ann_pretrained import (
+        IVF_TRAINED_CENTROIDS,
+    )
+    from openai_vector_search_demo_spark.operators.ann import (
+        hyperplanes,
+        lsh_assign,
+        query_buckets,
+    )
+    from openai_vector_search_demo_spark.operators.pq import (
+        ivfpq_stored_knn,
+        write_ivfpq_index,
+    )
+    from openai_vector_search_demo_spark.pq_residual_pretrained import (
+        PQR_CODEBOOKS,
+    )
+    from openai_vector_search_demo_spark.stores import read_probed_partitions
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    base = emb.filter(F.col("vec_id") != 0)
+    qvec = emb.filter(F.col("vec_id") == 0).first().embedding
+    pq_store = str(tmp_path / "ivfpq")
+    write_ivfpq_index(base, pq_store, IVF_TRAINED_CENTROIDS, PQR_CODEBOOKS)
+    planes = hyperplanes(len(qvec), nbits=8, seed=42)
+    lsh_store = str(tmp_path / "lsh")
+    (lsh_assign(base, planes=planes).repartition(F.col("bucket"))
+     .write.partitionBy("bucket").parquet(lsh_store))
+    probes = query_buckets(qvec, planes, probe_hamming=1)
+
+    def answers(prefix):
+        top = [(r.vec_id, round(r.adc_dist, 6)) for r in
+               ivfpq_stored_knn(spark, prefix + pq_store, qvec,
+                                IVF_TRAINED_CENTROIDS, PQR_CODEBOOKS,
+                                nprobe=24, k=10).collect()]
+        lsh = sorted(r.vec_id for r in read_probed_partitions(
+            spark, prefix + lsh_store, "bucket", probes).collect())
+        return top, lsh
+
+    top, lsh = answers("")
+    assert len(top) == 10 and lsh
+    assert answers("file://") == (top, lsh)
+
+
 def test_escape_partition_value_matches_spark_partitionby(spark, tmp_path):
     """escape_partition_value must produce EXACTLY the directory name
     partitionBy writes (else composed tenant subtree paths miss the
@@ -424,3 +471,44 @@ def test_queries_open_stores_only_through_open_or_build():
                 hits.add((path.name, name))
     assert hits - set(_OWN_STORE_CODE) == set()
     assert set(_OWN_STORE_CODE) - hits == set()
+
+
+_SEGMENT_SOURCES = ("operators/nsw.py", "operators/pq.py", "streaming/jobs.py")
+_NON_STORE_APPENDS = {
+    "output_dir": "the ingested-chunk and dedup output tables a stream "
+                  "appends to are tables, not NSW or IVFPQ stores",
+    "vectors_dir": "the NSW stream's vector table grows with each batch; "
+                   "the graph changes only through upsert segments",
+}
+
+
+def test_mutable_stores_change_only_through_segments():
+    """The NSW and IVFPQ stores change after publication only through
+    stores.write_segment and the manifest swap: no in-place append into
+    a store, no marker file, no posix open() or os.path.exists on a
+    store path, and none of the old marker names left in the package.
+    Each remaining append names its table above with its reason."""
+    import pathlib
+    import re
+
+    import openai_vector_search_demo_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    targets = set()
+    for rel in _SEGMENT_SOURCES:
+        src = (root / rel).read_text()
+        assert "fs_touch" not in src, rel
+        assert "os.path.exists" not in src, rel
+        assert not re.search(r"\bopen\(", src), rel
+        appends = re.findall(
+            r'mode\("append"\)(?:\.partitionBy\([^)]*\))?'
+            r'\s*\.parquet\(\s*(\w+)', src)
+        assert len(appends) == src.count('mode("append")'), rel
+        if rel.startswith("operators/"):
+            assert appends == [], rel
+        targets.update(appends)
+    assert targets == set(_NON_STORE_APPENDS)
+    for path in root.rglob("*.py"):
+        src = path.read_text()
+        for literal in ("_DELTAS", "_UPSERT", "_tombstones"):
+            assert literal not in src, (path, literal)
