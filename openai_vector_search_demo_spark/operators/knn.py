@@ -198,7 +198,7 @@ def auto_knn(df: DataFrame,
     ``n`` (the routing statistic) is a required input when the caller
     already knows it — passing it avoids a count job; left ``None`` it
     is computed from ``df`` once.  ``nsw_kwargs`` forwards serving
-    params (ef/rounds/stride/n1/…) to the graph branch.
+    params (ef/rounds/stride/…) to the graph branch.
 
     ``store_path`` is the production graph branch: serve the STORED v4
     index at that path via ``nsw_stored_knn`` (bucket-pruned point
@@ -245,7 +245,6 @@ def auto_knn(df: DataFrame,
         from openai_vector_search_demo_spark.operators.nsw import (
             nsw_stored_knn,
         )
-        kw.pop("n1", None)   # the stored path derives geometry from meta
         top = nsw_stored_knn(df.sparkSession, store_path, df, query_vec,
                              k=k, vec_col=vec_col, id_col=id_col,
                              sim_col=sim_col, **kw)

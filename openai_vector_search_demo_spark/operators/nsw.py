@@ -24,37 +24,38 @@ per-block top-Ms.  At 100 TB the same build runs per IVF cell first
 (cell-bounds the quadratic, the semdedup posture); the graph THIS
 module stores and serves is format-identical either way.
 
-Search (``beam_search_knn``, v4 semantic since r15): entry is ITSELF
-HIERARCHICAL AND RECURSIVE — ``nsw_hier_plan`` graph-indexes every
-level of the stride stack (⌈√n⌉-node L1, n^(1/4)-node L2, … stored
-under ``_L1``/``_L2``/…) down to the first level smaller than
-``NSW_HIER_FLOOR``, and a query enters by scoring that tiny top
-subset exactly, then DESCENDING: per level, two beam rounds at
-constant width ``NSW_HIER_W``, re-seeded from the running pool's top;
-the base beam starts from the pool's top-16 (all hierarchy-visited
-stay candidates — their exact scores are paid).  This is the
-reference's actual HNSW multi-layer structure
-(modules/utilities.py:272-278): entry work is
-depth·2·{NSW_HIER_W}·2M evaluations with depth = Θ(log log n) — flat
-in n for any real corpus.  Each of T base rounds joins the frontier's
-adjacency rows (a broadcast of ≤ ef ids against the src-bucketed edge
-store — partition-pruned point lookups), traverses them SYMMETRICALLY
-(out-edges ∪ reversed in-edges — the reverse-link practice; hubs
-become entryways, not one-way sinks), scores the unvisited newcomers
-by exact cosine against the query, keeps the top-ef as the next
-frontier (ef = {NSW_EF_SERVE} CONSTANT — v4's one-line scale law:
-per-query work is BOUNDED by rounds·ef·2M evaluations independent of
-corpus size, where v3's ⌈1.5·√n⌉ autoscale made it Θ(√n·M) and its
-recall still decayed 0.97 → 0.77 → 0.62 across 2k/20k/100k), and
-accumulates every scored node.  The answer is the top-k of all
-visited nodes — i.e. the refine is built in: scores are exact cosines
-throughout, the graph only decides WHICH nodes get scored.  Recall is
-measured, never assumed — the v4 point (with M = 16, the degree that
-keeps an exact-kNN graph navigable at 100k; M = 6 needed 2× the beam
-for less recall) serves mean/min recall@10 = 1.00/1.00 @ 2k,
-1.00/1.00 @ 20k, 0.98/0.90 @ 100k at the SAME ef
-(``ann_nsw_mean_recall_at_10``, ``ann_nsw_fixed_ef_scaling``,
-``scripts/ab_nsw_v4_deep.py``).
+Search: two beam engines — ``beam_search_knn`` serves one query with
+one fused driver-side action per round, ``beam_search_knn_batch``
+serves many through a qid-keyed relational frontier — share ONE entry
+form and ONE stop rule.  Entry is ``flat_mod`` plus an L1 → Ld
+``hier_levels`` list (possibly empty), or explicit ``seeds``.  The
+geometry is decided only by ``nsw_hier_plan`` (level ℓ is the subset
+``id % (s1·…·sℓ) == 0`` with s_{ℓ+1} = ⌈√n_ℓ⌉) and ``_level_plan``
+(every level with ≥ ``NSW_HIER_FLOOR`` nodes gets its own graph; the
+first smaller one is the flat top, ``flat_mod`` its stride product).
+A query scores the flat top exactly, then DESCENDS: per level,
+``NSW_L1_ROUNDS`` beam rounds at constant width ``NSW_HIER_W``,
+re-seeded from the running pool's top; the base beam starts from the
+pool's top-``NSW_ENTRY_COUNT`` (every level-visited node stays a
+candidate).  With no levels the flat top is the first stride layer
+itself — a flat coarse entry.  This is the reference's HNSW
+multi-layer structure (modules/utilities.py:272-278): entry work is
+depth·{NSW_L1_ROUNDS}·{NSW_HIER_W}·2M evaluations with depth =
+Θ(log log n) — flat in n for any real corpus.  Each of T base rounds
+expands the frontier's adjacency SYMMETRICALLY (out-edges ∪ reversed
+in-edges — the reverse-link practice; hubs become entryways, not
+one-way sinks), scores the unvisited newcomers by exact cosine
+against the query, keeps the top-ef as the next frontier (ef =
+{NSW_EF_SERVE} CONSTANT: per-query work is BOUNDED by rounds·ef·2M
+evaluations independent of corpus size), and accumulates every scored
+node; ``nsw_converged`` (the ``NSW_STOP_K`` rule) ends the beam early.
+The answer is the top-k of all visited nodes — the refine is built
+in: scores are exact cosines throughout, the graph only decides WHICH
+nodes get scored.  Recall is measured, never assumed — with M = 16
+(the degree that keeps an exact-kNN graph navigable at 100k) the
+serving point gives mean/min recall@10 = 1.00/1.00 @ 2k, 1.00/1.00 @
+20k, 0.98/0.90 @ 100k at the SAME ef (``ann_nsw_mean_recall_at_10``,
+``ann_nsw_fixed_ef_scaling``, ``scripts/ab_nsw_v4_deep.py``).
 
 Determinism contract (the ANN-family rule, ``ann.py`` module
 docstring): every selection — per-block top-M, global top-M, per-round
@@ -108,7 +109,8 @@ corpora converge in ~4 rounds instead of 8 — the saturation rounds
 were pure cost.  stop_k=10/16 DO cost tail recall at 100k (min 0.90 →
 0.70) — the margin between k and the stop window is what absorbs
 late-round improvements.  Deterministic from 6-dp-rounded values, so
-every oracle replays the same stop decision."""
+every oracle replays the same stop decision.  ``nsw_converged`` is the
+rule; both beam engines call it."""
 NSW_SEEDS = (1, 101, 201, 301)
 """Legacy fixed, id-spread entry points — kept for explicit-seed callers
 and tests.  SERVING default is the HIERARCHICAL entry instead (v4,
@@ -144,53 +146,47 @@ def nsw_serving_params(n: int) -> tuple[int, int, int]:
     return root, NSW_EF_SERVE, NSW_ROUNDS
 
 
-def nsw_l1_params(n1: int) -> tuple[int, bool]:
-    """(stride2, hierarchical) for an L1 coarse layer of ``n1`` nodes —
-    one recursion step of the hierarchy's geometry: the next level's
-    subset is ``id % (stride·stride2) == 0`` with stride2 = ⌈√n1⌉.
-    Below ``NSW_HIER_FLOOR`` nodes the layer is scored flat — the
-    small-corpus degeneration the oracle mirrors with an OR predicate
-    (a 6-node layer has nothing to index).  ``nsw_hier_plan`` applies
-    this step recursively (v4)."""
-    import math
-    return max(2, math.ceil(math.sqrt(max(1, n1)))), n1 >= NSW_HIER_FLOOR
-
-
 def nsw_hier_plan(df: DataFrame, n: int,
-                  id_col: str = "vec_id",
-                  n1: int | None = None) -> tuple[list[int], list[int]]:
+                  id_col: str = "vec_id") -> tuple[list[int], list[int]]:
     """(strides, counts) of the full level stack for corpus ``df`` of
-    size ``n`` — the v4 RECURSION the v3 design only named: level ℓ is
-    the subset ``id % (s1·…·sℓ) == 0`` with s_{ℓ+1} = ⌈√n_ℓ⌉; every
-    level with ≥ {NSW_HIER_FLOOR} nodes gets its own exact top-M graph,
-    and the FIRST smaller level is the flat-scanned entry top.  Level
-    sizes fall as n^(1/2), n^(1/4), n^(1/8)… so depth is Θ(log log n)
-    (2 at 2k, 3 at 100k, ~4 at 10⁹) and per-query entry work is
-    depth·{NSW_L1_ROUNDS}·{NSW_HIER_W}·2M evaluations — flat in n.
-    This is the reference HNSW's actual multi-layer structure
-    (modules/utilities.py:272-278).  ``df`` must already be filtered to
-    non-null vectors; counts come from the DATA (one count job per
-    level, ≤ ~4), so a replay is deterministic.  ``n1`` short-circuits
-    the first count when the caller already knows it (the memoized
-    slots)."""
+    size ``n``: level ℓ is the subset ``id % (s1·…·sℓ) == 0`` with
+    s1 = ⌈√n⌉ and s_{ℓ+1} = ⌈√n_ℓ⌉, and the stack stops at the first
+    level under {NSW_HIER_FLOOR} nodes (``_level_plan`` turns it into
+    graph levels and the flat-top modulus).  Level sizes fall as
+    n^(1/2), n^(1/4), n^(1/8)… so depth is Θ(log log n) (one graph
+    level at 2k, two at 100k and at 10⁹).  This is the reference HNSW's multi-layer
+    structure (modules/utilities.py:272-278).  ``df`` must already be
+    filtered to non-null vectors.  One job: it collects the level-1
+    ids — ⌈n/s1⌉ ≈ √n longs for a dense or hashed id range (316 at
+    100k) — and counts every deeper level, a subset of level 1, from
+    them on the driver, so a replay is deterministic."""
     import math
+    s1 = max(2, math.ceil(math.sqrt(max(1, n))))
+    ids = [r[0] for r in df.filter(F.pmod(F.col(id_col), F.lit(s1)) == 0)
+           .select(id_col).collect()]
     strides: list[int] = []
     counts: list[int] = []
-    prod = 1
-    cur = max(1, n)
+    prod, cur = 1, max(1, n)
     while True:
         s = max(2, math.ceil(math.sqrt(cur)))
         prod *= s
-        if not strides and n1 is not None:
-            cnt = int(n1)
-        else:
-            cnt = df.filter(
-                F.pmod(F.col(id_col), F.lit(int(prod))) == 0).count()
+        cur = sum(1 for i in ids if i % prod == 0)
         strides.append(int(s))
-        counts.append(int(cnt))
-        if cnt < NSW_HIER_FLOOR:
+        counts.append(cur)
+        if cur < NSW_HIER_FLOOR:
             return strides, counts
-        cur = cnt
+
+
+def inline_levels(df: DataFrame, n: int, m: int = NSW_M,
+                  vec_col: str = "embedding", id_col: str = "vec_id"
+                  ) -> tuple[list[DataFrame], int]:
+    """(hier_levels, flat_mod) built inline over the non-null corpus
+    ``df`` of size ``n``: the ``nsw_hier_plan`` geometry, one
+    symmetrized exact top-``m`` graph per ``_level_plan`` level (L1 →
+    Ld, unexecuted), and the flat-top modulus."""
+    plan, flat_mod = _level_plan(*nsw_hier_plan(df, n, id_col=id_col))
+    return [build_l1_graph(df, prod, m=m, vec_col=vec_col, id_col=id_col)
+            for _, prod in plan], flat_mod
 
 
 def nsw_filtered_ef(ef: int, n_match: int, n_total: int,
@@ -634,6 +630,19 @@ def _local_frame(spark, rows, schema: StructType) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
+def nsw_converged(stop_k: int | None, n_visited: int, kth, best_new
+                  ) -> bool:
+    """The ``NSW_STOP_K`` stop rule — one predicate for both beam
+    engines, over three values of one query after a base round:
+    ``n_visited`` scored nodes, ``kth`` the ``stop_k``-th best visited
+    value (read only when ``n_visited > stop_k``) and ``best_new`` the
+    round's best newcomer (None when no newcomer scored).  The beam
+    converged when more than ``stop_k`` nodes are visited and no
+    newcomer reaches ``kth``; ``stop_k=None`` never stops."""
+    return (stop_k is not None and n_visited > stop_k
+            and (best_new is None or best_new < kth))
+
+
 def beam_search_knn(edges, source: DataFrame,
                     qvec: Sequence[float], k: int = 10,
                     ef: int = NSW_EF, rounds: int = NSW_ROUNDS,
@@ -641,10 +650,8 @@ def beam_search_knn(edges, source: DataFrame,
                     vec_col: str = "embedding", id_col: str = "vec_id",
                     sim_col: str = "similarity",
                     exclude_ids: Sequence[int] | None = None,
-                    stride: int | None = None,
                     n_entry: int = NSW_ENTRY_COUNT,
-                    l1_edges=None, n1: int | None = None,
-                    hier_levels: Sequence | None = None,
+                    hier_levels: Sequence = (),
                     flat_mod: int | None = None,
                     stop_k: int | None = NSW_STOP_K) -> DataFrame:
     """Multi-seed beam search over an adjacency relation — the
@@ -671,21 +678,22 @@ def beam_search_knn(edges, source: DataFrame,
     relation (``_local_frame``, an Arrow ``LocalRelation``): collecting
     it runs no Spark job, so a serve's only jobs are its beam rounds.
 
-    Entry points (v4, HIERARCHICAL): with ``hier_levels``/``flat_mod``
-    set — or the legacy depth-1 shape ``stride``+``l1_edges``+``n1``
-    (upgraded internally) — entry DESCENDS the level stack: the flat
-    top subset ``id % flat_mod == 0`` (< {NSW_HIER_FLOOR} nodes) is
-    scored exactly — with the deepest level's adjacency prefetched in
-    the SAME action when the level exposes ``pred_rel`` — then each
-    graph level from the top down runs {NSW_L1_ROUNDS} fused rounds at
-    CONSTANT width {NSW_HIER_W}, and the top-``n_entry`` of everything
-    visited seeds the base beam.  A level TRANSITION pays one
-    frontier-sized catch-up read (the new level's adjacency was never
-    prefetched); everything else is one action per round.  With only
-    ``stride`` set, the whole coarse layer is scored flat (the
-    registered degeneration when ``n1 < NSW_HIER_FLOOR``).  Without
-    ``stride``, ``seeds`` are used verbatim — their known ids let the
-    seed scoring and seed adjacency ride one action too.
+    Entry (the module docstring's one form): with ``flat_mod`` set,
+    the flat top subset ``id % flat_mod == 0`` is scored exactly, then
+    the descent runs ``hier_levels`` from the deepest level up: each
+    level gets {NSW_L1_ROUNDS} fused rounds at CONSTANT width
+    {NSW_HIER_W}, and the top-``n_entry`` of everything visited seeds
+    the base beam.  The deepest level's adjacency rides the entry
+    scan's action when the level exposes ``pred_rel``; with no levels
+    the scan prefetches nothing (``pred_rel`` on the base graph would
+    be an unpruned scan of the whole store), so the first base round
+    pays one catch-up read.  Each descent round also prefetches the
+    next phase's adjacency (``fused_round``'s ``also``), so a level
+    transition pays no catch-up read; everything else is one action
+    per round.  Without ``flat_mod``, ``seeds`` are used verbatim — their
+    known ids let the seed scoring and seed adjacency ride one action.
+    After each base round ``nsw_converged`` reads the visited dict and
+    may end the beam.
 
     ``edges`` / level entries are ``AdjRelation``s (the stored path's
     bucket-pruned form) or DataFrames of (src, dst); ``hier_levels`` is
@@ -837,29 +845,24 @@ def beam_search_knn(edges, source: DataFrame,
                 new[i] = (i, r[2], r[3])
         return new
 
-    if (hier_levels is None and stride is not None
-            and l1_edges is not None and n1 is not None
-            and n1 >= NSW_HIER_FLOOR):
-        # legacy depth-1 call shape -> the v4 descent with one level
-        hier_levels = [l1_edges]
-        flat_mod = int(stride) * nsw_l1_params(n1)[0]
     base_adj = _as_adj(edges)
-    if hier_levels:
+    if flat_mod is not None:
         adjs = [_as_adj(lv) for lv in hier_levels]
-        deep = adjs[-1]
+        deep = adjs[-1] if adjs else None
         scored0 = score_pred(
             F.pmod(F.col(id_col), F.lit(int(flat_mod))) == 0)
         schema = scored0.schema
         branches = [_sb(scored0)]
-        if deep.pred_rel is not None:
+        if deep is not None and deep.pred_rel is not None:
             # the flat top is a subset of the deepest graph level, so
             # its first-descent adjacency rides the entry scan's action
             branches.append(_ab(deep.pred_rel(
                 F.pmod(F.col("src"), F.lit(int(flat_mod))) == 0),
                 deep.trusted))
         scored, adjrows = _collect(branches)
-        _ingest(_cache(deep), [r[1] for r in scored],
-                adjrows.get(1, []))
+        if len(branches) > 1:
+            _ingest(_cache(deep), [r[1] for r in scored],
+                    adjrows.get(1, []))
         visited = {r[1]: (r[1], r[2], r[3]) for r in scored}
         seen = set(visited)
         stack = list(reversed(adjs))
@@ -885,14 +888,6 @@ def beam_search_knn(edges, source: DataFrame,
                       sorted(new.values(), key=skey)[:NSW_HIER_W]]
         frontier = [r[0] for r in
                     sorted(visited.values(), key=skey)[:n_entry]]
-    elif stride is not None:
-        scored0 = score_pred(
-            F.pmod(F.col(id_col), F.lit(int(stride))) == 0)
-        schema = scored0.schema
-        rows = scored0.collect()
-        visited = {r[0]: r for r in rows}
-        frontier = [r[0] for r in sorted(rows, key=skey)[:n_entry]]
-        seen = set(visited)
     else:
         # seeds are known ids: the seed scoring (an IN point read —
         # value-identical to the r15 broadcast join) and the seed
@@ -916,17 +911,14 @@ def beam_search_knn(edges, source: DataFrame,
         seen.update(new)
         visited.update(new)
         if stop_k is not None:
-            # convergence (NSW_STOP_K): the round's best newcomer
-            # scores below the stop_k-th best visited value — further
-            # expansion cannot reach the answer's neighborhood
             vals = sorted((r[2] for r in visited.values()
                            if r[2] is not None), reverse=True)
-            if len(vals) > stop_k:
-                best_new = max((r[2] for r in new.values()
-                                if r[2] is not None),
-                               default=float("-inf"))
-                if best_new < vals[stop_k - 1]:
-                    break
+            if nsw_converged(
+                    stop_k, len(vals),
+                    vals[stop_k - 1] if len(vals) > stop_k else None,
+                    max((r[2] for r in new.values() if r[2] is not None),
+                        default=None)):
+                break
         frontier = [r[0] for r in
                     sorted(new.values(), key=skey)[:ef]]
     out_rows = sorted(visited.values(), key=skey)
@@ -950,23 +942,32 @@ def beam_search_knn_batch(edges: DataFrame, source: DataFrame,
                           id_col: str = "vec_id",
                           qid_col: str = "qid", qvec_col: str = "qv",
                           sim_col: str = "similarity",
-                          stride: int | None = None,
                           n_entry: int = NSW_ENTRY_COUNT,
-                          l1_edges: DataFrame | None = None,
-                          n1: int | None = None,
-                          hier_levels: Sequence[DataFrame] | None = None,
+                          hier_levels: Sequence[DataFrame] = (),
                           flat_mod: int | None = None,
                           stop_k: int | None = NSW_STOP_K) -> DataFrame:
     """BATCHED multi-query beam search — the serving form for query
-    THROUGHPUT: the frontier is a (qid, node) RELATION, every round is
-    one edge join + one anti join + one broadcast-scored point-read +
-    one per-qid top-ef window, and NOTHING is collected to the driver —
-    the single-query ``beam_search_knn``'s bounded collects disappear
-    because the qid key carries all per-query state in-plan.  At 100 TB
-    this is how an offline evaluation or a batch re-ranking job runs
-    thousands of queries in one pass over the (bucketed) edge store.
-    Returns the per-qid top-k of all visited nodes, exact cosines,
-    6-dp-rounded with (qid, sim desc, id asc) determinism."""
+    THROUGHPUT: the frontier is a (qid, node) RELATION, and every round
+    is one edge join + one anti join + one broadcast-scored point-read
+    + one per-qid top-ef window, so per-round planning is paid once for
+    all queries instead of once per query.  Returns the per-qid top-k
+    of all visited nodes, exact cosines, 6-dp-rounded with (qid, sim
+    desc, id asc) determinism.
+
+    Entry is the one form ``beam_search_knn`` takes: with ``flat_mod``
+    set, every qid scores the shared flat top subset ``id % flat_mod ==
+    0``, then descends ``hier_levels`` (DataFrames of (src, dst), L1 →
+    Ld, run deepest first) — per level, {NSW_L1_ROUNDS} qid-keyed
+    rounds at constant width {NSW_HIER_W} re-seeded from the running
+    pool's per-qid top — and enters the base graph at its per-qid
+    top-``n_entry`` of everything visited.  Without ``flat_mod``, every
+    qid starts from ``seeds``.
+
+    After each base round the stop rule ``nsw_converged`` runs per qid
+    on ONE collect: a row per qid that scored a newcomer this round
+    (visited count, ``stop_k``-th best visited value, best newcomer),
+    so the query count bounds it.  The frontier keeps the qids that
+    did not converge; the loop ends when none is left."""
 
     q = queries.select(F.col(qid_col).alias("qid"),
                        F.col(qvec_col).alias("_qv"))
@@ -980,108 +981,67 @@ def beam_search_knn_batch(edges: DataFrame, source: DataFrame,
                     cosine_similarity(F.col(vec_col), F.col("_qv")), 6))
                 .select("qid", id_col, "_s"))
 
-    sess = source.sparkSession
     wf = Window.partitionBy("qid").orderBy(F.col("_s").desc(),
                                            F.col(id_col).asc())
-    if (hier_levels is None and stride is not None
-            and l1_edges is not None and n1 is not None
-            and n1 >= NSW_HIER_FLOOR):
-        # legacy depth-1 call shape -> the v4 descent with one level
-        hier_levels = [l1_edges]
-        flat_mod = int(stride) * nsw_l1_params(n1)[0]
-    if hier_levels:
-        # HIERARCHICAL entry (v4): every qid scores the shared flat top
-        # subset (< NSW_HIER_FLOOR rows), then DESCENDS the level stack
-        # — per level, NSW_L1_ROUNDS qid-keyed beam rounds at constant
-        # width NSW_HIER_W over that level's edge relation (re-seeded
-        # from the running pool's per-qid top) — and enters the base
-        # graph at its per-qid top-n_entry of everything visited: the
-        # same relational round shape as the base beam, on
-        # progressively larger but still tiny edge relations.
+
+    def top(df: DataFrame, n: int) -> DataFrame:
+        return (df.withColumn("_rn", F.row_number().over(wf))
+                .filter(F.col("_rn") <= n)
+                .select("qid", F.col(id_col).alias("src")))
+
+    def expand(ledges: DataFrame, front: DataFrame, visited: DataFrame):
+        """One qid-keyed round: the frontier's unvisited neighbors,
+        scored; returns (newcomers, visited) both checkpointed.
+        localCheckpoint, not persist: the checkpoint CUTS the logical
+        lineage each round, so the plan the driver analyzes stays
+        round-sized instead of growing every round deeper — the deep
+        tree (TreeNode string rendering during analysis) is what OOM'd
+        a default-1g gate session late in a 50-slot run (r13).  State
+        is ef·M rows/qid — KB-class blocks (the mmr pattern)."""
+        cand = (ledges.join(front, "src")
+                .select("qid", F.col("dst").alias(id_col)).distinct())
+        new = cand.join(visited.select("qid", id_col),
+                        ["qid", id_col], "left_anti")
+        scored = score(new).localCheckpoint()
+        return scored, visited.unionByName(scored).localCheckpoint()
+
+    if flat_mod is not None:
         seed_df = (q.select("qid").crossJoin(
             vecs.filter(F.pmod(F.col(id_col),
                                F.lit(int(flat_mod))) == 0)
             .select(id_col)))
         visited = score(seed_df).localCheckpoint()
         for ledges in reversed(list(hier_levels)):
-            hf = (visited.withColumn("_rn", F.row_number().over(wf))
-                  .filter(F.col("_rn") <= NSW_HIER_W)
-                  .select("qid", F.col(id_col).alias("src")))
+            hf = top(visited, NSW_HIER_W)
             for _ in range(NSW_L1_ROUNDS):
-                cand = (ledges.join(hf, "src")
-                        .select("qid", F.col("dst").alias(id_col))
-                        .distinct())
-                new = cand.join(visited.select("qid", id_col),
-                                ["qid", id_col], "left_anti")
-                scored = score(new).localCheckpoint()
-                visited = visited.unionByName(scored).localCheckpoint()
-                hf = (scored.withColumn("_rn", F.row_number().over(wf))
-                      .filter(F.col("_rn") <= NSW_HIER_W)
-                      .select("qid", F.col(id_col).alias("src")))
-        frontier = (visited.withColumn("_rn", F.row_number().over(wf))
-                    .filter(F.col("_rn") <= n_entry)
-                    .select("qid", F.col(id_col).alias("src")))
-    elif stride is not None:
-        # flat coarse entry (the r13 semantic, kept as the registered
-        # degeneration for n1 < NSW_HIER_FLOOR): every qid scores the
-        # whole ⌈n/stride⌉-row coarse layer, keeps all of it as
-        # visited, and enters the graph at its per-qid top-n_entry.
-        seed_df = (q.select("qid").crossJoin(
-            vecs.filter(F.pmod(F.col(id_col), F.lit(int(stride))) == 0)
-            .select(id_col)))
-        visited = score(seed_df).localCheckpoint()
-        frontier = (visited.withColumn("_rn", F.row_number().over(wf))
-                    .filter(F.col("_rn") <= n_entry)
-                    .select("qid", F.col(id_col).alias("src")))
+                scored, visited = expand(ledges, hf, visited)
+                hf = top(scored, NSW_HIER_W)
+        frontier = top(visited, n_entry)
     else:
         seed_df = (q.select("qid").crossJoin(
-            sess.createDataFrame([(int(x),) for x in seeds],
-                                 f"{id_col} long")))
+            source.sparkSession.createDataFrame(
+                [(int(x),) for x in seeds], f"{id_col} long")))
         visited = score(seed_df).localCheckpoint()
         frontier = visited.select("qid", F.col(id_col).alias("src"))
+    kn = Window.partitionBy("qid").orderBy(F.col("_s").desc())
     for _ in range(rounds):
-        cand = (edges.join(frontier, "src")
-                .select("qid", F.col("dst").alias(id_col)).distinct())
-        new = cand.join(visited.select("qid", id_col),
-                        ["qid", id_col], "left_anti")
-        # localCheckpoint, not persist: the checkpoint CUTS the logical
-        # lineage each round, so the plan the driver analyzes stays
-        # round-sized instead of growing 4 unrolled rounds deep — the
-        # deep tree (TreeNode string rendering during analysis) is what
-        # OOM'd a default-1g gate session late in a 50-slot run (r13).
-        # State is ef·M rows/qid — KB-class blocks (the mmr pattern).
-        scored = score(new).localCheckpoint()
-        visited = visited.unionByName(scored).localCheckpoint()
-        frontier = (scored.withColumn("_rn", F.row_number().over(wf))
-                    .filter(F.col("_rn") <= ef)
-                    .select("qid", F.col(id_col).alias("src")))
+        scored, visited = expand(edges, frontier, visited)
+        frontier = top(scored, ef)
         if stop_k is not None:
-            # per-qid convergence (NSW_STOP_K, relational form): a qid
-            # whose round produced no newcomer above its stop_k-th best
-            # visited value drops out of the frontier — its remaining
-            # rounds become empty joins.  kth is the stop_k-th largest
-            # VALUE (rank without tie-break is value-deterministic);
-            # the count guard keeps a qid alive until it has visited
-            # MORE than stop_k nodes (the twin/oracle contract).
-            kagg = (visited
-                    .withColumn("_kn", F.row_number().over(
-                        Window.partitionBy("qid")
-                        .orderBy(F.col("_s").desc())))
-                    .groupBy("qid")
-                    .agg(F.count(F.lit(1)).alias("_nv"),
-                         F.max(F.when(F.col("_kn") == stop_k,
-                                      F.col("_s"))).alias("_kth")))
-            mx = scored.groupBy("qid").agg(F.max("_s").alias("_mx"))
-            alive = (mx.join(kagg, "qid", "left")
-                     .filter((F.col("_nv") <= stop_k)
-                             | (F.col("_mx") >= F.col("_kth")))
-                     .select("qid"))
-            frontier = frontier.join(alive, "qid", "left_semi") \
-                .localCheckpoint()
-            if frontier.isEmpty():
-                # every qid converged — the remaining rounds would be
-                # empty joins and their checkpoint jobs pure overhead
+            # kth is the stop_k-th largest VALUE (a rank without
+            # tie-break is value-deterministic); the inner join keeps
+            # only qids that scored a newcomer this round
+            stats = (visited.withColumn("_kn", F.row_number().over(kn))
+                     .groupBy("qid")
+                     .agg(F.count("_s"),
+                          F.max(F.when(F.col("_kn") == stop_k,
+                                       F.col("_s"))))
+                     .join(scored.groupBy("qid").agg(F.max("_s")), "qid"))
+            alive = [r[0] for r in stats.collect()
+                     if not nsw_converged(stop_k, r[1], r[2], r[3])]
+            if not alive:
                 break
+            frontier = frontier.filter(id_in("qid", alive))
     return (visited.withColumn("_rn", F.row_number().over(wf))
             .filter(F.col("_rn") <= k)
             .select("qid", id_col,
@@ -1095,14 +1055,17 @@ def nsw_knn(df: DataFrame, qvec: Sequence[float], k: int = 10,
             sim_col: str = "similarity",
             stride: int | None = None,
             n_entry: int = NSW_ENTRY_COUNT,
-            n1: int | None = None,
             stop_k: int | None = NSW_STOP_K) -> DataFrame:
     """Inline build+search (the oracled form; production stores the
     graph once via ``write_nsw_index`` and serves many queries).
-    Traversal is SYMMETRIC over the directed top-m build; with
-    ``stride`` set the whole level stack is graph-indexed inline too
-    and entry is the v4 HIERARCHICAL descent (``n1`` skips the first
-    coarse count job when the caller already knows it).
+    Traversal is SYMMETRIC over the directed top-m build.  With
+    ``stride`` = ⌈√n⌉ (``nsw_serving_params``) the whole level stack is
+    graph-indexed inline too (``inline_levels``) and entry is the
+    hierarchical descent; any other ``stride`` is a flat coarse entry
+    at that stride (no levels, ``flat_mod = stride``) — the recursion
+    is defined on the √-stack only, and ``nsw_stored_knn`` takes the
+    same branch on a stored-meta stride mismatch.  Without ``stride``
+    the beam starts from ``seeds``.
 
     The built adjacency is ``localCheckpoint``-ed ONCE per call (r16,
     guide §5): every beam round filters the edge relation, and an
@@ -1115,43 +1078,19 @@ def nsw_knn(df: DataFrame, qvec: Sequence[float], k: int = 10,
     edges = symmetrize_edges(
         build_knn_graph(df, m=m, vec_col=vec_col, id_col=id_col)
     ).localCheckpoint()
-    levels, flat_mod = None, None
+    levels, flat_mod = [], stride
     if stride is not None:
-        import math
         base = df.filter(F.col(vec_col).isNotNull())
         n = base.count()
-        if int(stride) != max(2, math.ceil(math.sqrt(max(1, n)))):
-            # Non-√n coarse geometry: the hierarchy recursion is defined
-            # on the √-stack only, and the caller's n1 counts the
-            # caller-stride subset, not the √-subset — building levels
-            # here would index geometry the caller never asked for.
-            # Serve the flat coarse entry at the caller's stride instead
-            # (the same fallback nsw_stored_knn takes on a stored-meta
-            # stride mismatch, keeping the two paths equal).
-            return beam_search_knn(edges, df, qvec, k=k, ef=ef,
-                                   rounds=rounds, seeds=seeds,
-                                   vec_col=vec_col, id_col=id_col,
-                                   sim_col=sim_col, stride=stride,
-                                   n_entry=n_entry, stop_k=stop_k)
-        strides, counts = nsw_hier_plan(base, n, id_col=id_col, n1=n1)
-        levels, prod = [], 1
-        for s, cnt in zip(strides, counts):
-            prod *= s
-            if cnt < NSW_HIER_FLOOR:
-                break
-            levels.append(build_l1_graph(base, prod, m=m,
-                                         vec_col=vec_col,
-                                         id_col=id_col)
-                          .localCheckpoint())
-        flat_mod = prod
-        if not levels:
-            # degenerate corpus: flat coarse entry at the caller stride
-            levels, flat_mod = None, None
+        if int(stride) == nsw_serving_params(n)[0]:
+            levels, flat_mod = inline_levels(base, n, m=m, vec_col=vec_col,
+                                             id_col=id_col)
+            levels = [lv.localCheckpoint() for lv in levels]
     return beam_search_knn(edges, df, qvec, k=k, ef=ef, rounds=rounds,
                            seeds=seeds, vec_col=vec_col, id_col=id_col,
-                           sim_col=sim_col, stride=stride,
-                           n_entry=n_entry, hier_levels=levels,
-                           flat_mod=flat_mod, stop_k=stop_k)
+                           sim_col=sim_col, n_entry=n_entry,
+                           hier_levels=levels, flat_mod=flat_mod,
+                           stop_k=stop_k)
 
 
 def upsert_nsw_index(spark, path: str, batch: DataFrame,
@@ -1439,18 +1378,19 @@ def read_l1_meta(spark, path: str) -> dict | None:
     return read_manifest(spark, path, _META)
 
 
-def resolve_stored_levels(spark, path: str, m: int = NSW_M):
-    """(levels, meta) for the BATCH serving form: every stored level's
-    resolved relation L1 → Ld (``_resolved_layer``).  ([], meta) when
-    the store has no graph levels (flat-entry corpora); ([], None) for
-    a path without ``_L1_META``."""
+def resolve_stored_levels(spark, path: str, m: int = NSW_M
+                          ) -> tuple[list[DataFrame], int]:
+    """(hier_levels, flat_mod) for the BATCH serving form, from the
+    store's frozen geometry (``_level_plan``): every stored level's
+    resolved relation L1 → Ld (``_resolved_layer``) — empty for a
+    flat-entry corpus — and the flat-top modulus."""
     meta = read_l1_meta(spark, path)
     if meta is None:
-        return [], None
+        raise ValueError(f"{path} has no {_META}: not an NSW store")
+    plan, flat_mod = _level_plan(meta["strides"], meta["counts"])
     mm = int(meta.get("m", m))
-    plan = _level_plan(meta.get("strides", []), meta.get("counts", []))
     return [_resolved_layer(spark, path, meta, mm, f"_L{lvl}")
-            for lvl, _ in plan[0]], meta
+            for lvl, _ in plan], flat_mod
 
 
 def _stored_adj(spark, path: str, meta: dict, layer: str,
@@ -1504,20 +1444,20 @@ def nsw_stored_knn(spark, path: str, source: DataFrame,
     # hierarchical entry off the store's own level stack, each level
     # looked up (and resolved) like the base.  Used only when the
     # caller's stride matches the write-time geometry (the serving
-    # slots' case); otherwise the flat coarse scan, since the stored
-    # levels index other layers than the one asked for.
-    levels = flat_mod = None
+    # slots' case); otherwise a flat coarse entry at the caller's
+    # stride, since the stored levels index other layers than the one
+    # asked for.
+    levels, flat_mod = [], stride
     if stride is not None and meta.get("stride") == int(stride):
         plan, flat_mod = _level_plan(meta["strides"], meta["counts"])
         mm = int(meta.get("m", m))
         levels = [_stored_adj(spark, path, meta, f"_L{lvl}", n_buckets,
-                              has_deltas, mm) for lvl, _ in plan] or None
-        flat_mod = flat_mod if levels else None
+                              has_deltas, mm) for lvl, _ in plan]
 
     return beam_search_knn(lookup, source, qvec, k=k, ef=ef,
                            rounds=rounds, seeds=seeds, vec_col=vec_col,
                            id_col=id_col, sim_col=sim_col,
                            exclude_ids=_tombstone_ids(spark, path, meta),
-                           stride=stride, n_entry=n_entry,
+                           n_entry=n_entry,
                            hier_levels=levels, flat_mod=flat_mod,
                            stop_k=stop_k)

@@ -469,7 +469,13 @@ def write_ivfpq_index(df: DataFrame, path: str,
     isolation, modules/utilities.py:282-287): a tenant's query opens
     only its own subtree (``ivfpq_stored_knn(tenant=...)``), so other
     tenants' cells are never listed; per-tenant upsert/compaction
-    point ``upsert_ivfpq_index`` at the tenant subtree."""
+    point ``upsert_ivfpq_index`` at the tenant subtree.
+
+    An input with no non-null, nonzero vector raises ``ValueError``
+    after deleting what the write left at ``path``: a partitioned write
+    of zero rows leaves no parquet file, a store no reader can open."""
+    from openai_vector_search_demo_spark.stores import _hadoop_path_fs
+
     cols = keep_cols or [c for c in df.columns if c != vec_col]
     parts = ["cell"] if tenant_col is None else [tenant_col, "cell"]
     if tenant_col is not None and tenant_col not in cols:
@@ -479,6 +485,12 @@ def write_ivfpq_index(df: DataFrame, path: str,
      .withColumn("tombstone", F.lit(False))
      .repartition(F.col("cell"))
      .write.mode("overwrite").partitionBy(*parts).parquet(path))
+    jpath, fs = _hadoop_path_fs(df.sparkSession, path)
+    if not any(st.isDirectory() for st in fs.listStatus(jpath)):
+        fs.delete(jpath, True)
+        raise ValueError(
+            f"write_ivfpq_index: the input holds no non-null, nonzero "
+            f"{vec_col!r} vector, and an empty store cannot be read")
 
 
 def upsert_ivfpq_index(spark, df: DataFrame, path: str,

@@ -49,7 +49,6 @@ _NSW_W = 16           # per-level beam width AND seed count (constant in n)
 _NSW_L1_ROUNDS = 2    # beam rounds per graph-indexed hierarchy level
 _NSW_STOP_K = 32      # early-termination window (operators.nsw.NSW_STOP_K)
 _NSW_HIER_FLOOR = 16  # level size below this -> score the level flat
-_NSW_SEEDS = (1, 101, 201, 301)  # legacy fixed-entry mode (tests only)
 
 
 def _nsw_corpus_n(spark: SparkSession, sf_dir: str, df: DataFrame,
@@ -63,16 +62,6 @@ def _nsw_corpus_n(spark: SparkSession, sf_dir: str, df: DataFrame,
     1 for the base corpus, the held-out query count for recall
     corpora)."""
     return df.filter(F.col("embedding").isNotNull()).count()
-
-
-def _nsw_l1_n(spark: SparkSession, sf_dir: str, df: DataFrame,
-              min_id: int, stride: int) -> int:
-    """L1-layer size for the same corpus — same honest-count contract
-    as ``_nsw_corpus_n`` (the coarse layer is ``vec_id % stride == 0``
-    within the ``vec_id >= min_id`` corpus)."""
-    return df.filter(
-        F.col("embedding").isNotNull()
-        & (F.pmod(F.col("vec_id"), F.lit(int(stride))) == 0)).count()
 
 
 def _nsw_stored_params(spark: SparkSession, store: str) -> tuple:
@@ -283,7 +272,6 @@ def ann_nsw_beam_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         _nsw_corpus_n(spark, sf_dir, base, 1))
     top = nsw_knn(base, qvec, k=10, m=_NSW_M, ef=ef, rounds=rounds,
                   stride=stride, n_entry=_NSW_ENTRY,
-                  n1=_nsw_l1_n(spark, sf_dir, base, 1, stride),
                   sim_col="similarity")
     return top.select("vec_id", "label", "similarity")
 
@@ -351,7 +339,6 @@ def ann_nsw_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_top = nsw_knn(base, qvec, k=10, m=_NSW_M, ef=ef,
                          rounds=rounds, stride=stride,
                          n_entry=_NSW_ENTRY,
-                         n1=_nsw_l1_n(spark, sf_dir, base, 1, stride),
                          sim_col="sim").select("vec_id")
     overlap = exact_top.join(approx_top, "vec_id")
     return (exact_top.agg(F.count(F.lit(1)).alias("n_exact"))
@@ -556,12 +543,11 @@ def ann_nsw_mean_recall_at_10(spark: SparkSession,
     one draw; the family rule wants the distribution) via the BATCHED
     beam ``operators.nsw.beam_search_knn_batch``: one qid-keyed frontier
     relation serves all 20 queries per round — one edge join, one anti
-    join, one scored point-read, one per-qid window, ZERO driver
-    collects (the throughput serving form; the single-query beam's
-    bounded collects disappear into the qid key).  Graph over the
+    join, one scored point-read, one per-qid window and one collect of
+    per-qid stop values (the throughput serving form: per-query state
+    rides the qid key).  Graph over the
     held-out corpus (ids ≥ 20), store cached per corpus fingerprint."""
     from openai_vector_search_demo_spark.operators.nsw import (
-        NSW_HIER_FLOOR,
         beam_search_knn_batch,
         resolve_stored_edges,
         resolve_stored_levels,
@@ -576,21 +562,14 @@ def ann_nsw_mean_recall_at_10(spark: SparkSession,
 
     store = _nsw_store(spark, sf_dir, corpus.select("vec_id", "embedding"),
                        kind="nswnq")
-    stride, ef, rounds = _nsw_stored_params(spark, store)
+    _, ef, rounds = _nsw_stored_params(spark, store)
     # batch serving: resolve the store's undirected traversal relation
     # ONCE per job (merge-on-read window + symmetrize), amortized over
-    # every query in the batch; the L1 layer rides along the same way
-    # (√n-sized, one read)
+    # every query in the batch; the levels ride along the same way
+    # (√n-sized, one read), with the flat-top modulus from the store's
+    # frozen geometry
     edges = resolve_stored_edges(spark, store, m=_NSW_M)
-    levels, l1_meta = resolve_stored_levels(spark, store, m=_NSW_M)
-    # flat-top predicate from the store's frozen geometry: the product
-    # of every stride down to (and including) the first below-floor
-    # level — v4's generalized stride·stride2
-    flat_mod, counts = 1, l1_meta["counts"]
-    for s, cnt in zip(l1_meta["strides"], counts):
-        flat_mod *= s
-        if cnt < NSW_HIER_FLOOR:
-            break
+    levels, flat_mod = resolve_stored_levels(spark, store, m=_NSW_M)
 
     from openai_vector_search_demo_spark.caching import cache_scope
     from openai_vector_search_demo_spark.functions.vectors import (
@@ -603,9 +582,7 @@ def ann_nsw_mean_recall_at_10(spark: SparkSession,
         # (visited counts — the number the curve slot prices)
         allv = beam_search_knn_batch(
             edges, corpus, queries_df, k=1 << 30, ef=ef, rounds=rounds,
-            stride=stride, n_entry=_NSW_ENTRY,
-            hier_levels=levels or None,
-            flat_mod=flat_mod if levels else None)
+            n_entry=_NSW_ENTRY, hier_levels=levels, flat_mod=flat_mod)
         n_corpus = corpus.filter(F.col("embedding").isNotNull()).count()
         # exact per-qid top-10: one qid-keyed rank over the scored
         # cross relation (the oracle's bsims twin)
@@ -1163,7 +1140,7 @@ def dedup_graph_index_capstone(spark: SparkSession,
     from openai_vector_search_demo_spark.operators.nsw import (
         beam_search_knn,
         build_knn_graph,
-        build_l1_graph,
+        inline_levels,
         nsw_serving_params,
         symmetrize_edges,
     )
@@ -1191,20 +1168,17 @@ def dedup_graph_index_capstone(spark: SparkSession,
         for phase, nodes in [("dedup_first", survivors),
                              ("no_dedup", rep)]:
             n = nodes.count()
-            stride, ef, rounds = nsw_serving_params(n)
+            _, ef, rounds = nsw_serving_params(n)
             edges = build_knn_graph(nodes, m=_CAP_M)
             n_edges = edges.count()
             comp = duplicate_clusters(edges.select(
                 F.col("src").alias("id_a"), F.col("dst").alias("id_b")))
             n_comp = (comp.select("cluster_id").distinct().count())
-            n1 = nodes.filter(
-                F.pmod(F.col("vec_id"), F.lit(int(stride))) == 0).count()
-            l1 = build_l1_graph(nodes, stride, m=_CAP_M)
+            levels, flat_mod = inline_levels(nodes, n, m=_CAP_M)
             top = beam_search_knn(symmetrize_edges(edges), nodes, qvec,
                                   k=10, ef=ef, rounds=rounds,
-                                  stride=stride,
                                   n_entry=_NSW_ENTRY,
-                                  l1_edges=l1, n1=n1)
+                                  hier_levels=levels, flat_mod=flat_mod)
             got = {r2.vec_id % 1000 for r2 in top.collect()}
             rows.append((phase, n, n_edges, n_comp,
                          round(len(got & exact) / 10.0, 3)))
@@ -2487,7 +2461,7 @@ def ann_nsw_filtered_recall_curve(spark: SparkSession,
     1.0.  Each row receipts the price too: effective ef, nodes
     visited, matches visited, overlap vs the exact filtered top-10.
     One graph serves every predicate — zero per-predicate index
-    state."""
+    state — and points with the same widened ef share one serve."""
     from openai_vector_search_demo_spark.operators.knn import knn
     from openai_vector_search_demo_spark.operators.nsw import (
         nsw_filtered_ef,
@@ -2509,14 +2483,25 @@ def ann_nsw_filtered_recall_curve(spark: SparkSession,
         "sel50": F.col("label") < 5,
     }
 
+    n_match = (base.filter(F.col("embedding").isNotNull())
+               .agg(*[F.count(F.when(pred, 1)).alias(tag)
+                      for tag, pred in preds.items()])
+               .first().asDict())
+    ef_eff = {tag: nsw_filtered_ef(ef, n_match[tag], n_total, k=10, cap=4)
+              for tag in preds}
+    # every point serves the same query on the same graph with no stop
+    # rule, so points with equal ef_eff visit the same set: serve once
+    # per distinct width, and let each point filter that set
+    widths = sorted(set(ef_eff.values()))
+    visited = dict(zip(widths, run_concurrent([
+        lambda e=e: nsw_stored_knn(spark, store, base, qvec, k=1 << 20,
+                                   ef=e, rounds=rounds, stride=stride,
+                                   n_entry=_NSW_ENTRY, sim_col="s",
+                                   stop_k=None)
+        for e in widths])))
+
     def point(tag, pred):
-        n_match = base.filter(F.col("embedding").isNotNull() & pred) \
-            .count()
-        ef_eff = nsw_filtered_ef(ef, n_match, n_total, k=10, cap=4)
-        allv = nsw_stored_knn(spark, store, base, qvec, k=1 << 20,
-                              ef=ef_eff, rounds=rounds, stride=stride,
-                              n_entry=_NSW_ENTRY, sim_col="s",
-                              stop_k=None)
+        allv = visited[ef_eff[tag]]
         n_visited = allv.count()
         n_mv = allv.filter(pred).count()
         ft = (allv.filter(pred)
@@ -2526,12 +2511,12 @@ def ann_nsw_filtered_recall_curve(spark: SparkSession,
                   tie_break="vec_id").select("vec_id"))
         n_exact = fx.count()
         n_overlap = fx.join(ft, "vec_id").count()
-        return (tag, ef_eff, n_exact, n_match, n_mv, n_overlap,
+        return (tag, ef_eff[tag], n_exact, n_match[tag], n_mv, n_overlap,
                 n_visited, round(n_overlap / n_exact, 3))
 
-    # the three points are independent serving queries — submit them
-    # from three driver threads so their (many, tiny) beam-round jobs
-    # interleave: wall-clock = max(point), not sum (run_concurrent)
+    # the serves and the points are independent driver-side queries —
+    # submit them from driver threads so their (many, tiny) jobs
+    # interleave: wall-clock = max, not sum (run_concurrent)
     rows = run_concurrent([
         lambda tag=tag, pred=pred: point(tag, pred)
         for tag, pred in preds.items()])
@@ -2879,7 +2864,7 @@ def ann_nsw_cellbuild_mean_recall_at_10(spark: SparkSession,
     from openai_vector_search_demo_spark.operators.nsw import (
         beam_search_knn_batch,
         build_knn_graph_sharded,
-        build_l1_graph,
+        inline_levels,
         nsw_serving_params,
         symmetrize_edges,
     )
@@ -2890,8 +2875,8 @@ def ann_nsw_cellbuild_mean_recall_at_10(spark: SparkSession,
     queries_df = (emb.filter(F.col("vec_id") < _CB_NQ)
                   .select(F.col("vec_id").alias("qid"),
                           F.col("embedding").alias("qv")))
-    stride, ef, rounds = nsw_serving_params(
-        _nsw_corpus_n(spark, sf_dir, corpus, _CB_NQ))
+    n = _nsw_corpus_n(spark, sf_dir, corpus, _CB_NQ)
+    _, ef, rounds = nsw_serving_params(n)
     w = Window.partitionBy("qid").orderBy(F.col("_s").desc(),
                                           F.col("vec_id").asc())
     rows = []
@@ -2905,14 +2890,13 @@ def ann_nsw_cellbuild_mean_recall_at_10(spark: SparkSession,
                  .filter(F.col("_rn") <= 10).select("qid", "vec_id")
                  .withColumn("hit", F.lit(1)))
         exact = scoped_persist(exact)
-        # the hierarchical ENTRY layer is mode-independent (exact L1
-        # graph over the coarse subset — not the sharded build under
+        # the hierarchical ENTRY levels are mode-independent (exact
+        # graphs over the level subsets — not the sharded build under
         # test), so one build serves both modes' beams
         base = corpus.select("vec_id", "embedding") \
             .filter(F.col("embedding").isNotNull())
-        n1 = base.filter(
-            F.pmod(F.col("vec_id"), F.lit(int(stride))) == 0).count()
-        l1 = scoped_persist(build_l1_graph(base, stride, m=_NSW_M))
+        levels, flat_mod = inline_levels(base, n, m=_NSW_M)
+        levels = [scoped_persist(lv) for lv in levels]
         for a in (1, 2):
             edges = build_knn_graph_sharded(
                 corpus.select("vec_id", "embedding"),
@@ -2921,8 +2905,8 @@ def ann_nsw_cellbuild_mean_recall_at_10(spark: SparkSession,
             n_edges = edges.count()
             allv = beam_search_knn_batch(
                 symmetrize_edges(edges), corpus, queries_df,
-                k=1 << 30, ef=ef, rounds=rounds, stride=stride,
-                n_entry=_NSW_ENTRY, l1_edges=l1, n1=n1)
+                k=1 << 30, ef=ef, rounds=rounds, n_entry=_NSW_ENTRY,
+                hier_levels=levels, flat_mod=flat_mod)
             per = (allv.join(F.broadcast(exact), ["qid", "vec_id"],
                              "left")
                    .groupBy("qid")
@@ -3181,7 +3165,6 @@ def ann_nsw_fixed_ef_scaling(spark: SparkSession,
         cosine_similarity,
     )
     from openai_vector_search_demo_spark.operators.nsw import (
-        NSW_HIER_FLOOR,
         beam_search_knn_batch,
         nsw_serving_params,
         resolve_stored_edges,
@@ -3202,15 +3185,11 @@ def ann_nsw_fixed_ef_scaling(spark: SparkSession,
                                      path, m=_NSW_M),
         **_SCALE_PARAMS)
     edges = resolve_stored_edges(spark, store, m=_NSW_M)
-    levels, meta = resolve_stored_levels(spark, store, m=_NSW_M)
+    levels, flat_mod = resolve_stored_levels(spark, store, m=_NSW_M)
     # the oracle unrolls exactly two graph levels — fail loudly if the
     # fixture's geometry ever drifts from that depth
-    assert len(levels) == 2, f"expected depth-2 hierarchy, got {meta}"
-    flat_mod = 1
-    for s, cnt in zip(meta["strides"], meta["counts"]):
-        flat_mod *= s
-        if cnt < NSW_HIER_FLOOR:
-            break
+    assert len(levels) == 2, \
+        f"expected depth-2 hierarchy, got {len(levels)} levels"
     n_corpus = corpus.filter(F.col("embedding").isNotNull()).count()
     # ef/rounds are the registered CONSTANTS (the claim under test);
     # the entry geometry comes from the store's frozen meta
@@ -3220,8 +3199,7 @@ def ann_nsw_fixed_ef_scaling(spark: SparkSession,
     with cache_scope():
         allv = beam_search_knn_batch(
             edges, corpus, queries_df, k=1 << 30, ef=ef, rounds=rounds,
-            stride=int(meta["stride"]), n_entry=_NSW_ENTRY,
-            hier_levels=levels, flat_mod=flat_mod)
+            n_entry=_NSW_ENTRY, hier_levels=levels, flat_mod=flat_mod)
         sims = (corpus.select("vec_id", "embedding")
                 .crossJoin(F.broadcast(queries_df))
                 .withColumn("_s", F.round(

@@ -389,16 +389,6 @@ def test_nsw_serving_params_autoscale():
     assert nsw_serving_params(10 ** 9)[1:] == (160, 8)  # flat in n
 
 
-def test_nsw_l1_params():
-    from openai_vector_search_demo_spark.operators.nsw import (
-        nsw_l1_params,
-    )
-    assert nsw_l1_params(44) == (7, True)    # sf0.1 L1 layer
-    assert nsw_l1_params(22) == (5, True)    # sf0.01 L1 layer
-    assert nsw_l1_params(6) == (3, False)    # below the hier floor
-    assert nsw_l1_params(1) == (2, False)
-
-
 def test_symmetric_traversal_uses_reverse_edges(spark):
     """A spoke reachable ONLY via a reverse edge: c's nearest is b, but
     nobody's out-list points at c.  Directed traversal from a never
@@ -450,7 +440,7 @@ def test_coarse_entry_stored_equals_inline(spark, emb, tmp_path):
     queries = spark.createDataFrame([(7, qvec)], "qid long, qv array<double>")
     batched = [(r.vec_id, r.similarity) for r in
                beam_search_knn_batch(edges, base, queries, k=10, ef=6,
-                                     rounds=2, stride=5,
+                                     rounds=2, flat_mod=5,
                                      n_entry=3).collect()]
     assert batched == inline
 
@@ -588,6 +578,16 @@ def test_filtered_ef_widening():
     assert nsw_filtered_ef(68, 0, 1999, k=10, cap=4) == 68 * 4
 
 
+def _hier_fixture(spark):
+    """The 400-vector fixture whose level 1 holds 20 ≥ NSW_HIER_FLOOR
+    nodes, so entry descends a real graph level."""
+    rng = np.random.RandomState(7)
+    return spark.createDataFrame(
+        [(i, i % 4, [round(float(x), 6) for x in rng.randn(DIM)])
+         for i in range(1, 401)],
+        "vec_id long, label int, embedding array<double>")
+
+
 @pytest.mark.slow
 def test_hierarchical_entry_stored_equals_inline(spark, tmp_path):
     """The v3 HIERARCHICAL path proper (n1 >= NSW_HIER_FLOOR, so the
@@ -599,11 +599,7 @@ def test_hierarchical_entry_stored_equals_inline(spark, tmp_path):
         nsw_serving_params,
         read_l1_meta,
     )
-    rng = np.random.RandomState(7)
-    big = spark.createDataFrame(
-        [(i, i % 4, [round(float(x), 6) for x in rng.randn(DIM)])
-         for i in range(1, 401)],
-        "vec_id long, label int, embedding array<double>")
+    big = _hier_fixture(spark)
     n = 400
     stride, ef, rounds = nsw_serving_params(n)   # stride 20 -> n1 = 20
     store = str(tmp_path / "nswh")
@@ -622,42 +618,115 @@ def test_hierarchical_entry_stored_equals_inline(spark, tmp_path):
     assert stored == inline and len(stored) == 10
 
 
+def test_both_engines_serve_the_same_answer_and_visited_set(spark):
+    """One entry form and one stop rule: on the hierarchical fixture the
+    relational batch engine and the driver-side engine return, per
+    query, the same top-10 and the same whole visited set — with the
+    stop rule on and off — and so does a flat entry at a stride other
+    than ⌈√n⌉."""
+    from openai_vector_search_demo_spark.operators.nsw import (
+        NSW_STOP_K,
+        beam_search_knn_batch,
+        inline_levels,
+        symmetrize_edges,
+    )
+    big = _hier_fixture(spark)
+    edges = symmetrize_edges(build_knn_graph(big, m=3)).localCheckpoint()
+    levels, flat_mod = inline_levels(big, 400, m=3)
+    assert len(levels) == 1 and flat_mod == 20 * 5
+    levels = [lv.localCheckpoint() for lv in levels]
+    qvecs = {100: [0.2] * DIM, 200: [(-1) ** i * 0.3 for i in range(DIM)]}
+    queries = spark.createDataFrame(list(qvecs.items()),
+                                    "qid long, qv array<double>")
+    visited_sizes = {}
+    for entry, stop_k in [((levels, flat_mod), NSW_STOP_K),
+                          ((levels, flat_mod), None),
+                          (([], 7), NSW_STOP_K)]:
+        kw = dict(k=1 << 20, ef=16, rounds=8, n_entry=4,
+                  hier_levels=entry[0], flat_mod=entry[1], stop_k=stop_k)
+        batch = {}
+        for r in beam_search_knn_batch(edges, big, queries,
+                                       **kw).collect():
+            batch.setdefault(r.qid, []).append((r.rank, r.vec_id,
+                                                r.similarity))
+        for qid, qv in qvecs.items():
+            got = [(v, s) for _, v, s in sorted(batch[qid])]
+            want = [(r.vec_id, r.similarity) for r in
+                    beam_search_knn(edges, big, qv, **kw).collect()]
+            assert got[:10] == want[:10], (qid, entry[1], stop_k)
+            assert set(got) == set(want), (qid, entry[1], stop_k)
+            visited_sizes[(qid, entry[1], stop_k)] = len(want)
+    # the stop rule fired: it ended some beam before its last round
+    assert any(visited_sizes[(q, flat_mod, NSW_STOP_K)]
+               < visited_sizes[(q, flat_mod, None)] for q in qvecs)
+
+
+def _jobs_of(spark, group, fn):
+    """(fn(), the ids of the Spark jobs it ran), from the status tracker
+    per job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_stored_serve_job_budget(spark, tmp_path):
     """On the hierarchical fixture one stored serve runs only its beam
     rounds — no parquet schema-inference job (the store schema is
     fixed) — and its answer is a local relation, so collecting it runs
     no job at all.  Counted from the status tracker per job group."""
-    rng = np.random.RandomState(7)
-    big = spark.createDataFrame(
-        [(i, i % 4, [round(float(x), 6) for x in rng.randn(DIM)])
-         for i in range(1, 401)],
-        "vec_id long, label int, embedding array<double>")
+    big = _hier_fixture(spark)
     store = str(tmp_path / "nswh")
     write_nsw_index(big, store, m=3, n_buckets=4)
     stride, ef, rounds = nsw_serving_params(400)
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-
-    def jobs_of(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return out, st.getJobIdsForGroup(group)
-
-    top, serve_jobs = jobs_of("nsw-budget-serve", lambda: nsw_stored_knn(
-        spark, store, big, [0.2] * DIM, k=10, ef=ef, rounds=rounds,
-        n_buckets=4, m=3, stride=stride))
+    st = spark.sparkContext.statusTracker()
+    top, serve_jobs = _jobs_of(spark, "nsw-budget-serve",
+                               lambda: nsw_stored_knn(
+                                   spark, store, big, [0.2] * DIM, k=10,
+                                   ef=ef, rounds=rounds, n_buckets=4, m=3,
+                                   stride=stride))
     stages = [st.getStageInfo(s).name for j in serve_jobs
               for s in st.getJobInfo(j).stageIds]
     assert serve_jobs, "the beam rounds run as jobs of the group"
     assert not [n for n in stages if n.startswith("parquet at")], stages
-    rows, collect_jobs = jobs_of("nsw-budget-collect", top.collect)
+    rows, collect_jobs = _jobs_of(spark, "nsw-budget-collect", top.collect)
     assert len(rows) == 10
-    assert list(collect_jobs) == []
+    assert collect_jobs == []
+
+
+def test_batch_engine_jobs_per_base_round(spark):
+    """The relational engine's Spark jobs per base round, with the stop
+    rule evaluated every round (``stop_k`` too large to fire): one
+    collect of per-qid stop values, on top of the round's two
+    checkpoints.  Measured at 14-15 per round on this fixture (AQE
+    splits a round's stages into a varying number of jobs, so the count
+    is averaged over two rounds); the former aggregate-join stop rule,
+    with its frontier checkpoint and ``isEmpty()`` job, ran 18."""
+    from openai_vector_search_demo_spark.operators.nsw import (
+        beam_search_knn_batch,
+        symmetrize_edges,
+    )
+    big = _hier_fixture(spark)
+    edges = symmetrize_edges(build_knn_graph(big, m=3)).localCheckpoint()
+    queries = spark.createDataFrame(
+        [(100, [0.2] * DIM), (200, [-0.3] * DIM)],
+        "qid long, qv array<double>")
+
+    def serve(rounds):
+        return _jobs_of(spark, f"nsw-batch-rounds-{rounds}",
+                        lambda: beam_search_knn_batch(
+                            edges, big, queries, k=1 << 20, ef=4,
+                            rounds=rounds, seeds=[1, 101, 201],
+                            stop_k=10 ** 6).collect())
+
+    (one, jobs1), (three, jobs3) = serve(1), serve(3)
+    assert len(three) > len(one), "the two extra rounds found newcomers"
+    assert (len(jobs3) - len(jobs1)) / 2 <= 15
 
 
 @pytest.mark.slow

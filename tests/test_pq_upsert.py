@@ -289,3 +289,28 @@ def test_tenant_store_serves_tenant_only(spark, tmp_path, parts):
     files1 = spark.read.parquet(f"{shared}/tenant=1").inputFiles()
     assert files0 and files1 and not set(files0) & set(files1)
     assert all("tenant=0" in f for f in files0)
+
+
+def test_write_over_empty_input_raises_and_leaves_no_store(
+        spark, tmp_path, parts, store_root):
+    """A store with zero rows holds no parquet file, so no reader could
+    open it: the write raises instead, names the empty input, and
+    leaves nothing at the path — under ``open_or_build`` nothing is
+    published either."""
+    from openai_vector_search_demo_spark.operators.pq import (
+        write_ivfpq_index,
+    )
+    from openai_vector_search_demo_spark.stores import open_or_build
+    base, _, cent, cb = parts
+    for tag, frame in [("empty", base.limit(0)),
+                       ("nulls", base.limit(3).withColumn(
+                           "embedding", F.lit(None).cast("array<float>")))]:
+        store = str(tmp_path / tag)
+        with pytest.raises(ValueError, match="no non-null, nonzero"):
+            write_ivfpq_index(frame, store, cent, cb)
+        assert not os.path.exists(store)
+    with pytest.raises(ValueError, match="no non-null, nonzero"):
+        open_or_build(spark, "ivfpq_empty", 1, [],
+                      lambda path: write_ivfpq_index(base.limit(0), path,
+                                                     cent, cb))
+    assert os.listdir(store_root) == []

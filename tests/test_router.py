@@ -63,10 +63,7 @@ def test_forced_graph_branch_equals_direct_nsw_knn(spark, base, qvec):
     )
     n = base.filter(F.col("embedding").isNotNull()).count()
     stride, ef, rounds = nsw_serving_params(n)
-    n1 = base.filter(F.col("embedding").isNotNull()
-                     & (F.pmod(F.col("vec_id"), F.lit(int(stride))) == 0)) \
-        .count()
-    kw = dict(ef=ef, rounds=rounds, stride=stride, n1=n1)
+    kw = dict(ef=ef, rounds=rounds, stride=stride)
     tier, top = auto_knn(base, qvec, k=10, n=n, exact_max=0, nsw_kwargs=kw)
     assert tier == "graph"
     got = [(r["vec_id"], r["similarity"])
