@@ -72,7 +72,7 @@ def main() -> None:
         # the demo writes the global-build store (the slot-shaped path);
         # a production job writes the sharded edges the same way
         corpus = survivors.filter(F.col("vec_id") % 7 != 3)
-        write_nsw_index(corpus, store, n_buckets=8)
+        write_nsw_index(corpus, store)
 
         def serve(tag, source, **kw):
             # recompute the autoscale from THIS corpus: the stored L1
@@ -83,7 +83,7 @@ def main() -> None:
                 source.filter(F.col("embedding").isNotNull()).count())
             top = nsw_stored_knn(spark, store, source, qvec, k=5,
                                  ef=ef, rounds=rounds, stride=stride,
-                                 n_buckets=8, **kw).collect()
+                                 **kw).collect()
             print(f"{tag}: " + ", ".join(
                 f"{r.vec_id}@{r.similarity:.4f}" for r in top))
             return top
@@ -94,7 +94,7 @@ def main() -> None:
 
         # 4. insert the held-out batch without a rebuild
         batch = survivors.filter(F.col("vec_id") % 7 == 3)
-        upsert_nsw_index(spark, store, batch, corpus, n_buckets=8)
+        upsert_nsw_index(spark, store, batch, corpus)
         print(f"[4] upserted {batch.count()} vectors (merge-on-read "
               "exact; no rebuild)")
         top = serve("    post-upsert serve", survivors)
@@ -109,8 +109,7 @@ def main() -> None:
         # 6. filtered serving: predicate on RESULTS, ghosts carry beam
         lbl = top[1].label
         allv = nsw_stored_knn(spark, store, survivors, qvec, k=1 << 20,
-                              ef=ef, rounds=rounds, stride=stride,
-                              n_buckets=8)
+                              ef=ef, rounds=rounds, stride=stride)
         flt = (allv.filter(F.col("label") == lbl)
                .orderBy(F.col("similarity").desc(), F.col("vec_id"))
                .limit(5).collect())

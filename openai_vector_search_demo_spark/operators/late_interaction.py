@@ -242,6 +242,11 @@ def li_tenant_path(path: str, tenant) -> str:
             "/idx")
 
 
+_FEATURE_SCHEMA = "id long, pos int, w double, bucket int"
+"""What ``write_token_window_index`` stores (``token_window_features``
+with its partition column last): serving reads it without inference."""
+
+
 def write_token_window_index(df: DataFrame, path: str,
                              text_col: str = "text", id_col: str = "doc_id",
                              max_tokens: int = 64, window: int = 1,
@@ -316,7 +321,7 @@ def late_interaction_stored_topk(spark, store: str, query: str, k: int = 10,
     qdf = spark.createDataFrame(qfeats, "qpos int, bucket int, wq double")
     probes = sorted({b for _, b, _ in qfeats})
     dfeat = (read_probed_partitions(spark, store, "bucket", probes,
-                                    table=table)
+                                    table=table, schema=_FEATURE_SCHEMA)
              .repartition(F.col("id")))
     dpos = spark.read.parquet(store + "_meta")
     return _maxsim_topk(dfeat, qdf, dpos, id_col, score_col, k)

@@ -37,9 +37,13 @@ A query scores the flat top exactly, then DESCENDS: per level,
 ``NSW_L1_ROUNDS`` beam rounds at constant width ``NSW_HIER_W``,
 re-seeded from the running pool's top; the base beam starts from the
 pool's top-``NSW_ENTRY_COUNT`` (every level-visited node stays a
-candidate).  With no levels the flat top is the first stride layer
-itself — a flat coarse entry.  This is the reference's HNSW
-multi-layer structure (modules/utilities.py:272-278): entry work is
+candidate).  The deepest level holds < ``NSW_HIER_FLOOR``² nodes at
+any n, so the single-query engine reads it whole in its entry action —
+scores, adjacency, and the next layer's adjacency of its nodes — and
+runs that level's descent with no further action.  With no levels the
+flat top is the first stride layer itself — a flat coarse entry.  This
+is the reference's HNSW multi-layer structure
+(modules/utilities.py:272-278): entry work is
 depth·{NSW_L1_ROUNDS}·{NSW_HIER_W}·2M evaluations with depth =
 Θ(log log n) — flat in n for any real corpus.  Each of T base rounds
 expands the frontier's adjacency SYMMETRICALLY (out-edges ∪ reversed
@@ -89,6 +93,7 @@ from openai_vector_search_demo_spark.functions.vectors import (
     id_in,
     vector_lit,
 )
+from openai_vector_search_demo_spark.stores import local_frame
 
 NSW_M = 16         # out-neighbors kept per node (traversal is SYMMETRIC)
 NSW_EF = 12        # beam-width floor (tests' explicit-knob mode)
@@ -179,14 +184,15 @@ def nsw_hier_plan(df: DataFrame, n: int,
 
 def inline_levels(df: DataFrame, n: int, m: int = NSW_M,
                   vec_col: str = "embedding", id_col: str = "vec_id"
-                  ) -> tuple[list[DataFrame], int]:
+                  ) -> tuple[list[tuple[DataFrame, int]], int]:
     """(hier_levels, flat_mod) built inline over the non-null corpus
     ``df`` of size ``n``: the ``nsw_hier_plan`` geometry, one
-    symmetrized exact top-``m`` graph per ``_level_plan`` level (L1 →
-    Ld, unexecuted), and the flat-top modulus."""
+    (symmetrized exact top-``m`` graph, stride product) pair per
+    ``_level_plan`` level (L1 → Ld, graphs unexecuted), and the
+    flat-top modulus."""
     plan, flat_mod = _level_plan(*nsw_hier_plan(df, n, id_col=id_col))
-    return [build_l1_graph(df, prod, m=m, vec_col=vec_col, id_col=id_col)
-            for _, prod in plan], flat_mod
+    return [(build_l1_graph(df, prod, m=m, vec_col=vec_col, id_col=id_col),
+             prod) for _, prod in plan], flat_mod
 
 
 def nsw_filtered_ef(ef: int, n_match: int, n_total: int,
@@ -386,13 +392,32 @@ def build_knn_graph_sharded(df: DataFrame, centroids,
             .filter(F.col("_rn") <= m).drop("_rn"))
 
 
+NSW_BUCKET_ROWS = 1 << 17
+"""Stored rows per src bucket: opening one more parquet file costs
+about as much CPU as reading 10^5 rows or more (measured ~9 ms a file
+and ≥ 34 ns a row on local[4]), and a serving round's frontier touches
+nearly every bucket, so a layer is split only once each bucket holds
+this many rows."""
+NSW_MAX_BUCKETS = 16
+
+
+def nsw_buckets(nodes: int, m: int = NSW_M) -> int:
+    """Bucket count of a stored graph layer of ``nodes`` nodes: its
+    2·m·nodes dual rows over ``NSW_BUCKET_ROWS`` per bucket, in
+    [1, {NSW_MAX_BUCKETS}]."""
+    return min(NSW_MAX_BUCKETS, max(1, 2 * m * nodes // NSW_BUCKET_ROWS))
+
+
 def write_nsw_index(df: DataFrame, path: str, m: int = NSW_M,
-                    vec_col: str = "embedding", id_col: str = "vec_id",
-                    n_buckets: int = 16) -> None:
+                    vec_col: str = "embedding", id_col: str = "vec_id"
+                    ) -> None:
     """Persist the serving artifact: the adjacency table, BUCKETED BY
-    SRC (one directory per ``pmod(src, n_buckets)``) so each beam
-    round's frontier lookup is a partition-pruned point read of ≤ ef
-    buckets; the vectors stay in the source table.
+    SRC (one directory per ``pmod(src, b)``, one file each) so a beam
+    round's frontier lookup reads only the frontier's buckets; the
+    vectors stay in the source table.  Each layer's bucket count ``b``
+    is ``nsw_buckets`` of its node count — one bucket below 8192 nodes
+    at M = {NSW_M}, where a serving round's frontier would touch every
+    bucket anyway — and lands per layer in the manifest.
 
     Each directed top-M edge is written in BOTH directions: the
     out-edge with ``fwd = true`` (the canonical list the merge-on-read
@@ -409,14 +434,19 @@ def write_nsw_index(df: DataFrame, path: str, m: int = NSW_M,
     base = df.filter(F.col(vec_col).isNotNull())
     n = base.count()
     strides, counts = nsw_hier_plan(base, n, id_col=id_col)
+    plan = _level_plan(strides, counts)[0]
+    buckets = {"": nsw_buckets(n, m),
+               **{f"_L{lvl}": nsw_buckets(counts[lvl - 1], m)
+                  for lvl, _ in plan}}
     _write_graph_dual(build_knn_graph(df, m=m, vec_col=vec_col,
-                                      id_col=id_col), path, n_buckets)
-    for lvl, prod in _level_plan(strides, counts)[0]:
+                                      id_col=id_col), path, buckets[""])
+    for lvl, prod in plan:
         sub = base.filter(F.pmod(F.col(id_col), F.lit(int(prod))) == 0)
         _write_graph_dual(build_knn_graph(sub, m=m, vec_col=vec_col,
                                           id_col=id_col),
-                          f"{path.rstrip('/')}/_L{lvl}", n_buckets)
-    _write_hier_meta(df.sparkSession, path, strides, counts, m, n=n)
+                          f"{path.rstrip('/')}/_L{lvl}",
+                          buckets[f"_L{lvl}"])
+    _write_hier_meta(df.sparkSession, path, strides, counts, m, n, buckets)
 
 
 def _level_plan(strides, counts) -> tuple[list, int]:
@@ -441,24 +471,25 @@ one parquet-footer job per read."""
 _TOMBSTONE_SCHEMA = "vec_id long"
 
 
-def _dual_rows(edges: DataFrame, n_buckets: int) -> DataFrame:
+def _dual_rows(edges: DataFrame, nb: int) -> DataFrame:
     """A directed top-M adjacency in the store's DUAL format: every edge
     under its src bucket with ``fwd = true`` (the canonical list
     merge-on-read resolves) plus a ``fwd = false`` mirror under the
-    dst's bucket (symmetric traversal stays a src-pruned point read) —
-    see ``write_nsw_index``."""
+    dst's bucket (symmetric traversal stays a src-pruned point read),
+    the layer split into ``nb`` buckets — see ``write_nsw_index``."""
     both = (edges.withColumn("fwd", F.lit(True))
             .unionByName(edges.select(F.col("dst").alias("src"),
                                       F.col("src").alias("dst"), "sim")
                          .withColumn("fwd", F.lit(False))))
     return both.withColumn(
-        "bucket", F.pmod(F.col("src"), F.lit(n_buckets)).cast("int"))
+        "bucket", F.pmod(F.col("src"), F.lit(nb)).cast("int"))
 
 
 def _write_graph_dual(edges: DataFrame, path: str,
-                      n_buckets: int) -> None:
-    """Persist a directed top-M adjacency at ``path`` (``_dual_rows``)."""
-    (_dual_rows(edges, n_buckets).repartition(F.col("bucket"))
+                      nb: int) -> None:
+    """Persist a directed top-M adjacency at ``path`` (``_dual_rows``),
+    one file in each of ``nb`` bucket directories."""
+    (_dual_rows(edges, nb).repartition(F.col("bucket"))
      .write.mode("overwrite").partitionBy("bucket").parquet(path))
 
 
@@ -468,27 +499,43 @@ write-time geometry plus the segments upserts and deletes added."""
 
 
 def _hier_meta(strides: list[int], counts: list[int], m: int,
-               n: int) -> dict:
+               n: int, buckets: dict) -> dict:
     """The frozen write-time geometry ``_L1_META`` records: the full
     ``strides``/``counts`` level stack, ``stride`` (= ``strides[0]``,
-    what serving slots compare their stride against), ``m``, and the
+    what serving slots compare their stride against), ``m``, the
     corpus size ``n`` (r16) so serving slots can derive their stride
-    from the store artifact instead of a per-run count job."""
+    from the store artifact instead of a per-run count job, and each
+    layer's bucket count (``buckets``, keyed ``""``, ``_L1``, …)."""
     return {"stride": int(strides[0]),
             "m": int(m),
             "strides": [int(s) for s in strides],
             "counts": [int(c) for c in counts],
-            "n": int(n)}
+            "n": int(n),
+            "buckets": {k: int(b) for k, b in buckets.items()}}
 
 
 def _write_hier_meta(spark, path: str, strides: list[int],
-                     counts: list[int], m: int, n: int) -> None:
+                     counts: list[int], m: int, n: int,
+                     buckets: dict) -> None:
     """Write a fresh store's ``_L1_META`` (no segments yet)."""
     import json
 
     from openai_vector_search_demo_spark.stores import fs_write_text
     fs_write_text(spark, f"{path.rstrip('/')}/{_META}",
-                  json.dumps(_hier_meta(strides, counts, m, n)))
+                  json.dumps(_hier_meta(strides, counts, m, n, buckets)))
+
+
+def _layer_buckets(path: str, meta: dict, layer: str) -> int:
+    """The bucket count ``meta`` records for ``layer``: every reader and
+    writer of a layer must bucket it alike, or a pruned lookup silently
+    misses rows, so a manifest without it raises."""
+    try:
+        return int(meta["buckets"][layer])
+    except (KeyError, TypeError):
+        raise ValueError(
+            f"{path}: {_META} records no bucket count for layer "
+            f"{layer or 'base'!r}; rebuild the store with "
+            "write_nsw_index") from None
 
 
 def build_l1_graph(df: DataFrame, stride: int, m: int = NSW_M,
@@ -508,8 +555,7 @@ def write_nsw_index_tenants(df: DataFrame, path: str,
                             tenant_col: str = "tenant",
                             m: int = NSW_M,
                             vec_col: str = "embedding",
-                            id_col: str = "vec_id",
-                            n_buckets: int = 16) -> list:
+                            id_col: str = "vec_id") -> list:
     """TENANT-SCOPED graph stores — the reference's per-alias physical
     isolation (modules/utilities.py:282-287: each index alias is both
     a NAME and a separate physical index) applied to the graph tier:
@@ -528,8 +574,7 @@ def write_nsw_index_tenants(df: DataFrame, path: str,
     for tv in tenants:
         sub = df.filter(F.col(tenant_col) == tv).drop(tenant_col)
         write_nsw_index(sub, nsw_tenant_path(path, tv), m=m,
-                        vec_col=vec_col, id_col=id_col,
-                        n_buckets=n_buckets)
+                        vec_col=vec_col, id_col=id_col)
     return tenants
 
 
@@ -573,22 +618,21 @@ class AdjRelation:
     marks a never-upserted relation: every stored row is a live
     undirected edge — no merge-on-read window, no mirror validation.
     Untrusted relations are resolved DRIVER-side from the prefetched
-    rows (the r15 ``_topm_dsts`` replay over stored 6-dp sims): per-src
+    rows (the r15 ``_topm_from`` replay over stored 6-dp sims): per-src
     top-``m`` over distinct fwd pairs, plus mirror rows validated
     against the mirrored node's own top-m — fed by the SAME prefetched
     rows, so r15's separate per-round validation read disappears.
-    ``pred_rel`` (optional) is the predicate form — used once per serve
-    to prefetch the flat-top entry's adjacency inside the entry scan's
-    own job; it is only ever called on the DEEPEST hierarchy level,
-    whose node count is < NSW_HIER_FLOOR² by construction, so the
-    unpruned scan it implies reads < 256 nodes at ANY corpus size."""
+    ``sub(mod)`` is the rows of every src ``≡ 0 (mod mod)``: the entry
+    scan reads the DEEPEST hierarchy level whole with it, and the next
+    layer's adjacency of that level's nodes.  That level holds fewer
+    than NSW_HIER_FLOOR² nodes by construction, so the entry returns
+    < 256 scores and < 2·256·2M adjacency rows at ANY corpus size."""
 
-    def __init__(self, rel, trusted: bool = True, m: int = NSW_M,
-                 pred_rel=None):
+    def __init__(self, rel, sub, trusted: bool = True, m: int = NSW_M):
         self.rel = rel
+        self.sub = sub
         self.trusted = trusted
         self.m = m
-        self.pred_rel = pred_rel
 
 
 def _dsc(s):
@@ -611,23 +655,6 @@ def _topm_from(rows, mm: int) -> list:
     pairs = {(s, d) for d, s, f in rows if f}
     return [d for _, d in
             sorted(pairs, key=lambda p: (_dsc(p[0]), p[1]))[:mm]]
-
-
-def _local_frame(spark, rows, schema: StructType) -> DataFrame:
-    """``rows`` (tuples in ``schema`` order) as a driver-LOCAL relation:
-    an Arrow table becomes a ``LocalRelation``, so collecting the answer
-    — or any projection over it — runs no Spark job, where
-    ``createDataFrame(list)`` parallelizes the rows into an RDD and
-    costs a job per serve."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    asch = to_arrow_schema(schema)
-    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
-    table = pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(cols, asch)],
-        schema=asch)
-    return spark.createDataFrame(table, schema)
 
 
 def nsw_converged(stop_k: int | None, n_visited: int, kth, best_new
@@ -675,29 +702,36 @@ def beam_search_knn(edges, source: DataFrame,
     every round, the union projections are ``selectExpr`` strings, the
     point reads are ``id_in`` lists (one parsed IN at any width), and
     collected rows are read by position.  The answer is a driver-local
-    relation (``_local_frame``, an Arrow ``LocalRelation``): collecting
-    it runs no Spark job, so a serve's only jobs are its beam rounds.
+    relation (``stores.local_frame``, an Arrow ``LocalRelation``):
+    collecting it runs no Spark job, so a serve's only jobs are its
+    entry scan and its beam rounds.
 
     Entry (the module docstring's one form): with ``flat_mod`` set,
     the flat top subset ``id % flat_mod == 0`` is scored exactly, then
     the descent runs ``hier_levels`` from the deepest level up: each
     level gets {NSW_L1_ROUNDS} fused rounds at CONSTANT width
     {NSW_HIER_W}, and the top-``n_entry`` of everything visited seeds
-    the base beam.  The deepest level's adjacency rides the entry
-    scan's action when the level exposes ``pred_rel``; with no levels
-    the scan prefetches nothing (``pred_rel`` on the base graph would
+    the base beam.  The flat top is a subset of the deepest level
+    (stride product d), which holds < NSW_HIER_FLOOR² nodes, so ONE
+    entry action reads that whole level: every ``id % d == 0`` score
+    (no null filter, as a round's point read), the level's adjacency
+    (``sub(d)``) and the next layer's adjacency of those nodes.  Its
+    descent rounds then replay from that state with no action, and the
+    next phase starts with its frontier's adjacency in hand.  Each
+    upper-level round prefetches the next phase's adjacency too
+    (``fused_round``'s ``also``), so no transition pays a catch-up
+    read; everything else is one action per round.  With no levels the
+    scan scores the flat top alone (a ``sub`` of the base graph would
     be an unpruned scan of the whole store), so the first base round
-    pays one catch-up read.  Each descent round also prefetches the
-    next phase's adjacency (``fused_round``'s ``also``), so a level
-    transition pays no catch-up read; everything else is one action
-    per round.  Without ``flat_mod``, ``seeds`` are used verbatim — their
-    known ids let the seed scoring and seed adjacency ride one action.
-    After each base round ``nsw_converged`` reads the visited dict and
-    may end the beam.
+    pays one catch-up read.  Without ``flat_mod``, ``seeds`` are used
+    verbatim — their known ids let the seed scoring and seed adjacency
+    ride one action.  After each base round ``nsw_converged`` reads the
+    visited dict and may end the beam.
 
-    ``edges`` / level entries are ``AdjRelation``s (the stored path's
-    bucket-pruned form) or DataFrames of (src, dst); ``hier_levels`` is
-    ordered L1 → Ld (the descent runs it reversed)."""
+    ``edges`` is an ``AdjRelation`` (the stored path's bucket-pruned
+    form) or a DataFrame of (src, dst); ``hier_levels`` holds one
+    ``(relation, stride product)`` pair per level, L1 → Ld (the
+    descent runs it reversed), each relation of either form."""
     # Per-serve constant plan parts, built ONCE: a Column is a JVM
     # object whose construction costs driver↔JVM round trips (the score
     # expression alone ~1k), so the rounds reuse these; the union
@@ -711,7 +745,7 @@ def beam_search_knn(edges, source: DataFrame,
                   .alias("_s")]
     sb_sql = ["0 AS _t", f"CAST(`{id_col}` AS BIGINT) AS _a",
               "`label` AS _lbl", "CAST(_s AS DOUBLE) AS _s",
-              "CAST(NULL AS BIGINT) AS _b", "true AS _f"]
+              "CAST(NULL AS BIGINT) AS _b"]
     lbl_null = (f"CAST(NULL AS "
                 f"{source.schema['label'].dataType.simpleString()}) AS _lbl")
 
@@ -720,7 +754,8 @@ def beam_search_knn(edges, source: DataFrame,
             return e
         return AdjRelation(
             lambda ids, _e=e: _e.filter(id_in("src", ids)),
-            pred_rel=lambda pred, _e=e: _e.filter(pred))
+            lambda mod, _e=e: _e.filter(
+                F.pmod(F.col("src"), F.lit(int(mod))) == 0))
 
     def skey(r):
         s = r[2]
@@ -731,18 +766,20 @@ def beam_search_knn(edges, source: DataFrame,
             return (0, 0.0, r[0])
         return (1, -s, r[0])
 
-    def score_pred(pred) -> DataFrame:
-        return (source.filter(F.col(vec_col).isNotNull() & pred)
-                .select(*score_cols))
+    def score_mod(mod: int) -> DataFrame:
+        return source.filter(
+            F.pmod(F.col(id_col), F.lit(int(mod))) == 0).select(
+            *score_cols, F.col(vec_col).isNotNull().alias("_nn"))
 
     def score_ids(ids) -> DataFrame:
         # round scoring carries no isNotNull filter — exactly the r15
         # shapes (a null vector scores NULL and sorts last)
         return source.filter(id_in(id_col, ids)).select(*score_cols)
 
-    def _sb(df: DataFrame) -> DataFrame:
-        """Scoring branch normalized for the round union."""
-        return df.selectExpr(*sb_sql)
+    def _sb(df: DataFrame, f: str = "true") -> DataFrame:
+        """Scoring branch normalized for the round union; ``f`` fills
+        ``_f`` (a ``score_mod`` scan passes its not-null flag)."""
+        return df.selectExpr(*sb_sql, f"{f} AS _f")
 
     def _ab(df: DataFrame, trusted: bool, tag: int = 1) -> DataFrame:
         """Adjacency branch normalized for the round union; ``tag``
@@ -776,20 +813,25 @@ def beam_search_knn(edges, source: DataFrame,
             cache.setdefault(r[1], []).append((r[4], r[3], r[5]))
 
     caches: dict[int, dict] = {}
+    # scores the entry scan prefetched: every source row whose id is
+    # ≡ 0 (mod pre_mod), so a round scores only ids outside it
+    pre: dict[int, tuple] = {}
+    pre_mod = 0
 
     def _cache(adj) -> dict:
         return caches.setdefault(id(adj), {})
 
     def fused_round(adj: AdjRelation, frontier, seen,
                     also=None) -> dict:
-        """One beam round = ONE action (plus a frontier-sized catch-up
-        read only when this lookup's adjacency was never prefetched —
-        level transitions).  ``also=(next_adj, seed_ids)`` rides a
-        NEXT-lookup prefetch on the same action: the next phase's
-        frontier is a subset of (current top seed_ids ∪ this round's
-        todo), so prefetching that superset's next-level adjacency now
-        makes the transition catch-up read unnecessary (guide §2.6 —
-        the extra rows ride an action already being paid)."""
+        """One beam round = at most ONE action (plus a frontier-sized
+        catch-up read only when this lookup's adjacency was never
+        prefetched), and none when the entry scan prefetched everything
+        it needs.  ``also=(next_adj, seed_ids)`` rides a NEXT-lookup
+        prefetch on the same action: the next phase's frontier is a
+        subset of (current top seed_ids ∪ this round's todo), so
+        prefetching that superset's next-level adjacency now makes the
+        transition catch-up read unnecessary (guide §2.6 — the extra
+        rows ride an action already being paid)."""
         cache = _cache(adj)
         missing = sorted({int(i) for i in frontier} - cache.keys())
         if missing:
@@ -814,7 +856,8 @@ def beam_search_knn(edges, source: DataFrame,
             need = sorted({x for _, x in mirrors
                            if x not in seen and x not in cache}) \
                 if not adj.trusted else []
-        branches = [_sb(score_ids(todo))]
+        fresh = [i for i in todo if not pre_mod or i % pre_mod]
+        branches = [_sb(score_ids(fresh))] if fresh else []
         if need:
             branches.append(_ab(adj.rel(need), adj.trusted))
         also_ids = []
@@ -825,7 +868,8 @@ def beam_search_knn(edges, source: DataFrame,
             if also_ids:
                 branches.append(_ab(next_adj.rel(also_ids),
                                     next_adj.trusted, tag=2))
-        scored, adjrows = _collect(branches)
+        scored, adjrows = _collect(branches) if branches else ([], {})
+        scored += [pre[i] for i in todo if i in pre]
         _ingest(cache, need, adjrows.get(1, []))
         if also_ids:
             _ingest(_cache(also[0]), also_ids, adjrows.get(2, []))
@@ -847,23 +891,26 @@ def beam_search_knn(edges, source: DataFrame,
 
     base_adj = _as_adj(edges)
     if flat_mod is not None:
-        adjs = [_as_adj(lv) for lv in hier_levels]
-        deep = adjs[-1] if adjs else None
-        scored0 = score_pred(
-            F.pmod(F.col(id_col), F.lit(int(flat_mod))) == 0)
+        adjs = [_as_adj(rel) for rel, _ in hier_levels]
+        # the flat top is a subset of the deepest level (stride product
+        # d): one action reads that level's scores and adjacency whole,
+        # plus the next layer's adjacency of its nodes
+        d = int(hier_levels[-1][1]) if adjs else int(flat_mod)
+        scored0 = score_mod(d)
+        branches = [_sb(scored0, "_nn")]
+        if adjs:
+            nxt = adjs[-2] if len(adjs) > 1 else base_adj
+            branches += [_ab(adjs[-1].sub(d), adjs[-1].trusted),
+                         _ab(nxt.sub(d), nxt.trusted, tag=2)]
+        rows, adjrows = _collect(branches)
+        if adjs:
+            pre, pre_mod = {r[1]: r for r in rows}, d
+            level = set(pre) | {r[4] for r in adjrows.get(1, [])}
+            _ingest(_cache(adjs[-1]), level, adjrows.get(1, []))
+            _ingest(_cache(nxt), level, adjrows.get(2, []))
         schema = scored0.schema
-        branches = [_sb(scored0)]
-        if deep is not None and deep.pred_rel is not None:
-            # the flat top is a subset of the deepest graph level, so
-            # its first-descent adjacency rides the entry scan's action
-            branches.append(_ab(deep.pred_rel(
-                F.pmod(F.col("src"), F.lit(int(flat_mod))) == 0),
-                deep.trusted))
-        scored, adjrows = _collect(branches)
-        if len(branches) > 1:
-            _ingest(_cache(deep), [r[1] for r in scored],
-                    adjrows.get(1, []))
-        visited = {r[1]: (r[1], r[2], r[3]) for r in scored}
+        visited = {r[1]: (r[1], r[2], r[3]) for r in rows
+                   if r[5] and r[1] % flat_mod == 0}
         seen = set(visited)
         stack = list(reversed(adjs))
         for li, adj in enumerate(stack):
@@ -929,7 +976,7 @@ def beam_search_knn(edges, source: DataFrame,
         # is the documented recompaction case (rebuild without them).
         dead = set(exclude_ids)
         out_rows = [r for r in out_rows if r[0] not in dead]
-    return _local_frame(source.sparkSession, out_rows[:k], StructType(
+    return local_frame(source.sparkSession, out_rows[:k], StructType(
         schema.fields[:2] + [StructField(sim_col, schema["_s"].dataType,
                                          schema["_s"].nullable)]))
 
@@ -943,7 +990,7 @@ def beam_search_knn_batch(edges: DataFrame, source: DataFrame,
                           qid_col: str = "qid", qvec_col: str = "qv",
                           sim_col: str = "similarity",
                           n_entry: int = NSW_ENTRY_COUNT,
-                          hier_levels: Sequence[DataFrame] = (),
+                          hier_levels: Sequence = (),
                           flat_mod: int | None = None,
                           stop_k: int | None = NSW_STOP_K) -> DataFrame:
     """BATCHED multi-query beam search — the serving form for query
@@ -956,12 +1003,12 @@ def beam_search_knn_batch(edges: DataFrame, source: DataFrame,
 
     Entry is the one form ``beam_search_knn`` takes: with ``flat_mod``
     set, every qid scores the shared flat top subset ``id % flat_mod ==
-    0``, then descends ``hier_levels`` (DataFrames of (src, dst), L1 →
-    Ld, run deepest first) — per level, {NSW_L1_ROUNDS} qid-keyed
-    rounds at constant width {NSW_HIER_W} re-seeded from the running
-    pool's per-qid top — and enters the base graph at its per-qid
-    top-``n_entry`` of everything visited.  Without ``flat_mod``, every
-    qid starts from ``seeds``.
+    0``, then descends ``hier_levels`` ((DataFrame of (src, dst), stride
+    product) pairs, L1 → Ld, run deepest first) — per level,
+    {NSW_L1_ROUNDS} qid-keyed rounds at constant width {NSW_HIER_W}
+    re-seeded from the running pool's per-qid top — and enters the
+    base graph at its per-qid top-``n_entry`` of everything visited.
+    Without ``flat_mod``, every qid starts from ``seeds``.
 
     After each base round the stop rule ``nsw_converged`` runs per qid
     on ONE collect: a row per qid that scored a newcomer this round
@@ -1011,7 +1058,7 @@ def beam_search_knn_batch(edges: DataFrame, source: DataFrame,
                                F.lit(int(flat_mod))) == 0)
             .select(id_col)))
         visited = score(seed_df).localCheckpoint()
-        for ledges in reversed(list(hier_levels)):
+        for ledges, _ in reversed(list(hier_levels)):
             hf = top(visited, NSW_HIER_W)
             for _ in range(NSW_L1_ROUNDS):
                 scored, visited = expand(ledges, hf, visited)
@@ -1085,7 +1132,7 @@ def nsw_knn(df: DataFrame, qvec: Sequence[float], k: int = 10,
         if int(stride) == nsw_serving_params(n)[0]:
             levels, flat_mod = inline_levels(base, n, m=m, vec_col=vec_col,
                                              id_col=id_col)
-            levels = [lv.localCheckpoint() for lv in levels]
+            levels = [(lv.localCheckpoint(), mod) for lv, mod in levels]
     return beam_search_knn(edges, df, qvec, k=k, ef=ef, rounds=rounds,
                            seeds=seeds, vec_col=vec_col, id_col=id_col,
                            sim_col=sim_col, n_entry=n_entry,
@@ -1095,8 +1142,8 @@ def nsw_knn(df: DataFrame, qvec: Sequence[float], k: int = 10,
 
 def upsert_nsw_index(spark, path: str, batch: DataFrame,
                      existing: DataFrame, m: int = NSW_M,
-                     vec_col: str = "embedding", id_col: str = "vec_id",
-                     n_buckets: int = 16) -> None:
+                     vec_col: str = "embedding", id_col: str = "vec_id"
+                     ) -> None:
     """INSERT a vector batch into a stored neighbor graph WITHOUT a
     rebuild — and, for pure inserts, EXACTLY: node j's true top-m over
     C∪B is a subset of (its stored top-m over C) ∪ B, so adding
@@ -1131,8 +1178,10 @@ def upsert_nsw_index(spark, path: str, batch: DataFrame,
         [(int(r.id), list(r.v)) for r in brows],
         "id long, v array<double>")
     meta = read_l1_meta(spark, path) or {}
+    buckets = {**meta.get("buckets", {}),
+               "": _layer_buckets(path, meta, "")}
     layers = {"": _graph_delta(_layer_rows(spark, path, meta), brows, ex,
-                               m, n_buckets, batch_df=bdf)}
+                               m, buckets[""], batch_df=bdf)}
     rebuilt = []
 
     # hierarchy maintenance: recompute the plan from the post-upsert
@@ -1156,16 +1205,18 @@ def upsert_nsw_index(spark, path: str, batch: DataFrame,
                     _layer_rows(spark, path, meta, level), bsub,
                     ex.filter(F.pmod(F.col("id"), F.lit(int(prod)))
                               == 0),
-                    m, n_buckets)
+                    m, _layer_buckets(path, meta, level))
         else:
+            # a rebuilt level is a new layer: bucketed by its new size
+            buckets[level] = nsw_buckets(counts[lvl - 1], m)
             sub = allnodes.filter(
                 F.pmod(F.col("id"), F.lit(int(prod))) == 0)
             layers[level] = _dual_rows(
                 build_knn_graph(sub, m=m, vec_col="v", id_col="id"),
-                n_buckets)
+                buckets[level])
             rebuilt.append(level)
     write_segment(spark, path, _META,
-                  {**meta, **_hier_meta(strides, counts, m, n)},
+                  {**meta, **_hier_meta(strides, counts, m, n, buckets)},
                   layers, rebuilt=rebuilt)
 
 
@@ -1182,15 +1233,16 @@ def _layer_rows(spark, path: str, meta: dict, layer: str = ""
 
 
 def _graph_delta(stored: DataFrame, brows, existing: DataFrame,
-                 m: int, n_buckets: int,
+                 m: int, nb: int,
                  batch_df: DataFrame | None = None) -> DataFrame:
     """The exact-insert rows for ONE stored graph layer: ``stored`` is
     its current rows, ``brows`` the collected (id, v) batch rows (they
     ride the closure), ``existing`` the (id, v) relation of its
-    members.  Returns, in the dual format, the new nodes' top-m lists
-    over existing∪batch plus every existing node's edges that beat its
-    current m-th; merge-on-read over the layer plus these rows equals
-    a full rebuild of it (the ``upsert_nsw_index`` proof)."""
+    members, ``nb`` its bucket count.  Returns, in the dual format, the
+    new nodes' top-m lists over existing∪batch plus every existing
+    node's edges that beat its current m-th; merge-on-read over the
+    layer plus these rows equals a full rebuild of it (the
+    ``upsert_nsw_index`` proof)."""
     import pandas as pd
 
     bids = np.array([r.id for r in brows], dtype=np.int64)
@@ -1297,7 +1349,7 @@ def _graph_delta(stored: DataFrame, brows, existing: DataFrame,
     # the other endpoint's bucket (see write_nsw_index) — mirrors whose
     # canonical edge is later displaced become stale HINTS, which the
     # stored lookup's validation pass filters against the live top-m.
-    return _dual_rows(new_edges.unionByName(improvements), n_buckets)
+    return _dual_rows(new_edges.unionByName(improvements), nb)
 
 
 def delete_from_nsw_index(spark, path: str, ids: Sequence[int]) -> None:
@@ -1332,8 +1384,7 @@ def _tombstone_ids(spark, path: str, meta: dict) -> list[int]:
 
 def compact_nsw_index(spark, path: str, source: DataFrame, dest: str,
                       m: int = NSW_M, vec_col: str = "embedding",
-                      id_col: str = "vec_id",
-                      n_buckets: int = 16) -> int:
+                      id_col: str = "vec_id") -> int:
     """Periodic maintenance fold — the graph tier's
     ``compact_ivfpq_index``: REBUILD the graph and its levels from
     ``source`` minus the store's tombstones as a new segment-free base
@@ -1344,8 +1395,7 @@ def compact_nsw_index(spark, path: str, source: DataFrame, dest: str,
     number of tombstoned ids folded away."""
     dead = read_nsw_deletes(spark, path)
     live = source.filter(~id_in(id_col, dead)) if dead else source
-    write_nsw_index(live, dest, m=m, vec_col=vec_col, id_col=id_col,
-                    n_buckets=n_buckets)
+    write_nsw_index(live, dest, m=m, vec_col=vec_col, id_col=id_col)
     return len(dead)
 
 
@@ -1379,32 +1429,44 @@ def read_l1_meta(spark, path: str) -> dict | None:
 
 
 def resolve_stored_levels(spark, path: str, m: int = NSW_M
-                          ) -> tuple[list[DataFrame], int]:
+                          ) -> tuple[list[tuple[DataFrame, int]], int]:
     """(hier_levels, flat_mod) for the BATCH serving form, from the
     store's frozen geometry (``_level_plan``): every stored level's
-    resolved relation L1 → Ld (``_resolved_layer``) — empty for a
-    flat-entry corpus — and the flat-top modulus."""
+    (resolved relation, stride product) L1 → Ld (``_resolved_layer``)
+    — empty for a flat-entry corpus — and the flat-top modulus."""
     meta = read_l1_meta(spark, path)
     if meta is None:
         raise ValueError(f"{path} has no {_META}: not an NSW store")
     plan, flat_mod = _level_plan(meta["strides"], meta["counts"])
     mm = int(meta.get("m", m))
-    return [_resolved_layer(spark, path, meta, mm, f"_L{lvl}")
-            for lvl, _ in plan], flat_mod
+    return [(_resolved_layer(spark, path, meta, mm, f"_L{lvl}"), prod)
+            for lvl, prod in plan], flat_mod
 
 
 def _stored_adj(spark, path: str, meta: dict, layer: str,
-                n_buckets: int, delta: bool, m: int) -> AdjRelation:
-    """Bucket-pruned lookup over ONE stored graph layer (``_layer_rows``):
-    ``rel(ids)`` is two parsed IN lists, the ids' src buckets (partition
-    pruning) and the ids themselves (parquet pushdown)."""
+                delta: bool, m: int) -> AdjRelation:
+    """Bucket-pruned lookup over ONE stored graph layer (``_layer_rows``),
+    bucketed as its manifest records: ``rel(ids)`` is two parsed IN
+    lists, the ids' src buckets (partition pruning) and the ids
+    themselves (parquet pushdown); ``sub(mod)`` keeps the buckets a
+    multiple of ``mod`` can fall in."""
+    import math
+
+    nb = _layer_buckets(path, meta, layer)
     g = _layer_rows(spark, path, meta, layer)
 
     def rel(ids):
-        buckets = sorted({int(i) % n_buckets for i in ids})
+        buckets = sorted({int(i) % nb for i in ids})
         return g.filter(id_in("bucket", buckets) & id_in("src", ids))
 
-    return AdjRelation(rel, trusted=not delta, m=m, pred_rel=g.filter)
+    def sub(mod):
+        step = math.gcd(int(mod), nb)
+        pred = F.pmod(F.col("src"), F.lit(int(mod))) == 0
+        if step > 1:
+            pred = id_in("bucket", list(range(0, nb, step))) & pred
+        return g.filter(pred)
+
+    return AdjRelation(rel, sub, trusted=not delta, m=m)
 
 
 def nsw_stored_knn(spark, path: str, source: DataFrame,
@@ -1412,19 +1474,18 @@ def nsw_stored_knn(spark, path: str, source: DataFrame,
                    ef: int = NSW_EF, rounds: int = NSW_ROUNDS,
                    seeds: Sequence[int] = NSW_SEEDS,
                    vec_col: str = "embedding", id_col: str = "vec_id",
-                   sim_col: str = "similarity",
-                   n_buckets: int = 16, m: int = NSW_M,
+                   sim_col: str = "similarity", m: int = NSW_M,
                    stride: int | None = None,
                    n_entry: int = NSW_ENTRY_COUNT,
                    stop_k: int | None = NSW_STOP_K) -> DataFrame:
     """Serving read of a ``write_nsw_index`` store: each round touches
     only the frontier's src BUCKET DIRECTORIES (one ``id_in`` list on
     the partition column, a second on the src ids, pushed into the
-    scan) and the scored ids' vectors.  ``n_buckets`` must match the
-    write.  One read of ``_L1_META`` names the segments; every layer
-    and the tombstones are read with fixed schemas, so the only jobs of
-    a serve are its beam rounds (plus one tombstone read when the
-    manifest names deletes), and the returned top-k is a local
+    scan) and the scored ids' vectors.  One read of ``_L1_META`` names
+    the segments and each layer's bucket count; every layer and the
+    tombstones are read with fixed schemas, so the jobs of a serve are
+    its entry scan and its beam rounds (plus one tombstone read when
+    the manifest names deletes), and the returned top-k is a local
     relation whose ``collect()`` runs none.
 
     MERGE-ON-READ: the per-src top-``m`` window resolves the current
@@ -1439,7 +1500,7 @@ def nsw_stored_knn(spark, path: str, source: DataFrame,
     # mirror is valid — the rows ARE the undirected adjacency
     meta = read_l1_meta(spark, path) or {}
     has_deltas = any("layers" in seg for seg in meta.get("segments", []))
-    lookup = _stored_adj(spark, path, meta, "", n_buckets, has_deltas, m)
+    lookup = _stored_adj(spark, path, meta, "", has_deltas, m)
 
     # hierarchical entry off the store's own level stack, each level
     # looked up (and resolved) like the base.  Used only when the
@@ -1451,8 +1512,8 @@ def nsw_stored_knn(spark, path: str, source: DataFrame,
     if stride is not None and meta.get("stride") == int(stride):
         plan, flat_mod = _level_plan(meta["strides"], meta["counts"])
         mm = int(meta.get("m", m))
-        levels = [_stored_adj(spark, path, meta, f"_L{lvl}", n_buckets,
-                              has_deltas, mm) for lvl, _ in plan]
+        levels = [(_stored_adj(spark, path, meta, f"_L{lvl}", has_deltas,
+                               mm), prod) for lvl, prod in plan]
 
     return beam_search_knn(lookup, source, qvec, k=k, ef=ef,
                            rounds=rounds, seeds=seeds, vec_col=vec_col,

@@ -93,7 +93,7 @@ def _nsw_store(spark: SparkSession, sf_dir: str, corpus: DataFrame,
         write_nsw_index,
     )
     return open_or_build(
-        spark, kind, 4, [f"{sf_dir}/embeddings.parquet"],
+        spark, kind, 5, [f"{sf_dir}/embeddings.parquet"],
         lambda path: write_nsw_index(corpus, path, m=_NSW_M), m=_NSW_M)
 
 
@@ -1938,7 +1938,7 @@ def ann_nsw_upsert_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
                         m=_NSW_M)
         upsert_nsw_index(spark, path, batch, corpus, m=_NSW_M)
 
-    store = open_or_build(spark, "nswup", 5,
+    store = open_or_build(spark, "nswup", 6,
                           [f"{sf_dir}/embeddings.parquet"], build, m=_NSW_M)
     # post-upsert meta is rewritten from corpus∪batch == base, so the
     # frozen stride IS ceil(sqrt(n_base)) — the triple the count gave
@@ -2028,7 +2028,7 @@ def _ensure_nswdel_store(spark, sf_dir: str, base: DataFrame,
                     tie_break="vec_id").collect()]
         delete_from_nsw_index(spark, path, top3)
 
-    return open_or_build(spark, "nswdel", 5,
+    return open_or_build(spark, "nswdel", 6,
                          [f"{sf_dir}/embeddings.parquet"], build, m=_NSW_M)
 
 
@@ -2071,7 +2071,7 @@ def ann_nsw_compacted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the tombstoned store's path carries its own key, so it is this
     # build's input
     dest = open_or_build(
-        spark, "nswcompact", 4, [store],
+        spark, "nswcompact", 5, [store],
         lambda path: compact_nsw_index(
             spark, store, base.select("vec_id", "label", "embedding"),
             path, m=_NSW_M),
@@ -2562,7 +2562,7 @@ def ann_nsw_tenant_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
            .withColumn("tenant",
                        F.pmod(F.col("label"), F.lit(2)).cast("string")))
     store = open_or_build(
-        spark, "nswten", 2, [f"{sf_dir}/embeddings.parquet"],
+        spark, "nswten", 3, [f"{sf_dir}/embeddings.parquet"],
         lambda path: write_nsw_index_tenants(tdf, path, tenant_col="tenant",
                                              m=_NSW_M),
         m=_NSW_M)
@@ -2896,7 +2896,7 @@ def ann_nsw_cellbuild_mean_recall_at_10(spark: SparkSession,
         base = corpus.select("vec_id", "embedding") \
             .filter(F.col("embedding").isNotNull())
         levels, flat_mod = inline_levels(base, n, m=_NSW_M)
-        levels = [scoped_persist(lv) for lv in levels]
+        levels = [(scoped_persist(lv), mod) for lv, mod in levels]
         for a in (1, 2):
             edges = build_knn_graph_sharded(
                 corpus.select("vec_id", "embedding"),
@@ -2938,7 +2938,8 @@ _SCALE_PARAMS = dict(m=_NSW_M, nq=_SCALE_NQ, factor=_SCALE_FACTOR,
                      seed=_SCALE_SEED)
 # the oracle reads the store's files, so it names the path up front; the
 # fixture is deterministic, so the key holds its recipe, not its bytes
-_SCALE_STORE = store_path("ann100k", 4, [], **_SCALE_PARAMS)
+_SCALE_VERSION = 5
+_SCALE_STORE = store_path("ann100k", _SCALE_VERSION, [], **_SCALE_PARAMS)
 
 
 def _ensure_ann_scale_fixture() -> None:
@@ -3180,7 +3181,7 @@ def ann_nsw_fixed_ef_scaling(spark: SparkSession,
                   .select(F.col("vec_id").alias("qid"),
                           F.col("embedding").alias("qv")))
     store = open_or_build(
-        spark, "ann100k", 4, [],
+        spark, "ann100k", _SCALE_VERSION, [],
         lambda path: write_nsw_index(corpus.select("vec_id", "embedding"),
                                      path, m=_NSW_M),
         **_SCALE_PARAMS)
@@ -3269,7 +3270,7 @@ def streaming_nsw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb_path = os.path.join(sf_dir, "embeddings.parquet")
     key = hashlib.md5(
-        f"{sf_dir}|nswstreamv5{_NSW_M}|{_parquet_fingerprint(emb_path)}"
+        f"{sf_dir}|nswstreamv6{_NSW_M}|{_parquet_fingerprint(emb_path)}"
         .encode()).hexdigest()[:10]
     root = os.path.join("/tmp", "spark_graft_nswstream_" + key)
     store = os.path.join(root, "graph")

@@ -70,6 +70,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = ["read_probed_partitions", "register_partitioned_store",
+           "local_frame",
            "fs_write_text", "fs_read_text", "read_manifest",
            "swap_manifest", "write_segment", "layer_paths", "read_layer",
            "escape_partition_value", "tenant_values", "open_or_build",
@@ -240,15 +241,40 @@ def read_layer(spark: SparkSession, paths: list[str],
         first)
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """``rows`` (tuples in ``schema`` order; a StructType or DDL string)
+    as a driver-LOCAL relation: an Arrow table becomes a
+    ``LocalRelation``, so collecting it — or any projection over it —
+    runs no Spark job, where ``createDataFrame(list)`` parallelizes the
+    rows into an RDD and costs a job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    asch = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, asch)],
+        schema=asch)
+    return spark.createDataFrame(table, schema)
+
+
 def read_probed_partitions(spark: SparkSession, store: str, part_col: str,
-                           probes, table: str | None = None) -> DataFrame:
+                           probes, table: str | None = None,
+                           schema=None) -> DataFrame:
     """DataFrame over ONLY the probed partitions of a partition-stored
     index (see module docstring for the two metadata modes).
 
     ``probes`` is any iterable of partition values; duplicates collapse.
     With every probed partition absent the result is the store's schema
     with zero rows (the no-candidates contract every stored read path
-    shares)."""
+    shares).  A caller that knows its store's fixed ``schema`` (the
+    partition column last, as Spark orders it) passes it: the read then
+    infers nothing, and the all-absent case is an empty local relation
+    that runs no Spark job.  Without it that case lists the whole store
+    and infers its schema."""
     probes = sorted(set(probes))
     if table is not None:
         # metastore pattern: the catalog prunes partitions at plan time
@@ -265,10 +291,13 @@ def read_probed_partitions(spark: SparkSession, store: str, part_col: str,
         names = {st.getPath().getName() for st in found or []}
         paths = [f"{root}/{part_col}={v}" for v in probes
                  if f"{part_col}={v}" in names]
+    if not paths and schema is not None:
+        return local_frame(spark, [], schema)
     if not paths:
         return (spark.read.parquet(store)
                 .filter(F.col(part_col).isin(probes)).limit(0))
-    return (spark.read.option("basePath", store).parquet(*paths)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return (reader.option("basePath", store).parquet(*paths)
             .filter(F.col(part_col).isin(probes)))
 
 

@@ -123,7 +123,7 @@ def stream_upsert_ivfpq_index(stream: DataFrame, store: str,
 
 def stream_upsert_nsw_index(stream: DataFrame, store: str,
                             vectors_dir: str, checkpoint_dir: str,
-                            m: int = 6, n_buckets: int = 16,
+                            m: int = 6,
                             vec_col: str = "embedding",
                             id_col: str = "vec_id"):
     """STREAMING GRAPH-INDEX MAINTENANCE — the NSW twin of
@@ -160,8 +160,7 @@ def stream_upsert_nsw_index(stream: DataFrame, store: str,
         if fresh.isEmpty():
             return
         upsert_nsw_index(spark, store, fresh, existing, m=m,
-                         n_buckets=n_buckets, vec_col=vec_col,
-                         id_col=id_col)
+                         vec_col=vec_col, id_col=id_col)
         fresh.write.mode("append").parquet(vectors_dir)
 
     return (stream.writeStream

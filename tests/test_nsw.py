@@ -66,10 +66,10 @@ def _spy_untrusted(monkeypatch):
 
     seen, real = [], nsw._stored_adj
 
-    def spy(spark, path, meta, layer, n_buckets, delta, m):
+    def spy(spark, path, meta, layer, delta, m):
         if layer == "":
             seen.append(delta)
-        return real(spark, path, meta, layer, n_buckets, delta, m)
+        return real(spark, path, meta, layer, delta, m)
 
     monkeypatch.setattr(nsw, "_stored_adj", spy)
     return seen
@@ -131,20 +131,19 @@ def test_full_beam_recovers_exact_topk(emb):
 def test_stored_path_equals_inline(spark, emb, tmp_path):
     qvec = [0.1] * DIM
     store = str(tmp_path / "nsw")
-    write_nsw_index(emb, store, m=3, n_buckets=4)
+    write_nsw_index(emb, store, m=3)
     inline = [(r.vec_id, r.similarity) for r in
               nsw_knn(emb, qvec, k=10, m=3, ef=5, rounds=2,
                       seeds=[1, 9]).collect()]
     stored = [(r.vec_id, r.similarity) for r in
               nsw_stored_knn(spark, store, emb, qvec, k=10, ef=5,
-                             rounds=2, seeds=[1, 9],
-                             n_buckets=4).collect()]
+                             rounds=2, seeds=[1, 9]).collect()]
     assert stored == inline
 
 
 def test_store_holds_edges_not_vectors(spark, emb, tmp_path):
     store = str(tmp_path / "nsw")
-    write_nsw_index(emb, store, m=3, n_buckets=4)
+    write_nsw_index(emb, store, m=3)
     stored = spark.read.parquet(store)
     assert set(stored.columns) == {"src", "dst", "sim", "fwd", "bucket"}
     # every node has exactly m canonical out-edges (fwd); mirror rows
@@ -167,18 +166,18 @@ def test_upsert_equals_full_rebuild(spark, emb, tmp_path):
     corpus = base.filter(F.col("vec_id") % 4 != 1)
     batch = base.filter(F.col("vec_id") % 4 == 1)
     inc = str(tmp_path / "inc")
-    write_nsw_index(corpus, inc, m=3, n_buckets=4)
-    upsert_nsw_index(spark, inc, batch, corpus, m=3, n_buckets=4)
+    write_nsw_index(corpus, inc, m=3)
+    upsert_nsw_index(spark, inc, batch, corpus, m=3)
     full = str(tmp_path / "full")
-    write_nsw_index(base, full, m=3, n_buckets=4)
+    write_nsw_index(base, full, m=3)
 
     qvec = [0.25] * DIM
     got = [(r.vec_id, r.similarity) for r in
            nsw_stored_knn(spark, inc, base, qvec, k=10, ef=5, rounds=2,
-                          seeds=[2, 10], n_buckets=4, m=3).collect()]
+                          seeds=[2, 10], m=3).collect()]
     want = [(r.vec_id, r.similarity) for r in
             nsw_stored_knn(spark, full, base, qvec, k=10, ef=5, rounds=2,
-                           seeds=[2, 10], n_buckets=4, m=3).collect()]
+                           seeds=[2, 10], m=3).collect()]
     assert got == want
 
     # the resolved adjacency itself must match, node by node
@@ -214,9 +213,9 @@ def test_upsert_replay_is_idempotent(spark, emb, tmp_path):
     once = str(tmp_path / "once")
     twice = str(tmp_path / "twice")
     for path in (once, twice):
-        write_nsw_index(corpus, path, m=3, n_buckets=4)
-        upsert_nsw_index(spark, path, batch, corpus, m=3, n_buckets=4)
-    upsert_nsw_index(spark, twice, batch, corpus, m=3, n_buckets=4)
+        write_nsw_index(corpus, path, m=3)
+        upsert_nsw_index(spark, path, batch, corpus, m=3)
+    upsert_nsw_index(spark, twice, batch, corpus, m=3)
 
     def adjacency(path):
         rows = resolve_stored_edges(spark, path, m=3).collect()
@@ -226,10 +225,10 @@ def test_upsert_replay_is_idempotent(spark, emb, tmp_path):
     qvec = [0.25] * DIM
     got = [(r.vec_id, r.similarity) for r in
            nsw_stored_knn(spark, twice, base, qvec, k=10, ef=5, rounds=2,
-                          seeds=[2, 10], n_buckets=4, m=3).collect()]
+                          seeds=[2, 10], m=3).collect()]
     want = [(r.vec_id, r.similarity) for r in
             nsw_stored_knn(spark, once, base, qvec, k=10, ef=5, rounds=2,
-                           seeds=[2, 10], n_buckets=4, m=3).collect()]
+                           seeds=[2, 10], m=3).collect()]
     assert got == want
 
 
@@ -265,6 +264,7 @@ def test_soft_delete_ghosts_keep_carrying_the_beam(spark, tmp_path):
         nsw_stored_knn,
         read_nsw_deletes,
     )
+    from openai_vector_search_demo_spark.stores import swap_manifest
     import pandas as pd  # noqa: F401
 
     # chain 1-2-3-4-5 embedded on a line: cosine to q=[1,0] decreases
@@ -282,6 +282,8 @@ def test_soft_delete_ghosts_keep_carrying_the_beam(spark, tmp_path):
           (5, 4)]], "src long, dst long, sim double, fwd boolean")
     (edges.withColumn("bucket", (F.col("src") % 4).cast("int"))
      .write.mode("overwrite").partitionBy("bucket").parquet(store))
+    # the manifest records the base's bucket count, as the writer's does
+    swap_manifest(spark, store, "_L1_META", {"buckets": {"": 4}})
     delete_from_nsw_index(spark, store, [3])
     assert read_nsw_deletes(spark, store) == [3]
 
@@ -289,7 +291,7 @@ def test_soft_delete_ghosts_keep_carrying_the_beam(spark, tmp_path):
     # passing ghost 3
     got = [r.vec_id for r in
            nsw_stored_knn(spark, store, df, [1.0, 0.0], k=5, ef=2,
-                          rounds=4, seeds=[5], n_buckets=4,
+                          rounds=4, seeds=[5],
                           m=2).collect()]
     assert 3 not in got          # never returned
     assert got[0] == 1           # but the beam crossed it
@@ -304,13 +306,13 @@ def test_tombstones_honored_on_file_uri_store(spark, emb, tmp_path):
         read_nsw_deletes,
     )
     store = "file://" + str(tmp_path / "nsw")
-    write_nsw_index(emb, store, m=3, n_buckets=4)
+    write_nsw_index(emb, store, m=3)
     qvec = emb.filter(F.col("vec_id") == 7).first().embedding
 
     def serve():
         return [r.vec_id for r in
                 nsw_stored_knn(spark, store, emb, qvec, k=10, ef=N,
-                               rounds=3, seeds=[2, 10], n_buckets=4,
+                               rounds=3, seeds=[2, 10],
                                m=3).collect()]
     best = serve()[0]
     assert best == 7
@@ -425,13 +427,13 @@ def test_coarse_entry_stored_equals_inline(spark, emb, tmp_path):
     )
     qvec = [0.15] * DIM
     store = str(tmp_path / "nsw")
-    write_nsw_index(emb, store, m=3, n_buckets=4)
+    write_nsw_index(emb, store, m=3)
     inline = [(r.vec_id, r.similarity) for r in
               nsw_knn(emb, qvec, k=10, m=3, ef=6, rounds=2,
                       stride=5, n_entry=3).collect()]
     stored = [(r.vec_id, r.similarity) for r in
               nsw_stored_knn(spark, store, emb, qvec, k=10, ef=6,
-                             rounds=2, n_buckets=4, m=3, stride=5,
+                             rounds=2, m=3, stride=5,
                              n_entry=3).collect()]
     assert stored == inline
     # the batched form with the same coarse entry returns the same rows
@@ -459,10 +461,10 @@ def test_stale_mirrors_filtered_after_upsert(spark, emb, tmp_path):
     corpus = base.filter(F.col("vec_id") % 4 != 1)
     batch = base.filter(F.col("vec_id") % 4 == 1)
     inc = str(tmp_path / "inc")
-    write_nsw_index(corpus, inc, m=3, n_buckets=4)
-    upsert_nsw_index(spark, inc, batch, corpus, m=3, n_buckets=4)
+    write_nsw_index(corpus, inc, m=3)
+    upsert_nsw_index(spark, inc, batch, corpus, m=3)
     full = str(tmp_path / "full")
-    write_nsw_index(base, full, m=3, n_buckets=4)
+    write_nsw_index(base, full, m=3)
 
     # vacuity guard: the upserted store DOES carry stale mirrors
     resolved_sym = {(r.src, r.dst) for r in
@@ -474,10 +476,10 @@ def test_stale_mirrors_filtered_after_upsert(spark, emb, tmp_path):
     qvec = [0.2] * DIM
     got = [(r.vec_id, r.similarity) for r in
            nsw_stored_knn(spark, inc, base, qvec, k=N, ef=N, rounds=4,
-                          n_buckets=4, m=3, stride=5).collect()]
+                          m=3, stride=5).collect()]
     want = [(r.vec_id, r.similarity) for r in
             nsw_stored_knn(spark, full, base, qvec, k=N, ef=N, rounds=4,
-                           n_buckets=4, m=3, stride=5).collect()]
+                           m=3, stride=5).collect()]
     assert got == want
 
 
@@ -543,13 +545,13 @@ def test_tenant_store_isolation(spark, emb, tmp_path):
     tdf = emb.withColumn(
         "tenant", F.pmod(F.col("label"), F.lit(2)).cast("string"))
     tenants = write_nsw_index_tenants(tdf, store, tenant_col="tenant",
-                                      m=3, n_buckets=4)
+                                      m=3)
     assert tenants == ["0", "1"]
     base0 = tdf.filter(F.col("tenant") == "0").drop("tenant")
     qvec = [0.15] * DIM
     stored = [(r.vec_id, r.similarity) for r in
               nsw_stored_knn(spark, nsw_tenant_path(store, "0"), base0,
-                             qvec, k=10, ef=6, rounds=2, n_buckets=4,
+                             qvec, k=10, ef=6, rounds=2,
                              m=3, stride=5, n_entry=3).collect()]
     inline = [(r.vec_id, r.similarity) for r in
               nsw_knn(base0, qvec, k=10, m=3, ef=6, rounds=2,
@@ -603,14 +605,14 @@ def test_hierarchical_entry_stored_equals_inline(spark, tmp_path):
     n = 400
     stride, ef, rounds = nsw_serving_params(n)   # stride 20 -> n1 = 20
     store = str(tmp_path / "nswh")
-    write_nsw_index(big, store, m=3, n_buckets=4)
+    write_nsw_index(big, store, m=3)
     meta = read_l1_meta(spark, store)
     assert meta is not None and meta["stride"] == stride
     assert meta["counts"][0] >= 16, "fixture must engage the hierarchical path"
     qvec = [0.2] * DIM
     stored = [(r.vec_id, r.similarity) for r in
               nsw_stored_knn(spark, store, big, qvec, k=10, ef=ef,
-                             rounds=rounds, n_buckets=4, m=3,
+                             rounds=rounds, m=3,
                              stride=stride).collect()]
     inline = [(r.vec_id, r.similarity) for r in
               nsw_knn(big, qvec, k=10, m=3, ef=ef, rounds=rounds,
@@ -634,7 +636,7 @@ def test_both_engines_serve_the_same_answer_and_visited_set(spark):
     edges = symmetrize_edges(build_knn_graph(big, m=3)).localCheckpoint()
     levels, flat_mod = inline_levels(big, 400, m=3)
     assert len(levels) == 1 and flat_mod == 20 * 5
-    levels = [lv.localCheckpoint() for lv in levels]
+    levels = [(lv.localCheckpoint(), mod) for lv, mod in levels]
     qvecs = {100: [0.2] * DIM, 200: [(-1) ** i * 0.3 for i in range(DIM)]}
     queries = spark.createDataFrame(list(qvecs.items()),
                                     "qid long, qv array<double>")
@@ -675,28 +677,152 @@ def _jobs_of(spark, group, fn):
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_stored_serve_job_budget(spark, tmp_path):
-    """On the hierarchical fixture one stored serve runs only its beam
-    rounds — no parquet schema-inference job (the store schema is
-    fixed) — and its answer is a local relation, so collecting it runs
-    no job at all.  Counted from the status tracker per job group."""
+def test_stored_serve_job_budget(spark, tmp_path, monkeypatch):
+    """On the hierarchical fixture one stored serve runs ONE entry job —
+    it reads the deepest level's scores and adjacency and the base
+    adjacency of that level's nodes, so the level's descent rounds run
+    none — then one job per base round.  No parquet schema-inference
+    job (the store schema is fixed), and the answer is a local
+    relation, so collecting it runs no job at all.  Counted from the
+    status tracker per job group; base rounds are counted by the stop
+    rule, which every base round that scored a newcomer reaches."""
+    from openai_vector_search_demo_spark.operators import nsw
+
     big = _hier_fixture(spark)
     store = str(tmp_path / "nswh")
-    write_nsw_index(big, store, m=3, n_buckets=4)
+    write_nsw_index(big, store, m=3)
     stride, ef, rounds = nsw_serving_params(400)
     st = spark.sparkContext.statusTracker()
+    calls, real = [], nsw.nsw_converged
+    monkeypatch.setattr(nsw, "nsw_converged",
+                        lambda *a: calls.append(a) or real(*a))
     top, serve_jobs = _jobs_of(spark, "nsw-budget-serve",
                                lambda: nsw_stored_knn(
                                    spark, store, big, [0.2] * DIM, k=10,
-                                   ef=ef, rounds=rounds, n_buckets=4, m=3,
+                                   ef=ef, rounds=rounds, m=3,
                                    stride=stride))
     stages = [st.getStageInfo(s).name for j in serve_jobs
               for s in st.getJobInfo(j).stageIds]
-    assert serve_jobs, "the beam rounds run as jobs of the group"
+    assert calls, "the base beam ran"
+    assert len(serve_jobs) == 1 + len(calls), (len(serve_jobs), len(calls))
     assert not [n for n in stages if n.startswith("parquet at")], stages
     rows, collect_jobs = _jobs_of(spark, "nsw-budget-collect", top.collect)
     assert len(rows) == 10
     assert collect_jobs == []
+    # without the stop rule: the entry job plus exactly `rounds` jobs
+    _, jobs = _jobs_of(spark, "nsw-budget-two-rounds",
+                       lambda: nsw_stored_knn(
+                           spark, store, big, [0.2] * DIM, k=10, ef=ef,
+                           rounds=2, m=3, stride=stride, stop_k=None))
+    assert len(jobs) == 1 + 2
+
+
+def test_bucket_count_rule_at_its_boundaries():
+    """A layer is one bucket until its 2·m·nodes rows fill two buckets
+    of NSW_BUCKET_ROWS, and never more than NSW_MAX_BUCKETS."""
+    from openai_vector_search_demo_spark.operators.nsw import (
+        NSW_BUCKET_ROWS,
+        NSW_MAX_BUCKETS,
+        nsw_buckets,
+    )
+    assert NSW_BUCKET_ROWS == 1 << 17 and NSW_MAX_BUCKETS == 16
+    assert nsw_buckets(0, 16) == 1
+    assert nsw_buckets(300, 16) == 1
+    assert nsw_buckets(8191, 16) == 1       # 262,112 rows
+    assert nsw_buckets(8192, 16) == 2       # 262,144 rows = 2 buckets
+    assert nsw_buckets(65535, 16) == 15
+    assert nsw_buckets(65536, 16) == 16
+    assert nsw_buckets(100_000, 16) == 16
+    assert nsw_buckets(10 ** 9, 16) == 16
+    assert nsw_buckets(16384, 8) == 2       # m enters the row count
+
+
+def test_fixture_store_writes_one_file_per_layer(spark, tmp_path):
+    """The 400-vector fixture's layers are one bucket each: one
+    ``bucket=0`` file per layer, and the manifest records the counts."""
+    import glob
+
+    from openai_vector_search_demo_spark.operators.nsw import read_l1_meta
+    store = str(tmp_path / "nswh")
+    write_nsw_index(_hier_fixture(spark), store, m=3)
+    assert read_l1_meta(spark, store)["buckets"] == {"": 1, "_L1": 1}
+    for layer in ("", "/_L1"):
+        files = glob.glob(f"{store}{layer}/bucket=*/*.parquet")
+        assert [f.split("/")[-2] for f in files] == ["bucket=0"], files
+
+
+def test_manifest_without_bucket_counts_raises(spark, emb, tmp_path):
+    """Serving or upserting a store whose manifest lacks the bucket
+    counts raises instead of pruning with a guessed count."""
+    from openai_vector_search_demo_spark.operators.nsw import (
+        read_l1_meta,
+        upsert_nsw_index,
+    )
+    from openai_vector_search_demo_spark.stores import swap_manifest
+    base, corpus, batch = _upsert_parts(emb)
+    store = str(tmp_path / "nsw")
+    write_nsw_index(corpus, store, m=3)
+    meta = read_l1_meta(spark, store)
+    del meta["buckets"]
+    swap_manifest(spark, store, "_L1_META", meta)
+    with pytest.raises(ValueError, match="bucket count"):
+        nsw_stored_knn(spark, store, base, [0.1] * DIM, k=5, ef=5,
+                       rounds=2, seeds=[2, 10], m=3)
+    with pytest.raises(ValueError, match="bucket count"):
+        upsert_nsw_index(spark, store, batch, corpus, m=3)
+
+
+def test_two_level_hierarchy_serves_alike_in_both_engines_and_stored(
+        spark, tmp_path, monkeypatch):
+    """A two-level hierarchy (NSW_HIER_FLOOR lowered to 4 gives the
+    400-vector fixture an L2 of 4 nodes over its 20-node L1): the
+    driver engine, whose entry scan prefetches L2 whole and L1's
+    adjacency of its nodes, and the relational batch engine return the
+    same top-10 and visited set with the stop rule on and off; the
+    stored serve returns the inline serve's answer."""
+    from openai_vector_search_demo_spark.operators import nsw
+    from openai_vector_search_demo_spark.operators.nsw import (
+        NSW_STOP_K,
+        beam_search_knn_batch,
+        inline_levels,
+        read_l1_meta,
+        symmetrize_edges,
+    )
+    monkeypatch.setattr(nsw, "NSW_HIER_FLOOR", 4)
+    big = _hier_fixture(spark)
+    levels, flat_mod = inline_levels(big, 400, m=3)
+    assert [mod for _, mod in levels] == [20, 100] and flat_mod == 200
+    levels = [(lv.localCheckpoint(), mod) for lv, mod in levels]
+    edges = symmetrize_edges(build_knn_graph(big, m=3)).localCheckpoint()
+    qvecs = {100: [0.2] * DIM, 200: [(-1) ** i * 0.3 for i in range(DIM)]}
+    queries = spark.createDataFrame(list(qvecs.items()),
+                                    "qid long, qv array<double>")
+    for stop_k in (NSW_STOP_K, None):
+        kw = dict(k=1 << 20, ef=16, rounds=8, n_entry=4,
+                  hier_levels=levels, flat_mod=flat_mod, stop_k=stop_k)
+        batch = {}
+        for r in beam_search_knn_batch(edges, big, queries,
+                                       **kw).collect():
+            batch.setdefault(r.qid, []).append((r.rank, r.vec_id,
+                                                r.similarity))
+        for qid, qv in qvecs.items():
+            got = [(v, s) for _, v, s in sorted(batch[qid])]
+            want = [(r.vec_id, r.similarity) for r in
+                    beam_search_knn(edges, big, qv, **kw).collect()]
+            assert got[:10] == want[:10], (qid, stop_k)
+            assert set(got) == set(want), (qid, stop_k)
+    store = str(tmp_path / "nsw2")
+    write_nsw_index(big, store, m=3)
+    meta = read_l1_meta(spark, store)
+    assert meta["buckets"] == {"": 1, "_L1": 1, "_L2": 1}
+    stride, ef, rounds = nsw_serving_params(400)
+    stored = [(r.vec_id, r.similarity) for r in
+              nsw_stored_knn(spark, store, big, qvecs[200], k=10, ef=ef,
+                             rounds=rounds, m=3, stride=stride).collect()]
+    inline = [(r.vec_id, r.similarity) for r in
+              nsw_knn(big, qvecs[200], k=10, m=3, ef=ef, rounds=rounds,
+                      stride=stride).collect()]
+    assert stored == inline and len(stored) == 10
 
 
 def test_batch_engine_jobs_per_base_round(spark):
@@ -746,29 +872,27 @@ def test_compact_folds_deltas_and_tombstones(spark, emb, tmp_path):
     corpus = base.filter(F.col("vec_id") % 4 != 1)
     batch = base.filter(F.col("vec_id") % 4 == 1)
     store = str(tmp_path / "live")
-    write_nsw_index(corpus, store, m=3, n_buckets=4)
-    upsert_nsw_index(spark, store, batch, corpus, m=3, n_buckets=4)
+    write_nsw_index(corpus, store, m=3)
+    upsert_nsw_index(spark, store, batch, corpus, m=3)
     qvec = [0.25] * DIM
     best = nsw_stored_knn(spark, store, base, qvec, k=1, ef=5, rounds=2,
-                          seeds=[2, 10], n_buckets=4, m=3).first().vec_id
+                          seeds=[2, 10], m=3).first().vec_id
     delete_from_nsw_index(spark, store, [best])
 
     dest = str(tmp_path / "compacted")
-    n_dead = compact_nsw_index(spark, store, base, dest, m=3,
-                               n_buckets=4)
+    n_dead = compact_nsw_index(spark, store, base, dest, m=3)
     assert n_dead == 1
     assert len(read_l1_meta(spark, store)["segments"]) == 2
     assert "segments" not in read_l1_meta(spark, dest)
 
     want = str(tmp_path / "rebuild")
-    write_nsw_index(base.filter(F.col("vec_id") != best), want, m=3,
-                    n_buckets=4)
+    write_nsw_index(base.filter(F.col("vec_id") != best), want, m=3)
     got = [(r.vec_id, r.similarity) for r in
            nsw_stored_knn(spark, dest, base, qvec, k=10, ef=5, rounds=2,
-                          seeds=[2, 10], n_buckets=4, m=3).collect()]
+                          seeds=[2, 10], m=3).collect()]
     ref = [(r.vec_id, r.similarity) for r in
            nsw_stored_knn(spark, want, base, qvec, k=10, ef=5, rounds=2,
-                          seeds=[2, 10], n_buckets=4, m=3).collect()]
+                          seeds=[2, 10], m=3).collect()]
     assert got == ref
     assert best not in {v for v, _ in got}
 
@@ -848,11 +972,10 @@ def test_trusted_and_delta_resolution_agree_on_valid_store(
     untrusted = _spy_untrusted(monkeypatch)
     qvec = [0.15] * DIM
     store = str(tmp_path / "nsw")
-    write_nsw_index(emb, store, m=3, n_buckets=4)
+    write_nsw_index(emb, store, m=3)
     trusted = [(r.vec_id, r.similarity) for r in
                nsw_stored_knn(spark, store, emb, qvec, k=10, ef=5,
-                              rounds=3, seeds=[1, 9], m=3,
-                              n_buckets=4).collect()]
+                              rounds=3, seeds=[1, 9], m=3).collect()]
     assert untrusted == [False]
     # a manifest naming a graph segment (here one with no rows) flips
     # the SAME store onto the untrusted path
@@ -860,8 +983,7 @@ def test_trusted_and_delta_resolution_agree_on_valid_store(
                   {"": spark.createDataFrame([], _STORE_SCHEMA)})
     delta = [(r.vec_id, r.similarity) for r in
              nsw_stored_knn(spark, store, emb, qvec, k=10, ef=5,
-                            rounds=3, seeds=[1, 9], m=3,
-                            n_buckets=4).collect()]
+                            rounds=3, seeds=[1, 9], m=3).collect()]
     assert untrusted == [False, True]
     assert delta == trusted
 
@@ -875,7 +997,7 @@ def _upsert_parts(emb):
 def _serve(spark, store, base, qvec=(0.25,) * DIM):
     return [(r.vec_id, r.similarity) for r in
             nsw_stored_knn(spark, store, base, list(qvec), k=10, ef=5,
-                           rounds=2, seeds=[2, 10], n_buckets=4,
+                           rounds=2, seeds=[2, 10],
                            m=3).collect()]
 
 
@@ -893,7 +1015,7 @@ def test_upsert_killed_before_manifest_swap_serves_previous_version(
 
     base, corpus, batch = _upsert_parts(emb)
     store = str(tmp_path / "live")
-    write_nsw_index(corpus, store, m=3, n_buckets=4)
+    write_nsw_index(corpus, store, m=3)
     before, meta = _serve(spark, store, base), read_l1_meta(spark, store)
 
     def killed(*args, **kwargs):
@@ -902,7 +1024,7 @@ def test_upsert_killed_before_manifest_swap_serves_previous_version(
     with monkeypatch.context() as mp:
         mp.setattr(stores, "swap_manifest", killed)
         with pytest.raises(RuntimeError, match="manifest swap"):
-            upsert_nsw_index(spark, store, batch, corpus, m=3, n_buckets=4)
+            upsert_nsw_index(spark, store, batch, corpus, m=3)
     assert [p for p in (tmp_path / "live").iterdir()
             if p.name.startswith("_seg-")], "no segment was written"
     assert read_l1_meta(spark, store) == meta
@@ -910,10 +1032,10 @@ def test_upsert_killed_before_manifest_swap_serves_previous_version(
     assert _serve(spark, store, base) == before
     assert untrusted == [False]
 
-    upsert_nsw_index(spark, store, batch, corpus, m=3, n_buckets=4)
+    upsert_nsw_index(spark, store, batch, corpus, m=3)
     clean = str(tmp_path / "clean")
-    write_nsw_index(corpus, clean, m=3, n_buckets=4)
-    upsert_nsw_index(spark, clean, batch, corpus, m=3, n_buckets=4)
+    write_nsw_index(corpus, clean, m=3)
+    upsert_nsw_index(spark, clean, batch, corpus, m=3)
     assert _serve(spark, store, base) == _serve(spark, clean, base)
     assert untrusted == [False, True, True]
 
@@ -930,8 +1052,8 @@ def test_upsert_and_delete_on_file_uri_store_serve_bare_path_answer(
     base, corpus, batch = _upsert_parts(emb)
     answers = []
     for store in (str(tmp_path / "bare"), "file://" + str(tmp_path / "uri")):
-        write_nsw_index(corpus, store, m=3, n_buckets=4)
-        upsert_nsw_index(spark, store, batch, corpus, m=3, n_buckets=4)
+        write_nsw_index(corpus, store, m=3)
+        upsert_nsw_index(spark, store, batch, corpus, m=3)
         best = _serve(spark, store, base)[0][0]
         delete_from_nsw_index(spark, store, [best])
         answers.append((best, _serve(spark, store, base)))

@@ -691,7 +691,7 @@ def test_sq8_stored_scan_is_codes_only_and_python_free(spark, tmp_path):
 
 
 def test_nsw_stored_lookup_prunes_buckets_and_search_is_python_free(
-        spark, tmp_path):
+        spark, tmp_path, monkeypatch):
     """The stored graph's per-round edge lookup must prune at PARTITION
     DISCOVERY (the frontier's bucket list reaches PartitionFilters), and
     the search's scoring plan must stay Python-free with broadcast
@@ -704,8 +704,10 @@ def test_nsw_stored_lookup_prunes_buckets_and_search_is_python_free(
         id_in,
         vector_lit,
     )
+    from openai_vector_search_demo_spark.operators import nsw
     from openai_vector_search_demo_spark.operators.nsw import (
         nsw_stored_knn,
+        read_l1_meta,
         write_nsw_index,
     )
 
@@ -713,7 +715,11 @@ def test_nsw_stored_lookup_prunes_buckets_and_search_is_python_free(
     base = emb.filter(F.col("vec_id") != 0)
     qvec = emb.filter(F.col("vec_id") == 0).first().embedding
     store = str(tmp_path / "nsw")
-    write_nsw_index(base, store, m=4, n_buckets=8)
+    # a corpus this small is one bucket per layer; shrink the rows per
+    # bucket so the store keeps several bucket directories to prune
+    monkeypatch.setattr(nsw, "NSW_BUCKET_ROWS", 64)
+    write_nsw_index(base, store, m=4)
+    assert read_l1_meta(spark, store)["buckets"][""] >= 6
 
     edges = spark.read.parquet(store)
     lookup = edges.filter(id_in("bucket", [1, 5]) & id_in("src", [1, 101]))
@@ -721,7 +727,7 @@ def test_nsw_stored_lookup_prunes_buckets_and_search_is_python_free(
     assert "PartitionFilters" in p and "bucket" in p
 
     top = nsw_stored_knn(spark, store, base, qvec, k=10, ef=6,
-                         rounds=2, seeds=(1, 101), n_buckets=8)
+                         rounds=2, seeds=(1, 101))
     p = _physical(top)
     # the single-query beam accumulates scored rows driver-side, so the
     # RESULT plan is just the bounded k-row relation — that boundedness
@@ -831,7 +837,7 @@ def test_batched_beam_plan_is_python_free_with_broadcasts(spark):
     import tempfile
     with tempfile.TemporaryDirectory() as tmp:
         store = f"{tmp}/nsw"
-        write_nsw_index(base, store, m=4, n_buckets=4)
+        write_nsw_index(base, store, m=4)
         edges = spark.read.parquet(store)
         out = beam_search_knn_batch(edges, base, queries, k=5, ef=4,
                                     rounds=2, seeds=(20, 101))

@@ -87,6 +87,42 @@ def test_no_existing_probe_returns_empty_with_schema(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_stores_idx2")
 
 
+def test_absent_probes_with_a_schema_run_no_spark_job(spark, tmp_path):
+    """A caller passing its store's fixed schema: probing only cells
+    the store lacks (on a root of more than 32 cells, where a listing
+    becomes a parallel Spark job) returns an empty local relation with
+    that schema and runs no job, and present cells read the rows
+    inference would give."""
+    from openai_vector_search_demo_spark.stores import (
+        read_probed_partitions,
+    )
+
+    store = str(tmp_path / "idx40")
+    (spark.range(400).select(
+        F.col("id"), (F.col("id") % 40).cast("int").alias("cell"),
+        (F.col("id") * 3).alias("payload"))
+     .repartition(F.col("cell"))
+     .write.mode("overwrite").partitionBy("cell").parquet(store))
+    schema = "id long, payload long, cell int"
+    sc = spark.sparkContext
+    sc.setJobGroup("absent-probes", "absent-probes")
+    try:
+        out = read_probed_partitions(spark, store, "cell", [40, 41],
+                                     schema=schema)
+        rows, cols = out.collect(), out.columns
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert rows == [] and cols == ["id", "payload", "cell"]
+    assert list(sc.statusTracker().getJobIdsForGroup("absent-probes")) == []
+    got = sorted(tuple(r) for r in read_probed_partitions(
+        spark, store, "cell", [1, 41], schema=schema).collect())
+    want = sorted(tuple(r) for r in read_probed_partitions(
+        spark, store, "cell", [1, 41]).collect())
+    assert got == want and len(got) == 10
+
+
 def test_registration_is_idempotent_and_external(spark, tmp_path):
     """Re-registering must not fail or touch data files (external
     location): the store remains readable by the FS mode afterwards."""
