@@ -531,9 +531,9 @@ def bigram_lm_scores(df, text_col: str = "text", id_col: str = "doc_id",
       all fixed-width ints): LOSES — sf0.1 cold med 2.64 → 3.29 s,
       sf1 7.13 → 8.38 s.  Building the id map and double-probing the
       whole stream costs more than the narrower exchange saves on
-      local[32]; not adopted (scripts/ab_bigram_ids.py keeps the
-      variant for re-measurement on a real cluster, where network
-      shuffle re-weights the trade).
+      local[32]; not adopted (BASELINE.md "r10 notes: bigram
+      shuffle-byte levers measured"; worth re-measuring on a real
+      cluster, where network shuffle re-weights the trade).
     - Hash-first window sort keys (below): partitioning by
       (xxhash64(prev,tk), prev, tk) leaves the groups EXACTLY
       (prev,tk) — the hash is a function of the keys — but WindowExec's

@@ -45,6 +45,13 @@ from openai_vector_search_demo_spark.functions.text_analysis import (
 from openai_vector_search_demo_spark.functions.vectors import (
     cosine_similarity,
 )
+from openai_vector_search_demo_spark.stores import (
+    SEGMENTS,
+    layer_paths,
+    read_layer,
+    read_manifest,
+    write_segment,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -446,20 +453,22 @@ def _cross_verify(entries_n: DataFrame, entries_e: DataFrame,
                     F.round("jaccard", 6).alias("jaccard")))
 
 
+_SIGS = "_sigs"
+"""The band index's layer of shingle sets (``stores`` module docstring)."""
+
+
 def write_band_index(existing: DataFrame, path: str,
                      id_col: str = "doc_id", text_col: str = "text",
-                     k: int = 3, num_hashes: int = 16, bands: int = 4,
-                     mode: str = "overwrite") -> None:
+                     k: int = 3, num_hashes: int = 16,
+                     bands: int = 4) -> None:
     """The write-time band index ``minhash_lsh_cross`` promises: the
     existing corpus's ``(band, bucket, id)`` entries persisted
-    band-partitioned at ``path`` and its exact shingle-hash sets at
-    ``path + "_sigs"`` (the verify stage's input — stored separately so
-    the hs arrays are not duplicated once per band).
-
-    ``mode='append'`` adds a freshly ingested batch's entries/sigs to
-    the index — the continuous-ingestion loop: dedup the batch against
-    the store, keep the survivors, append THEM, repeat.  Each batch
-    computes only its own shingles; the accumulated corpus is never
+    band-partitioned at ``path`` and its exact shingle-hash sets as the
+    store's ``_sigs`` layer (``<path>/_sigs``, the verify stage's input
+    — stored apart so the hs arrays are not duplicated once per band).
+    This is the store's base: ``ingest_batch_against_index`` grows it
+    by segments (``stores`` module docstring), so each batch computes
+    only its own shingles and the accumulated corpus is never
     re-shingled."""
     rows = num_hashes // bands
     sh = _shingle_side(existing, id_col, text_col, k, num_hashes, "e",
@@ -467,8 +476,9 @@ def write_band_index(existing: DataFrame, path: str,
     sh = sh.persist()
     (_band_entries(sh, "e", rows, bands)
      .repartition(F.col("band"))
-     .write.mode(mode).partitionBy("band").parquet(path))
-    sh.select("id_e", "hs_e").write.mode(mode).parquet(path + "_sigs")
+     .write.mode("overwrite").partitionBy("band").parquet(path))
+    (sh.select("id_e", "hs_e").write.mode("overwrite")
+     .parquet(layer_paths(path, None, _SIGS)[0]))
     sh.unpersist()
 
 
@@ -486,23 +496,24 @@ def minhash_lsh_cross_stored(spark, new: DataFrame, store: str,
     values; the band partitioning co-locates the join's biggest key."""
     shn = _shingle_side(new, id_col, text_col, k, num_hashes, "n", cache)
     rows = num_hashes // bands
-    entries_e, hs_e = _read_band_store(spark, store, shn)
+    entries_e, hs_e = _read_band_store(
+        spark, store, shn.schema["id_n"].dataType.simpleString())
     return _cross_verify(
         _band_entries(shn, "n", rows, bands), entries_e,
         shn.select("id_n", "hs_n"), hs_e, threshold)
 
 
-def _read_band_store(spark, store: str, shn: DataFrame):
-    """A ``write_band_index`` store's ``(band entries, shingle sets)``,
+def _read_band_store(spark, store: str, id_type: str):
+    """A ``write_band_index`` store's ``(band entries, shingle sets)``:
+    each layer's base plus the segments the store's manifest names,
     read with their fixed schemas instead of inferring them (inference
-    is one parquet-footer job per read).  The id type is the new side's
-    (``shn``'s ``id_n``): the store holds ids of the same column the
-    writer was given."""
-    id_type = shn.schema["id_n"].dataType.simpleString()
-    return (spark.read.schema(f"id_e {id_type}, bucket bigint, band int")
-            .parquet(store),
-            spark.read.schema(f"id_e {id_type}, hs_e array<bigint>")
-            .parquet(store + "_sigs"))
+    is one parquet-footer job per read).  ``id_type`` is the type of
+    the id column the writer was given (the new side's)."""
+    manifest = read_manifest(spark, store, SEGMENTS)
+    return (read_layer(spark, layer_paths(store, manifest),
+                       f"id_e {id_type}, bucket bigint, band int"),
+            read_layer(spark, layer_paths(store, manifest, _SIGS),
+                       f"id_e {id_type}, hs_e array<bigint>"))
 
 
 def ingest_batch_against_index(spark, batch: DataFrame, store: str,
@@ -513,15 +524,17 @@ def ingest_batch_against_index(spark, batch: DataFrame, store: str,
                                threshold: float = 0.5) -> DataFrame:
     """ONE admission round of the continuous-ingestion dedup loop:
     shingle/MinHash the arriving batch ONCE, check it against the
-    ``write_band_index`` store, and append the ADMITTED docs' band
-    entries + shingle sets to the store — reusing the same shingled
-    frame for both the verify join and the append, so each batch pays
-    exactly one Arrow pass (the naive check-then-``write_band_index``
+    ``write_band_index`` store, and add the ADMITTED docs' band
+    entries and shingle sets to the store as ONE segment holding both
+    layers (``stores.write_segment``) — reusing the same shingled frame
+    for both the verify join and the write, so each batch pays exactly
+    one Arrow pass (the naive check-then-``write_band_index``
     composition shingles the batch twice).  Returns the verified
     ``(new_id, existing_id, jaccard)`` matches, one row per distinct
     match; the admitted set is ``batch − distinct(new_id)``.  The
     accumulated corpus is never re-shingled; the caller wraps a loop of
-    these per batch.
+    these per batch.  A round killed before its manifest swap leaves
+    the store as it was, so a retry admits the same documents.
 
     Plan: the batch's band entries are the broadcast build side of the
     band-candidate join, probed by the store's band entries; the
@@ -533,7 +546,7 @@ def ingest_batch_against_index(spark, batch: DataFrame, store: str,
     windows (spillable, no per-document array) bring each document's
     shingle set to its candidates, verify them, drop the pairs found in
     more than one band, and mark the documents that matched — the
-    append reads the unmarked rows, with no anti-join.  A batch that
+    segment reads the unmarked rows, with no anti-join.  A batch that
     repeats a doc id is verified with one of that id's shingle sets.
 
     Cache lifecycle: the shingled batch and that per-document verdict
@@ -545,7 +558,8 @@ def ingest_batch_against_index(spark, batch: DataFrame, store: str,
     rows = num_hashes // bands
     sh = _shingle_side(batch, id_col, text_col, k, num_hashes, "n",
                        cache=False).localCheckpoint(eager=True)
-    entries_e, hs_e = _read_band_store(spark, store, sh)
+    entries_e, hs_e = _read_band_store(
+        spark, store, sh.schema["id_n"].dataType.simpleString())
     cand = (entries_e.join(F.broadcast(_band_entries(sh, "n", rows, bands)),
                            ["band", "bucket"])
             .join(hs_e, "id_e")
@@ -556,12 +570,9 @@ def ingest_batch_against_index(spark, batch: DataFrame, store: str,
     jaccard = common / (F.size("_hs") + F.size("hs_e") - common)
     # a pair colliding in several bands arrives once per band
     again = F.lag("id_e").over(doc.orderBy("id_e")) == F.col("id_e")
-    # localCheckpoint, not persist: the append below grows the very
-    # parquet files this plan reads, and a lazily-persisted frame
-    # whose cache fills during the append job re-lists the store and
-    # reports every admitted doc as a jaccard-1.0 SELF-match.  The
-    # eager checkpoint pins the pre-append verdict: the batch's rows
-    # plus its verified matches.
+    # an eager checkpoint: the batch's rows plus its verified matches,
+    # computed once for both layers of the segment and the returned
+    # matches, which the layers then write from with no exchange
     verdict = (sh.unionByName(cand, allowMissingColumns=True)
                .withColumn("_hs", F.max("hs_n").over(doc))
                .withColumn("jaccard", F.when(pair, jaccard))
@@ -576,10 +587,10 @@ def ingest_batch_against_index(spark, batch: DataFrame, store: str,
     adm = (verdict.filter(F.col("id_e").isNull())
            .select(F.col("id_n").alias("id_e"),
                    F.col("hs_n").alias("hs_e"), "signature"))
-    (_band_entries(adm, "e", rows, bands)
-     .write.mode("append").partitionBy("band").parquet(store))
-    adm.select("id_e", "hs_e").write.mode("append").parquet(
-        store + "_sigs")
+    write_segment(spark, store, SEGMENTS,
+                  read_manifest(spark, store, SEGMENTS),
+                  {"": _band_entries(adm, "e", rows, bands),
+                   _SIGS: adm.select("id_e", "hs_e")})
     return (verdict.filter(F.col("id_e").isNotNull())
             .select(F.col("id_n").alias("new_id"),
                     F.col("id_e").alias("existing_id"), "jaccard"))

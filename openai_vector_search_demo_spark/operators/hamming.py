@@ -67,8 +67,8 @@ HAMMING_AUTO_NUMPY_MIN_OPS = 512
 SQL path costs nbits·dim interpreted HOF multiply-adds per row to build
 the signature (62·64 ≈ 4k — far past the few-hundred crossover), so auto
 routes to the fused Arrow/BLAS pass everywhere except toy widths.
-Measured for THIS family (``scripts/ab_hamming_method.py``, paired
-same-session, alternating order, values asserted bit-identical):
+Measured for THIS family (paired same-session A/B, alternating order,
+values asserted bit-identical):
 sql 5.42 s vs numpy 0.39 s min at sf0.1, 10.0 vs 0.64 at sf1 — ~14-15×,
 far past any plausible re-crossover."""
 

@@ -41,8 +41,9 @@ ANSI-SQL-replayable.
 The INCREMENTAL tier (``write_line_index`` /
 ``dedup_lines_against_index`` / ``ingest_lines_against_index``) is
 CCNet's actual deployment shape — each arriving shard is deduplicated
-against the hash set of everything already ingested — as a stored,
-bucket-partitioned index of distinct line hashes: the history is
+against the hash set of everything already ingested — as a stored
+index of distinct line hashes (a bucket-partitioned base plus one
+segment per admitted batch, ``stores`` module docstring): the history is
 never re-read, re-split, or re-hashed per batch, and concatenating
 the per-batch outputs equals the one-shot ``keep_first`` rule ordered
 by (batch, doc_id, pos).  The band-index pattern of
@@ -71,6 +72,14 @@ import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from openai_vector_search_demo_spark.stores import (
+    SEGMENTS,
+    layer_paths,
+    read_layer,
+    read_manifest,
+    write_segment,
+)
 
 __all__ = ["dedup_lines_across_docs", "write_line_index",
            "dedup_lines_against_index", "ingest_lines_against_index",
@@ -189,21 +198,17 @@ def _line_bucket(lh):
                   F.lit(LINE_INDEX_BUCKETS)).cast("int")
 
 
-def _append_owners(kept: DataFrame, path: str,
-                   mode: str = "append") -> None:
-    """Write the ``(lh, doc_id)`` owner rows of kept line occurrences,
-    bucket-partitioned.  The keep-first rule keeps one occurrence per
-    ``lh`` (a batch repeating a doc id included), so no distinct
-    shuffle; each writing task emits one file per bucket it holds."""
-    (kept.select("lh", "doc_id")
-     .withColumn("bucket", _line_bucket(F.col("lh")))
-     .write.mode(mode).partitionBy("bucket").parquet(path))
+def _owner_rows(kept: DataFrame) -> DataFrame:
+    """The ``(lh, doc_id, bucket)`` owner rows of kept line
+    occurrences.  The keep-first rule keeps one occurrence per ``lh``
+    (a batch repeating a doc id included), so no distinct shuffle."""
+    return (kept.select("lh", "doc_id")
+            .withColumn("bucket", _line_bucket(F.col("lh"))))
 
 
 def write_line_index(df: DataFrame, path: str,
                      text_col: str = "text", id_col: str = "doc_id",
-                     line_sep: str = "\n",
-                     mode: str = "overwrite") -> None:
+                     line_sep: str = "\n") -> None:
     """Persist the corpus's distinct line hashes WITH THEIR OWNERS,
     bucket-partitioned — the stored side of CCNet's
     shard-against-history dedup (each shard is deduplicated against
@@ -217,11 +222,13 @@ def write_line_index(df: DataFrame, path: str,
     lines; duplicate owner rows from replays are byte-identical and
     collapse under the read side's min() resolution).  Laid out
     ``bucket=B/part-*.parquet`` so the membership join co-locates by a
-    fixed-width key and a bucket's files stay bounded."""
+    fixed-width key and a bucket's files stay bounded.  This is the
+    store's base: ``ingest_lines_against_index`` grows it by segments
+    (``stores`` module docstring)."""
     _, occ = _line_occurrences(df, text_col, id_col, line_sep)
-    kept = _keep_first_within(occ)
-    _append_owners(kept.repartition(_line_bucket(F.col("lh"))), path,
-                   mode=mode)
+    (_owner_rows(_keep_first_within(occ))
+     .repartition(F.col("bucket"))
+     .write.mode("overwrite").partitionBy("bucket").parquet(path))
 
 
 def _admitted_docs(spark, batch: DataFrame, store: str, text_col: str,
@@ -247,8 +254,10 @@ def _admitted_docs(spark, batch: DataFrame, store: str, text_col: str,
     split, hashing and probe stay parallel either way."""
     base, occ = _line_occurrences(batch, text_col, id_col, line_sep)
     id_type = occ.schema["doc_id"].dataType.simpleString()
-    owned = (spark.read.schema(f"lh string, doc_id {id_type}, bucket int")
-             .parquet(store)
+    owned = (read_layer(spark,
+                        layer_paths(store,
+                                    read_manifest(spark, store, SEGMENTS)),
+                        f"lh string, doc_id {id_type}, bucket int")
              .select("lh", F.col("doc_id").alias("owner"))
              .join(F.broadcast(occ.select("lh", "doc_id", "pos")), "lh"))
     docs = base.select(F.concat(F.lit("#"), F.col("doc_id").cast("string"))
@@ -288,7 +297,7 @@ def dedup_lines_against_index(spark, batch: DataFrame, store: str,
     document in the index, or if an earlier (doc_id, pos) occurrence
     exists in this batch.  A batch doc that OWNS a stored line keeps
     its first occurrence of it — that is the replay case (the doc's
-    own earlier delivery appended the owner row), and it reproduces
+    own earlier delivery wrote the owner row), and it reproduces
     the original output exactly.  Returns the rebuilt documents — the
     ``dedup_lines_across_docs`` output contract.  The history side
     contributes only the owner rows of the batch's own lines; the
@@ -302,25 +311,29 @@ def ingest_lines_against_index(spark, batch: DataFrame, store: str,
                                id_col: str = "doc_id",
                                line_sep: str = "\n") -> DataFrame:
     """One admission round of the continuous line-dedup loop: dedup the
-    batch against the store (and within itself), append the SURVIVING
-    lines' ``(lh, owner)`` rows to the store, and return the rebuilt
-    batch documents.  The rebuilt documents, with their kept lines,
-    are pinned with ``localCheckpoint`` before the append (the
-    band-index lesson: a lazy plan re-reading the very files the
-    append grows would double-count) and feed both the owner append
-    and the returned frame — the admitted lines are never re-split.
+    batch against the store (and within itself), add the SURVIVING
+    lines' ``(lh, owner)`` rows to the store as one segment
+    (``stores.write_segment``), and return the rebuilt batch
+    documents.  The rebuilt documents, with their kept lines, are an
+    eager ``localCheckpoint``: computed once, they feed both the
+    segment, written from them with no exchange, and the returned
+    frame — the admitted lines are never re-split.  A round killed
+    before its manifest swap leaves the store as it was.
     IDEMPOTENT under at-least-once replay: a re-delivered batch's docs
     own their kept lines in the store, so the dedup reproduces the
-    original output and the append re-writes byte-identical owner rows
-    (min-resolved at read).  Concatenating each batch's output equals
-    the one-shot ``keep_first`` rule ordered by (batch, doc_id, pos).
-    The reduce side of the round (the per-line-hash verdict and the
-    rebuild) runs as one task: see ``_admitted_docs``."""
+    original output and the new segment re-writes byte-identical owner
+    rows (min-resolved at read).  Concatenating each batch's output
+    equals the one-shot ``keep_first`` rule ordered by (batch, doc_id,
+    pos).  The reduce side of the round (the per-line-hash verdict and
+    the rebuild) runs as one task: see ``_admitted_docs``."""
     docs = (_admitted_docs(spark, batch, store, text_col, id_col,
                            line_sep, one_task=True)
             .localCheckpoint(eager=True))
-    _append_owners(docs.select("doc_id", F.explode("_ls").alias("k"))
-                   .select(F.md5("k.line").alias("lh"), "doc_id"), store)
+    write_segment(spark, store, SEGMENTS,
+                  read_manifest(spark, store, SEGMENTS),
+                  {"": _owner_rows(
+                      docs.select("doc_id", F.explode("_ls").alias("k"))
+                      .select(F.md5("k.line").alias("lh"), "doc_id"))})
     return _finish(docs, line_sep)
 
 

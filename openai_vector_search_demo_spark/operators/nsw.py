@@ -59,7 +59,8 @@ nodes get scored.  Recall is measured, never assumed — with M = 16
 (the degree that keeps an exact-kNN graph navigable at 100k) the
 serving point gives mean/min recall@10 = 1.00/1.00 @ 2k, 1.00/1.00 @
 20k, 0.98/0.90 @ 100k at the SAME ef (``ann_nsw_mean_recall_at_10``,
-``ann_nsw_fixed_ef_scaling``, ``scripts/ab_nsw_v4_deep.py``).
+``ann_nsw_fixed_ef_scaling``; the numpy-twin sweep in BASELINE.md
+"r15 — NSW serving v4").
 
 Determinism contract (the ANN-family rule, ``ann.py`` module
 docstring): every selection — per-block top-M, global top-M, per-round
@@ -142,8 +143,8 @@ def nsw_serving_params(n: int) -> tuple[int, int, int]:
     point still decayed 0.97 → 0.77 → 0.62 across 2k/20k/100k
     (VERDICT r14 #1).  The constant point (with the deeper hierarchy
     and the M = {NSW_M} degree that makes a kNN graph navigable at
-    100k) was picked by the numpy-twin A/B
-    (``scripts/ab_nsw_v4_deep.py``) and holds mean recall ≥ 0.9 on the
+    100k) was picked by the numpy-twin A/B (BASELINE.md "r15 — NSW
+    serving v4") and holds mean recall ≥ 0.9 on the
     same 3-point curve with a visited count that SATURATES instead of
     growing — receipted by ``ann_nsw_fixed_ef_scaling``."""
     import math
@@ -1215,9 +1216,12 @@ def upsert_nsw_index(spark, path: str, batch: DataFrame,
                 build_knn_graph(sub, m=m, vec_col="v", id_col="id"),
                 buckets[level])
             rebuilt.append(level)
+    # repartition: each layer's corpus-wide Arrow pass stays parallel
+    # under write_segment's coalesce
     write_segment(spark, path, _META,
                   {**meta, **_hier_meta(strides, counts, m, n, buckets)},
-                  layers, rebuilt=rebuilt)
+                  {k: v.repartition(1) for k, v in layers.items()},
+                  rebuilt=rebuilt)
 
 
 def _layer_rows(spark, path: str, meta: dict, layer: str = ""

@@ -20,8 +20,8 @@ iterative-algorithm pattern, after ``operators.kmeans``):
   cached relation instead of re-deriving it (pre-r11 the registered
   query's self-join edge derivation appeared 3× in the uncached plan;
   the paired A/B at sf1 puts the persist-once form ~18% ahead, SCALE.md
-  r11).  Two levers were MEASURED AND DECLINED (scripts/
-  ab_pagerank_persist.py protocol): explicitly repartitioning edges and
+  r11).  Two levers were MEASURED AND DECLINED (BASELINE.md "r11
+  notes", pagerank persist-once A/B): explicitly repartitioning edges and
   nodes on the join key (loses at sf0.1, a wash at sf1 — the iteration
   join's own exchange already co-locates, so the extra shuffle never
   pays), and broadcasting the rank vector into the edge join (wins ~10%
@@ -90,7 +90,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         # on every rank vector) rather than kept as a separate sink-node
         # relation: the per-round dangling sum then needs no semi-join —
         # just a conditional aggregate over the cached ranks.  Paired
-        # same-session A/B (scripts/ab_pagerank_dangling_fold.py): a
+        # same-session A/B (BASELINE.md "r12 notes: dangling-PageRank
+        # semi-join fold A/B"): a
         # wash at sf0.1 (+0.15 s on 4.1), −11% at sf1 (7.26 → 6.44 s),
         # where the dropped per-round join/broadcast stages matter.
         srcs = ein.select(F.col("_src").alias("node")).distinct()

@@ -440,10 +440,6 @@ def _residual_encoded(df: DataFrame,
     return df.mapInPandas(enc, out_schema)
 
 
-_SEGMENTS = "_SEGMENTS"
-"""The IVFPQ store's segment manifest (``stores`` module docstring)."""
-
-
 def write_ivfpq_index(df: DataFrame, path: str,
                       centroids: list[list[float]],
                       codebooks: list[list[list[float]]],
@@ -516,7 +512,10 @@ def upsert_ivfpq_index(spark, df: DataFrame, path: str,
     Cost: one Arrow encode pass over the BATCH and one semi-join of the
     store against its ids; the fp32 corpus is never touched.
     ``compact_ivfpq_index`` folds the segments back into one base."""
-    from openai_vector_search_demo_spark.stores import write_segment
+    from openai_vector_search_demo_spark.stores import (
+        SEGMENTS,
+        write_segment,
+    )
 
     manifest, existing = _ivfpq_rows(spark, path)
     # Columns come from the STORE's schema, not the batch's: a delete
@@ -543,18 +542,20 @@ def upsert_ivfpq_index(spark, df: DataFrame, path: str,
                  .withColumn("batch", F.lit(batch))
                  .withColumn("tombstone", F.lit(False)))
         out = tombs.unionByName(fresh)
-    write_segment(spark, path, _SEGMENTS, manifest, {"": out})
+    # repartition: the encode pass stays parallel under the coalesce
+    write_segment(spark, path, SEGMENTS, manifest, {"": out.repartition(1)})
     return batch
 
 
 def _ivfpq_rows(spark, path: str) -> tuple[dict | None, DataFrame]:
     """(manifest, every row): the base plus the segments it names."""
     from openai_vector_search_demo_spark.stores import (
+        SEGMENTS,
         layer_paths,
         read_layer,
         read_manifest,
     )
-    manifest = read_manifest(spark, path, _SEGMENTS)
+    manifest = read_manifest(spark, path, SEGMENTS)
     return manifest, read_layer(spark, layer_paths(path, manifest))
 
 
@@ -620,6 +621,7 @@ def ivfpq_stored_knn(spark, store: str, qvec: Sequence[float],
         ivf_probe_cells_dot,
     )
     from openai_vector_search_demo_spark.stores import (
+        SEGMENTS,
         layer_paths,
         read_manifest,
         read_probed_partitions,
@@ -641,16 +643,17 @@ def ivfpq_stored_knn(spark, store: str, qvec: Sequence[float],
         store = f"{store.rstrip('/')}/tenant={escape_partition_value(tenant)}"
     cand = read_probed_partitions(spark, store, "cell", probes,
                                   table=table)
-    # the probed cells of every segment (one batch-sized file, read
+    # the probed cells of every segment (batch-sized files, one scan
     # with the base's schema) join the candidates, and per-(id, cell)
     # latest-wins drops stale versions and tombstoned ids; a store
     # without segments skips it (no window, no shuffle)
-    segments = layer_paths(store, read_manifest(spark, store, _SEGMENTS))[1:]
-    for seg in segments:
-        cand = cand.unionByName(spark.read.schema(cand.schema).parquet(seg)
-                                .filter(F.col("cell").isin(probes)))
+    segments = layer_paths(store, read_manifest(spark, store, SEGMENTS))[1:]
     if segments:
-        cand = resolve_ivfpq_versions(cand, id_col)
+        cand = resolve_ivfpq_versions(
+            cand.unionByName(spark.read.schema(cand.schema)
+                             .parquet(*segments)
+                             .filter(F.col("cell").isin(probes))),
+            id_col)
     elif "batch" in cand.columns:
         cand = cand.drop("batch", "tombstone")
     lut_df = spark.createDataFrame(

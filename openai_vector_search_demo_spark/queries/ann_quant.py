@@ -86,7 +86,7 @@ def _neardup_pairs_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode + bucket join is paid once per corpus, not once per slot
     per run.  At 100 TB this is the materialized edge table every
     near-dup graph job reads — recomputed only on ingest (the
-    ``write_band_index`` append loop maintains its candidate superset
+    ``ingest_batch_against_index`` loop maintains its candidate superset
     incrementally)."""
     from openai_vector_search_demo_spark.operators.dedup import (
         ngram_jaccard_pairs,

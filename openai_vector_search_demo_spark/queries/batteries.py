@@ -1081,11 +1081,11 @@ def dedup_cross_corpus_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band-partitioned) and shingle-hash sets ONCE at write time;
     ``minhash_lsh_cross_stored`` then shingles only the re-arriving
     batch and joins the stored entries, so the accumulated corpus is
-    never re-shingled per batch (``mode='append'`` grows the index with
-    each batch's survivors).  Shares the inline operator's prep/verify
-    helpers, hence the identical oracle — pruning recomputation is
-    invisible to values.  Store cached per corpus content like the ANN
-    stores."""
+    never re-shingled per batch (``ingest_batch_against_index`` grows
+    the index with each batch's survivors).  Shares the inline
+    operator's prep/verify helpers, hence the identical oracle —
+    pruning recomputation is invisible to values.  Store cached per
+    corpus content like the ANN stores."""
     from openai_vector_search_demo_spark.operators.dedup import (
         minhash_lsh_cross_stored,
     )
@@ -1099,15 +1099,15 @@ def dedup_cross_corpus_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ensure_band_store(docs: DataFrame, sf_dir: str) -> str:
-    """Build-once cache of the corpus band index (+ its ``_sigs``
-    sibling, published with it), keyed by corpus content like the ANN
-    stores; shared by the stored batch slot and the streaming gate."""
+    """Build-once cache of the corpus band index (with its ``_sigs``
+    layer), keyed by corpus content like the ANN stores; shared by the
+    stored batch slot and the streaming gate."""
     from openai_vector_search_demo_spark.operators.dedup import (
         write_band_index,
     )
 
     return open_or_build(
-        docs.sparkSession, "band", 1, [f"{sf_dir}/documents.parquet"],
+        docs.sparkSession, "band", 2, [f"{sf_dir}/documents.parquet"],
         lambda path: write_band_index(docs, path, k=3, num_hashes=16,
                                       bands=4),
         k=3, num_hashes=16, bands=4)
@@ -1262,14 +1262,14 @@ def dedup_ingest_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern ``write_band_index``'s docstring documents, receipted as one
     slot: build the corpus band index once, then for each arriving
     batch (1) check it against the store, (2) admit the non-duplicates,
-    (3) append ONLY the admitted docs' band entries/sigs to the store
-    (``mode='append'``), so batch 2 is deduplicated against corpus ∪
+    (3) add ONLY the admitted docs' band entries/sigs to the store (one
+    segment per batch), so batch 2 is deduplicated against corpus ∪
     batch-1 survivors without ever re-shingling the accumulated corpus.
 
     The seeded arrivals exercise every path: batch 1 mixes verbatim
     re-arrivals (rejected against the corpus) with half-token variants
-    (sub-threshold → admitted, appended); batch 2 re-sends the SAME
-    half-token variants (now rejected — proving the append worked) plus
+    (sub-threshold → admitted, written); batch 2 re-sends the SAME
+    half-token variants (now rejected — proving the write worked) plus
     fresh half-token docs (admitted).  Emits the per-batch admission
     audit ``(batch, n_arrived, n_rejected, n_admitted)``; the oracle
     replays both rounds including the store growth.  At 100 TB each

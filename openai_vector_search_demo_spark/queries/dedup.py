@@ -672,7 +672,7 @@ def ccnet_line_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = split_doc_scan(spark, t(spark, sf_dir, "documents"))
     derived = derived_token_lines(docs, _LDW)
     store = open_or_build(
-        spark, "lineidx", 1, [f"{sf_dir}/documents.parquet"],
+        spark, "lineidx", 2, [f"{sf_dir}/documents.parquet"],
         lambda path: write_line_index(
             derived.filter(F.col("doc_id") % 2 == 0), path),
         line_words=_LDW)
@@ -745,7 +745,7 @@ def streaming_line_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived = derived_token_lines(docs, _LDW)
     docs_path = os.path.join(sf_dir, "documents.parquet")
     key = hashlib.md5(
-        f"{sf_dir}|linestream{_LDW}|{_parquet_fingerprint(docs_path)}"
+        f"{sf_dir}|linestream{_LDW}|v2|{_parquet_fingerprint(docs_path)}"
         .encode()).hexdigest()[:10]
     root = os.path.join("/tmp", "spark_graft_linestream_" + key)
     store = os.path.join(root, "lidx")

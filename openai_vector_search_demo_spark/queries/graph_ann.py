@@ -354,8 +354,8 @@ CONSTANT serving width ef = {_NSW_EF_SERVE} (`NSW_EF_SERVE`): a 5×
 cheaper point below it, the registered point itself, and a 2× point
 above — the curve prices what narrowing buys (less visited) and costs
 (recall) around the shipped knee.  The v4 operating point was chosen
-by the 3-scale numpy-twin sweep in ``scripts/ab_nsw_v4_deep.py``
-(decision table in BASELINE.md r15)."""
+by the 3-scale numpy-twin sweep (decision table in BASELINE.md
+"r15 — NSW serving v4")."""
 
 
 def _nsw_curve_oracle() -> str:

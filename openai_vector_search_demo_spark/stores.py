@@ -28,38 +28,44 @@ rename).  The reference builds its index once per alias and then only
 serves from it (modules/utilities.py); this is that lifecycle for the
 engine's on-disk stores.
 
-The mutable stores (NSW graph, IVFPQ cells) change after publication
-by one protocol — a base plus the segments a manifest names, REPOSE's
+The mutable stores (NSW graph, IVFPQ cells, the MinHash band index and
+its shingle sets, the line-hash index) change after publication by one
+protocol — a base plus the segments a manifest names, REPOSE's
 partition-local indexes under one global metadata record:
 
-- An upsert or delete writes its rows as one new directory inside the
-  store, ``_seg-<batch>-<uuid>`` (``write_segment``), one file per
-  layer; the leading ``_`` keeps it out of every scan of the base.
+- An upsert, delete or admission writes its rows as one new directory
+  inside the store, ``_seg-<batch>-<uuid>`` (``write_segment``), one
+  file per layer; the leading ``_`` keeps it out of every scan of the
+  base.
 - It then replaces the store's one manifest (``_L1_META`` for NSW,
-  ``_SEGMENTS`` for IVFPQ) by a temp write and a Hadoop-FS rename
-  (``swap_manifest``).  A writer killed before the swap leaves an
-  unnamed segment that nothing reads.
+  ``SEGMENTS`` = ``_SEGMENTS`` for every other store) by a temp write
+  and a Hadoop-FS rename (``swap_manifest``).  A writer killed before
+  the swap leaves an unnamed segment that nothing reads; the next
+  ``write_segment`` deletes it.
 - Readers read the base plus exactly the segments the manifest names
-  (``layer_paths``).  Its ``segments`` list holds ``{"name", "batch",
-  "layers"}`` entries, names relative to the store root (a store
-  published by rename stays valid); ``layers`` maps each layer the
-  segment writes (``""`` is the base table) to ``"delta"`` (rows added)
-  or ``"base"`` (layer rebuilt).  A ``"tombstones"`` segment holds ids.
-  No manifest, or no segments, means the base alone.
+  (``layer_paths``), as two scans: the base, and one over every
+  segment (``read_layer``).  The manifest's ``segments`` list holds
+  ``{"name", "batch", "layers"}`` entries, names relative to the store
+  root (a store published by rename stays valid); ``layers`` maps each
+  layer the segment writes (``""`` is the base table, ``_sigs`` the
+  band index's shingle sets, ``_L1`` … the NSW levels) to ``"delta"``
+  (rows added) or ``"base"`` (layer rebuilt).  A ``"tombstones"``
+  segment holds ids.  No manifest, or no segments, means the base
+  alone, so base writers write none.
 - A segment's batch is one more than the segments before it.  A
   tombstone hides what the base and earlier segments hold for its key;
   each tier keeps its own resolution (IVFPQ's latest-batch-wins window,
   NSW's top-m plus mirror validation).  Compaction is caller-driven: a
   new base, at a new location, from the base and its segments.
 
-One writer per store: two concurrent upserts would build on the same
-manifest, and the second swap would drop the first one's segment.
+One writer per store: two concurrent writers would build on the same
+manifest, the second swap would drop the first one's segment, and each
+would delete the other's segment as an orphan before its swap.
 """
 
 from __future__ import annotations
 
 import errno
-import functools
 import hashlib
 import json
 import os
@@ -73,6 +79,7 @@ __all__ = ["read_probed_partitions", "register_partitioned_store",
            "local_frame",
            "fs_write_text", "fs_read_text", "read_manifest",
            "swap_manifest", "write_segment", "layer_paths", "read_layer",
+           "SEGMENTS",
            "escape_partition_value", "tenant_values", "open_or_build",
            "store_path"]
 
@@ -184,6 +191,23 @@ def swap_manifest(spark: SparkSession, store: str, name: str,
     fc.rename(src, sc._jvm.org.apache.hadoop.fs.Path(f"{root}/{name}"), opts)
 
 
+SEGMENTS = "_SEGMENTS"
+"""The segment manifest of every mutable store but NSW (whose
+``_L1_META`` also records its graph geometry)."""
+
+
+def _glob(spark: SparkSession, root: str, pattern: str) -> list:
+    """``FileStatus`` of each child of ``root`` matching ``pattern`` — one
+    Hadoop-FS glob (a posix listing misses a ``file://`` or ``s3a://``
+    store), with the root's own glob characters escaped."""
+    escaped = "".join("\\" + c if c in "\\{}[]*?" else c for c in root)
+    _, fs = _hadoop_path_fs(spark, root)
+    found = fs.globStatus(
+        spark.sparkContext._jvm.org.apache.hadoop.fs.Path(
+            f"{escaped}/{pattern}"))
+    return list(found or [])
+
+
 def write_segment(spark: SparkSession, store: str, name: str,
                   manifest: dict | None, layers: dict, rebuilt=(),
                   tombstones: bool = False) -> None:
@@ -193,14 +217,29 @@ def write_segment(spark: SparkSession, store: str, name: str,
     lists one directory, not one per partition — then manifest ``name``
     becomes ``manifest`` plus the new segment.  Layers in ``rebuilt``
     replace their layer; ``tombstones`` marks an id segment.  Rows
-    stamped with a batch use ``len(segments) + 1``."""
+    stamped with a batch use ``len(segments) + 1``.
+
+    A layer is written through ``coalesce(1)``, which adds no exchange:
+    a frame read from a checkpoint writes in the one job that reads
+    it.  A caller whose frame still computes wide work repartitions it
+    first, or the coalesce would run all of that work in one task.
+
+    Before writing, every ``_seg-*`` directory ``manifest`` does not
+    name is deleted: with one writer per store it is the leftover of a
+    write killed before its swap."""
     manifest = dict(manifest or {})
     segments = manifest.get("segments", [])
+    root = store.rstrip("/")
+    named = {seg["name"] for seg in segments}
+    _, fs = _hadoop_path_fs(spark, root)
+    for st in _glob(spark, root, "_seg-*"):
+        if st.getPath().getName() not in named:
+            fs.delete(st.getPath(), True)
     entry = {"name": f"_seg-{len(segments) + 1:05d}-{uuid.uuid4().hex[:8]}",
              "batch": len(segments) + 1}
     for layer, df in layers.items():
-        df.repartition(1).write.parquet(
-            "/".join(filter(None, [store.rstrip("/"), entry["name"], layer])))
+        df.coalesce(1).write.parquet(
+            "/".join(filter(None, [root, entry["name"], layer])))
     if tombstones:
         entry["tombstones"] = True
     else:
@@ -229,16 +268,18 @@ def layer_paths(store: str, manifest: dict | None,
 
 def read_layer(spark: SparkSession, paths: list[str],
                schema=None) -> DataFrame:
-    """One relation over ``layer_paths``: a union of one read per
-    directory (partition discovery refuses several roots), each with
-    ``schema`` or the first one's (a segment without rows has no file
-    to infer from).  A store without segments is one scan, as before."""
+    """One relation over ``layer_paths``: a scan of the first directory
+    (the base, possibly partitioned) with ``schema`` or its inferred
+    one, unioned with ONE scan of all the others — segments are
+    unpartitioned files of the same schema, so one multi-path read
+    takes them all, where partition discovery would refuse the base
+    among them.  A store without segments is one scan, as before."""
     first = (spark.read if schema is None
              else spark.read.schema(schema)).parquet(paths[0])
-    return functools.reduce(
-        DataFrame.unionByName,
-        [spark.read.schema(first.schema).parquet(p) for p in paths[1:]],
-        first)
+    if len(paths) == 1:
+        return first
+    return first.unionByName(
+        spark.read.schema(first.schema).parquet(*paths[1:]))
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
@@ -281,14 +322,8 @@ def read_probed_partitions(spark: SparkSession, store: str, part_col: str,
         return spark.table(table).filter(F.col(part_col).isin(probes))
     root, paths = store.rstrip("/"), []
     if probes:
-        # one glob of the root through the Hadoop FS (a posix stat is
-        # always False for a file:// or s3a:// store), root escaped
-        pattern = "".join("\\" + c if c in "\\{}[]*?" else c for c in root)
-        _, fs = _hadoop_path_fs(spark, root)
-        found = fs.globStatus(spark.sparkContext._jvm.org.apache.hadoop.fs
-                              .Path(f"{pattern}/{part_col}={{"
-                                    f"{','.join(map(str, probes))}}}"))
-        names = {st.getPath().getName() for st in found or []}
+        names = {st.getPath().getName() for st in _glob(
+            spark, root, f"{part_col}={{{','.join(map(str, probes))}}}")}
         paths = [f"{root}/{part_col}={v}" for v in probes
                  if f"{part_col}={v}" in names]
     if not paths and schema is not None:
@@ -391,8 +426,7 @@ def open_or_build(spark: SparkSession, kind: str, version: int, inputs,
     any changed build argument gets a new store, never a stale one.
 
     A build runs as ``build(<tmp>/store)`` inside a unique sibling
-    directory ``<root>.tmp-<uuid>`` (sibling outputs such as
-    ``store_sigs`` land there too); ``_MANIFEST`` (kind, version,
+    directory ``<root>.tmp-<uuid>``; ``_MANIFEST`` (kind, version,
     params, fingerprint) is written after it, and ``os.rename`` then
     publishes the whole directory at once.  POSIX rename refuses a
     non-empty target, so of two concurrent builders exactly one

@@ -466,15 +466,15 @@ def stream_neardup_gate(doc_stream: DataFrame, store: str, on_result,
     ``on_result(match_df, batch_id)`` receives the verified
     ``(new_id, existing_id, jaccard)`` match DATAFRAME — the hook a
     deployment points at its admission policy (drop the arrival, or
-    keep it and append its entries to the index for the next batch).
+    keep it and add its entries to the index for the next batch).
     The callback, not the gate, decides whether to collect or write to
     a sink (r15 contract: a heavily duplicated batch at scale would
     make a gate-side collect unbounded).  With
     ``append_admitted=True`` the gate IS the full continuous-ingestion
     loop run live: each micro-batch's admitted docs' band entries/sigs
-    are appended to the store before the next batch arrives
+    join the store as one segment before the next batch arrives
     (``dedup.ingest_batch_against_index`` — one Arrow shingle pass per
-    batch shared by the check and the append), so later arrivals are
+    batch shared by the check and the write), so later arrivals are
     deduplicated against the corpus PLUS earlier survivors; the
     stream ≡ batch-loop equality is pinned in tests/test_streaming.py.
 
@@ -600,10 +600,10 @@ def stream_line_dedup_ingest(doc_stream: DataFrame, store: str,
     IDEMPOTENT under at-least-once replay, derived from the DATA: a
     re-delivered batch's docs are anti-joined against the output
     table first (fully-applied ⇒ no-op), and the half-applied window —
-    owner rows appended, output append lost — replays through the
+    owner segment written, output append lost — replays through the
     operator's OWNER rule (the batch's docs own their kept lines, so
-    the dedup reproduces the original output and the owner re-append
-    is byte-identical, min-resolved at read) before completing the
+    the dedup reproduces the original output and the re-written owner
+    rows are byte-identical, min-resolved at read) before completing the
     output append.  ``output_dir`` must exist (seed it with zero rows
     of the output schema) and ``store`` must hold the prior history
     (``write_line_index``) before the stream starts."""

@@ -642,10 +642,12 @@ def test_band_index_stored_equals_inline(spark, tmp_path):
 
 def test_band_index_append_is_incremental(spark, tmp_path):
     """The continuous-ingestion loop: dedup batch 2 against a store that
-    batch 1 was appended to — batch-2 re-arrivals of batch-1 docs are
-    caught WITHOUT ever re-shingling the original corpus, and the result
-    equals the inline operator over the unioned corpus."""
+    an admission round of batch 1 grew — batch-2 re-arrivals of batch-1
+    docs are caught WITHOUT ever re-shingling the original corpus, and
+    the result equals the inline operator over the corpus plus batch
+    1's admitted docs."""
     from openai_vector_search_demo_spark.operators.dedup import (
+        ingest_batch_against_index,
         minhash_lsh_cross,
         minhash_lsh_cross_stored,
         write_band_index,
@@ -662,12 +664,15 @@ def test_band_index_append_is_incremental(spark, tmp_path):
               .withColumn("doc_id", F.col("doc_id") + 2000000))
     store = str(tmp_path / "band_index_inc")
     write_band_index(base, store)
-    write_band_index(batch1, store, mode="append")
+    rejected = sorted({r.new_id for r in
+                       ingest_batch_against_index(spark, batch1, store)
+                       .collect()})
+    admitted = batch1.filter(~F.col("doc_id").isin(rejected))
     got = sorted(map(tuple,
                      minhash_lsh_cross_stored(spark, batch2, store,
                                               cache=False).collect()))
     want = sorted(map(tuple,
-                      minhash_lsh_cross(batch2, base.unionByName(batch1),
+                      minhash_lsh_cross(batch2, base.unionByName(admitted),
                                         cache=False).collect()))
     assert got == want
     # every verbatim re-arrival must be caught (identical docs collide
@@ -687,7 +692,7 @@ def test_ingest_batch_shingles_once_and_appends_only_admitted(spark,
     enter the store, and an identical re-ingest then rejects the whole
     batch (admission idempotence)."""
     from openai_vector_search_demo_spark.operators.dedup import (
-        ingest_batch_against_index, write_band_index)
+        _read_band_store, ingest_batch_against_index, write_band_index)
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
     base = docs.filter(F.col("doc_id") < 300)
@@ -703,14 +708,92 @@ def test_ingest_batch_shingles_once_and_appends_only_admitted(spark,
     admitted = batch_ids - rejected
     assert admitted and rejected  # both paths exercised
     # the store grew by exactly the admitted docs' sigs
-    sig_ids = {r.id_e for r in
-               spark.read.parquet(store + "_sigs").select("id_e").collect()}
+    sigs = _read_band_store(spark, store, "bigint")[1]
+    sig_ids = {r.id_e for r in sigs.select("id_e").collect()}
     assert sig_ids & batch_ids == admitted
     # idempotence: the same batch re-ingested is now fully rejected
     # (every doc matches either the base corpus or its own admitted copy)
     m2 = ingest_batch_against_index(spark, batch, store)
     assert {r.new_id for r in m2.select("new_id").distinct().collect()} \
         == batch_ids
+
+
+def _band_rows(spark, store):
+    """A band store's (entries, shingle sets), sorted, read through the
+    admission's own reader."""
+    from openai_vector_search_demo_spark.operators.dedup import (
+        _read_band_store,
+    )
+    entries, sigs = _read_band_store(spark, store, "bigint")
+    return (sorted(map(tuple, entries.collect())),
+            sorted((r.id_e, tuple(sorted(r.hs_e))) for r in sigs.collect()))
+
+
+def test_band_admission_killed_before_its_sigs_leaves_the_store_unchanged(
+        spark, tmp_path, monkeypatch):
+    """A band admission killed while writing its shingle sets, after its
+    band entries, leaves the store as it was: the entries and the
+    shingle sets both read back unchanged.  A retry then returns what
+    the same round returns on an uninterrupted twin store, leaves the
+    twin's rows and no segment the manifest does not name, and a later
+    batch still finds a near-duplicate of a document the retry
+    admitted."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from openai_vector_search_demo_spark.operators.dedup import (
+        ingest_batch_against_index, write_band_index)
+    from openai_vector_search_demo_spark.stores import (
+        SEGMENTS,
+        read_manifest,
+    )
+
+    docs = spark.read.parquet(
+        "/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
+    base = docs.filter(F.col("doc_id") < 200)
+    # unseen documents plus exact copies of stored ones
+    batch = (docs.filter(F.col("doc_id").between(200, 259))
+             .unionByName(docs.filter(F.col("doc_id") % 10 == 0)
+                          .filter(F.col("doc_id") < 200)
+                          .withColumn("doc_id",
+                                      F.col("doc_id") + 1000000)))
+    store, twin = str(tmp_path / "killed"), str(tmp_path / "twin")
+    write_band_index(base, store)
+    write_band_index(base, twin)
+    before = _band_rows(spark, store)
+
+    real = DataFrameWriter.parquet
+
+    def killed(self, path, *args, **kwargs):
+        if str(path).rstrip("/").endswith("_sigs"):
+            raise RuntimeError("killed before the shingle sets")
+        return real(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", killed)
+        with pytest.raises(RuntimeError, match="shingle sets"):
+            ingest_batch_against_index(spark, batch, store)
+    assert _band_rows(spark, store) == before
+
+    def found(out):
+        return sorted(map(tuple, out.collect()))
+
+    retried = found(ingest_batch_against_index(spark, batch, store))
+    assert retried == found(ingest_batch_against_index(spark, batch, twin))
+    assert _band_rows(spark, store) == _band_rows(spark, twin)
+    assert _band_rows(spark, store) != before
+    named = {seg["name"] for seg in
+             read_manifest(spark, store, SEGMENTS)["segments"]}
+    assert {p.name for p in (tmp_path / "killed").iterdir()
+            if p.name.startswith("_seg-")} == named
+
+    rejected = {new_id for new_id, _, _ in retried}
+    admitted = min(set(range(200, 260)) - rejected)
+    near = (docs.filter(F.col("doc_id") == admitted)
+            .select((F.col("doc_id") + 3000000).alias("doc_id"),
+                    F.concat("text", F.lit(" and one more line"))
+                    .alias("text")))
+    later = found(ingest_batch_against_index(spark, near, store))
+    assert (admitted + 3000000, admitted) in [(n, e) for n, e, _ in later]
 
 
 def _round_caches(spark) -> int:

@@ -131,9 +131,17 @@ def test_within_batch_keep_first_against_index(spark, tmp_path):
 
 
 def _owner_rows(spark, store):
-    return sorted((r.lh, r.doc_id) for r in
-                  spark.read.schema("lh string, doc_id long, bucket int")
-                  .parquet(store).collect())
+    """The store's owner rows: its base plus the segments its manifest
+    names."""
+    from openai_vector_search_demo_spark.stores import (
+        SEGMENTS,
+        layer_paths,
+        read_layer,
+        read_manifest,
+    )
+    return sorted((r.lh, r.doc_id) for r in read_layer(
+        spark, layer_paths(store, read_manifest(spark, store, SEGMENTS)),
+        "lh string, doc_id long, bucket int").collect())
 
 
 def test_ingest_batch_repeating_a_doc_id(spark, tmp_path):
@@ -141,7 +149,7 @@ def test_ingest_batch_repeating_a_doc_id(spark, tmp_path):
     one batch) yields ONE row for that id: keep_first keeps one
     occurrence per line, the id's rows' line counts add up, and one
     owner row per kept line joins the store.  A replay of the batch
-    reproduces the output and appends only byte-identical owners."""
+    reproduces the output and writes only byte-identical owners."""
     from hashlib import md5
 
     from openai_vector_search_demo_spark.operators.line_dedup import (

@@ -36,14 +36,14 @@ def _knn(spark, store, qvec, cent, cb, k=10):
 
 def _rows(spark, store):
     """Every row of an IVFPQ store: base plus manifest-named segments."""
-    from openai_vector_search_demo_spark.operators.pq import _SEGMENTS
     from openai_vector_search_demo_spark.stores import (
+        SEGMENTS,
         layer_paths,
         read_layer,
         read_manifest,
     )
     return read_layer(spark, layer_paths(
-        store, read_manifest(spark, store, _SEGMENTS)))
+        store, read_manifest(spark, store, SEGMENTS)))
 
 
 def test_upsert_half_equals_full_rebuild(spark, tmp_path, parts):
@@ -140,9 +140,11 @@ def test_ids_only_delete_batch_keeps_store_meta_schema(spark, tmp_path,
 
 def test_compaction_resolves_and_clears_marker(spark, tmp_path, parts):
     from openai_vector_search_demo_spark.operators.pq import (
-        _SEGMENTS, compact_ivfpq_index, upsert_ivfpq_index,
-        write_ivfpq_index)
-    from openai_vector_search_demo_spark.stores import read_manifest
+        compact_ivfpq_index, upsert_ivfpq_index, write_ivfpq_index)
+    from openai_vector_search_demo_spark.stores import (
+        SEGMENTS,
+        read_manifest,
+    )
     base, qvec, cent, cb = parts
     store = str(tmp_path / "pre")
     write_ivfpq_index(base.filter(F.col("vec_id") % 2 == 1), store,
@@ -152,8 +154,8 @@ def test_compaction_resolves_and_clears_marker(spark, tmp_path, parts):
     served = _knn(spark, store, qvec, cent, cb)
     dest = str(tmp_path / "compacted")
     compact_ivfpq_index(spark, store, dest)
-    assert len(read_manifest(spark, store, _SEGMENTS)["segments"]) == 1
-    assert read_manifest(spark, dest, _SEGMENTS) is None
+    assert len(read_manifest(spark, store, SEGMENTS)["segments"]) == 1
+    assert read_manifest(spark, dest, SEGMENTS) is None
     # compacted store: same answers, one version per id, no tombstones
     assert _knn(spark, dest, qvec, cent, cb) == served
     rows = spark.read.option("basePath", dest).parquet(dest)
@@ -169,7 +171,7 @@ def test_upsert_killed_before_manifest_swap_serves_previous_version(
     serves what an uninterrupted upsert serves."""
     from openai_vector_search_demo_spark import stores
     from openai_vector_search_demo_spark.operators.pq import (
-        _SEGMENTS, upsert_ivfpq_index, write_ivfpq_index)
+        upsert_ivfpq_index, write_ivfpq_index)
     base, qvec, cent, cb = parts
     odd = base.filter(F.col("vec_id") % 2 == 1)
     even = base.filter(F.col("vec_id") % 2 == 0)
@@ -187,7 +189,7 @@ def test_upsert_killed_before_manifest_swap_serves_previous_version(
             upsert_ivfpq_index(spark, even, store, cent, cb)
     assert [p for p in (tmp_path / "live").iterdir()
             if p.name.startswith("_seg-")], "no segment was written"
-    assert stores.read_manifest(spark, store, _SEGMENTS) is None
+    assert stores.read_manifest(spark, store, stores.SEGMENTS) is None
     assert _knn(spark, store, qvec, cent, cb) == before
     assert sorted(map(tuple, _rows(spark, store).collect())) == rows_before
 
@@ -248,14 +250,16 @@ def test_stream_upsert_converges_to_full_rebuild(spark, tmp_path, parts):
     want = _knn(spark, full, qvec, cent, cb)
     assert _knn(spark, store, qvec, cent, cb) == want
     # same checkpoint, no new files: no batch written
-    from openai_vector_search_demo_spark.operators.pq import _SEGMENTS
-    from openai_vector_search_demo_spark.stores import read_manifest
-    manifest_before = read_manifest(spark, store, _SEGMENTS)
+    from openai_vector_search_demo_spark.stores import (
+        SEGMENTS,
+        read_manifest,
+    )
+    manifest_before = read_manifest(spark, store, SEGMENTS)
     assert manifest_before["segments"]
     stream_upsert_ivfpq_index(
         read_embedding_stream(spark, src), store, ck, cent, cb) \
         .start().awaitTermination(120)
-    assert read_manifest(spark, store, _SEGMENTS) == manifest_before
+    assert read_manifest(spark, store, SEGMENTS) == manifest_before
     assert _knn(spark, store, qvec, cent, cb) == want
 
 

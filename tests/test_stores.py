@@ -509,7 +509,9 @@ def test_queries_open_stores_only_through_open_or_build():
     assert set(_OWN_STORE_CODE) - hits == set()
 
 
-_SEGMENT_SOURCES = ("operators/nsw.py", "operators/pq.py", "streaming/jobs.py")
+_SEGMENT_SOURCES = ("operators/nsw.py", "operators/pq.py",
+                    "operators/dedup.py", "operators/line_dedup.py",
+                    "streaming/jobs.py")
 _NON_STORE_APPENDS = {
     "output_dir": "the ingested-chunk and dedup output tables a stream "
                   "appends to are tables, not NSW or IVFPQ stores",
@@ -519,11 +521,13 @@ _NON_STORE_APPENDS = {
 
 
 def test_mutable_stores_change_only_through_segments():
-    """The NSW and IVFPQ stores change after publication only through
-    stores.write_segment and the manifest swap: no in-place append into
-    a store, no marker file, no posix open() or os.path.exists on a
-    store path, and none of the old marker names left in the package.
-    Each remaining append names its table above with its reason."""
+    """The NSW, IVFPQ, band and line stores change after publication
+    only through stores.write_segment and the manifest swap: no
+    in-place append into a store, no write-mode parameter, no sibling
+    directory beside a store, no marker file, no posix open() or
+    os.path.exists on a store path, and none of the old marker names
+    left in the package.  Each remaining append names its table above
+    with its reason."""
     import pathlib
     import re
 
@@ -536,6 +540,8 @@ def test_mutable_stores_change_only_through_segments():
         assert "fs_touch" not in src, rel
         assert "os.path.exists" not in src, rel
         assert not re.search(r"\bopen\(", src), rel
+        assert not re.search(r"\bmode\s*[:=]", src), rel
+        assert '+ "_sigs"' not in src, rel
         appends = re.findall(
             r'mode\("append"\)(?:\.partitionBy\([^)]*\))?'
             r'\s*\.parquet\(\s*(\w+)', src)
@@ -548,3 +554,77 @@ def test_mutable_stores_change_only_through_segments():
         src = path.read_text()
         for literal in ("_DELTAS", "_UPSERT", "_tombstones"):
             assert literal not in src, (path, literal)
+
+
+def _segment_rows(spark, lo: int, n: int = 10):
+    """``n`` rows of ``_write_store``'s schema, ids from ``lo``."""
+    return spark.range(lo, lo + n).select(
+        F.col("id"), (F.col("id") * 3).alias("payload"),
+        (F.col("id") % 8).cast("int").alias("bucket"))
+
+
+def test_segments_are_read_in_one_scan(spark, tmp_path):
+    """A layer with one segment and a layer with eight each plan exactly
+    two file scans — the base and one over every segment — and read
+    every row of the base and the segments."""
+    from openai_vector_search_demo_spark.stores import (
+        SEGMENTS,
+        layer_paths,
+        read_layer,
+        read_manifest,
+        write_segment,
+    )
+
+    for n_seg in (1, 8):
+        store = str(tmp_path / f"seg{n_seg}")
+        _write_store(spark, store)
+        for i in range(n_seg):
+            write_segment(spark, store, SEGMENTS,
+                          read_manifest(spark, store, SEGMENTS),
+                          {"": _segment_rows(spark, 1000 + 10 * i)})
+        df = read_layer(spark,
+                        layer_paths(store,
+                                    read_manifest(spark, store, SEGMENTS)),
+                        "id bigint, payload bigint, bucket int")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == 2, plan
+        got = sorted((r.id, r.payload, r.bucket) for r in df.collect())
+        ids = [*range(200), *range(1000, 1000 + 10 * n_seg)]
+        assert got == [(i, i * 3, i % 8) for i in ids]
+
+
+def test_write_segment_deletes_unnamed_segments(spark, tmp_path,
+                                                monkeypatch):
+    """A segment whose write was killed before its manifest swap is
+    deleted by the next write_segment, on a ``file://`` store URI too;
+    the segments the manifest names stay."""
+    from openai_vector_search_demo_spark import stores
+
+    root = tmp_path / "reap"
+    store = "file://" + str(root)
+    _write_store(spark, store)
+
+    def write():
+        stores.write_segment(spark, store, stores.SEGMENTS,
+                             stores.read_manifest(spark, store,
+                                                  stores.SEGMENTS),
+                             {"": _segment_rows(spark, 1000)})
+
+    def named():
+        return {seg["name"] for seg in stores.read_manifest(
+            spark, store, stores.SEGMENTS)["segments"]}
+
+    def on_disk():
+        return {p.name for p in root.iterdir() if p.name.startswith("_seg-")}
+
+    def killed(*args, **kwargs):
+        raise RuntimeError("killed before the manifest swap")
+
+    write()
+    with monkeypatch.context() as mp:
+        mp.setattr(stores, "swap_manifest", killed)
+        with pytest.raises(RuntimeError, match="manifest swap"):
+            write()
+    assert len(on_disk()) == 2 and len(named()) == 1
+    write()
+    assert on_disk() == named() and len(named()) == 2
