@@ -462,21 +462,20 @@ def write_band_index(existing: DataFrame, path: str,
                      k: int = 3, num_hashes: int = 16,
                      bands: int = 4) -> None:
     """The write-time band index ``minhash_lsh_cross`` promises: the
-    existing corpus's ``(band, bucket, id)`` entries persisted
-    band-partitioned at ``path`` and its exact shingle-hash sets as the
+    existing corpus's ``(id, band, bucket)`` entries persisted as plain
+    parquet files at ``path`` and its exact shingle-hash sets as the
     store's ``_sigs`` layer (``<path>/_sigs``, the verify stage's input
     — stored apart so the hs arrays are not duplicated once per band).
-    This is the store's base: ``ingest_batch_against_index`` grows it
-    by segments (``stores`` module docstring), so each batch computes
-    only its own shingles and the accumulated corpus is never
+    Every read scans the whole store, so no directory layout would be
+    pruned.  This is the store's base: ``ingest_batch_against_index``
+    grows it by segments (``stores`` module docstring), so each batch
+    computes only its own shingles and the accumulated corpus is never
     re-shingled."""
     rows = num_hashes // bands
     sh = _shingle_side(existing, id_col, text_col, k, num_hashes, "e",
                        cache=False)
     sh = sh.persist()
-    (_band_entries(sh, "e", rows, bands)
-     .repartition(F.col("band"))
-     .write.mode("overwrite").partitionBy("band").parquet(path))
+    _band_entries(sh, "e", rows, bands).write.mode("overwrite").parquet(path)
     (sh.select("id_e", "hs_e").write.mode("overwrite")
      .parquet(layer_paths(path, None, _SIGS)[0]))
     sh.unpersist()
@@ -493,7 +492,7 @@ def minhash_lsh_cross_stored(spark, new: DataFrame, store: str,
     stored band entries — the existing corpus's Arrow shingle pass, the
     expensive stage, is never re-run per batch.  Same candidate join and
     exact-Jaccard verify (shared helpers), so stored ≡ inline on
-    values; the band partitioning co-locates the join's biggest key."""
+    values."""
     shn = _shingle_side(new, id_col, text_col, k, num_hashes, "n", cache)
     rows = num_hashes // bands
     entries_e, hs_e = _read_band_store(
@@ -506,12 +505,13 @@ def minhash_lsh_cross_stored(spark, new: DataFrame, store: str,
 def _read_band_store(spark, store: str, id_type: str):
     """A ``write_band_index`` store's ``(band entries, shingle sets)``:
     each layer's base plus the segments the store's manifest names,
-    read with their fixed schemas instead of inferring them (inference
-    is one parquet-footer job per read).  ``id_type`` is the type of
-    the id column the writer was given (the new side's)."""
+    read in one scan per layer with their fixed schemas instead of
+    inferring them (inference is one parquet-footer job per read).
+    ``id_type`` is the type of the id column the writer was given (the
+    new side's)."""
     manifest = read_manifest(spark, store, SEGMENTS)
     return (read_layer(spark, layer_paths(store, manifest),
-                       f"id_e {id_type}, bucket bigint, band int"),
+                       f"id_e {id_type}, band int, bucket bigint"),
             read_layer(spark, layer_paths(store, manifest, _SIGS),
                        f"id_e {id_type}, hs_e array<bigint>"))
 

@@ -42,7 +42,7 @@ The INCREMENTAL tier (``write_line_index`` /
 ``dedup_lines_against_index`` / ``ingest_lines_against_index``) is
 CCNet's actual deployment shape — each arriving shard is deduplicated
 against the hash set of everything already ingested — as a stored
-index of distinct line hashes (a bucket-partitioned base plus one
+index of distinct line hashes (plain parquet files: a base plus one
 segment per admitted batch, ``stores`` module docstring): the history is
 never re-read, re-split, or re-hashed per batch, and concatenating
 the per-batch outputs equals the one-shot ``keep_first`` rule ordered
@@ -84,9 +84,7 @@ from openai_vector_search_demo_spark.stores import (
 __all__ = ["dedup_lines_across_docs", "write_line_index",
            "dedup_lines_against_index", "ingest_lines_against_index",
            "bloom_line_bitmap", "bloom_admit_lines",
-           "LINE_INDEX_BUCKETS", "BLOOM_M_BITS", "BLOOM_K"]
-
-LINE_INDEX_BUCKETS = 16
+           "BLOOM_M_BITS", "BLOOM_K"]
 
 
 def _line_occurrences(df: DataFrame, text_col: str, id_col: str,
@@ -192,43 +190,28 @@ def _policy_kept(occ: DataFrame, policy: str,
     raise ValueError(f"unknown policy {policy!r}")
 
 
-def _line_bucket(lh):
-    """Stable bucket for a line hash: the store's partition key."""
-    return F.pmod(F.conv(F.substring(lh, 1, 15), 16, 10).cast("long"),
-                  F.lit(LINE_INDEX_BUCKETS)).cast("int")
-
-
-def _owner_rows(kept: DataFrame) -> DataFrame:
-    """The ``(lh, doc_id, bucket)`` owner rows of kept line
-    occurrences.  The keep-first rule keeps one occurrence per ``lh``
-    (a batch repeating a doc id included), so no distinct shuffle."""
-    return (kept.select("lh", "doc_id")
-            .withColumn("bucket", _line_bucket(F.col("lh"))))
-
-
 def write_line_index(df: DataFrame, path: str,
                      text_col: str = "text", id_col: str = "doc_id",
                      line_sep: str = "\n") -> None:
-    """Persist the corpus's distinct line hashes WITH THEIR OWNERS,
-    bucket-partitioned — the stored side of CCNet's
+    """Persist the corpus's distinct line hashes WITH THEIR OWNERS as
+    plain parquet files — the stored side of CCNet's
     shard-against-history dedup (each shard is deduplicated against
     the hash set of everything already ingested; the history is never
     re-split or re-hashed).  One row per distinct line content:
-    ``(lh, doc_id=owner, bucket)`` where the owner is the keep_first
+    ``(lh, doc_id=owner)`` where the owner is the keep_first
     winner's document — the owner column is what makes the ingest loop
     REPLAY-SAFE: a re-delivered batch's docs own their kept lines, so
     they reproduce their original output instead of self-colliding
     (the NSW store's merge-on-read idempotency argument applied to
     lines; duplicate owner rows from replays are byte-identical and
-    collapse under the read side's min() resolution).  Laid out
-    ``bucket=B/part-*.parquet`` so the membership join co-locates by a
-    fixed-width key and a bucket's files stay bounded.  This is the
-    store's base: ``ingest_lines_against_index`` grows it by segments
-    (``stores`` module docstring)."""
+    collapse under the read side's min() resolution).  Every probe
+    scans the whole store, so no directory layout would be pruned.
+    This is the store's base: ``ingest_lines_against_index`` grows it
+    by segments (``stores`` module docstring).  The keep-first rule
+    keeps one occurrence per ``lh``, so the rows need no distinct."""
     _, occ = _line_occurrences(df, text_col, id_col, line_sep)
-    (_owner_rows(_keep_first_within(occ))
-     .repartition(F.col("bucket"))
-     .write.mode("overwrite").partitionBy("bucket").parquet(path))
+    (_keep_first_within(occ).select("lh", "doc_id")
+     .write.mode("overwrite").parquet(path))
 
 
 def _admitted_docs(spark, batch: DataFrame, store: str, text_col: str,
@@ -257,7 +240,7 @@ def _admitted_docs(spark, batch: DataFrame, store: str, text_col: str,
     owned = (read_layer(spark,
                         layer_paths(store,
                                     read_manifest(spark, store, SEGMENTS)),
-                        f"lh string, doc_id {id_type}, bucket int")
+                        f"lh string, doc_id {id_type}")
              .select("lh", F.col("doc_id").alias("owner"))
              .join(F.broadcast(occ.select("lh", "doc_id", "pos")), "lh"))
     docs = base.select(F.concat(F.lit("#"), F.col("doc_id").cast("string"))
@@ -331,9 +314,8 @@ def ingest_lines_against_index(spark, batch: DataFrame, store: str,
             .localCheckpoint(eager=True))
     write_segment(spark, store, SEGMENTS,
                   read_manifest(spark, store, SEGMENTS),
-                  {"": _owner_rows(
-                      docs.select("doc_id", F.explode("_ls").alias("k"))
-                      .select(F.md5("k.line").alias("lh"), "doc_id"))})
+                  {"": docs.select("doc_id", F.explode("_ls").alias("k"))
+                   .select(F.md5("k.line").alias("lh"), "doc_id")})
     return _finish(docs, line_sep)
 
 

@@ -1228,12 +1228,18 @@ def _layer_rows(spark, path: str, meta: dict, layer: str = ""
                 ) -> DataFrame:
     """Every stored row of one graph layer (``""`` the base, ``_L1`` …):
     its base directory plus the segments ``meta`` names for it, read
-    with the fixed ``_STORE_SCHEMA``."""
+    with the fixed ``_STORE_SCHEMA``.  The base is ``bucket=`` partition
+    directories, which one scan cannot share with plain segment files,
+    so it is a scan of its own, unioned with one scan of the segments."""
     from openai_vector_search_demo_spark.stores import (
         layer_paths,
         read_layer,
     )
-    return read_layer(spark, layer_paths(path, meta, layer), _STORE_SCHEMA)
+    base, *segments = layer_paths(path, meta, layer)
+    rows = spark.read.schema(_STORE_SCHEMA).parquet(base)
+    if segments:
+        rows = rows.unionByName(read_layer(spark, segments, _STORE_SCHEMA))
+    return rows
 
 
 def _graph_delta(stored: DataFrame, brows, existing: DataFrame,

@@ -548,7 +548,10 @@ def upsert_ivfpq_index(spark, df: DataFrame, path: str,
 
 
 def _ivfpq_rows(spark, path: str) -> tuple[dict | None, DataFrame]:
-    """(manifest, every row): the base plus the segments it names."""
+    """(manifest, every row): the base plus the segments it names.  The
+    base is ``cell=`` partition directories, which one scan cannot share
+    with plain segment files, so the segments are one scan of their own
+    with the base's schema."""
     from openai_vector_search_demo_spark.stores import (
         SEGMENTS,
         layer_paths,
@@ -556,7 +559,11 @@ def _ivfpq_rows(spark, path: str) -> tuple[dict | None, DataFrame]:
         read_manifest,
     )
     manifest = read_manifest(spark, path, SEGMENTS)
-    return manifest, read_layer(spark, layer_paths(path, manifest))
+    base, *segments = layer_paths(path, manifest)
+    rows = spark.read.parquet(base)
+    if segments:
+        rows = rows.unionByName(read_layer(spark, segments, rows.schema))
+    return manifest, rows
 
 
 def resolve_ivfpq_versions(cand: DataFrame,
@@ -623,6 +630,7 @@ def ivfpq_stored_knn(spark, store: str, qvec: Sequence[float],
     from openai_vector_search_demo_spark.stores import (
         SEGMENTS,
         layer_paths,
+        read_layer,
         read_manifest,
         read_probed_partitions,
     )
@@ -650,8 +658,7 @@ def ivfpq_stored_knn(spark, store: str, qvec: Sequence[float],
     segments = layer_paths(store, read_manifest(spark, store, SEGMENTS))[1:]
     if segments:
         cand = resolve_ivfpq_versions(
-            cand.unionByName(spark.read.schema(cand.schema)
-                             .parquet(*segments)
+            cand.unionByName(read_layer(spark, segments, cand.schema)
                              .filter(F.col("cell").isin(probes))),
             id_col)
     elif "batch" in cand.columns:

@@ -866,13 +866,13 @@ def streaming_decontamination_gate(spark: SparkSession,
     results: list = []
     # r15 hook contract: the callback gets the per-batch audit
     # DataFrame; collecting is this slot's policy choice (tiny fixture)
-    q = (stream_decontamination_gate(
-            train, bench, lambda df, bid: results.extend(df.collect()),
-            n=8)
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="decontamgate_"))
-         .start())
-    q.awaitTermination(300)
+    with tempfile.TemporaryDirectory(prefix="decontamgate_") as ckpt:
+        q = (stream_decontamination_gate(
+                train, bench, lambda df, bid: results.extend(df.collect()),
+                n=8)
+             .option("checkpointLocation", ckpt)
+             .start())
+        q.awaitTermination(300)
     return (spark.createDataFrame(
         results, "doc_id bigint, n_bench_docs bigint,"
                  " n_shared_ngrams bigint")
@@ -1078,7 +1078,7 @@ def dedup_cross_corpus_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STORED-index form of ``dedup_cross_corpus_minhash`` — the
     continuous-ingestion pattern its docstring promised, implemented:
     ``write_band_index`` persists the existing corpus's band entries
-    (band-partitioned) and shingle-hash sets ONCE at write time;
+    and shingle-hash sets ONCE at write time, as plain parquet files;
     ``minhash_lsh_cross_stored`` then shingles only the re-arriving
     batch and joins the stored entries, so the accumulated corpus is
     never re-shingled per batch (``ingest_batch_against_index`` grows
@@ -1107,7 +1107,7 @@ def _ensure_band_store(docs: DataFrame, sf_dir: str) -> str:
     )
 
     return open_or_build(
-        docs.sparkSession, "band", 2, [f"{sf_dir}/documents.parquet"],
+        docs.sparkSession, "band", 3, [f"{sf_dir}/documents.parquet"],
         lambda path: write_band_index(docs, path, k=3, num_hashes=16,
                                       bands=4),
         k=3, num_hashes=16, bands=4)
@@ -1148,12 +1148,12 @@ def streaming_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     results: list = []
     # r15 hook contract: the callback gets the per-batch match
     # DataFrame; collecting is this slot's policy choice (tiny fixture)
-    q = (stream_neardup_gate(new, store,
-                             lambda df, bid: results.extend(df.collect()))
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="neardupgate_"))
-         .start())
-    q.awaitTermination(300)
+    with tempfile.TemporaryDirectory(prefix="neardupgate_") as ckpt:
+        q = (stream_neardup_gate(new, store,
+                                 lambda df, bid: results.extend(df.collect()))
+             .option("checkpointLocation", ckpt)
+             .start())
+        q.awaitTermination(300)
     return spark.createDataFrame(
         results, "new_id bigint, existing_id bigint, jaccard double")
 
@@ -1273,9 +1273,11 @@ def dedup_ingest_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh half-token docs (admitted).  Emits the per-batch admission
     audit ``(batch, n_arrived, n_rejected, n_admitted)``; the oracle
     replays both rounds including the store growth.  At 100 TB each
-    batch costs one Arrow shingle pass over the BATCH plus a
-    band-partitioned join against the store — the accumulated corpus is
-    never rescanned."""
+    batch costs one Arrow shingle pass over the BATCH plus one scan of
+    the store's band entries, probed by the broadcast batch — the
+    accumulated corpus is never re-shingled.  The store lives in a
+    temporary directory, removed before the slot returns its
+    driver-local audit rows."""
     import tempfile
 
     from openai_vector_search_demo_spark.caching import cache_scope
@@ -1285,7 +1287,6 @@ def dedup_ingest_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    store = tempfile.mkdtemp(prefix="ingest_loop_") + "/band"
 
     half = _half_text_col()
     b1 = (docs.filter(F.col("doc_id") % 4 == 0)
@@ -1303,7 +1304,9 @@ def dedup_ingest_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
                       half.alias("text"))))
 
     rows = []
-    with cache_scope():
+    with (cache_scope(),
+          tempfile.TemporaryDirectory(prefix="ingest_loop_") as tmp):
+        store = tmp + "/band"
         write_band_index(docs, store, k=3, num_hashes=16, bands=4)
         for name, batch in (("b1", b1), ("b2", b2)):
             n_arrived = batch.count()

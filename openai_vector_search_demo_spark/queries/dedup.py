@@ -655,7 +655,7 @@ def ccnet_line_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL cross-document line dedup — CCNet's deployment shape
     (each arriving shard is deduplicated against the hash set of
     everything already ingested): shard A (even docs) builds a stored
-    bucket-partitioned index of its distinct line hashes
+    index of its distinct line hashes, plain parquet files
     (`write_line_index`); shard B (odd docs) is then deduplicated
     against the STORE + within itself (`dedup_lines_against_index`) —
     the history is never re-read, re-split, or re-hashed.  The oracle
@@ -672,7 +672,7 @@ def ccnet_line_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = split_doc_scan(spark, t(spark, sf_dir, "documents"))
     derived = derived_token_lines(docs, _LDW)
     store = open_or_build(
-        spark, "lineidx", 2, [f"{sf_dir}/documents.parquet"],
+        spark, "lineidx", 3, [f"{sf_dir}/documents.parquet"],
         lambda path: write_line_index(
             derived.filter(F.col("doc_id") % 2 == 0), path),
         line_words=_LDW)
@@ -745,7 +745,7 @@ def streaming_line_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived = derived_token_lines(docs, _LDW)
     docs_path = os.path.join(sf_dir, "documents.parquet")
     key = hashlib.md5(
-        f"{sf_dir}|linestream{_LDW}|v2|{_parquet_fingerprint(docs_path)}"
+        f"{sf_dir}|linestream{_LDW}|v3|{_parquet_fingerprint(docs_path)}"
         .encode()).hexdigest()[:10]
     root = os.path.join("/tmp", "spark_graft_linestream_" + key)
     store = os.path.join(root, "lidx")

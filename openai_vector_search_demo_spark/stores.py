@@ -43,14 +43,18 @@ partition-local indexes under one global metadata record:
   the swap leaves an unnamed segment that nothing reads; the next
   ``write_segment`` deletes it.
 - Readers read the base plus exactly the segments the manifest names
-  (``layer_paths``), as two scans: the base, and one over every
-  segment (``read_layer``).  The manifest's ``segments`` list holds
-  ``{"name", "batch", "layers"}`` entries, names relative to the store
-  root (a store published by rename stays valid); ``layers`` maps each
-  layer the segment writes (``""`` is the base table, ``_sigs`` the
-  band index's shingle sets, ``_L1`` … the NSW levels) to ``"delta"``
-  (rows added) or ``"base"`` (layer rebuilt).  A ``"tombstones"``
-  segment holds ids.  No manifest, or no segments, means the base
+  (``layer_paths``).  Where the base is plain parquet files at the
+  store root (the band and line indexes), that is ONE multi-path scan
+  (``read_layer``); a tier whose base is partition directories (NSW
+  ``bucket=``, IVFPQ ``cell=``) unions its base scan with one
+  ``read_layer`` over its segments, since partition discovery refuses
+  a partitioned base among plain directories.  The manifest's
+  ``segments`` list holds ``{"name", "batch", "layers"}`` entries,
+  names relative to the store root (a store published by rename stays
+  valid); ``layers`` maps each layer the segment writes (``""`` is the
+  base table, ``_sigs`` the band index's shingle sets, ``_L1`` … the
+  NSW levels) to ``"delta"`` (rows added) or ``"base"`` (layer
+  rebuilt).  A ``"tombstones"`` segment holds ids.  No manifest, or no segments, means the base
   alone, so base writers write none.
 - A segment's batch is one more than the segments before it.  A
   tombstone hides what the base and earlier segments hold for its key;
@@ -267,19 +271,12 @@ def layer_paths(store: str, manifest: dict | None,
 
 
 def read_layer(spark: SparkSession, paths: list[str],
-               schema=None) -> DataFrame:
-    """One relation over ``layer_paths``: a scan of the first directory
-    (the base, possibly partitioned) with ``schema`` or its inferred
-    one, unioned with ONE scan of all the others — segments are
-    unpartitioned files of the same schema, so one multi-path read
-    takes them all, where partition discovery would refuse the base
-    among them.  A store without segments is one scan, as before."""
-    first = (spark.read if schema is None
-             else spark.read.schema(schema)).parquet(paths[0])
-    if len(paths) == 1:
-        return first
-    return first.unionByName(
-        spark.read.schema(first.schema).parquet(*paths[1:]))
+               schema) -> DataFrame:
+    """One scan over ``paths`` — plain parquet directories of one
+    ``schema`` (a layer's ``layer_paths`` whose base is not partitioned,
+    or a tier's segments alone) — read with that schema, so nothing is
+    inferred."""
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:

@@ -141,7 +141,7 @@ def _owner_rows(spark, store):
     )
     return sorted((r.lh, r.doc_id) for r in read_layer(
         spark, layer_paths(store, read_manifest(spark, store, SEGMENTS)),
-        "lh string, doc_id long, bucket int").collect())
+        "lh string, doc_id long").collect())
 
 
 def test_ingest_batch_repeating_a_doc_id(spark, tmp_path):

@@ -50,13 +50,11 @@ def _brute_graph(emb, m):
 def _stored_rows(spark, path):
     """Every row of a store's base graph: the base plus the segments
     its manifest names."""
-    from openai_vector_search_demo_spark.operators.nsw import read_l1_meta
-    from openai_vector_search_demo_spark.stores import (
-        layer_paths,
-        read_layer,
+    from openai_vector_search_demo_spark.operators.nsw import (
+        _layer_rows,
+        read_l1_meta,
     )
-    return read_layer(spark, layer_paths(path, read_l1_meta(spark, path)),
-                      _STORE_SCHEMA)
+    return _layer_rows(spark, path, read_l1_meta(spark, path))
 
 
 def _spy_untrusted(monkeypatch):

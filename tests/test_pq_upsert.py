@@ -36,14 +36,8 @@ def _knn(spark, store, qvec, cent, cb, k=10):
 
 def _rows(spark, store):
     """Every row of an IVFPQ store: base plus manifest-named segments."""
-    from openai_vector_search_demo_spark.stores import (
-        SEGMENTS,
-        layer_paths,
-        read_layer,
-        read_manifest,
-    )
-    return read_layer(spark, layer_paths(
-        store, read_manifest(spark, store, SEGMENTS)))
+    from openai_vector_search_demo_spark.operators.pq import _ivfpq_rows
+    return _ivfpq_rows(spark, store)[1]
 
 
 def test_upsert_half_equals_full_rebuild(spark, tmp_path, parts):

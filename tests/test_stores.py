@@ -563,10 +563,36 @@ def _segment_rows(spark, lo: int, n: int = 10):
         (F.col("id") % 8).cast("int").alias("bucket"))
 
 
+def _file_scans(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("FileScan parquet")
+
+
 def test_segments_are_read_in_one_scan(spark, tmp_path):
-    """A layer with one segment and a layer with eight each plan exactly
-    two file scans — the base and one over every segment — and read
-    every row of the base and the segments."""
+    """A layer of plain parquet files plans exactly one file scan over
+    its base and every segment, at 0, 1 and 8 segments, and reads every
+    row; so do the band index's two layers and the line index as their
+    admission rounds read them.  An NSW layer, whose base is partition
+    directories, keeps its base scan apart from the segment scan."""
+    import numpy as np
+    from conftest import SF0001
+
+    from openai_vector_search_demo_spark.operators.dedup import (
+        _read_band_store,
+        ingest_batch_against_index,
+        write_band_index,
+    )
+    from openai_vector_search_demo_spark.operators.line_dedup import (
+        _admitted_docs,
+        ingest_lines_against_index,
+        write_line_index,
+    )
+    from openai_vector_search_demo_spark.operators.nsw import (
+        _layer_rows,
+        read_l1_meta,
+        upsert_nsw_index,
+        write_nsw_index,
+    )
     from openai_vector_search_demo_spark.stores import (
         SEGMENTS,
         layer_paths,
@@ -575,9 +601,9 @@ def test_segments_are_read_in_one_scan(spark, tmp_path):
         write_segment,
     )
 
-    for n_seg in (1, 8):
+    for n_seg in (0, 1, 8):
         store = str(tmp_path / f"seg{n_seg}")
-        _write_store(spark, store)
+        _segment_rows(spark, 0, 200).write.parquet(store)
         for i in range(n_seg):
             write_segment(spark, store, SEGMENTS,
                           read_manifest(spark, store, SEGMENTS),
@@ -586,11 +612,37 @@ def test_segments_are_read_in_one_scan(spark, tmp_path):
                         layer_paths(store,
                                     read_manifest(spark, store, SEGMENTS)),
                         "id bigint, payload bigint, bucket int")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("FileScan parquet") == 2, plan
+        assert _file_scans(df) == 1
         got = sorted((r.id, r.payload, r.bucket) for r in df.collect())
         ids = [*range(200), *range(1000, 1000 + 10 * n_seg)]
         assert got == [(i, i * 3, i % 8) for i in ids]
+
+    docs = spark.read.parquet(
+        f"{SF0001}/documents.parquet").select("doc_id", "text")
+    base = docs.filter(F.col("doc_id") < 200)
+    batch = (docs.filter(F.col("doc_id") >= 200)
+             .withColumn("doc_id", F.col("doc_id") + 1000000))
+    band, lines = str(tmp_path / "band"), str(tmp_path / "lines")
+    write_band_index(base, band)
+    ingest_batch_against_index(spark, batch, band)
+    assert [_file_scans(layer)
+            for layer in _read_band_store(spark, band, "bigint")] == [1, 1]
+    write_line_index(base, lines)
+    ingest_lines_against_index(spark, batch, lines)
+    fresh = spark.createDataFrame([(7, "a\nb")], "doc_id long, text string")
+    assert _file_scans(_admitted_docs(spark, fresh, lines, "text",
+                                      "doc_id", "\n")) == 1
+
+    rng = np.random.RandomState(5)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.randn(8)]) for i in range(40)],
+        "vec_id long, embedding array<double>")
+    nsw = str(tmp_path / "nsw")
+    write_nsw_index(emb.filter(F.col("vec_id") % 4 != 1), nsw, m=3)
+    upsert_nsw_index(spark, nsw, emb.filter(F.col("vec_id") % 4 == 1),
+                     emb.filter(F.col("vec_id") % 4 != 1), m=3)
+    assert _file_scans(_layer_rows(spark, nsw, read_l1_meta(spark, nsw))) \
+        == 2
 
 
 def test_write_segment_deletes_unnamed_segments(spark, tmp_path,

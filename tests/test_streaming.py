@@ -426,3 +426,26 @@ def test_stream_ingest_loop_equals_batch_loop(spark, workdir):
 
     assert len(batches) == 2
     assert [{tuple(r) for r in b} for b in batches] == want
+
+
+def test_driver_local_slots_leave_no_temp_dirs(spark, store_root):
+    """The ingest-loop and the two streaming gate slots return
+    driver-local rows, so their band store and checkpoints are removed
+    before they return: no run adds an entry to the temp directory."""
+    import glob
+    import os
+    import tempfile
+
+    from openai_vector_search_demo_spark import queries as Q
+
+    prefixes = ("ingest_loop_", "neardupgate_", "decontamgate_")
+
+    def entries():
+        return {p for prefix in prefixes for p in glob.glob(
+            os.path.join(tempfile.gettempdir(), prefix + "*"))}
+
+    before = entries()
+    for name in ("dedup_ingest_loop", "streaming_neardup_gate",
+                 "streaming_decontamination_gate"):
+        Q.SPARK_QUERIES[name](spark, SF).collect()
+        assert entries() == before, name
