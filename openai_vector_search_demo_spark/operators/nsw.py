@@ -25,7 +25,7 @@ per-block top-Ms.  At 100 TB the same build runs per IVF cell first
 module stores and serves is format-identical either way.
 
 Search: two beam engines — ``beam_search_knn`` serves one query with
-one fused driver-side action per round, ``beam_search_knn_batch``
+at most one fused driver-side action per round, ``beam_search_knn_batch``
 serves many through a qid-keyed relational frontier — share ONE entry
 form and ONE stop rule.  Entry is ``flat_mod`` plus an L1 → Ld
 ``hier_levels`` list (possibly empty), or explicit ``seeds``.  The
@@ -40,8 +40,12 @@ pool's top-``NSW_ENTRY_COUNT`` (every level-visited node stays a
 candidate).  The deepest level holds < ``NSW_HIER_FLOOR``² nodes at
 any n, so the single-query engine reads it whole in its entry action —
 scores, adjacency, and the next layer's adjacency of its nodes — and
-runs that level's descent with no further action.  With no levels the
-flat top is the first stride layer itself — a flat coarse entry.  This
+runs that level's descent with no further action.  A stored base of
+at most ef·2M nodes — no more than one base round may score — is read
+whole instead: the entry action collects every source score and every
+layer's adjacency, and no round after it runs an action.  With no
+levels the flat top is the first stride layer itself — a flat coarse
+entry.  This
 is the reference's HNSW multi-layer structure
 (modules/utilities.py:272-278): entry work is
 depth·{NSW_L1_ROUNDS}·{NSW_HIER_W}·2M evaluations with depth =
@@ -602,7 +606,10 @@ edge rows the stop rule may never use into the collect — and the next
 round pays one frontier-sized catch-up read instead (the r15 two-read
 shape, now the rare case).  At the registered serving point
 (ef = {NSW_EF_SERVE}, M = {NSW_M}) a round's candidate set tops out at
-ef·2M = 5120 ids ≤ the cap, so serving rounds stay fused."""
+ef·2M = 5120 ids ≤ the cap, so serving rounds stay fused.  The same
+ef·2M bounds the whole-store entry (``beam_search_knn``): a base layer
+of at most that many nodes is read whole in the entry action, which
+the cap would admit in one round anyway."""
 
 
 class AdjRelation:
@@ -627,13 +634,18 @@ class AdjRelation:
     scan reads the DEEPEST hierarchy level whole with it, and the next
     layer's adjacency of that level's nodes.  That level holds fewer
     than NSW_HIER_FLOOR² nodes by construction, so the entry returns
-    < 256 scores and < 2·256·2M adjacency rows at ANY corpus size."""
+    < 256 scores and < 2·256·2M adjacency rows at ANY corpus size.
+    ``n`` is the layer's node count when known (a stored base layer:
+    the manifest's ``n``), else None; a base layer of at most ef·2M
+    nodes is read whole with ``sub(1)`` instead."""
 
-    def __init__(self, rel, sub, trusted: bool = True, m: int = NSW_M):
+    def __init__(self, rel, sub, trusted: bool = True, m: int = NSW_M,
+                 n: int | None = None):
         self.rel = rel
         self.sub = sub
         self.trusted = trusted
         self.m = m
+        self.n = n
 
 
 def _dsc(s):
@@ -705,7 +717,8 @@ def beam_search_knn(edges, source: DataFrame,
     collected rows are read by position.  The answer is a driver-local
     relation (``stores.local_frame``, an Arrow ``LocalRelation``):
     collecting it runs no Spark job, so a serve's only jobs are its
-    entry scan and its beam rounds.
+    entry scan and its beam rounds (the entry scan alone after a
+    whole-store read, below).
 
     Entry (the module docstring's one form): with ``flat_mod`` set,
     the flat top subset ``id % flat_mod == 0`` is scored exactly, then
@@ -728,6 +741,15 @@ def beam_search_knn(edges, source: DataFrame,
     verbatim — their known ids let the seed scoring and seed adjacency
     ride one action.  After each base round ``nsw_converged`` reads the
     visited dict and may end the beam.
+
+    WHOLE-STORE entry: when the base relation's node count ``n`` is
+    known (a stored base) and at most ef·2M — the most one base round
+    can score, an ``ef`` frontier × 2M symmetric neighbours — the
+    entry action (either form) reads everything instead: every source
+    row's score and every layer's adjacency (``sub(1)``), so no round
+    or descent step after it runs an action and a serve is ONE job.
+    The selections are unchanged, so answer and visited set are the
+    per-round path's.
 
     ``edges`` is an ``AdjRelation`` (the stored path's bucket-pruned
     form) or a DataFrame of (src, dst); ``hier_levels`` holds one
@@ -891,31 +913,41 @@ def beam_search_knn(edges, source: DataFrame,
         return new
 
     base_adj = _as_adj(edges)
-    if flat_mod is not None:
-        adjs = [_as_adj(rel) for rel, _ in hier_levels]
+    # the layers from the entry down: deepest level first, base last
+    chain = [_as_adj(rel) for rel, _ in reversed(hier_levels)] + [base_adj]
+    # the entry action reads, for every id ≡ 0 (mod d), its score and
+    # its adjacency in each of ``layers``
+    if base_adj.n is not None and base_adj.n <= ef * 2 * base_adj.m:
+        # one base round may score ef·2M nodes: a store no bigger is
+        # read whole, and no round after the entry needs an action
+        d, layers = 1, chain
+    elif flat_mod is not None:
         # the flat top is a subset of the deepest level (stride product
         # d): one action reads that level's scores and adjacency whole,
         # plus the next layer's adjacency of its nodes
-        d = int(hier_levels[-1][1]) if adjs else int(flat_mod)
+        d = int(hier_levels[-1][1]) if hier_levels else int(flat_mod)
+        layers = chain[:2] if hier_levels else []
+    else:
+        d, layers = None, []
+    if d is not None:
         scored0 = score_mod(d)
-        branches = [_sb(scored0, "_nn")]
-        if adjs:
-            nxt = adjs[-2] if len(adjs) > 1 else base_adj
-            branches += [_ab(adjs[-1].sub(d), adjs[-1].trusted),
-                         _ab(nxt.sub(d), nxt.trusted, tag=2)]
-        rows, adjrows = _collect(branches)
-        if adjs:
-            pre, pre_mod = {r[1]: r for r in rows}, d
-            level = set(pre) | {r[4] for r in adjrows.get(1, [])}
-            _ingest(_cache(adjs[-1]), level, adjrows.get(1, []))
-            _ingest(_cache(nxt), level, adjrows.get(2, []))
         schema = scored0.schema
+        rows, adjrows = _collect(
+            [_sb(scored0, "_nn")] + [_ab(a.sub(d), a.trusted, tag=t)
+                                     for t, a in enumerate(layers, 1)])
+        if layers:
+            pre, pre_mod = {r[1]: r for r in rows}, d
+            # every id ≡ 0 (mod d) the read met has all its rows in hand
+            known = {i for i in set(pre).union(
+                *({r[4] for r in rs} for rs in adjrows.values()))
+                if i % d == 0}
+            for t, a in enumerate(layers, 1):
+                _ingest(_cache(a), known, adjrows.get(t, []))
+    if flat_mod is not None:
         visited = {r[1]: (r[1], r[2], r[3]) for r in rows
                    if r[5] and r[1] % flat_mod == 0}
         seen = set(visited)
-        stack = list(reversed(adjs))
-        for li, adj in enumerate(stack):
-            nxt = stack[li + 1] if li + 1 < len(stack) else base_adj
+        for adj, nxt in zip(chain, chain[1:]):
             hf = [r[0] for r in
                   sorted(visited.values(), key=skey)[:NSW_HIER_W]]
             for _ in range(NSW_L1_ROUNDS):
@@ -937,16 +969,20 @@ def beam_search_knn(edges, source: DataFrame,
         frontier = [r[0] for r in
                     sorted(visited.values(), key=skey)[:n_entry]]
     else:
-        # seeds are known ids: the seed scoring (an IN point read —
-        # value-identical to the r15 broadcast join) and the seed
-        # adjacency prefetch ride one action
         seed_ids = [int(x) for x in seeds]
-        scored0 = score_ids(seed_ids)
-        schema = scored0.schema
-        branches = [_sb(scored0), _ab(base_adj.rel(sorted(seed_ids)),
-                                      base_adj.trusted)]
-        scored, adjrows = _collect(branches)
-        _ingest(_cache(base_adj), sorted(seed_ids), adjrows.get(1, []))
+        if pre_mod:     # the whole-store read scored every seed
+            scored = [pre[i] for i in seed_ids if i in pre]
+        else:
+            # seeds are known ids: the seed scoring (an IN point read —
+            # value-identical to the r15 broadcast join) and the seed
+            # adjacency prefetch ride one action
+            scored0 = score_ids(seed_ids)
+            schema = scored0.schema
+            branches = [_sb(scored0), _ab(base_adj.rel(sorted(seed_ids)),
+                                          base_adj.trusted)]
+            scored, adjrows = _collect(branches)
+            _ingest(_cache(base_adj), sorted(seed_ids),
+                    adjrows.get(1, []))
         visited = {r[1]: (r[1], r[2], r[3]) for r in scored}
         frontier = seed_ids
         seen = set(visited) | set(frontier)
@@ -1382,14 +1418,15 @@ def read_nsw_deletes(spark, path: str) -> list[int]:
 
 def _tombstone_ids(spark, path: str, meta: dict) -> list[int]:
     """The ids of the tombstone segments ``meta`` names: no read when
-    there are none, else one fixed-schema read."""
+    there are none, else one fixed-schema read, deduplicated on the
+    driver (a ``distinct`` would add a shuffle job)."""
     from openai_vector_search_demo_spark.stores import read_layer
     paths = [f"{path.rstrip('/')}/{seg['name']}"
              for seg in meta.get("segments", []) if seg.get("tombstones")]
     if not paths:
         return []
-    return sorted(r[0] for r in read_layer(spark, paths, _TOMBSTONE_SCHEMA)
-                  .distinct().collect())
+    return sorted({r[0] for r in
+                   read_layer(spark, paths, _TOMBSTONE_SCHEMA).collect()})
 
 
 def compact_nsw_index(spark, path: str, source: DataFrame, dest: str,
@@ -1459,7 +1496,8 @@ def _stored_adj(spark, path: str, meta: dict, layer: str,
     bucketed as its manifest records: ``rel(ids)`` is two parsed IN
     lists, the ids' src buckets (partition pruning) and the ids
     themselves (parquet pushdown); ``sub(mod)`` keeps the buckets a
-    multiple of ``mod`` can fall in."""
+    multiple of ``mod`` can fall in, and ``sub(1)`` is the whole layer.
+    The base layer carries the manifest's node count ``n``."""
     import math
 
     nb = _layer_buckets(path, meta, layer)
@@ -1470,13 +1508,16 @@ def _stored_adj(spark, path: str, meta: dict, layer: str,
         return g.filter(id_in("bucket", buckets) & id_in("src", ids))
 
     def sub(mod):
+        if int(mod) == 1:
+            return g
         step = math.gcd(int(mod), nb)
         pred = F.pmod(F.col("src"), F.lit(int(mod))) == 0
         if step > 1:
             pred = id_in("bucket", list(range(0, nb, step))) & pred
         return g.filter(pred)
 
-    return AdjRelation(rel, sub, trusted=not delta, m=m)
+    return AdjRelation(rel, sub, trusted=not delta, m=m,
+                       n=None if layer else meta.get("n"))
 
 
 def nsw_stored_knn(spark, path: str, source: DataFrame,
@@ -1492,11 +1533,16 @@ def nsw_stored_knn(spark, path: str, source: DataFrame,
     only the frontier's src BUCKET DIRECTORIES (one ``id_in`` list on
     the partition column, a second on the src ids, pushed into the
     scan) and the scored ids' vectors.  One read of ``_L1_META`` names
-    the segments and each layer's bucket count; every layer and the
-    tombstones are read with fixed schemas, so the jobs of a serve are
-    its entry scan and its beam rounds (plus one tombstone read when
-    the manifest names deletes), and the returned top-k is a local
-    relation whose ``collect()`` runs none.
+    the segments, each layer's bucket count and the corpus size ``n``;
+    every layer and the tombstones are read with fixed schemas, so the
+    jobs of a serve are its entry scan and its beam rounds (plus one
+    tombstone read when the manifest names deletes), and the returned
+    top-k is a local relation whose ``collect()`` runs none.  A store
+    of at most ef·2M nodes (``beam_search_knn``'s whole-store entry)
+    is read whole by the entry scan: it collects every row of
+    ``source``, the store's corpus, and every layer's rows, and the
+    rounds run no job, so the serve is one job (two with
+    tombstones).
 
     MERGE-ON-READ: the per-src top-``m`` window resolves the current
     OUT-list from the base and segment fwd rows — the exact

@@ -676,43 +676,122 @@ def _jobs_of(spark, group, fn):
 
 
 def test_stored_serve_job_budget(spark, tmp_path, monkeypatch):
-    """On the hierarchical fixture one stored serve runs ONE entry job —
-    it reads the deepest level's scores and adjacency and the base
-    adjacency of that level's nodes, so the level's descent rounds run
-    none — then one job per base round.  No parquet schema-inference
-    job (the store schema is fixed), and the answer is a local
-    relation, so collecting it runs no job at all.  Counted from the
-    status tracker per job group; base rounds are counted by the stop
-    rule, which every base round that scored a newcomer reaches."""
+    """One stored serve's Spark jobs on the hierarchical fixture.  At the
+    serving ef its 400-node base is no bigger than one base round can
+    score (400 ≤ ef·2M = 160·2·3), so the entry job reads the whole
+    store — every score and every layer's adjacency — and the rounds
+    run none: ONE job per serve, with the stop rule on and off.  At
+    ef = 16 (ef·2M = 96 < 400) the entry job reads the deepest level's
+    scores and adjacency and the base adjacency of that level's nodes,
+    so the level's descent rounds run none, then one job per base
+    round.  No parquet schema-inference job (the store schema is
+    fixed), and the answer is a local relation, so collecting it runs
+    no job at all.  Counted from the status tracker per job group;
+    base rounds are counted by the stop rule, which every base round
+    that scored a newcomer reaches."""
     from openai_vector_search_demo_spark.operators import nsw
 
     big = _hier_fixture(spark)
     store = str(tmp_path / "nswh")
     write_nsw_index(big, store, m=3)
     stride, ef, rounds = nsw_serving_params(400)
+    assert 16 * 2 * 3 < 400 <= ef * 2 * 3
     st = spark.sparkContext.statusTracker()
     calls, real = [], nsw.nsw_converged
     monkeypatch.setattr(nsw, "nsw_converged",
                         lambda *a: calls.append(a) or real(*a))
-    top, serve_jobs = _jobs_of(spark, "nsw-budget-serve",
-                               lambda: nsw_stored_knn(
-                                   spark, store, big, [0.2] * DIM, k=10,
-                                   ef=ef, rounds=rounds, m=3,
-                                   stride=stride))
-    stages = [st.getStageInfo(s).name for j in serve_jobs
-              for s in st.getJobInfo(j).stageIds]
+
+    def serve(group, **kw):
+        return _jobs_of(spark, group, lambda: nsw_stored_knn(
+            spark, store, big, [0.2] * DIM, k=10, m=3, stride=stride,
+            **kw))
+
+    for stop_k in (nsw.NSW_STOP_K, None):
+        top, jobs = serve(f"nsw-budget-whole-{stop_k}", ef=ef,
+                          rounds=rounds, stop_k=stop_k)
+        stages = [st.getStageInfo(s).name for j in jobs
+                  for s in st.getJobInfo(j).stageIds]
+        assert len(jobs) == 1, (stop_k, len(jobs))
+        assert not [n for n in stages if n.startswith("parquet at")], stages
+        rows, collect_jobs = _jobs_of(
+            spark, f"nsw-budget-collect-{stop_k}", top.collect)
+        assert len(rows) == 10
+        assert collect_jobs == []
     assert calls, "the base beam ran"
-    assert len(serve_jobs) == 1 + len(calls), (len(serve_jobs), len(calls))
-    assert not [n for n in stages if n.startswith("parquet at")], stages
-    rows, collect_jobs = _jobs_of(spark, "nsw-budget-collect", top.collect)
-    assert len(rows) == 10
-    assert collect_jobs == []
+    # below the bound: the entry job plus one job per base round
+    calls.clear()
+    _, jobs = serve("nsw-budget-rounds", ef=16, rounds=rounds)
+    assert calls, "the base beam ran"
+    assert len(jobs) == 1 + len(calls), (len(jobs), len(calls))
     # without the stop rule: the entry job plus exactly `rounds` jobs
-    _, jobs = _jobs_of(spark, "nsw-budget-two-rounds",
-                       lambda: nsw_stored_knn(
-                           spark, store, big, [0.2] * DIM, k=10, ef=ef,
-                           rounds=2, m=3, stride=stride, stop_k=None))
+    _, jobs = serve("nsw-budget-two-rounds", ef=16, rounds=2, stop_k=None)
     assert len(jobs) == 1 + 2
+
+
+def test_whole_store_entry_serves_the_per_round_answer(spark, emb,
+                                                       tmp_path):
+    """A stored serve whose base is no bigger than ef·2M reads the whole
+    store in its entry job (plus the tombstone read, when there are
+    tombstones); its top-k and whole visited set (k = 2^20) are those
+    of the per-round beam over the same store's resolved relations
+    (``resolve_stored_edges``/``resolve_stored_levels``, which carry
+    no node count).  Cases: the hierarchical fixture, a flat entry at
+    a stride other than the store's, an upserted (mirror-validated)
+    store, a tombstoned one, a source that is a subset of the corpus,
+    and a source with a null-vector row (27 rows over 26 nodes).  A
+    last serve of the hierarchical fixture at ef = 16 (ef·2M = 96 <
+    400) takes the per-round path on both sides."""
+    from openai_vector_search_demo_spark.operators.nsw import (
+        delete_from_nsw_index,
+        read_l1_meta,
+        read_nsw_deletes,
+        resolve_stored_edges,
+        resolve_stored_levels,
+        upsert_nsw_index,
+    )
+
+    def write(df, name):
+        path = str(tmp_path / name)
+        write_nsw_index(df, path, m=3)
+        return path
+
+    big = _hier_fixture(spark)
+    base, corpus, batch = _upsert_parts(emb)
+    hier, small = write(big, "hier"), write(base, "small")
+    upserted = write(corpus, "upserted")
+    upsert_nsw_index(spark, upserted, batch, corpus, m=3)
+    deleted = write(base, "deleted")
+    delete_from_nsw_index(spark, deleted, [3, 17])
+    tenant = emb.filter(F.col("label") % 2 == 0)
+    assert tenant.count() == 27
+    cases = [(hier, big, None, 160), (hier, big, 7, 160),
+             (upserted, base, None, 160), (deleted, base, None, 160),
+             (small, base.filter(F.col("vec_id") % 5 != 0), None, 160),
+             (write(tenant, "tenant"), tenant, None, 160),
+             (hier, big, None, 16)]
+    qvec = [(-1) ** i * 0.3 for i in range(DIM)]
+    for case, (store, source, stride, ef) in enumerate(cases):
+        kw = dict(k=1 << 20, ef=ef, rounds=8, n_entry=4)
+        meta = read_l1_meta(spark, store)
+        dead = read_nsw_deletes(spark, store)
+        got, jobs = _jobs_of(spark, f"nsw-whole-{case}", lambda: [
+            (r.vec_id, r.similarity) for r in nsw_stored_knn(
+                spark, store, source, qvec, m=3,
+                stride=stride or meta["stride"], **kw).collect()])
+        if meta["n"] <= ef * 2 * 3:
+            assert len(jobs) == 1 + bool(dead), (case, len(jobs))
+        else:
+            assert len(jobs) > 2, (case, len(jobs))
+        levels, flat_mod = resolve_stored_levels(spark, store, m=3)
+        if stride is not None:
+            levels, flat_mod = [], stride
+        edges = resolve_stored_edges(spark, store, m=3).localCheckpoint()
+        want = [(r.vec_id, r.similarity) for r in beam_search_knn(
+            edges, source, qvec, exclude_ids=dead, flat_mod=flat_mod,
+            hier_levels=[(lv.localCheckpoint(), mod)
+                         for lv, mod in levels], **kw).collect()]
+        assert len(want) >= 10 and got[:10] == want[:10], case
+        assert sorted(got) == sorted(want), case
 
 
 def test_bucket_count_rule_at_its_boundaries():
