@@ -392,93 +392,104 @@ def minhash_lsh_cross(new: DataFrame, existing: DataFrame,
     (tunable via bands/rows) instead of shared-shingle counts — no
     hot-shingle cap needed, same no-false-positives contract.
 
-    At scale the existing side's band entries are a WRITE-TIME artifact:
+    At scale the existing side is a WRITE-TIME artifact:
     ``write_band_index`` / ``minhash_lsh_cross_stored`` below implement
-    exactly that, sharing this function's prep/entry/verify stages so
-    the inline and stored forms are value-locked by construction.
-    """
-    shn = _shingle_side(new, id_col, text_col, k, num_hashes, "n", cache)
-    she = _shingle_side(existing, id_col, text_col, k, num_hashes, "e",
+    exactly that, sharing this function's shingle pass and probe
+    (``_band_probe``), so the inline and stored forms are value-locked
+    by construction.  Here neither side is hinted: the planner picks
+    the join, as either side may be corpus-sized."""
+    shn = _shingle_side(new, id_col, text_col, k, num_hashes, bands, "n",
                         cache)
-    rows = num_hashes // bands
-    return _cross_verify(
-        _band_entries(shn, "n", rows, bands),
-        _band_entries(she, "e", rows, bands),
-        shn.select("id_n", "hs_n"), she.select("id_e", "hs_e"), threshold)
+    she = _shingle_side(existing, id_col, text_col, k, num_hashes, bands,
+                        "e", cache)
+    return _band_probe(shn, _store_rows(she, "e"), threshold,
+                       broadcast=False)
 
 
 def _shingle_side(df: DataFrame, id_col: str, text_col: str, k: int,
-                  num_hashes: int, tag: str, cache: bool) -> DataFrame:
-    """One side's ``(id_<tag>, hs_<tag>, signature)`` — the Arrow-fused
-    shingle + MinHash pass shared by the cross operators."""
+                  num_hashes: int, bands: int, tag: str,
+                  cache: bool) -> DataFrame:
+    """One side's ``(id_<tag>, hs_<tag>, bk_<tag>)`` — the Arrow-fused
+    shingle + MinHash pass shared by the cross operators, with the
+    ``bands`` band bucket keys of its signature (empty for a
+    shingle-less document, which has no signature)."""
     from openai_vector_search_demo_spark.plans.pipeline import (
         spread_for_python,
     )
+    buckets = _band_bucket_sql(num_hashes // bands, bands)
     sh = (spread_for_python(df)
           .select(F.col(id_col).alias(f"id_{tag}"),
                   _shingle_sig_udf(k, num_hashes)(F.col(text_col))
                   .alias("_ss"))
           .select(f"id_{tag}", F.col("_ss.hs").alias(f"hs_{tag}"),
-                  F.col("_ss.sig").alias("signature")))
+                  F.col("_ss.sig").alias("signature"))
+          .select(f"id_{tag}", f"hs_{tag}",
+                  F.expr(f"if(signature IS NULL, "
+                         f"cast(array() AS array<bigint>), "
+                         f"array({buckets}))").alias(f"bk_{tag}")))
     return scoped_persist(sh) if cache else sh
 
 
-def _band_entries(sh: DataFrame, tag: str, rows: int,
-                  bands: int) -> DataFrame:
-    band_exprs = _band_bucket_sql(rows, bands)
-    return (sh.filter(F.col("signature").isNotNull())
-            .select(f"id_{tag}",
-                    F.expr(f"posexplode(array({band_exprs}))")
-                    .alias("band", "bucket")))
+def _store_rows(sh: DataFrame, tag: str) -> DataFrame:
+    """A shingled side as band-store rows ``(id_e, hs_e, buckets)``."""
+    return sh.select(F.col(f"id_{tag}").alias("id_e"),
+                     F.col(f"hs_{tag}").alias("hs_e"),
+                     F.col(f"bk_{tag}").alias("buckets"))
 
 
-def _cross_verify(entries_n: DataFrame, entries_e: DataFrame,
-                  hs_n: DataFrame, hs_e: DataFrame,
-                  threshold: float) -> DataFrame:
-    """Band-candidate join + exact shingle-Jaccard verification — the
-    no-false-positives tail shared by the inline and stored cross forms."""
-    cand = (entries_n.join(entries_e, ["band", "bucket"])
-            .select("id_n", "id_e").distinct())
-    ver = (cand.join(hs_n, "id_n")
-           .join(hs_e, "id_e")
-           .withColumn("common",
-                       F.size(F.array_intersect("hs_n", "hs_e")))
-           .withColumn("jaccard",
-                       F.col("common")
-                       / (F.size("hs_n") + F.size("hs_e")
-                          - F.col("common"))))
-    return (ver.filter(F.col("jaccard") >= threshold)
+def _band_probe(new: DataFrame, existing: DataFrame, threshold: float,
+                broadcast: bool) -> DataFrame:
+    """The verified ``(new_id, existing_id, jaccard)`` pairs between a
+    shingled side ``new`` and band-store rows ``existing``: each side's
+    band keys posexplode to ``(band, bucket)`` and meet in one
+    equi-join, and right there, per joined row, a pair is kept only at
+    the FIRST band its two key arrays share (so a pair colliding in
+    several bands is reported once, with no window or distinct) and
+    only if the exact Jaccard of its two shingle sets reaches
+    ``threshold`` — the no-false-positives tail of every cross form.
+    With ``broadcast`` the new side is the hinted build side and the
+    existing side streams through a map-only probe: no exchange.
+
+    The unit is a row, not an id: a pair is one ``new`` row and one
+    ``existing`` row, each verified with its own shingle set.  When ids
+    are unique on each side that is one row per distinct
+    ``(new_id, existing_id)``; a side that repeats an id reports a
+    match once per matching row of it."""
+    build = new.select("id_n", "hs_n", "bk_n",
+                       F.posexplode("bk_n").alias("band", "bucket"))
+    probe = existing.select("id_e", "hs_e", "buckets",
+                            F.posexplode("buckets").alias("band", "bucket"))
+    first = F.expr("array_position(zip_with(buckets, bk_n, "
+                   "(x, y) -> x = y), true) - 1")
+    common = F.size(F.array_intersect("hs_n", "hs_e"))
+    jaccard = common / (F.size("hs_n") + F.size("hs_e") - common)
+    return (probe.join(F.broadcast(build) if broadcast else build,
+                       ["band", "bucket"])
+            .filter(first == F.col("band"))
+            .withColumn("jaccard", jaccard)
+            .filter(F.col("jaccard") >= threshold)
             .select(F.col("id_n").alias("new_id"),
                     F.col("id_e").alias("existing_id"),
                     F.round("jaccard", 6).alias("jaccard")))
-
-
-_SIGS = "_sigs"
-"""The band index's layer of shingle sets (``stores`` module docstring)."""
 
 
 def write_band_index(existing: DataFrame, path: str,
                      id_col: str = "doc_id", text_col: str = "text",
                      k: int = 3, num_hashes: int = 16,
                      bands: int = 4) -> None:
-    """The write-time band index ``minhash_lsh_cross`` promises: the
-    existing corpus's ``(id, band, bucket)`` entries persisted as plain
-    parquet files at ``path`` and its exact shingle-hash sets as the
-    store's ``_sigs`` layer (``<path>/_sigs``, the verify stage's input
-    — stored apart so the hs arrays are not duplicated once per band).
-    Every read scans the whole store, so no directory layout would be
-    pruned.  This is the store's base: ``ingest_batch_against_index``
-    grows it by segments (``stores`` module docstring), so each batch
-    computes only its own shingles and the accumulated corpus is never
-    re-shingled."""
-    rows = num_hashes // bands
-    sh = _shingle_side(existing, id_col, text_col, k, num_hashes, "e",
-                       cache=False)
-    sh = sh.persist()
-    _band_entries(sh, "e", rows, bands).write.mode("overwrite").parquet(path)
-    (sh.select("id_e", "hs_e").write.mode("overwrite")
-     .parquet(layer_paths(path, None, _SIGS)[0]))
-    sh.unpersist()
+    """The write-time band index ``minhash_lsh_cross`` promises: one
+    row per document of the existing corpus, ``(id_e, hs_e, buckets)``
+    — its exact shingle-hash set beside its ``bands`` band bucket keys
+    (empty when it has no signature) — written once as plain parquet
+    files at ``path``.  The probe reads both from the same row, so
+    nothing is joined back by id.  Every read scans the whole store, so
+    no directory layout would be pruned.  This is the store's base:
+    ``ingest_batch_against_index`` grows it by segments (``stores``
+    module docstring), so each batch computes only its own shingles and
+    the accumulated corpus is never re-shingled."""
+    sh = _shingle_side(existing, id_col, text_col, k, num_hashes, bands,
+                       "e", cache=False)
+    _store_rows(sh, "e").write.mode("overwrite").parquet(path)
 
 
 def minhash_lsh_cross_stored(spark, new: DataFrame, store: str,
@@ -488,32 +499,31 @@ def minhash_lsh_cross_stored(spark, new: DataFrame, store: str,
                              bands: int = 4, threshold: float = 0.5,
                              cache: bool = True) -> DataFrame:
     """``minhash_lsh_cross`` against a ``write_band_index`` store: the
-    new batch computes only ITS OWN shingles/signatures and joins the
-    stored band entries — the existing corpus's Arrow shingle pass, the
-    expensive stage, is never re-run per batch.  Same candidate join and
-    exact-Jaccard verify (shared helpers), so stored ≡ inline on
-    values."""
-    shn = _shingle_side(new, id_col, text_col, k, num_hashes, "n", cache)
-    rows = num_hashes // bands
-    entries_e, hs_e = _read_band_store(
-        spark, store, shn.schema["id_n"].dataType.simpleString())
-    return _cross_verify(
-        _band_entries(shn, "n", rows, bands), entries_e,
-        shn.select("id_n", "hs_n"), hs_e, threshold)
+    new batch computes only ITS OWN shingles/signatures and is the
+    broadcast build side of one map-only probe of the store's rows
+    (``_band_probe``) — the existing corpus's Arrow shingle pass, the
+    expensive stage, is never re-run per batch, and no store row is
+    shuffled.  The same probe as the inline form, so stored ≡ inline
+    on values.  Lazy: the caller's action runs it."""
+    shn = _shingle_side(new, id_col, text_col, k, num_hashes, bands, "n",
+                        cache)
+    return _band_probe(
+        shn, _read_band_store(spark, store,
+                              shn.schema["id_n"].dataType.simpleString()),
+        threshold, broadcast=True)
 
 
-def _read_band_store(spark, store: str, id_type: str):
-    """A ``write_band_index`` store's ``(band entries, shingle sets)``:
-    each layer's base plus the segments the store's manifest names,
-    read in one scan per layer with their fixed schemas instead of
-    inferring them (inference is one parquet-footer job per read).
-    ``id_type`` is the type of the id column the writer was given (the
-    new side's)."""
-    manifest = read_manifest(spark, store, SEGMENTS)
-    return (read_layer(spark, layer_paths(store, manifest),
-                       f"id_e {id_type}, band int, bucket bigint"),
-            read_layer(spark, layer_paths(store, manifest, _SIGS),
-                       f"id_e {id_type}, hs_e array<bigint>"))
+def _read_band_store(spark, store: str, id_type: str) -> DataFrame:
+    """A ``write_band_index`` store's rows ``(id_e, hs_e, buckets)``:
+    its base plus the segments its manifest names, read in one scan
+    with a fixed schema instead of inferring it (inference is one
+    parquet-footer job per read).  ``id_type`` is the type of the id
+    column the writer was given (the new side's)."""
+    return read_layer(spark,
+                      layer_paths(store, read_manifest(spark, store,
+                                                       SEGMENTS)),
+                      f"id_e {id_type}, hs_e array<bigint>, "
+                      f"buckets array<bigint>")
 
 
 def ingest_batch_against_index(spark, batch: DataFrame, store: str,
@@ -524,76 +534,55 @@ def ingest_batch_against_index(spark, batch: DataFrame, store: str,
                                threshold: float = 0.5) -> DataFrame:
     """ONE admission round of the continuous-ingestion dedup loop:
     shingle/MinHash the arriving batch ONCE, check it against the
-    ``write_band_index`` store, and add the ADMITTED docs' band
-    entries and shingle sets to the store as ONE segment holding both
-    layers (``stores.write_segment``) — reusing the same shingled frame
-    for both the verify join and the write, so each batch pays exactly
-    one Arrow pass (the naive check-then-``write_band_index``
+    ``write_band_index`` store, and add the ADMITTED docs' rows to the
+    store as one segment (``stores.write_segment``) — reusing the same
+    shingled frame for both the probe and the write, so each batch pays
+    exactly one Arrow pass (the naive check-then-``write_band_index``
     composition shingles the batch twice).  Returns the verified
-    ``(new_id, existing_id, jaccard)`` matches, one row per distinct
-    match; the admitted set is ``batch − distinct(new_id)``.  The
-    accumulated corpus is never re-shingled; the caller wraps a loop of
-    these per batch.  A round killed before its manifest swap leaves
-    the store as it was, so a retry admits the same documents.
+    ``(new_id, existing_id, jaccard)`` matches; the admitted set is
+    ``batch − distinct(new_id)``.  The accumulated corpus is never
+    re-shingled; the caller wraps a loop of these per batch.  A round
+    killed before its manifest swap leaves the store as it was, so a
+    retry admits the same documents.
 
-    Plan: the batch's band entries are the broadcast build side of the
-    band-candidate join, probed by the store's band entries; the
-    candidate pairs join the store's shingle sets with no hint, so the
-    planner broadcasts ``_sigs`` only while it is under the broadcast
-    threshold and shuffles otherwise.  Nothing whose size depends on
-    how contaminated the batch is gets broadcast.  The candidates and
-    the batch's own rows then meet in ONE exchange by new id, where
-    windows (spillable, no per-document array) bring each document's
-    shingle set to its candidates, verify them, drop the pairs found in
-    more than one band, and mark the documents that matched — the
-    segment reads the unmarked rows, with no anti-join.  A batch that
-    repeats a doc id is verified with one of that id's shingle sets.
+    Plan, four jobs and no exchange: (1) the shingled batch, with its
+    band keys, is an eager local checkpoint; (2, 3) its rows are the
+    broadcast build side of ``_band_probe`` — sized by the batch,
+    never by how contaminated it is — and one scan of the store probes
+    them map-side, verifying each pair by exact Jaccard where it
+    joins; the verified pairs are the eager local checkpoint returned,
+    a distributed frame, and the same action observes the set of
+    matched new ids (``collect_set``, bounded by the batch's distinct
+    ids); (4) the segment writes the shingled batch minus those ids.
 
-    Cache lifecycle: the shingled batch and that per-document verdict
-    are eager local checkpoints, no ``persist``, so nothing outlives
-    the round in the cache with or without a ``cache_scope()`` around
-    the call; the verdict's blocks back the returned matches (the
-    caller owns them), and Spark drops each checkpoint's blocks once
-    its frame is garbage-collected."""
-    rows = num_hashes // bands
-    sh = _shingle_side(batch, id_col, text_col, k, num_hashes, "n",
+    Repeated ids: each batch row is verified with its own shingle set,
+    so a batch that repeats a doc id reports one match per matching
+    row of that id (one row per distinct ``(new_id, existing_id)`` when
+    ids are unique on each side), and no row of a matched id joins the
+    store.
+
+    Cache lifecycle: the shingled batch and the matches are eager
+    local checkpoints, no ``persist``, so nothing outlives the round in
+    the cache with or without a ``cache_scope()`` around the call; the
+    matches' blocks are the caller's, and Spark drops each checkpoint's
+    blocks once its frame is garbage-collected."""
+    from pyspark.sql import Observation
+
+    sh = _shingle_side(batch, id_col, text_col, k, num_hashes, bands, "n",
                        cache=False).localCheckpoint(eager=True)
-    entries_e, hs_e = _read_band_store(
-        spark, store, sh.schema["id_n"].dataType.simpleString())
-    cand = (entries_e.join(F.broadcast(_band_entries(sh, "n", rows, bands)),
-                           ["band", "bucket"])
-            .join(hs_e, "id_e")
-            .select("id_n", "id_e", "hs_e"))
-    doc = Window.partitionBy("id_n")
-    pair = F.col("id_e").isNotNull()
-    common = F.size(F.array_intersect("_hs", "hs_e"))
-    jaccard = common / (F.size("_hs") + F.size("hs_e") - common)
-    # a pair colliding in several bands arrives once per band
-    again = F.lag("id_e").over(doc.orderBy("id_e")) == F.col("id_e")
-    # an eager checkpoint: the batch's rows plus its verified matches,
-    # computed once for both layers of the segment and the returned
-    # matches, which the layers then write from with no exchange
-    verdict = (sh.unionByName(cand, allowMissingColumns=True)
-               .withColumn("_hs", F.max("hs_n").over(doc))
-               .withColumn("jaccard", F.when(pair, jaccard))
-               .withColumn("hit", F.col("jaccard") >= threshold)
-               .withColumn("matched", F.max("hit").over(doc))
-               .withColumn("again", F.coalesce(again, F.lit(False)))
-               .filter(F.when(pair, F.col("hit") & ~F.col("again"))
-                       .otherwise(~F.coalesce("matched", F.lit(False))))
-               .select("id_n", "id_e", F.round("jaccard", 6).alias("jaccard"),
-                       "hs_n", "signature")
-               .localCheckpoint(eager=True))
-    adm = (verdict.filter(F.col("id_e").isNull())
-           .select(F.col("id_n").alias("id_e"),
-                   F.col("hs_n").alias("hs_e"), "signature"))
+    matched = Observation()
+    found = (_band_probe(
+        sh, _read_band_store(spark, store,
+                             sh.schema["id_n"].dataType.simpleString()),
+        threshold, broadcast=True)
+        .observe(matched, F.collect_set("new_id").alias("ids"))
+        .localCheckpoint(eager=True))
     write_segment(spark, store, SEGMENTS,
                   read_manifest(spark, store, SEGMENTS),
-                  {"": _band_entries(adm, "e", rows, bands),
-                   _SIGS: adm.select("id_e", "hs_e")})
-    return (verdict.filter(F.col("id_e").isNotNull())
-            .select(F.col("id_n").alias("new_id"),
-                    F.col("id_e").alias("existing_id"), "jaccard"))
+                  {"": _store_rows(
+                      sh.filter(~F.col("id_n").isin(matched.get["ids"])),
+                      "n")})
+    return found
 
 
 def minhash_lsh_pairs_with_side(df: DataFrame, keep_cols,

@@ -63,6 +63,7 @@ from openai_vector_search_demo_spark.functions.text_analysis import (
     _hash60,
     tokens,
 )
+from openai_vector_search_demo_spark.stores import local_frame
 
 __all__ = ["token_window_features", "late_interaction_topk",
            "query_window_features", "write_token_window_index",
@@ -183,7 +184,7 @@ def late_interaction_topk(df: DataFrame, query: str, k: int = 10,
     if not qfeats:
         return (df.select(F.col(id_col), F.lit(0.0).alias(score_col))
                 .limit(0))
-    qdf = spark.createDataFrame(qfeats, "qpos int, bucket int, wq double")
+    qdf = local_frame(spark, qfeats, "qpos int, bucket int, wq double")
     dfeat = token_window_features(df, text_col, id_col,
                                   max_tokens, window, dim)
     if cache:
@@ -318,7 +319,7 @@ def late_interaction_stored_topk(spark, store: str, query: str, k: int = 10,
         return (spark.read.parquet(store + "_meta")
                 .select(F.col("id").alias(id_col),
                         F.lit(0.0).alias(score_col)).limit(0))
-    qdf = spark.createDataFrame(qfeats, "qpos int, bucket int, wq double")
+    qdf = local_frame(spark, qfeats, "qpos int, bucket int, wq double")
     probes = sorted({b for _, b, _ in qfeats})
     dfeat = (read_probed_partitions(spark, store, "bucket", probes,
                                     table=table, schema=_FEATURE_SCHEMA)

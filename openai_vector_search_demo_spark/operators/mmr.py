@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from openai_vector_search_demo_spark.functions.vectors import (
     cosine_similarity,
 )
+from openai_vector_search_demo_spark.stores import local_frame
 
 __all__ = ["MMR_MAX_POOL", "mmr_select"]
 
@@ -134,6 +135,7 @@ def mmr_select(candidates: DataFrame, k: int, lam: float = 0.5,
         StructField(id_col, fields["id"].dataType, fields["id"].nullable),
         StructField(rel_col, fields["rel"].dataType,
                     fields["rel"].nullable)])
-    return candidates.sparkSession.createDataFrame(
+    return local_frame(
+        candidates.sparkSession,
         [(r, i, rels[i]) for r, i in enumerate(selected, start=1)],
         schema)

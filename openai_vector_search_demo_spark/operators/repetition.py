@@ -70,64 +70,51 @@ GOPHER_REP_THRESHOLDS: dict[str, float] = {
 }
 
 
-def _ngrams(toks, n: int):
-    """Single-space-joined token n-grams, [] when the doc is shorter."""
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                    lambda i: F.array_join(F.slice(toks, i, n), " "))
-    ).otherwise(F.array().cast("array<string>"))
+def _ngrams(toks: str, n: int) -> str:
+    """SQL: the single-space-joined token n-grams of array column
+    ``toks``, [] when the doc is shorter."""
+    return (f"CASE WHEN size({toks}) >= {n} "
+            f"THEN transform(sequence(1, size({toks}) - {n - 1}), "
+            f"i -> array_join(slice({toks}, i, {n}), ' ')) "
+            f"ELSE cast(array() AS array<string>) END")
 
 
-def _rep_walk(arr, sz):
-    """One ``F.aggregate`` run-length walk over a SORTED array: equal
-    neighbours are repeat occurrences.  Returns
-    ``struct(top: long, dup: long)`` — the most-frequent element's full
-    coverage (count × length; ties by coverage — a long rare element
-    must not outscore a short frequent one, so the comparison is
-    lexicographic on (count, coverage), the paper's rule) and the
+def _rep_walk(arr: str) -> str:
+    """SQL: one ``aggregate`` run-length walk over the SORTED array
+    column ``arr``: equal neighbours are repeat occurrences.  Returns
+    ``struct(top: bigint, dup: bigint)`` — the most-frequent element's
+    full coverage (count × length; ties by coverage — a long rare
+    element must not outscore a short frequent one, so the comparison
+    is lexicographic on (count, coverage), the paper's rule) and the
     repeat-beyond-the-first character total.  Zero shuffle: the walk
-    happens inside the owning row.  Only call with ``sz >= 1`` (the
-    finish fold indexes ``arr[sz]``, 1-based)."""
-    idx = F.when(sz >= 2, F.sequence(F.lit(1), sz - 1)) \
-           .otherwise(F.array().cast("array<int>"))
-    zero = F.struct(F.lit(1).cast("long").alias("run"),
-                    F.lit(0).cast("long").alias("topc"),
-                    F.lit(0).cast("long").alias("topcost"),
-                    F.lit(0).cast("long").alias("dup"))
+    happens inside the owning row.  Only for a non-empty ``arr`` (the
+    finish step reads its last element)."""
+    # i is a 0-based position; element_at is 1-based, so
+    # prev = arr[i-1] (0-based) = element_at(arr, i)
+    prev, cur = f"element_at({arr}, i)", f"element_at({arr}, i + 1)"
+    last = f"element_at({arr}, size({arr}))"
 
-    def merge(acc, i):
-        # i is a 0-based position; element_at is 1-based, so
-        # prev = arr[i-1] (0-based) = element_at(arr, i)
-        prev, cur = F.element_at(arr, i), F.element_at(arr, i + 1)
-        cost = acc["run"] * F.length(prev)
-        better = (acc["run"] > acc["topc"]) | \
-                 ((acc["run"] == acc["topc"]) & (cost > acc["topcost"]))
-        return F.when(
-            cur == prev,
-            F.struct((acc["run"] + 1).alias("run"),
-                     acc["topc"].alias("topc"),
-                     acc["topcost"].alias("topcost"),
-                     (acc["dup"] + F.length(cur)).alias("dup"))
-        ).otherwise(
-            F.struct(F.lit(1).cast("long").alias("run"),
-                     F.when(better, acc["run"]).otherwise(acc["topc"])
-                     .alias("topc"),
-                     F.when(better, cost).otherwise(acc["topcost"])
-                     .alias("topcost"),
-                     acc["dup"].alias("dup")))
+    def better(cost):
+        return (f"(acc.run > acc.topc OR "
+                f"(acc.run = acc.topc AND {cost} > acc.topcost))")
 
-    def finish(acc):
-        last_cost = acc["run"] * F.length(F.element_at(arr, sz))
-        better = (acc["run"] > acc["topc"]) | \
-                 ((acc["run"] == acc["topc"]) &
-                  (last_cost > acc["topcost"]))
-        return F.struct(
-            F.when(better, last_cost).otherwise(acc["topcost"])
-            .alias("top"),
-            acc["dup"].alias("dup"))
-
-    return F.aggregate(idx, zero, merge, finish)
+    cost = f"acc.run * length({prev})"
+    last_cost = f"acc.run * length({last})"
+    return (
+        f"aggregate("
+        f"CASE WHEN size({arr}) >= 2 THEN sequence(1, size({arr}) - 1) "
+        f"ELSE cast(array() AS array<int>) END, "
+        f"named_struct('run', 1L, 'topc', 0L, 'topcost', 0L, 'dup', 0L), "
+        f"(acc, i) -> CASE WHEN {cur} = {prev} "
+        f"THEN named_struct('run', acc.run + 1, 'topc', acc.topc, "
+        f"'topcost', acc.topcost, 'dup', acc.dup + length({cur})) "
+        f"ELSE named_struct('run', 1L, "
+        f"'topc', CASE WHEN {better(cost)} THEN acc.run ELSE acc.topc END, "
+        f"'topcost', CASE WHEN {better(cost)} THEN {cost} "
+        f"ELSE acc.topcost END, 'dup', acc.dup) END, "
+        f"acc -> named_struct("
+        f"'top', CASE WHEN {better(last_cost)} THEN {last_cost} "
+        f"ELSE acc.topcost END, 'dup', acc.dup))")
 
 
 def ngram_repetition_signals(df: DataFrame,
@@ -148,29 +135,28 @@ def ngram_repetition_signals(df: DataFrame,
     ``element_at`` references hit a BOUND attribute — inlining the sort
     into the walk would re-sort per element, quadratic), then
     run-length walked INSIDE the row (``_rep_walk``); the exploded rows
-    are ≤ len(ns) per document and nothing gram-sized ever shuffles."""
-    toks = tokens(text_col)
-    base = df.select(F.col(id_col).alias("doc_id"),
-                     F.length(text_col).alias("n_chars"),
-                     toks.alias("toks"))
-    per_n = F.array(*[
-        F.struct(F.lit(n).alias("n"),
-                 F.array_sort(_ngrams(F.col("toks"), n)).alias("arr"))
-        for n in ns])
-    ex = (base.select("doc_id", "n_chars", F.explode(per_n).alias("s"))
-          .select("doc_id", "n_chars", F.col("s.n").alias("n"),
-                  F.col("s.arr").alias("arr"))
-          .filter(F.size("arr") >= 1))
-    walk = _rep_walk(F.col("arr"), F.size("arr"))
-    return (ex.select("doc_id", "n_chars", "n", walk.alias("_w"))
-            .select(
+    are ≤ len(ns) per document and nothing gram-sized ever shuffles.
+
+    The plan is built from SQL text, one ``selectExpr`` per step: each
+    step is one call into the JVM, where composing the same
+    expressions from ``Column`` objects costs thousands."""
+    per_n = ", ".join(
+        f"named_struct('n', {n}, 'arr', array_sort({_ngrams('toks', n)}))"
+        for n in ns)
+    return (df.select(F.col(id_col).alias("doc_id"),
+                      F.length(text_col).alias("n_chars"),
+                      tokens(text_col).alias("toks"))
+            .selectExpr("doc_id", "n_chars",
+                        f"explode(filter(array({per_n}), "
+                        f"s -> size(s.arr) >= 1)) AS s")
+            .selectExpr("doc_id", "n_chars", "s.n AS n", "s.arr AS arr")
+            .selectExpr("doc_id", "n_chars", "n",
+                        f"{_rep_walk('arr')} AS _w")
+            .selectExpr(
                 "doc_id", "n",
-                F.round(F.least(F.lit(1.0),
-                                F.col("_w.top") / F.col("n_chars")), 6)
-                .alias("top_char_frac"),
-                F.round(F.least(F.lit(1.0),
-                                F.col("_w.dup") / F.col("n_chars")), 6)
-                .alias("dup_char_frac")))
+                "round(least(1.0D, _w.top / n_chars), 6) AS top_char_frac",
+                "round(least(1.0D, _w.dup / n_chars), 6) "
+                "AS dup_char_frac"))
 
 
 def line_repetition_signals(df: DataFrame,

@@ -1077,13 +1077,13 @@ def dedup_cross_corpus_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_cross_corpus_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STORED-index form of ``dedup_cross_corpus_minhash`` — the
     continuous-ingestion pattern its docstring promised, implemented:
-    ``write_band_index`` persists the existing corpus's band entries
-    and shingle-hash sets ONCE at write time, as plain parquet files;
+    ``write_band_index`` persists each existing document's shingle-hash
+    set beside its band keys ONCE at write time, as plain parquet files;
     ``minhash_lsh_cross_stored`` then shingles only the re-arriving
-    batch and joins the stored entries, so the accumulated corpus is
-    never re-shingled per batch (``ingest_batch_against_index`` grows
+    batch and probes the stored rows with it, so the accumulated corpus
+    is never re-shingled per batch (``ingest_batch_against_index`` grows
     the index with each batch's survivors).  Shares the inline
-    operator's prep/verify helpers, hence the identical oracle —
+    operator's shingle pass and probe, hence the identical oracle —
     pruning recomputation is invisible to values.  Store cached per
     corpus content like the ANN stores."""
     from openai_vector_search_demo_spark.operators.dedup import (
@@ -1099,15 +1099,16 @@ def dedup_cross_corpus_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ensure_band_store(docs: DataFrame, sf_dir: str) -> str:
-    """Build-once cache of the corpus band index (with its ``_sigs``
-    layer), keyed by corpus content like the ANN stores; shared by the
-    stored batch slot and the streaming gate."""
+    """Build-once cache of the corpus band index (each document's
+    shingle set beside its band keys), keyed by corpus content like the
+    ANN stores; shared by the stored batch slot and the streaming
+    gate."""
     from openai_vector_search_demo_spark.operators.dedup import (
         write_band_index,
     )
 
     return open_or_build(
-        docs.sparkSession, "band", 3, [f"{sf_dir}/documents.parquet"],
+        docs.sparkSession, "band", 4, [f"{sf_dir}/documents.parquet"],
         lambda path: write_band_index(docs, path, k=3, num_hashes=16,
                                       bands=4),
         k=3, num_hashes=16, bands=4)
@@ -1262,8 +1263,8 @@ def dedup_ingest_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern ``write_band_index``'s docstring documents, receipted as one
     slot: build the corpus band index once, then for each arriving
     batch (1) check it against the store, (2) admit the non-duplicates,
-    (3) add ONLY the admitted docs' band entries/sigs to the store (one
-    segment per batch), so batch 2 is deduplicated against corpus ∪
+    (3) add ONLY the admitted docs' rows to the store (one segment per
+    batch), so batch 2 is deduplicated against corpus ∪
     batch-1 survivors without ever re-shingling the accumulated corpus.
 
     The seeded arrivals exercise every path: batch 1 mixes verbatim
@@ -1273,8 +1274,8 @@ def dedup_ingest_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh half-token docs (admitted).  Emits the per-batch admission
     audit ``(batch, n_arrived, n_rejected, n_admitted)``; the oracle
     replays both rounds including the store growth.  At 100 TB each
-    batch costs one Arrow shingle pass over the BATCH plus one scan of
-    the store's band entries, probed by the broadcast batch — the
+    batch costs one Arrow shingle pass over the BATCH plus one map-only
+    scan of the store's rows, probed by the broadcast batch — the
     accumulated corpus is never re-shingled.  The store lives in a
     temporary directory, removed before the slot returns its
     driver-local audit rows."""

@@ -28,8 +28,9 @@ rename).  The reference builds its index once per alias and then only
 serves from it (modules/utilities.py); this is that lifecycle for the
 engine's on-disk stores.
 
-The mutable stores (NSW graph, IVFPQ cells, the MinHash band index and
-its shingle sets, the line-hash index) change after publication by one
+The mutable stores (NSW graph, IVFPQ cells, the MinHash band index —
+one row per document, its shingle set beside its band keys — and the
+line-hash index) change after publication by one
 protocol — a base plus the segments a manifest names, REPOSE's
 partition-local indexes under one global metadata record:
 
@@ -52,8 +53,8 @@ partition-local indexes under one global metadata record:
   ``segments`` list holds ``{"name", "batch", "layers"}`` entries,
   names relative to the store root (a store published by rename stays
   valid); ``layers`` maps each layer the segment writes (``""`` is the
-  base table, ``_sigs`` the band index's shingle sets, ``_L1`` … the
-  NSW levels) to ``"delta"`` (rows added) or ``"base"`` (layer
+  base table, the band and line indexes' only layer; ``_L1`` … the NSW
+  levels) to ``"delta"`` (rows added) or ``"base"`` (layer
   rebuilt).  A ``"tombstones"`` segment holds ids.  No manifest, or no segments, means the base
   alone, so base writers write none.
 - A segment's batch is one more than the segments before it.  A

@@ -461,8 +461,10 @@ def stream_neardup_gate(doc_stream: DataFrame, store: str, on_result,
     """STREAMING NEAR-DUP ADMISSION GATE — the live form of the
     continuous-ingestion loop ``dedup.write_band_index`` documents:
     each micro-batch of arriving documents is shingled/MinHashed ONCE
-    (its own Arrow pass only), joined against the STORED band index,
-    and exact-Jaccard verified (``dedup.minhash_lsh_cross_stored``);
+    (its own Arrow pass only) and broadcast into one map-only probe of
+    the STORED band index, whose rows carry each document's shingle set
+    beside its band keys, so every candidate is exact-Jaccard verified
+    where it joins (``dedup.minhash_lsh_cross_stored``);
     ``on_result(match_df, batch_id)`` receives the verified
     ``(new_id, existing_id, jaccard)`` match DATAFRAME — the hook a
     deployment points at its admission policy (drop the arrival, or
@@ -471,16 +473,17 @@ def stream_neardup_gate(doc_stream: DataFrame, store: str, on_result,
     a sink (r15 contract: a heavily duplicated batch at scale would
     make a gate-side collect unbounded).  With
     ``append_admitted=True`` the gate IS the full continuous-ingestion
-    loop run live: each micro-batch's admitted docs' band entries/sigs
-    join the store as one segment before the next batch arrives
+    loop run live: each micro-batch's admitted docs join the store as
+    one segment before the next batch arrives
     (``dedup.ingest_batch_against_index`` — one Arrow shingle pass per
-    batch shared by the check and the write), so later arrivals are
+    batch shared by the probe and the write; its matches are an eager
+    local checkpoint, still a distributed frame), so later arrivals are
     deduplicated against the corpus PLUS earlier survivors; the
     stream ≡ batch-loop equality is pinned in tests/test_streaming.py.
 
     The streaming layer is wiring only (the engine's streaming design
     rule): candidate generation and verification are the batch
-    operator's shared helpers, so a completed stream's concatenated
+    operator's shared probe, so a completed stream's concatenated
     matches EQUAL the batch cross-dedup of (stream contents, store) —
     micro-batches partition the new side and each new doc's matches are
     computed entirely within its own batch (the oracled

@@ -707,10 +707,10 @@ def test_ingest_batch_shingles_once_and_appends_only_admitted(spark,
     batch_ids = {r.doc_id for r in batch.select("doc_id").collect()}
     admitted = batch_ids - rejected
     assert admitted and rejected  # both paths exercised
-    # the store grew by exactly the admitted docs' sigs
-    sigs = _read_band_store(spark, store, "bigint")[1]
-    sig_ids = {r.id_e for r in sigs.select("id_e").collect()}
-    assert sig_ids & batch_ids == admitted
+    # the store grew by exactly the admitted docs' rows
+    rows = _read_band_store(spark, store, "bigint")
+    stored_ids = {r.id_e for r in rows.select("id_e").collect()}
+    assert stored_ids & batch_ids == admitted
     # idempotence: the same batch re-ingested is now fully rejected
     # (every doc matches either the base corpus or its own admitted copy)
     m2 = ingest_batch_against_index(spark, batch, store)
@@ -719,33 +719,30 @@ def test_ingest_batch_shingles_once_and_appends_only_admitted(spark,
 
 
 def _band_rows(spark, store):
-    """A band store's (entries, shingle sets), sorted, read through the
-    admission's own reader."""
+    """A band store's rows, sorted, read through the admission's own
+    reader."""
     from openai_vector_search_demo_spark.operators.dedup import (
         _read_band_store,
     )
-    entries, sigs = _read_band_store(spark, store, "bigint")
-    return (sorted(map(tuple, entries.collect())),
-            sorted((r.id_e, tuple(sorted(r.hs_e))) for r in sigs.collect()))
+    return sorted((r.id_e, tuple(sorted(r.hs_e)), tuple(r.buckets))
+                  for r in _read_band_store(spark, store, "bigint")
+                  .collect())
 
 
-def test_band_admission_killed_before_its_sigs_leaves_the_store_unchanged(
+def test_band_admission_killed_before_its_swap_leaves_the_store_unchanged(
         spark, tmp_path, monkeypatch):
-    """A band admission killed while writing its shingle sets, after its
-    band entries, leaves the store as it was: the entries and the
-    shingle sets both read back unchanged.  A retry then returns what
-    the same round returns on an uninterrupted twin store, leaves the
+    """A band admission killed while writing its one segment, or after
+    writing it but before the manifest swap, leaves the store as it
+    was: its rows read back unchanged.  A retry then returns what the
+    same round returns on an uninterrupted twin store, leaves the
     twin's rows and no segment the manifest does not name, and a later
     batch still finds a near-duplicate of a document the retry
     admitted."""
     from pyspark.sql.readwriter import DataFrameWriter
 
+    from openai_vector_search_demo_spark import stores
     from openai_vector_search_demo_spark.operators.dedup import (
         ingest_batch_against_index, write_band_index)
-    from openai_vector_search_demo_spark.stores import (
-        SEGMENTS,
-        read_manifest,
-    )
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
@@ -763,16 +760,26 @@ def test_band_admission_killed_before_its_sigs_leaves_the_store_unchanged(
 
     real = DataFrameWriter.parquet
 
-    def killed(self, path, *args, **kwargs):
-        if str(path).rstrip("/").endswith("_sigs"):
-            raise RuntimeError("killed before the shingle sets")
+    def killed_write(self, path, *args, **kwargs):
+        if "/_seg-" in str(path):
+            raise RuntimeError("killed in the segment write")
         return real(self, path, *args, **kwargs)
 
-    with monkeypatch.context() as mp:
-        mp.setattr(DataFrameWriter, "parquet", killed)
-        with pytest.raises(RuntimeError, match="shingle sets"):
-            ingest_batch_against_index(spark, batch, store)
-    assert _band_rows(spark, store) == before
+    def killed_swap(*args, **kwargs):
+        raise RuntimeError("killed before the swap")
+
+    for target, attr, fake, what in (
+            (DataFrameWriter, "parquet", killed_write, "segment write"),
+            (stores, "swap_manifest", killed_swap, "before the swap")):
+        with monkeypatch.context() as mp:
+            mp.setattr(target, attr, fake)
+            with pytest.raises(RuntimeError, match=what):
+                ingest_batch_against_index(spark, batch, store)
+        assert _band_rows(spark, store) == before, what
+        assert stores.read_manifest(spark, store, stores.SEGMENTS) is None
+    # the killed swap left its written segment behind, unnamed
+    assert any(p.name.startswith("_seg-")
+               for p in (tmp_path / "killed").iterdir())
 
     def found(out):
         return sorted(map(tuple, out.collect()))
@@ -782,7 +789,8 @@ def test_band_admission_killed_before_its_sigs_leaves_the_store_unchanged(
     assert _band_rows(spark, store) == _band_rows(spark, twin)
     assert _band_rows(spark, store) != before
     named = {seg["name"] for seg in
-             read_manifest(spark, store, SEGMENTS)["segments"]}
+             stores.read_manifest(spark, store, stores.SEGMENTS)
+             ["segments"]}
     assert {p.name for p in (tmp_path / "killed").iterdir()
             if p.name.startswith("_seg-")} == named
 
@@ -794,6 +802,73 @@ def test_band_admission_killed_before_its_sigs_leaves_the_store_unchanged(
                     .alias("text")))
     later = found(ingest_batch_against_index(spark, near, store))
     assert (admitted + 3000000, admitted) in [(n, e) for n, e, _ in later]
+
+
+def _words(seed: int, n: int = 120) -> str:
+    import random
+    rnd = random.Random(seed)
+    return " ".join(f"w{rnd.randrange(3000)}" for _ in range(n))
+
+
+def test_pair_colliding_in_every_band_is_reported_once(spark, tmp_path):
+    """An exact copy shares all four band keys with its stored original,
+    so it meets it in four probe rows; admission and the stored cross
+    form both report the pair once, and the copy does not join the
+    store."""
+    from openai_vector_search_demo_spark.operators.dedup import (
+        _read_band_store,
+        ingest_batch_against_index,
+        minhash_lsh_cross_stored,
+        write_band_index,
+    )
+
+    store = str(tmp_path / "band")
+    write_band_index(spark.createDataFrame(
+        [(1, _words(1)), (2, _words(2))], "doc_id long, text string"),
+        store)
+    batch = spark.createDataFrame([(10, _words(1)), (11, _words(3))],
+                                  "doc_id long, text string")
+    keys = {r.id_e: r.buckets
+            for r in _read_band_store(spark, store, "bigint").collect()}
+    assert len(keys[1]) == 4
+    want = [(10, 1, 1.0)]
+    assert sorted(map(tuple, minhash_lsh_cross_stored(
+        spark, batch, store, cache=False).collect())) == want
+    assert sorted(map(tuple, ingest_batch_against_index(
+        spark, batch, store).collect())) == want
+    grown = {r.id_e: r.buckets
+             for r in _read_band_store(spark, store, "bigint").collect()}
+    assert sorted(grown) == [1, 2, 11]
+    assert grown[11] != keys[1]
+
+
+def test_repeated_batch_id_is_verified_row_by_row(spark, tmp_path):
+    """A batch that repeats a doc id: each of its rows is verified with
+    its own shingle set, so the id reports one match per matching row
+    (here the same stored document at two Jaccard values), and no row
+    of the matched id joins the store; an id whose rows all miss is
+    admitted row by row."""
+    from openai_vector_search_demo_spark.operators.dedup import (
+        _read_band_store,
+        ingest_batch_against_index,
+        write_band_index,
+    )
+
+    store = str(tmp_path / "band")
+    original = _words(1)
+    write_band_index(spark.createDataFrame(
+        [(1, original)], "doc_id long, text string"), store)
+    batch = spark.createDataFrame(
+        [(7, original), (7, original + " w9991 w9992 w9993"),
+         (8, _words(4)), (8, _words(5))],
+        "doc_id long, text string")
+    got = sorted(map(tuple, ingest_batch_against_index(
+        spark, batch, store).collect()))
+    assert [(n, e) for n, e, _ in got] == [(7, 1), (7, 1)]
+    assert got[1][2] == 1.0 and 0.5 <= got[0][2] < 1.0
+    stored = sorted(r.id_e for r in
+                    _read_band_store(spark, store, "bigint").collect())
+    assert stored == [1, 8, 8]
 
 
 def _round_caches(spark) -> int:
